@@ -19,20 +19,3 @@ double as the golden oracle used by the pytest suite.
 """
 
 __version__ = "0.1.0"
-
-
-def __getattr__(name):
-    """Lazy top-level API (keeps `import ocr_spark` free of pyspark)."""
-    if name == "extract":
-        from ocr_spark.extract import extract
-
-        return extract
-    if name == "ExtractWriter":
-        from ocr_spark.io import ExtractWriter
-
-        return ExtractWriter
-    if name == "extract_stream":
-        from ocr_spark.streaming import extract_stream
-
-        return extract_stream
-    raise AttributeError(name)

@@ -69,7 +69,6 @@ def extract(
     salt_buckets: int = 1024,
     salt_threshold: int = 10_000,
     passthrough: list[str] | None = None,
-    keep_candidates: bool = True,
     counters: ExtractCounters | None = None,
 ) -> DataFrame:
     """Run the extraction pipeline over a transcripts DataFrame.
@@ -78,12 +77,6 @@ def extract(
     ``partitions`` set, performs the salted conv_id-hash repartition
     first (the one shuffle of the pipeline); otherwise extraction is a
     pure map over the scan partitions.
-
-    ``keep_candidates=False`` drops the per-extractor candidate texts
-    from the output (keeping only the final text) — a scale knob: the
-    candidates array roughly triples output bytes at 100 TB, and the
-    reference's per-model result panel is a debugging surface, not a
-    downstream input.
     """
     passthrough = passthrough or []
     cols = ["conv_id", "turn_idx", "text", "tool", *passthrough]
@@ -102,16 +95,11 @@ def extract(
 
     udf = make_extract_udf(counters)
     res = staged.withColumn("_r", udf(F.col("text"), F.col("tool")))
-    cand = (
-        [F.col("_r.candidates").alias("candidates")]
-        if keep_candidates
-        else []
-    )
     return res.select(
         "conv_id",
         "turn_idx",
         F.current_timestamp().alias("processed_at"),
-        *cand,
+        F.col("_r.candidates").alias("candidates"),
         F.col("_r.text").alias("text"),
         F.col("_r.spans").alias("spans"),
         F.col("_r.score").alias("score"),

@@ -13,10 +13,10 @@ Commit protocol (graft of the reference's server-held resumable batch
 state + reset.bat, /root/reference/README.md:54-56):
 
 - the run is divided into ``n_buckets`` units by pmod(hash(conv_id), B);
-  at production scale the input table is bucket-partitioned the same way
-  (Iceberg ``bucket(B, conv_id)``) so per-group scans prune instead of
-  re-reading — with flat parquet input the filter still prunes row
-  groups only, which is acceptable at test scale,
+  only bucket-partitioned input (Iceberg ``bucket(B, conv_id)``) lets a
+  group's scan prune to its buckets; on flat parquet the
+  ``pmod(hash(conv_id), B) IN (group)`` filter cannot be pushed down, so
+  every group re-reads the whole input (n_groups × the input bytes),
 - buckets are processed in groups; each group writes its data partitions
   with dynamic partition overwrite (idempotent on rerun), then appends
   one lineage row per bucket **last** (manifest-last: a crash between
@@ -48,6 +48,38 @@ def add_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn(
         BUCKET_COL, F.pmod(F.hash("conv_id"), F.lit(n_buckets))
     )
+
+
+# One lineage row per bucket. Every field is nullable (an empty bucket
+# has null conv_min/conv_max): the Iceberg ``create()`` path takes this
+# as the lineage table's schema.
+_LINEAGE_ROW = (
+    "struct<run_id:string,partition_id:int,conv_min:string,"
+    "conv_max:string,n_turns:bigint,n_errors:bigint>"
+)
+
+
+def _lineage_rows(
+    spark: SparkSession, run_id: str, group: list[int], metrics: dict
+) -> DataFrame:
+    """The lineage rows of one bucket group, from the write pass's
+    observed ``metrics``, as literal structs inlined over a one-row
+    range: a JVM-local relation, so committing them starts no Python
+    worker (``createDataFrame(<list>)`` would run a Python-RDD job)."""
+    rows = [
+        F.struct(
+            F.lit(run_id),
+            F.lit(b),
+            F.lit(metrics[f"conv_min_{b}"]),
+            F.lit(metrics[f"conv_max_{b}"]),
+            F.lit(metrics[f"n_turns_{b}"]),
+            F.lit(metrics[f"n_errors_{b}"]),
+        ).cast(_LINEAGE_ROW)
+        for b in group
+    ]
+    return spark.range(1, numPartitions=1).select(
+        F.inline(F.array(*rows))
+    ).withColumn("committed_at", F.current_timestamp())
 
 
 def read_transcripts(
@@ -145,33 +177,6 @@ def ingest_zip(
             seen.add(base)
             (out / base).write_bytes(z.read(name))
     return read_transcripts(spark, str(out), fmt=fmt, dedup=dedup)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    buckets: int = 64,
-    sort: bool = True,
-) -> None:
-    """Persist a table hash-bucketed (and optionally sorted) on
-    ``key`` — the co-located-join storage layout: two tables bucketed
-    on the same key with the same bucket count join with NO shuffle on
-    either side (Catalyst sees ``HashPartitioning(key, buckets)`` as
-    the output partitioning of the scan), which is THE lever for a
-    repeated big-big join at 100 TB — the shuffle is paid once at
-    write time, then every downstream join of any two co-bucketed
-    tables is exchange-free (pytest-pinned in
-    test_bucketed_join_is_shuffle_free).
-
-    Uses ``bucketBy`` + ``saveAsTable`` (bucket metadata lives in the
-    session catalog; plain ``parquet(path)`` cannot carry it — the
-    Spark API constraint, not a choice). ``sortBy(key)`` additionally
-    lets a one-file-per-bucket table skip the join's Sort."""
-    w = df.write.mode("overwrite").bucketBy(buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.format("parquet").saveAsTable(table)
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -355,28 +360,7 @@ class ExtractWriter:
                     .mode("overwrite")
                     .parquet(str(self.data_dir))
                 )
-            m = obs.get
-            lineage_rows = []
-            for b in group:
-                lineage_rows.append(
-                    (
-                        run_id,
-                        b,
-                        m[f"conv_min_{b}"],
-                        m[f"conv_max_{b}"],
-                        m[f"n_turns_{b}"],
-                        m[f"n_errors_{b}"],
-                    )
-                )
-            lin_df = (
-                spark.createDataFrame(
-                    lineage_rows,
-                    "run_id string, partition_id int, conv_min string, "
-                    "conv_max string, n_turns long, n_errors long",
-                )
-                .withColumn("committed_at", F.current_timestamp())
-                .coalesce(1)
-            )
+            lin_df = _lineage_rows(spark, run_id, group, obs.get)
             if self.iceberg_table:
                 if spark.catalog.tableExists(self._lineage_table):
                     lin_df.writeTo(self._lineage_table).append()
@@ -419,7 +403,6 @@ class ExtractWriter:
         from ocr_spark.xlsx import write_xlsx
 
         df = self.read_ordered(spark).drop(BUCKET_COL)
-        has_cands = "candidates" in df.columns
         cols = [
             F.col("conv_id"),
             F.col("turn_idx"),
@@ -430,18 +413,17 @@ class ExtractWriter:
             F.round("score", 4).alias("score"),
             F.col("error"),
         ]
-        if has_cands:
-            # flatten the per-model panel: candidates is a fixed
-            # 3-extractor array (html/pdf/spans routes)
-            for i, name in enumerate(("a", "b", "c")):
-                cols.append(
-                    F.col("candidates")[i]["text"].alias(f"cand_{name}_text")
-                )
-                cols.append(
-                    F.round(
-                        F.col("candidates")[i]["score"], 4
-                    ).alias(f"cand_{name}_score")
-                )
+        # flatten the per-model panel: candidates is a fixed
+        # 3-extractor array (html/pdf/spans routes)
+        for i, name in enumerate(("a", "b", "c")):
+            cols.append(
+                F.col("candidates")[i]["text"].alias(f"cand_{name}_text")
+            )
+            cols.append(
+                F.round(
+                    F.col("candidates")[i]["score"], 4
+                ).alias(f"cand_{name}_score")
+            )
         flat = df.select(*cols).limit(limit)
         pdf = flat.toPandas()
         import pandas as pd
@@ -469,41 +451,3 @@ class ExtractWriter:
             F.min("committed_at").alias("first_commit"),
             F.max("committed_at").alias("last_commit"),
         )
-
-
-def read_binary_docs(
-    spark: SparkSession,
-    path: str,
-    pattern: str = "*",
-) -> DataFrame:
-    """Raw-file ingest — the reference's ACTUAL input shape (an image
-    directory / unpacked ZIP, `README.md:53`): Spark's native
-    ``binaryFile`` source loads each file as one row of
-    (path, modificationTime, length, content). Returns the engine's
-    media-relation shape (media_id, path, n_bytes, payload) ready for
-    the multimodal family (decode_media / sample_frames /
-    extract_features).
-
-    media_id is a deterministic 60-bit md5 of the file PATH — stable
-    across runs and partitionings (the hash_sample discipline), unlike
-    monotonically_increasing_id. ``pathGlobFilter`` prunes non-matching
-    files at LISTING time (never read), and binaryFile caps single-file
-    size via spark.sql.sources.binaryFile.maxLength. Scale shape: one
-    row per file, no parsing on the driver; whole-file rows mean
-    partition sizing follows file sizes — feed archives of many small
-    files, not one giant blob (the source cannot split within a file).
-    """
-    raw = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", pattern)
-        .load(path)
-    )
-    media_id = F.conv(
-        F.substring(F.md5(F.col("path")), 1, 15), 16, 10
-    ).cast("long")
-    return raw.select(
-        media_id.alias("media_id"),
-        "path",
-        F.col("length").alias("n_bytes"),
-        F.col("content").alias("payload"),
-    )

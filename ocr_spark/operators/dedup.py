@@ -359,16 +359,66 @@ def band_keys(
     )
 
 
-def minhash_signatures(
-    df: DataFrame, n: int = 3, num_hashes: int = 16
-) -> DataFrame:
-    """Per-document MinHash signature (md5-slice hash family), WIDE
-    form: one row per doc with columns mh0..mh{k-1}.
+def _band_candidates(banded: DataFrame) -> DataFrame:
+    """(doc_a, doc_b) candidate pairs, doc_a < doc_b: documents sharing
+    any (band, band_key) of an ``_explode_bands`` relation."""
+    a = banded.alias("a")
+    b = banded.alias("b")
+    return (
+        a.join(b, ["band", "band_key"])
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+        )
+        .distinct()
+    )
 
-    See ``_minhash_agg`` for the hash-family definition and why the
-    signature costs ceil(k/4) md5 calls per shingle row, not k.
+
+def _verify_candidates(
+    df: DataFrame,
+    cands: DataFrame,
+    n: int,
+    threshold: float,
+    max_df: int,
+) -> DataFrame:
+    """Exact word-``n``-gram Jaccard of (doc_a, doc_b) candidate pairs
+    from ``df``'s raw documents; returns (doc_a, doc_b, jaccard) with
+    jaccard >= threshold, a subset of ``cands``.
+
+    Verifies ONLY candidate documents: at 100 TB the whole point of a
+    candidate generator is that the exact-Jaccard join never touches
+    non-candidate docs, and the candidate set is small by construction.
     """
-    return _minhash_agg(_with_shingles(df, n), num_hashes)
+    # localCheckpoint(eager=True) materializes the candidates once for
+    # their three consumers AND lets the ContextCleaner drop the blocks
+    # when the result DataFrame is garbage-collected — an explicit
+    # persist() here leaked storage memory across calls in long-lived
+    # sessions. Fault-tolerance caveat: locally-checkpointed blocks are
+    # NOT recomputable after executor loss, so on a cluster with
+    # executor decommissioning (dynamic allocation / spot nodes) prefer
+    # reliable checkpointing (sparkContext.setCheckpointDir +
+    # .checkpoint()) or persist(DISK_ONLY) here — the blocks are small
+    # (candidate pairs only), so the reliability cost is negligible.
+    cands = cands.localCheckpoint(eager=True)
+    # left_semi tolerates duplicate keys on the right: no distinct needed
+    cand_docs = cands.select(F.col("doc_a").alias("doc_id")).unionByName(
+        cands.select(F.col("doc_b").alias("doc_id"))
+    )
+    # semi-join the RAW docs down to candidates BEFORE shingling —
+    # Catalyst cannot push a join below the explode, so semi-joining an
+    # exploded shingle relation re-tokenizes the ENTIRE corpus; per-doc
+    # shingles don't depend on other docs, so shingling the
+    # candidate-only corpus is result-identical and tokenizes
+    # O(candidates) docs instead of O(corpus)
+    sh = _with_shingles(df.join(cand_docs, "doc_id", "left_semi"), n)
+    # candidate-PAIR verify (see _jaccard_from_shingles): the
+    # posting-list self-join explodes to sum df^2 rows even over
+    # candidate docs only; the pair path already returns a subset of
+    # ``cands``, so no closing join is needed
+    return _jaccard_from_shingles(
+        sh, threshold=threshold, max_df=max_df, cands=cands
+    ).select("doc_a", "doc_b", "jaccard")
 
 
 def minhash_lsh_pairs(
@@ -386,54 +436,9 @@ def minhash_lsh_pairs(
     (inverted-index join restricted to the candidate set).
     Returns (doc_a, doc_b, jaccard) with jaccard >= threshold.
     """
-    sh = _with_shingles(df, n)
-    sig = _minhash_agg(sh, num_hashes)
-    banded = _explode_bands(sig, num_hashes, bands)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cands = (
-        a.join(b, ["band", "band_key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    # verify ONLY candidate documents: at 100 TB the whole point of LSH
-    # is that the exact-Jaccard join never touches non-candidate docs.
-    # The candidate set is small by construction (that IS the LSH
-    # premise). localCheckpoint(eager=True) materializes it once for its
-    # three consumers AND lets the ContextCleaner drop the blocks when
-    # the result DataFrame is garbage-collected — an explicit persist()
-    # here leaked storage memory across calls in long-lived sessions.
-    # Fault-tolerance caveat: locally-checkpointed blocks are NOT
-    # recomputable after executor loss, so on a cluster with executor
-    # decommissioning (dynamic allocation / spot nodes) prefer
-    # reliable checkpointing (sparkContext.setCheckpointDir +
-    # .checkpoint()) or persist(DISK_ONLY) here — the blocks are small
-    # (candidate pairs only), so the reliability cost is negligible.
-    cands = cands.localCheckpoint(eager=True)
-    # left_semi tolerates duplicate keys on the right: no distinct needed
-    cand_docs = cands.select(F.col("doc_a").alias("doc_id")).unionByName(
-        cands.select(F.col("doc_b").alias("doc_id"))
-    )
-    # r6: semi-join the RAW docs down to candidates BEFORE shingling —
-    # Catalyst cannot push a join below the explode, so semi-joining the
-    # exploded `sh` relation re-tokenized the ENTIRE corpus for the
-    # verify pass; per-doc shingles don't depend on other docs, so
-    # shingling the candidate-only corpus is result-identical and the
-    # verify pass tokenizes O(candidates) docs instead of O(corpus)
-    sh_cand = _with_shingles(
-        df.join(cand_docs, "doc_id", "left_semi"), n
-    )
-    # r6: candidate-PAIR verify (see _jaccard_from_shingles) — the
-    # posting-list self-join exploded to sum df^2 rows even over
-    # candidate docs only; the pair path already returns a subset of
-    # ``cands``, so no closing join is needed
-    return _jaccard_from_shingles(
-        sh_cand, threshold=threshold, max_df=max_df, cands=cands
-    ).select("doc_a", "doc_b", "jaccard")
+    sig = _minhash_agg(_with_shingles(df, n), num_hashes)
+    cands = _band_candidates(_explode_bands(sig, num_hashes, bands))
+    return _verify_candidates(df, cands, n, threshold, max_df)
 
 
 def minhash_estimate_pairs(
@@ -472,19 +477,9 @@ def minhash_estimate_pairs(
     sig = _minhash_agg(
         _with_shingles(df, n), num_hashes
     ).localCheckpoint(eager=True)
-    banded = _explode_bands(sig, num_hashes, bands)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cands = (
-        a.join(b, ["band", "band_key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)  # cf. minhash_lsh_pairs
-    )
+    cands = _band_candidates(
+        _explode_bands(sig, num_hashes, bands)
+    ).localCheckpoint(eager=True)  # cf. _verify_candidates
     sa = sig.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"mh{i}").alias(f"a{i}") for i in range(num_hashes)],

@@ -191,26 +191,3 @@ def extract_features(
             yield pd.DataFrame({"media_id": ids, "feature": vecs})
 
     return df.select(id_col, "payload").mapInPandas(run, FEATURE_SCHEMA)
-
-
-def resize_image(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Re-header payloads to the target dimensions (a real implementation
-    would re-encode pixels via PIL — see ``_require_codec``)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            new = []
-            for buf in out["payload"].to_numpy():
-                b = bytes(buf) if buf is not None else b""
-                body = b[18:] if b.startswith(_MAGIC) else b
-                new.append(
-                    _MAGIC
-                    + b"%04d" % width
-                    + b"%04d" % height
-                    + body
-                )
-            out["payload"] = pd.Series(new, dtype="object")
-            yield out
-
-    return df.mapInPandas(run, df.schema)

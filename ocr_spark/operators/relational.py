@@ -1,29 +1,13 @@
 """Relational operators the Spark re-expression needs (SURVEY.md §2.2).
 
 These are thin, deliberately-shaped compositions of built-ins — the
-point is the *plan* (broadcast the small side, anti-join for resume,
-window for intra-conversation ordering), not the code volume.
+point is the *plan* (anti-join for resume, window scans instead of
+range joins for as-of joins and sessions), not the code volume.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
-
-
-def apply_overrides(extracted: DataFrame, overrides: DataFrame) -> DataFrame:
-    """Manual-correction upsert (SURVEY.md O13): broadcast left join +
-    coalesce — the GUI edit graft (/root/reference/README.md:28)."""
-    ov = overrides.select(
-        "conv_id", "turn_idx", F.col("text").alias("_override_text")
-    )
-    return (
-        extracted.join(F.broadcast(ov), ["conv_id", "turn_idx"], "left")
-        .withColumn("text", F.coalesce("_override_text", "text"))
-        .withColumn(
-            "overridden", F.col("_override_text").isNotNull()
-        )
-        .drop("_override_text")
-    )
 
 
 def dedup_turns(transcripts: DataFrame) -> DataFrame:
@@ -32,30 +16,11 @@ def dedup_turns(transcripts: DataFrame) -> DataFrame:
     return transcripts.dropDuplicates(["conv_id", "turn_idx"])
 
 
-def turn_numbering(df: DataFrame) -> DataFrame:
-    """Stable intra-conversation re-indexing check (window row_number
-    over (conv_id) ordered by turn_idx)."""
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    return df.withColumn("rn", F.row_number().over(w))
-
-
 def resume_anti_join(
     all_units: DataFrame, committed: DataFrame, key: str
 ) -> DataFrame:
     """O16: units not yet committed (left_anti on the unit key)."""
     return all_units.join(committed, key, "left_anti")
-
-
-def run_stats(extracted: DataFrame) -> DataFrame:
-    """O17: per-run report stats — the '385 images in 4m18s' accounting
-    graft (/root/reference/README.md:8)."""
-    return extracted.agg(
-        F.count(F.lit(1)).alias("n_turns"),
-        F.sum((F.col("error") != "").cast("long")).alias("n_errors"),
-        F.round(F.avg("score"), 4).alias("avg_score"),
-        F.min("conv_id").alias("conv_min"),
-        F.max("conv_id").alias("conv_max"),
-    )
 
 
 def as_of_join(

@@ -160,7 +160,7 @@ def winnow_verified_pairs(
     volume of a full shingle index (measured 110k-doc soak: recall 1.0
     in 28s vs MinHash+LSH's 0.972 in 295s), then the exact word
     ``shingle_n``-gram Jaccard is computed ONLY for candidate documents
-    (the same verify-candidates-only discipline as
+    (``dedup._verify_candidates``, the verify step of
     ``dedup.minhash_lsh_pairs``) and pairs below ``threshold`` drop.
 
     Returns (doc_a, doc_b, jaccard).
@@ -174,37 +174,15 @@ def winnow_verified_pairs(
     operator's Jaccard DEFINITION (pruned shingles count toward neither
     sizes nor intersections) and the DuckDB oracle mirrors it over the
     same restricted relation, so both engines agree at any scale.
-
-    localCheckpoint rationale + fault-tolerance caveat as in
-    ``minhash_lsh_pairs``: candidate blocks are unrecoverable after
-    executor loss; on clusters with decommissioning prefer reliable
-    checkpointing (the blocks are candidate-pair-sized, so the cost is
-    negligible).
     """
-    from ocr_spark.operators.dedup import (
-        _jaccard_from_shingles,
-        _with_shingles,
-    )
+    from ocr_spark.operators.dedup import _verify_candidates
 
     cands = winnow_near_dup_pairs(
         df, k=k, w=w, min_shared=min_shared, max_df=max_df
     ).select("doc_a", "doc_b")
-    cands = cands.localCheckpoint(eager=True)
-    cand_docs = cands.select(F.col("doc_a").alias("doc_id")).unionByName(
-        cands.select(F.col("doc_b").alias("doc_id"))
+    return _verify_candidates(
+        df, cands, shingle_n, threshold, jaccard_max_df
     )
-    # semi-join BEFORE shingling: the explode is the expensive map-side
-    # step and a join does not push below a Generate, so filtering the
-    # raw docs first keeps the shingle fan-out to candidate docs only
-    # (unlike minhash, which reuses an already-needed shingle relation)
-    sh = _with_shingles(
-        df.join(cand_docs, "doc_id", "left_semi"), shingle_n
-    )
-    # r6: candidate-PAIR verify (see dedup._jaccard_from_shingles) —
-    # returns a subset of ``cands``, so no closing join is needed
-    return _jaccard_from_shingles(
-        sh, threshold=threshold, max_df=jaccard_max_df, cands=cands
-    ).select("doc_a", "doc_b", "jaccard")
 
 
 def cms_heavy_hitters(

@@ -22,16 +22,6 @@ from pyspark.sql import DataFrame, functions as F
 SALT_COL = "_salt"
 
 
-def whale_conv_ids(df: DataFrame, salt_threshold: int) -> DataFrame:
-    """Conversations longer than ``salt_threshold`` turns (small set)."""
-    return (
-        df.groupBy("conv_id")
-        .agg(F.count(F.lit(1)).alias("_n_turns"))
-        .filter(F.col("_n_turns") > salt_threshold)
-        .select("conv_id")
-    )
-
-
 def repartition_salted(
     df: DataFrame,
     num_partitions: int,

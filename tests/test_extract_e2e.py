@@ -61,23 +61,6 @@ def test_error_rows_preserved(spark, tiny_transcripts):
     assert len(out) == len(tiny_transcripts)
 
 
-def test_keep_candidates_false_drops_panel_only(
-    spark, tiny_transcripts, tiny_golden
-):
-    # the scale knob must drop ONLY the per-extractor candidate panel;
-    # final text/spans/score/error stay byte-identical
-    sdf = spark.createDataFrame(tiny_transcripts)
-    slim = extract(sdf, keep_candidates=False)
-    assert "candidates" not in slim.columns
-    out = (
-        slim.select("conv_id", "turn_idx", "text", "spans", "score", "error")
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    _assert_equal(out, tiny_golden)
-
-
 def test_cjk_text_survives_pipeline_and_report(spark, tmp_path):
     # the reference's domain is Korean text; CJK must survive the full
     # path: extraction (html + plain routes), warehouse write, xlsx

@@ -69,16 +69,6 @@ def test_features_fixed_width_deterministic(spark):
     assert all(0.0 <= v < 1.0 for vec in a["feature"] for v in vec)
 
 
-def test_resize_reheaders(spark):
-    media = _media(spark, n=5)
-    resized = M.resize_image(media, 32, 24)
-    meta = M.decode_media(resized).orderBy("media_id").toPandas()
-    assert (meta["width"] == 32).all() and (meta["height"] == 24).all()
-    # body bytes untouched by the stub resize
-    orig = M.decode_media(media).orderBy("media_id").toPandas()
-    assert (meta["sha256"].values == orig["sha256"].values).all()
-
-
 def test_decode_corrupt_magic_payload_row_preserved(spark):
     # MAGIC prefix but truncated / non-digit header: must become a
     # codec='unknown' row, never a stage-killing ValueError

@@ -166,9 +166,44 @@ def test_empty_bucket_in_group_commits_cleanly(spark, writer):
     assert len(lin) == 4
     assert int(lin.n_turns.sum()) == 3
     assert (lin[lin.n_turns == 0].conv_min.isna()).all()
+    # the written lineage schema, nullability included (parquet keeps
+    # it as optional/required per column; Spark's reader does not)
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    (f,) = writer._run_lineage_dir("re").glob("*.parquet")
+    schema = pq.read_schema(f)
+    assert [(x.name, x.type, x.nullable) for x in schema] == [
+        ("run_id", pa.string(), True),
+        ("partition_id", pa.int32(), True),
+        ("conv_min", pa.string(), True),
+        ("conv_max", pa.string(), True),
+        ("n_turns", pa.int64(), True),
+        ("n_errors", pa.int64(), True),
+        ("committed_at", pa.timestamp("ns"), False),
+    ]
     # resume: everything (incl. empty buckets) is committed
     assert writer.run(spark, spark.createDataFrame(one), "re",
                       n_buckets=4) == []
+
+
+def test_lineage_commit_runs_no_python_rdd(spark):
+    # the lineage rows are a JVM-local relation: a commit must not
+    # parallelize a Python list (a Python-worker job per group)
+    from ocr_spark.io import _lineage_rows
+
+    metrics = {
+        "conv_min_0": "a", "conv_max_0": "b",
+        "n_turns_0": 3, "n_errors_0": 1,
+        "conv_min_1": None, "conv_max_1": None,
+        "n_turns_1": 0, "n_errors_1": 0,
+    }
+    df = _lineage_rows(spark, "r", [0, 1], metrics)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+    assert all(f.nullable for f in df.schema.fields[:6])
+    got = [r[:6] for r in df.collect()]
+    assert got == [("r", 0, "a", "b", 3, 1), ("r", 1, None, None, 0, 0)]
 
 
 def test_incremental_dedup_store_roundtrip_idempotent(

@@ -1,11 +1,11 @@
-"""Pipeline-semantics tests: dedup, overrides, salting balance,
-ordering contract, synth determinism (SURVEY.md §5.2.3)."""
+"""Pipeline-semantics tests: dedup, salting balance, ordering
+contract, synth determinism (SURVEY.md §5.2.3)."""
 
 import pandas as pd
 from pyspark.sql import functions as F
 
-from ocr_spark.operators.relational import apply_overrides, dedup_turns
-from ocr_spark.partitioning import repartition_salted, whale_conv_ids
+from ocr_spark.operators.relational import dedup_turns
+from ocr_spark.partitioning import repartition_salted
 from ocr_spark.synth import gen_transcripts
 
 
@@ -14,26 +14,6 @@ def test_dedup_duplicate_turns(spark, tiny_transcripts):
     doubled = sdf.unionByName(sdf.limit(50))
     out = dedup_turns(doubled)
     assert out.count() == len(tiny_transcripts)
-
-
-def test_override_upsert(spark, tiny_transcripts):
-    from ocr_spark.extract import extract
-
-    sdf = spark.createDataFrame(tiny_transcripts.head(200))
-    ext = extract(sdf)
-    ov = spark.createDataFrame(
-        pd.DataFrame(
-            {"conv_id": ["c00000000"], "turn_idx": [0], "text": ["MANUAL"]}
-        )
-    )
-    out = apply_overrides(ext, ov)
-    assert out.count() == ext.count()
-    got = out.filter(
-        (F.col("conv_id") == "c00000000") & (F.col("turn_idx") == 0)
-    ).collect()[0]
-    assert got.text == "MANUAL" and got.overridden
-    n_over = out.filter(F.col("overridden")).count()
-    assert n_over == 1
 
 
 def test_whale_detection_and_salting_balance(spark):
@@ -54,9 +34,6 @@ def test_whale_detection_and_salting_balance(spark):
         [conv("whale", 400)] + [conv(f"m{i:03d}", 3) for i in range(30)]
     ).reset_index(drop=True)
     sdf = spark.createDataFrame(data)
-
-    whales = whale_conv_ids(sdf, salt_threshold=100).collect()
-    assert [w.conv_id for w in whales] == ["whale"]
 
     # turn-block salting: 400 turns / block size 50 = 8 distinct salt
     # keys, so the whale spreads over several partitions and no single

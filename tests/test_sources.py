@@ -3,7 +3,6 @@ the same rows as the native parquet path (schema-enforced, no inference
 scan), and ingest-dedup mirrors the duplicate-filename rule."""
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from ocr_spark.io import read_transcripts
 
@@ -106,81 +105,3 @@ def test_zip_ingest_dedups_by_filename_then_rows(
     assert got.select("conv_id").distinct().count() == df[
         "conv_id"
     ].nunique()
-
-
-def test_bucketed_join_is_shuffle_free(spark):
-    """The co-located-join layout: two tables bucketBy'd on the same
-    key with the same bucket count join WITHOUT an Exchange on either
-    side — the scan itself reports HashPartitioning(key). The shuffle
-    is paid once at write time; every later co-bucketed join is free.
-    Values round-trip exactly."""
-    from pyspark.sql import functions as F
-
-    from ocr_spark.io import write_bucketed
-
-    left = spark.range(0, 1000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("a")
-    )
-    right = spark.range(0, 1000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("b")
-    )
-    spark.sql("DROP TABLE IF EXISTS bkt_left")
-    spark.sql("DROP TABLE IF EXISTS bkt_right")
-    write_bucketed(left, "bkt_left", "k", buckets=8)
-    write_bucketed(right, "bkt_right", "k", buckets=8)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = spark.table("bkt_left").join(spark.table("bkt_right"), "k")
-        tree = j._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in tree
-        assert "Exchange" not in tree, tree
-        got = {r.k: (r.a, r.b) for r in j.collect()}
-        assert len(got) == 1000
-        assert got[7] == (14, 21)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS bkt_left")
-        spark.sql("DROP TABLE IF EXISTS bkt_right")
-
-
-def test_read_binary_docs_roundtrip(spark, tmp_path):
-    from ocr_spark.io import read_binary_docs
-    from ocr_spark.operators.multimodal import decode_media, encode_fake_media
-
-    # write fake-media payloads as raw files (the image-dir ingest shape)
-    src = spark.createDataFrame(
-        [(1, "hello media world"), (2, "another body")],
-        "media_id long, text string",
-    )
-    payloads = {
-        r["media_id"]: bytes(r["payload"])
-        for r in encode_fake_media(src).collect()
-    }
-    d = tmp_path / "mediadir"
-    d.mkdir()
-    for mid, blob in payloads.items():
-        (d / f"img_{mid}.bin").write_bytes(blob)
-    (d / "ignore.txt").write_text("not media")
-
-    docs = read_binary_docs(spark, str(d), pattern="*.bin")
-    rows = docs.collect()
-    assert len(rows) == 2  # glob pruned the .txt at listing time
-    assert {r["n_bytes"] for r in rows} == {len(b) for b in payloads.values()}
-    got = {bytes(r["payload"]) for r in rows}
-    assert got == set(payloads.values())
-    # deterministic id: same path -> same media_id on re-read
-    again = {r["path"]: r["media_id"] for r in read_binary_docs(spark, str(d), "*.bin").collect()}
-    first = {r["path"]: r["media_id"] for r in rows}
-    assert again == first
-
-    # feeds the multimodal decode directly
-    meta = decode_media(
-        docs.select("media_id", F.lit("image").alias("kind"), "payload")
-    ).collect()
-    assert len(meta) == 2
-    # decode reports BODY bytes (header stripped): the original texts
-    assert {m["n_bytes"] for m in meta} == {
-        len("hello media world"), len("another body")
-    }
-    assert all(m["width"] > 0 and m["height"] > 0 for m in meta)

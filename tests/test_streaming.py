@@ -182,367 +182,6 @@ def test_streaming_watermarked_dedup_across_restart(spark, tmp_path):
     )
 
 
-def test_streaming_session_windows(spark, tmp_path):
-    """Stateful windowed aggregation: session_window + watermark emits a
-    session only once the watermark passes its close \u2014 verified by
-    draining real files and advancing the watermark with a sentinel."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ocr_spark.streaming import sessionize_stream
-
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(in_dir)
-
-    def write_events(path, rows):
-        tbl = pa.table(
-            {
-                "user_id": pa.array([r[0] for r in rows], pa.string()),
-                "ts": pa.array(
-                    [pd.Timestamp(r[1]) for r in rows],
-                    pa.timestamp("us"),
-                ),
-            }
-        )
-        pq.write_table(tbl, path)
-
-    write_events(
-        f"{in_dir}/a.parquet",
-        [
-            ("A", "2026-01-01 00:00:00"),
-            ("A", "2026-01-01 00:10:00"),  # same session (gap < 30m)
-            ("A", "2026-01-01 01:00:00"),  # new session
-            ("B", "2026-01-01 00:05:00"),
-        ],
-    )
-
-    def drain():
-        stream = (
-            spark.readStream.schema("user_id string, ts timestamp")
-            .parquet(in_dir)
-        )
-        q = sessionize_stream(
-            stream, out_dir, ckpt, gap="30 minutes",
-            watermark="10 minutes", trigger_once=True,
-        )
-        q.awaitTermination(120)
-
-    drain()
-    # sentinel far in the future advances the watermark past every
-    # file-a session close; its own session stays open (unemitted)
-    write_events(
-        f"{in_dir}/sentinel.parquet", [("Z", "2026-02-01 00:00:00")]
-    )
-    drain()
-
-    got = duckdb.sql(
-        f"""select user_id, strftime(start_ts, '%H:%M') as s,
-                   strftime(end_ts, '%H:%M') as e, n_events
-            from '{out_dir}/*.parquet' order by user_id, start_ts"""
-    ).df()
-    rows = {
-        (r.user_id, r.s, r.e): r.n_events for r in got.itertuples()
-    }
-    # session end = last event + gap
-    assert rows[("A", "00:00", "00:40")] == 2
-    assert rows[("A", "01:00", "01:30")] == 1
-    assert rows[("B", "00:05", "00:35")] == 1
-    assert not any(u == "Z" for u, _, _ in rows), "open session unemitted"
-    assert len(rows) == 3
-
-
-def test_streaming_tumbling_windows_and_late_data_drop(spark, tmp_path):
-    """Tumbling-window watermarked counts: buckets emit once the
-    watermark passes their end, match the batch groupBy(window) on the
-    same files, and a late event arriving AFTER emission is dropped —
-    never double-counted, never a duplicate bucket row."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ocr_spark.streaming import windowed_counts_stream
-
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(in_dir)
-
-    def write_events(path, rows):
-        tbl = pa.table(
-            {
-                "user_id": pa.array([r[0] for r in rows], pa.string()),
-                "ts": pa.array(
-                    [pd.Timestamp(r[1]) for r in rows],
-                    pa.timestamp("us"),
-                ),
-            }
-        )
-        pq.write_table(tbl, path)
-
-    write_events(
-        f"{in_dir}/a.parquet",
-        [
-            ("A", "2026-01-01 00:05:00"),
-            ("A", "2026-01-01 00:55:00"),  # same 1h bucket
-            ("A", "2026-01-01 01:10:00"),  # next bucket
-            ("B", "2026-01-01 00:30:00"),
-        ],
-    )
-
-    def drain():
-        stream = (
-            spark.readStream.schema("user_id string, ts timestamp")
-            .parquet(in_dir)
-        )
-        q = windowed_counts_stream(
-            stream, out_dir, ckpt, window="1 hour",
-            watermark="10 minutes", trigger_once=True,
-        )
-        q.awaitTermination(120)
-
-    drain()
-    # sentinel advances the watermark past every file-a bucket end;
-    # its own bucket stays open (unemitted)
-    write_events(
-        f"{in_dir}/sentinel.parquet", [("Z", "2026-02-01 00:00:00")]
-    )
-    drain()
-
-    def emitted():
-        got = duckdb.sql(
-            f"""select user_id, strftime(window_start, '%H:%M') as s,
-                       n_events
-                from '{out_dir}/*.parquet' order by user_id, s"""
-        ).df()
-        return {(r.user_id, r.s): r.n_events for r in got.itertuples()}
-
-    rows = emitted()
-    assert rows == {
-        ("A", "00:00"): 2, ("A", "01:00"): 1, ("B", "00:00"): 1
-    }
-    # late event into an ALREADY-EMITTED bucket: dropped by the
-    # watermark — output is unchanged (no extra row, no recount)
-    write_events(
-        f"{in_dir}/late.parquet", [("A", "2026-01-01 00:20:00")]
-    )
-    drain()
-    assert emitted() == rows
-
-
-def test_streaming_lineage_parity(spark, tmp_path):
-    """foreachBatch variant: per-micro-batch lineage rows (the batch
-    writer's observability protocol) with idempotent batch dirs;
-    lineage totals must equal output rows, and an incremental drain
-    adds lineage only for NEW batches; the extraction kernel runs
-    EXACTLY ONCE per batch (the lineage agg reuses the persisted batch
-    rather than re-executing the pandas-UDF plan \u2014 accumulator counts
-    total rows once, not twice)."""
-    from ocr_spark.extract import ExtractCounters
-    from ocr_spark.streaming import extract_stream_with_lineage
-
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    lin_dir = str(tmp_path / "lineage")
-    os.makedirs(in_dir)
-
-    counters = ExtractCounters(spark)
-    a = gen_transcripts(15, seed=41, whale_lo=30, whale_hi=40)
-    write_transcripts_parquet(a, f"{in_dir}/a.parquet")
-    q = extract_stream_with_lineage(
-        read_transcript_stream(spark, in_dir), out_dir, ckpt, lin_dir,
-        trigger_once=True, counters=counters,
-    )
-    q.awaitTermination(120)
-    assert counters.n_turns.value == len(a), (
-        "extraction kernel must run exactly once per micro-batch "
-        f"(got {counters.n_turns.value} for {len(a)} rows)"
-    )
-    lin1 = (
-        spark.read.parquet(lin_dir)
-        .dropDuplicates(["batch_id"])
-        .toPandas()
-    )
-    n_out1 = duckdb.sql(
-        f"select count(*) from '{out_dir}/*/*.parquet'"
-    ).fetchone()[0]
-    assert int(lin1.n_turns.sum()) == n_out1 == len(a)
-
-    b = gen_transcripts(10, seed=42, whale_lo=30, whale_hi=40)
-    b["conv_id"] = "x" + b["conv_id"]
-    write_transcripts_parquet(b, f"{in_dir}/b.parquet")
-    q = extract_stream_with_lineage(
-        read_transcript_stream(spark, in_dir), out_dir, ckpt, lin_dir,
-        trigger_once=True,
-    )
-    q.awaitTermination(120)
-    lin2 = (
-        spark.read.parquet(lin_dir)
-        .dropDuplicates(["batch_id"])
-        .toPandas()
-    )
-    n_out2 = duckdb.sql(
-        f"select count(*) from '{out_dir}/*/*.parquet'"
-    ).fetchone()[0]
-    assert len(lin2) == len(lin1) + 1, "one new batch, one new lineage row"
-    assert int(lin2.n_turns.sum()) == n_out2 == len(a) + len(b)
-
-
-def test_conv_progress_stateful_accumulates_and_evicts(spark, tmp_path):
-    """applyInPandasWithState custom operator: counts accumulate in
-    keyed state across separate drains (state survives the checkpoint
-    restart), and a conversation idle past the watermark + gap emits a
-    final=true row and drops its state."""
-    import pandas as pd
-
-    from ocr_spark.streaming import (
-        conv_progress_stream,
-        read_transcript_stream,
-    )
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    def write_file(name, rows):
-        pdf = pd.DataFrame(
-            rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-        )
-        pdf["ts"] = pd.to_datetime(pdf["ts"], utc=True)
-        pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
-        from ocr_spark.synth import write_transcripts_parquet
-
-        write_transcripts_parquet(pdf, str(in_dir / name))
-
-    t0 = "2026-01-01 00:00:00"
-    write_file(
-        "a.parquet",
-        [
-            ("A", 0, "user", "hi", None, t0),
-            ("A", 1, "assistant", "yo", "html", t0),
-            ("B", 0, "user", "hey", None, t0),
-        ],
-    )
-    q = conv_progress_stream(
-        read_transcript_stream(spark, str(in_dir)), out, ckpt,
-        watermark="10 minutes", idle_gap_ms=60 * 60 * 1000,
-        trigger_once=True,
-    )
-    q.awaitTermination()
-    got = {
-        (r.conv_id, r.final): (r.n_turns, r.n_tool_turns)
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got == {("A", False): (2, 1), ("B", False): (1, 0)}
-
-    # drain 2, hours later in event time: A gets more turns (running
-    # total must include drain 1's state), B idles past gap -> final
-    t1 = "2026-01-01 06:00:00"
-    write_file(
-        "b.parquet",
-        [
-            ("A", 2, "user", "more", None, t1),
-            ("A", 3, "assistant", "sure", "pdf", t1),
-        ],
-    )
-    q = conv_progress_stream(
-        read_transcript_stream(spark, str(in_dir)), out, ckpt,
-        watermark="10 minutes", idle_gap_ms=60 * 60 * 1000,
-        trigger_once=True,
-    )
-    q.awaitTermination()
-    rows = spark.read.parquet(out).collect()
-    a_updates = sorted(
-        (r.n_turns, r.n_tool_turns)
-        for r in rows
-        if r.conv_id == "A" and not r.final
-    )
-    assert a_updates == [(2, 1), (4, 2)]  # running total, not per-batch
-    b_final = [r for r in rows if r.conv_id == "B" and r.final]
-    assert len(b_final) == 1
-    assert (b_final[0].n_turns, b_final[0].n_tool_turns) == (1, 0)
-
-
-def test_streaming_url_dedup_variants_and_redelivery(spark, tmp_path):
-    """Curation composes with the streaming path: raw URL VARIANTS of
-    one canonical key (scheme case, www, :443, param order, utm,
-    fragment) arriving across files and restarts emit exactly once \u2014
-    the batch url_dedup policy enforced by watermarked canonical-key
-    state that survives the checkpoint."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ocr_spark.streaming import url_dedup_stream
-
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(in_dir)
-
-    def write_docs(path, rows):
-        tbl = pa.table(
-            {
-                "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-                "url": pa.array([r[1] for r in rows], pa.string()),
-                "ts": pa.array(
-                    [pd.Timestamp(r[2]) for r in rows],
-                    pa.timestamp("us"),
-                ),
-            }
-        )
-        pq.write_table(tbl, path)
-
-    write_docs(
-        f"{in_dir}/a.parquet",
-        [
-            (0, "https://www.Example.com/a?b=2&a=1", "2026-01-01 00:00:00"),
-            (1, "http://example.com:80/a?a=1&b=2&utm_x=1", "2026-01-01 00:01:00"),
-            (2, "example.com/a/?a=1&b=2#frag", "2026-01-01 00:02:00"),
-            (3, "https://other.org/p", "2026-01-01 00:03:00"),
-        ],
-    )
-
-    def drain():
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, url string, ts timestamp"
-            ).parquet(in_dir)
-        )
-        q = url_dedup_stream(
-            stream, out_dir, ckpt, watermark="365 days",
-            trigger_once=True,
-        )
-        q.awaitTermination(120)
-
-    drain()
-    got = duckdb.sql(
-        f"select canonical_url from '{out_dir}/*.parquet'"
-    ).df()
-    assert sorted(got.canonical_url) == ["example.com/a?a=1&b=2",
-                                         "other.org/p"]
-
-    # restart: one genuinely new url + two MORE raw variants of the
-    # already-emitted canonical key (a redelivery/recrawl) \u2014 state
-    # must persist through the checkpoint, so only the new url emits
-    write_docs(
-        f"{in_dir}/b.parquet",
-        [
-            (4, "HTTP://EXAMPLE.COM/a?a=1&b=2&gclid=z", "2026-01-02 00:00:00"),
-            (5, "https://example.com:443/a?b=2&a=1", "2026-01-02 00:01:00"),
-            (6, "https://fresh.net/x", "2026-01-02 00:02:00"),
-        ],
-    )
-    drain()
-    got = duckdb.sql(
-        f"select canonical_url from '{out_dir}/*.parquet'"
-    ).df()
-    assert sorted(got.canonical_url) == [
-        "example.com/a?a=1&b=2", "fresh.net/x", "other.org/p",
-    ]
-
-
 def test_streaming_incremental_against_fingerprint_store(spark, tmp_path):
     """Stream-static composition: a drain extracts only content no
     previous run committed to the FingerprintStore; after the caller

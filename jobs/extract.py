@@ -19,6 +19,22 @@ import argparse
 import sys
 
 
+def _commit_fingerprints(fingerprinted, store_dir: str, run_id: str) -> None:
+    """Commit a run's content fingerprints to the store, manifest-last:
+    callers run this only after the run's output committed. keep_id is
+    an informational stable 64-bit key of the first (conv_id, turn_idx)
+    seen with that fingerprint."""
+    from pyspark.sql import functions as F
+
+    from ocr_spark.operators.dedup import FingerprintStore
+
+    fps = fingerprinted.groupBy("fingerprint").agg(
+        F.min(F.xxhash64("conv_id", "turn_idx")).alias("keep_id")
+    )
+    FingerprintStore(store_dir).commit_exact(fps, run_id)
+    print(f"fingerprint store: committed run {run_id}")
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description="ocr_spark extraction job")
     ap.add_argument("--input", required=True, help="transcripts input dir")
@@ -147,28 +163,16 @@ def main(argv: list[str] | None = None) -> int:
             q = extract_stream(stream, out_dir, ckpt, trigger_once=True)
         q.awaitTermination()
         if args.fingerprint_store and not args.stream_dedup:
-            # manifest-last: after the drain commits its output, record
-            # this run's content fingerprints (the whole input dir's —
-            # a superset of the survivors, equivalent for dedup and
-            # idempotent under the overwrite-own-partition contract)
-            from pyspark.sql import functions as F
-
-            from ocr_spark.operators.dedup import FingerprintStore
+            # after the drain commits its output, record the whole input
+            # dir's fingerprints — a superset of the survivors,
+            # equivalent for dedup and idempotent under the
+            # overwrite-own-partition contract
             from ocr_spark.operators.textops import with_fingerprint
 
-            fps = (
-                with_fingerprint(spark.read.parquet(args.input))
-                .groupBy("fingerprint")
-                .agg(
-                    F.min(F.xxhash64("conv_id", "turn_idx")).alias(
-                        "keep_id"
-                    )
-                )
+            _commit_fingerprints(
+                with_fingerprint(spark.read.parquet(args.input)),
+                args.fingerprint_store, args.run_id,
             )
-            FingerprintStore(args.fingerprint_store).commit_exact(
-                fps, args.run_id
-            )
-            print(f"fingerprint store: committed run {args.run_id}")
         print(f"stream drain complete -> {out_dir}")
         spark.stop()
         return 0
@@ -191,17 +195,15 @@ def main(argv: list[str] | None = None) -> int:
         transcripts = read_transcripts(
             spark, args.input, fmt=args.input_format, dedup=args.dedup
         )
-    store = None
     if args.fingerprint_store:
-        from pyspark.sql import functions as F
-
         from ocr_spark.operators.dedup import FingerprintStore
         from ocr_spark.operators.textops import with_fingerprint
 
-        store = FingerprintStore(args.fingerprint_store)
-        committed_fps = store.committed_fingerprints(
-            spark, exclude_run=args.run_id
-        ).select("fingerprint")
+        committed_fps = (
+            FingerprintStore(args.fingerprint_store)
+            .committed_fingerprints(spark, exclude_run=args.run_id)
+            .select("fingerprint")
+        )
         fresh_fp = with_fingerprint(transcripts).join(
             committed_fps, "fingerprint", "left_anti"
         )
@@ -219,15 +221,9 @@ def main(argv: list[str] | None = None) -> int:
         counters=counters,
     )
     print(f"committed buckets this run: {sorted(committed)}")
-    if store is not None:
-        # manifest-last, like the lineage rows: the store commits only
-        # after the run's buckets did. keep_id is an informational
-        # stable 64-bit key of the first (conv_id, turn_idx) seen.
-        new_fps = fresh_fp.groupBy("fingerprint").agg(
-            F.min(F.xxhash64("conv_id", "turn_idx")).alias("keep_id")
-        )
-        store.commit_exact(new_fps, args.run_id)
-        print(f"fingerprint store: committed run {args.run_id}")
+    if args.fingerprint_store:
+        # like the lineage rows, the store commits after the buckets did
+        _commit_fingerprints(fresh_fp, args.fingerprint_store, args.run_id)
     # live accumulator view (O15); lineage rows are the committed truth
     print(
         "progress counters: n_turns={n_turns} n_errors={n_errors}".format(

@@ -5369,7 +5369,7 @@ ORACLES: dict[str, str] = {
         SELECT doc_id, n_features, logw, key
         FROM keyed ORDER BY key DESC, doc_id ASC LIMIT 100
     """,
-    # mirrors urlops.with_canonical_url/url_dedup/domain_filter over the
+    # mirrors urlops.with_canonical_url/domain_filter + min-id groups over the
     # same synthesized url column (doc_id div/mod arithmetic)
     "url_curation": """
         WITH u AS (

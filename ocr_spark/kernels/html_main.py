@@ -9,8 +9,8 @@ Algorithm: Arc90-Readability / Boilerpipe-style block scoring
 (Kohlschütter, Fankhauser & Nejdl, "Boilerplate detection using shallow
 text features", WSDM 2010 — text density + link density as the dominant
 features; Arc90 Readability for the container-vote idiom) —
-1. tokenize the markup with a single compiled regex (same event stream a
-   stdlib ``html.parser`` drive produced, ~2.5x faster; lxml is not
+1. tokenize the markup with a single compiled regex in one loop that
+   keeps the open-tag, block and span state in flat lists (lxml is not
    available in this environment; tolerant of malformed markup),
 2. credit every text chunk to its innermost open block element ("leaf"),
 3. score each leaf by text mass × (1 - link_density)² × a tag prior,
@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import re
 from bisect import bisect_right
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from html import unescape as _unescape
 
 # Block-level elements: opening one starts a new leaf scope.
@@ -96,9 +96,9 @@ def collapse_ws(s: str) -> str:
     return " ".join(s.split())
 
 
-# One dict lookup per tag event instead of 3-4 set/dict membership
-# tests (SKIP_TAGS / BLOCK_TAGS / SPAN_KIND / == "a") — the handlers run
-# once per tag token and showed up as the kernel's hottest frames.
+# One dict lookup per tag instead of 3-4 set/dict membership tests
+# (SKIP_TAGS / BLOCK_TAGS / SPAN_KIND / == "a") — tag handling runs once
+# per tag token and is among the kernel's hottest lines.
 _F_SKIP, _F_BLOCK, _F_SPAN, _F_LINK = 1, 2, 4, 8
 _TAG_FLAGS: dict[str, int] = {}
 for _t in SKIP_TAGS:
@@ -108,17 +108,6 @@ for _t in BLOCK_TAGS:
 for _t in SPAN_KIND:
     _TAG_FLAGS[_t] = _TAG_FLAGS.get(_t, 0) | _F_SPAN
 _TAG_FLAGS["a"] = _TAG_FLAGS.get("a", 0) | _F_LINK
-
-
-@dataclass(slots=True)
-class _Block:
-    bid: int
-    tag: str
-    parent: int  # parent block id (-1 for root)
-    order: int = 0  # document order of first text chunk (set lazily)
-    link_chars: int = 0
-    text_chars: int = 0
-    chunk_ids: list = field(default_factory=list)
 
 
 @dataclass
@@ -132,12 +121,12 @@ class HtmlResult:
     main_spans: list  # same spans remapped into main_text coords
 
 
-# Tag tokenizer: the profile showed stdlib html.parser machinery (position
-# tracking, attribute parsing we never use, per-tag regex cascades) at ~60%
-# of kernel time. This single compiled regex yields the same start/end/data
-# event stream for the markup this engine scores; quoted attributes may
-# contain '>' (same tolerance html.parser has), comments/doctype/PI are
-# consumed silently, script/style content is raw-skipped below.
+# Tag tokenizer: one compiled regex instead of a general HTML parser
+# (stdlib html.parser's position tracking, attribute parsing and per-tag
+# regex cascades were ~60% of kernel time). It matches start/end tags of
+# the markup this engine scores; quoted attributes may contain '>' (same
+# tolerance html.parser has), comments/doctype/PI are consumed silently,
+# script/style content is raw-skipped in _parse_html.
 _TAG_TOKEN_RE = re.compile(
     r"""<(?:
         !--.*?(?:-->|$)                                  # comment
@@ -162,185 +151,148 @@ _G_SELFCLOSE = _TAG_TOKEN_RE.groupindex["selfclose"]
 _RAW_CONTENT_TAGS = ("script", "style")
 
 
-def _parse_html(raw: str, h: "_Extractor") -> None:
-    """Drive the handler with the tokenizer's event stream."""
+def _parse_html(raw: str) -> tuple[list, list, list]:
+    """One pass over the tokenizer's matches: block scoring state plus
+    the full text with spans. Returns ``(blocks, chunks, spans)``:
+
+    - blocks: one row ``[tag, parent, text_chars, link_chars, chunk_ids]``
+      per block element in document order; row 0 is the root (parent -1),
+    - chunks: ``(text, full_start)`` per text run in document order —
+      full_text is ``" ".join`` of the texts, so full_start is exact by
+      construction,
+    - spans: ``(full_start, full_end, kind)``, unsorted.
+    """
+    blocks: list[list] = [["<root>", -1, 0, 0, []]]
+    block_stack = [0]  # open block ids, innermost last
+    tag_stack: list[str] = []
+    # open-tag multiset mirroring tag_stack: O(1) "is this end tag
+    # matched?" instead of an O(depth) list scan per end tag
+    open_counts: dict[str, int] = {}
+    open_spans: list[tuple[str, int]] = []  # (kind, full_start)
+    chunks: list[tuple[str, int]] = []
+    spans: list[tuple[int, int, str]] = []
+    skip = 0  # depth of open SKIP_TAGS elements: their text is dropped
+    links = 0  # depth of open <a> elements
+    full_len = 0
     pos = 0
     n = len(raw)
     lower = None  # lazily lowered copy for case-insensitive close search
     search = _TAG_TOKEN_RE.search
-    handle_data = h.handle_data
-    handle_starttag = h.handle_starttag
-    handle_endtag = h.handle_endtag
     while pos < n:
         m = search(raw, pos)
-        if m is None:
-            data = raw[pos:]
-            handle_data(_unescape(data) if "&" in data else data)
-            break
-        s = m.start()
-        if s > pos:
+        s = n if m is None else m.start()
+        if s > pos and not skip:
             data = raw[pos:s]
-            handle_data(_unescape(data) if "&" in data else data)
+            txt = collapse_ws(_unescape(data) if "&" in data else data)
+            if txt:
+                # credit the chunk to the innermost open block
+                blk = blocks[block_stack[-1]]
+                start = full_len + 1 if chunks else 0
+                blk[4].append(len(chunks))
+                blk[2] += len(txt)
+                if links:
+                    blk[3] += len(txt)
+                chunks.append((txt, start))
+                full_len = start + len(txt)
+        if m is None:
+            break
         pos = m.end()
         # positional fetch: named access re-resolves group names per call
         end, name, selfclose = m.group(_G_END, _G_NAME, _G_SELFCLOSE)
-        if name is None:  # comment / doctype / PI: no event
+        if name is None:  # comment / doctype / PI
             continue
         tag = name.lower()
-        if end:
-            handle_endtag(tag)
-            continue
-        handle_starttag(tag, None)
-        if selfclose:
-            handle_endtag(tag)
-        elif tag in _RAW_CONTENT_TAGS:
-            close = f"</{tag}"
-            idx = raw.find(close, pos)
-            if idx < 0:
-                if lower is None:
-                    lower = raw.lower()
-                idx = lower.find(close, pos)
-            handle_endtag(tag)
-            if idx < 0:
-                break  # unterminated: rest of document is raw content
-            gt = raw.find(">", idx)
-            pos = gt + 1 if gt >= 0 else n
-
-
-class _Extractor:
-    """Single-pass parse state: block scoring + full-text-with-spans
-    rendering. Events arrive from ``_parse_html``."""
-
-    __slots__ = (
-        "blocks", "block_stack", "tag_stack", "_open_counts",
-        "skip_depth", "link_depth", "_order", "chunks", "full_len",
-        "spans", "_open_spans",
-    )
-
-    def __init__(self) -> None:
-        self.blocks: list[_Block] = [_Block(0, "<root>", -1)]
-        self.block_stack: list[int] = [0]
-        self.tag_stack: list[str] = []
-        # open-tag multiset mirroring tag_stack: O(1) "is this end tag
-        # matched?" instead of an O(depth) list scan per end tag
-        self._open_counts: dict[str, int] = {}
-        self.skip_depth = 0
-        self.link_depth = 0
-        self._order = 0
-        # chunks: (block_id, text, full_start) — full_text is
-        # " ".join(chunk texts), so full_start is exact by construction
-        self.chunks: list[tuple[int, str, int]] = []
-        self.full_len = 0
-        self.spans: list[tuple[int, int, str]] = []
-        self._open_spans: list[list] = []  # [kind, full_start, tag]
-
-    # -- tag handling -------------------------------------------------
-    def handle_starttag(self, tag, attrs):
         f = _TAG_FLAGS.get(tag, 0)
         if f & _F_SKIP:
-            self.skip_depth += 1
-            return
-        if self.skip_depth:
-            return
-        self.tag_stack.append(tag)
-        oc = self._open_counts
-        oc[tag] = oc.get(tag, 0) + 1
-        if f:
-            if f & _F_LINK:
-                self.link_depth += 1
+            if end:
+                if skip:
+                    skip -= 1
+            elif selfclose:
+                pass  # opens and closes: no skipped region
+            elif tag in _RAW_CONTENT_TAGS:
+                # jump past the close tag, which leaves skip as it was
+                close = f"</{tag}"
+                idx = raw.find(close, pos)
+                if idx < 0:
+                    if lower is None:
+                        lower = raw.lower()
+                    idx = lower.find(close, pos)
+                if idx < 0:
+                    break  # unterminated: rest of document is raw content
+                gt = raw.find(">", idx)
+                pos = gt + 1 if gt >= 0 else n
+            else:
+                skip += 1
+        elif skip:
+            continue
+        elif end:
+            # tolerant unwinding for malformed nesting: pop through the
+            # innermost open element of this tag; stray end tags no-op.
+            # Each open block/span/<a> pushed exactly one entry, so the
+            # pops below pair with those pushes.
+            if not open_counts.get(tag):
+                continue
+            while True:
+                top = tag_stack.pop()
+                open_counts[top] -= 1
+                g = _TAG_FLAGS.get(top, 0)
+                if g & _F_LINK:
+                    links -= 1
+                if g & _F_BLOCK:
+                    block_stack.pop()
+                if g & _F_SPAN:
+                    kind, start = open_spans.pop()
+                    if full_len > start:
+                        spans.append((start, full_len, kind))
+                if top == tag:
+                    break
+        elif selfclose:
+            # opens and closes with no text inside: only an (empty)
+            # block row is left behind
             if f & _F_BLOCK:
-                bid = len(self.blocks)
-                self.blocks.append(_Block(bid, tag, self.block_stack[-1]))
-                self.block_stack.append(bid)
+                blocks.append([tag, block_stack[-1], 0, 0, []])
+        else:
+            tag_stack.append(tag)
+            open_counts[tag] = open_counts.get(tag, 0) + 1
+            if f & _F_LINK:
+                links += 1
+            if f & _F_BLOCK:
+                block_stack.append(len(blocks))
+                blocks.append([tag, block_stack[-2], 0, 0, []])
             if f & _F_SPAN:
-                start = self.full_len + (1 if self.chunks else 0)
-                self._open_spans.append([SPAN_KIND[tag], start, tag])
-
-    def handle_endtag(self, tag):
-        if _TAG_FLAGS.get(tag, 0) & _F_SKIP:
-            self.skip_depth = max(0, self.skip_depth - 1)
-            return
-        if self.skip_depth:
-            return
-        # tolerant unwinding for malformed nesting
-        if self._open_counts.get(tag, 0):
-            oc = self._open_counts
-            while self.tag_stack:
-                popped = self.tag_stack.pop()
-                oc[popped] -= 1
-                self._close_for(popped)
-                if popped == tag:
-                    break
-
-    def _close_for(self, tag):
-        f = _TAG_FLAGS.get(tag, 0)
-        if not f:
-            return
-        if f & _F_LINK:
-            self.link_depth = max(0, self.link_depth - 1)
-        if f & _F_BLOCK and len(self.block_stack) > 1:
-            self.block_stack.pop()
-        if f & _F_SPAN:
-            for i in range(len(self._open_spans) - 1, -1, -1):
-                if self._open_spans[i][2] == tag:
-                    kind, start, _ = self._open_spans.pop(i)
-                    end = self.full_len
-                    if end > start:
-                        self.spans.append((start, end, kind))
-                    break
-
-    def close(self):
-        # close any spans left open by malformed markup
-        while self._open_spans:
-            kind, start, _ = self._open_spans.pop()
-            if self.full_len > start:
-                self.spans.append((start, self.full_len, kind))
-
-    # -- text handling ------------------------------------------------
-    def handle_data(self, data):
-        if self.skip_depth:
-            return
-        txt = collapse_ws(data)
-        if not txt:
-            return
-        blk = self.blocks[self.block_stack[-1]]
-        if not blk.chunk_ids:
-            self._order += 1
-            blk.order = self._order
-        start = self.full_len + (1 if self.chunks else 0)
-        blk.chunk_ids.append(len(self.chunks))
-        blk.text_chars += len(txt)
-        if self.link_depth:
-            blk.link_chars += len(txt)
-        self.chunks.append((blk.bid, txt, start))
-        self.full_len = start + len(txt)
+                open_spans.append(
+                    (SPAN_KIND[tag], full_len + 1 if chunks else 0)
+                )
+    # close any spans left open by malformed markup
+    for kind, start in open_spans:
+        if full_len > start:
+            spans.append((start, full_len, kind))
+    return blocks, chunks, spans
 
 
-def _leaf_score(b: _Block) -> float:
-    if b.text_chars == 0:
-        return 0.0
-    link_density = b.link_chars / b.text_chars
-    prior = TAG_PRIOR.get(b.tag, DEFAULT_PRIOR)
-    return b.text_chars * (1.0 - link_density) ** 2 * prior
+def _leaf_score(b: list) -> float:
+    tag, _parent, text_chars, link_chars, _chunk_ids = b
+    link_density = link_chars / text_chars
+    prior = TAG_PRIOR.get(tag, DEFAULT_PRIOR)
+    return text_chars * (1.0 - link_density) ** 2 * prior
 
 
-def _boilerplate_penalty(blocks: list[_Block], bid: int) -> float:
+def _boilerplate_penalty(blocks: list[list], bid: int) -> float:
     """Walk ancestors: a leaf under nav/aside/header/footer is boilerplate."""
     pen = 1.0
     cur = bid
     seen = 0
     while cur > 0 and seen < 64:
-        tag = blocks[cur].tag
+        tag, cur = blocks[cur][0], blocks[cur][1]
         if tag in ("nav", "aside", "header", "footer"):
             pen = min(pen, TAG_PRIOR[tag])
-        cur = blocks[cur].parent
         seen += 1
     return pen
 
 
 def _remap_spans(
     spans: list[tuple[int, int, str]],
-    chunks: list[tuple[int, str, int]],
+    chunks: list[tuple[str, int]],
     win_chunk_main_start: dict[int, int],
 ) -> list[tuple[int, int, str]]:
     """Exact span remap: full_text coords -> main_text coords via the
@@ -351,7 +303,7 @@ def _remap_spans(
     """
     if not spans or not win_chunk_main_start:
         return []
-    fstarts = [c[2] for c in chunks]
+    fstarts = [c[1] for c in chunks]
     out = []
     for s, e, kind in sorted(spans):
         lo = None
@@ -360,7 +312,7 @@ def _remap_spans(
         if i < 0:
             i = 0
         for ci in range(i, len(chunks)):
-            _bid, txt, fstart = chunks[ci]
+            txt, fstart = chunks[ci]
             if fstart >= e:
                 break
             if fstart + len(txt) <= s:
@@ -386,35 +338,33 @@ def extract_html(raw: str) -> HtmlResult:
         norm = collapse_ws(raw)
         return HtmlResult(norm, 0.3 if norm else 0.0, norm, [], [])
 
-    p = _Extractor()
     try:
-        _parse_html(raw, p)
-        p.close()
+        blocks, chunks, spans = _parse_html(raw)
     except Exception:  # the tokenizer shouldn't raise, but never kill a row
         norm = collapse_ws(raw)
         return HtmlResult(norm, 0.05, norm, [], [])
 
-    full_text = " ".join(txt for _bid, txt, _s in p.chunks)
-    spans = sorted(p.spans)
-    leaves = [b for b in p.blocks if b.text_chars > 0]
-    if not leaves:
-        return HtmlResult("", 0.0, full_text, spans, [])
+    full_text = " ".join(txt for txt, _s in chunks)
+    spans.sort()
 
-    # Arc90 vote: leaves credit their parent container.
+    # Arc90 vote: leaves (blocks holding text) credit their parent
+    # container; the root is its own container.
     container_score: dict[int, float] = {}
-    container_leaves: dict[int, list[_Block]] = {}
-    for b in leaves:
-        s = _leaf_score(b) * _boilerplate_penalty(p.blocks, b.bid)
-        parent = b.parent if b.parent >= 0 else 0
-        container_score[parent] = container_score.get(parent, 0.0) + s
-        container_leaves.setdefault(parent, []).append(b)
+    container_leaves: dict[int, list[list]] = {}
+    for bid, b in enumerate(blocks):
+        if b[2]:
+            s = _leaf_score(b) * _boilerplate_penalty(blocks, bid)
+            parent = max(b[1], 0)
+            container_score[parent] = container_score.get(parent, 0.0) + s
+            container_leaves.setdefault(parent, []).append(b)
 
     total = sum(container_score.values())
-    if total <= 0:
+    if total <= 0:  # also: no leaves at all
         return HtmlResult("", 0.0, full_text, spans, [])
     # argmax container; ties -> smallest container id (document order)
     win = min(container_score, key=lambda c: (-container_score[c], c))
-    win_leaves = sorted(container_leaves[win], key=lambda b: (b.order, b.bid))
+    # leaves in document order of their first chunk
+    win_leaves = sorted(container_leaves[win], key=lambda b: b[4][0])
 
     # main text: leaf chunks joined by ' ' within a leaf, '\n' across
     # leaves. ONE construction yields both the string and each winning
@@ -425,8 +375,8 @@ def extract_html(raw: str) -> HtmlResult:
     main_len = 0
     chunk_main_start: dict[int, int] = {}
     for b in win_leaves:
-        for k, ci in enumerate(b.chunk_ids):
-            txt = p.chunks[ci][1]
+        for k, ci in enumerate(b[4]):
+            txt = chunks[ci][0]
             if main_parts:
                 main_parts.append("\n" if k == 0 else " ")
                 main_len += 1
@@ -435,7 +385,7 @@ def extract_html(raw: str) -> HtmlResult:
             main_len += len(txt)
     main_text = "".join(main_parts)
 
-    main_spans = _remap_spans(spans, p.chunks, chunk_main_start)
+    main_spans = _remap_spans(spans, chunks, chunk_main_start)
     dominance = container_score[win] / total
     mass = min(1.0, len(main_text) / 40.0)
     score = round(min(1.0, 0.2 + 0.8 * dominance) * mass, 6)

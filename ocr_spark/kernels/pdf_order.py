@@ -67,8 +67,6 @@ def _join_lines(texts: list[str]) -> str:
             continue
         if out and out[-1].endswith("-") and t[:1].islower():
             out[-1] = out[-1][:-1] + t
-        elif out:
-            out.append(t)
         else:
             out.append(t)
     return " ".join(out)
@@ -91,7 +89,7 @@ def extract_pdf(raw: str) -> tuple[str, float]:
             x0, y0 = float(m.group(2)), float(m.group(3))
             text = m.group(6)
             parsed.append((page, x0, y0, text))
-    if not parsed or n_nonempty == 0:
+    if not parsed:  # a parsed line is a non-empty one: n_nonempty > 0
         return "", 0.0
 
     pages: dict[int, list] = {}

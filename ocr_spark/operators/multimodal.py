@@ -4,8 +4,8 @@ Media payloads are opaque ``binary`` columns with typed metadata — the
 Spark-side plumbing (schemas, Arrow batch shapes over ``mapInPandas``,
 frame explosion, partition behavior) is real and tested; the actual
 codec work (JPEG decode, audio resample, H.264 frame extraction) is
-STUBBED behind ``_require_codec`` because no image/audio libraries exist
-in this container. Swapping a stub for PIL/librosa/av changes one
+STUBBED by a deterministic fake-media format because no image/audio
+libraries are installed. Swapping a stub for PIL/librosa/av changes one
 function body and nothing about the plan.
 
 Graft rationale: the reference ingests images and crops regions of
@@ -45,18 +45,6 @@ _MAGIC = b"FAKEMEDIA1"
 FRAME_BYTES = 4096  # bounded frame size (Arrow cell-size safety)
 
 
-def _require_codec(name: str):
-    """Import gate for real codec libraries (absent in this container)."""
-    try:
-        return __import__(name)
-    except ImportError as e:  # pragma: no cover - environment dependent
-        raise NotImplementedError(
-            f"real {name} decode is stubbed: {name} is not installed in "
-            "this environment; the deterministic fake decoder below "
-            "exercises the identical Spark plumbing"
-        ) from e
-
-
 def encode_fake_media(df: DataFrame, text_col: str = "text",
                       kind: str = "image") -> DataFrame:
     """Wrap a text column as a fake binary media payload.
@@ -81,9 +69,8 @@ def encode_fake_media(df: DataFrame, text_col: str = "text",
 def decode_media(df: DataFrame, id_col: str = "media_id") -> DataFrame:
     """Parse payload headers into typed metadata (map-only, no shuffle).
 
-    For real media this is where PIL/av would run (``_require_codec``);
-    the fake-header parse exercises the same binary-in, struct-out
-    Arrow batch shape.
+    For real media this is where PIL/av would run; the fake-header
+    parse exercises the same binary-in, struct-out Arrow batch shape.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -131,14 +131,6 @@ def _hash_selector(key_col: str):
     ).cast("int")
 
 
-def hash_sample(df: DataFrame, rate: float, key_col: str = "doc_id") -> DataFrame:
-    """Deterministic uniform sample: keep ~``rate`` of rows by hash
-    threshold. Reproducible, partition-independent, join-stable (the
-    same key always samples the same way — so multiple tables sampled
-    on a shared key stay aligned)."""
-    return df.filter(_hash_selector(key_col) < int(rate * 65536))
-
-
 def stratified_sample(
     df: DataFrame,
     strata_col: str,
@@ -256,7 +248,7 @@ def domain_mix(
 
     Plan: one domain-count-sized aggregate (hash-agg with map-side
     partials), broadcast back onto the corpus, then the same
-    deterministic md5-threshold selector as :func:`hash_sample` — one
+    deterministic md5-threshold selector as :func:`stratified_sample` — one
     pass over the data, no shuffle of the corpus itself, reproducible
     across runs and partitionings. ``floor`` (not cast) fixes the
     threshold: Spark's double→int cast truncates while DuckDB's rounds,
@@ -389,7 +381,7 @@ def domain_upsample(
     occurrences). The fractional-epoch selector is a 16-bit md5
     selector SALTED with ``#up`` — reproducible and group-coherent in
     ``key_col``, but statistically independent of the UNsalted
-    selector :func:`hash_split`/:func:`hash_sample` use on the same
+    selector :func:`hash_split`/:func:`stratified_sample` use on the same
     key (unsalted, the extra-epoch subset would coincide exactly with
     a val/test split or a sample cut of matching fraction — the same
     reason :func:`shard_assign` salts its shuffle hash).
@@ -803,7 +795,7 @@ def dsir_sample(
     noise is DETERMINISTIC — u = (md5_32('g#'||doc_id) + 0.5) / 2^32,
     g = -ln(-ln(u)) — so the sample is reproducible, partition-
     independent, and sits under the exact DuckDB gate like every other
-    sampling op here (`hash_sample` discipline applied to Gumbel).
+    sampling op here (`_hash_selector` discipline applied to Gumbel).
 
     Returns the k selected rows as (doc_id, n_features, logw, key),
     key = round(logw + g, 4); top-k is `orderBy().limit(k)` =
@@ -2397,7 +2389,7 @@ def temperature_sample(
     BIGINT arithmetic (W = sum of weights). Selection is rate-based on
     the 16-bit md5 selector SALTED ``#ts`` (the domain_upsample
     salting rule: a new selector must never coincide with the shared
-    unsalted hash_split/hash_sample cut), threshold
+    unsalted hash_split/stratified_sample cut), threshold
     ``target * 65536 div n_g`` — a fully-met target gives threshold
     65536, above every selector value, so under-budget groups keep all
     rows exactly.

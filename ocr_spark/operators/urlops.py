@@ -3,16 +3,17 @@ every web-corpus pipeline (C4, Raffel et al. JMLR '20 §2.2; RefinedWeb,
 Penedo et al. '23 §3.1 both lead with URL-level filtering before any
 content-based stage).
 
-Three operators, all linear built-in regex/string/array expressions
+Two base operators, both linear built-in regex/string/array expressions
 (JVM-side, codegen'd, no UDFs — the ``redact_pii`` discipline):
 
 - :func:`with_canonical_url` — normalize a URL column to a canonical
   dedup key (scheme/www/default-port/fragment/trailing-slash stripped,
   tracking params dropped, remaining query params sorted).
-- :func:`url_dedup` — canonical-URL duplicate groups (min-id survivor,
-  the ``exact_dedup`` shape: one hash-agg, uniform keys).
 - :func:`domain_filter` — host blocklist with suffix semantics
   (``example.com`` blocks ``example.com`` and ``*.example.com``).
+
+:func:`url_category` and :func:`url_decontaminate` key on the canonical
+URL the first one builds.
 
 Canonicalization policy (documented simplifications — a canonical key
 for DEDUP, not a resolver): the whole host lowercases but the path
@@ -79,21 +80,6 @@ def with_canonical_url(df: DataFrame, url_col: str = "url") -> DataFrame:
             path,
             F.when(q != "", F.concat(F.lit("?"), q)).otherwise(F.lit("")),
         ),
-    )
-
-
-def url_dedup(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Canonical-URL duplicate groups: (canonical_url, keep_id, n_dups)
-    with the min doc_id surviving — one hash-agg on the canonical key
-    (uniform md5-free string keys; map-side partials), the
-    ``exact_dedup`` scale shape applied to URLs."""
-    return (
-        with_canonical_url(df, url_col)
-        .groupBy("canonical_url")
-        .agg(
-            F.min("doc_id").alias("keep_id"),
-            F.count(F.lit(1)).alias("n_dups"),
-        )
     )
 
 

@@ -90,10 +90,3 @@ def test_decode_corrupt_magic_payload_row_preserved(spark):
     assert len(meta) == 4
     assert (meta["codec"] == "unknown").all()
     assert (meta["width"] == -1).all()
-
-
-def test_codec_gate_raises_not_implemented():
-    import pytest
-
-    with pytest.raises((NotImplementedError, ImportError)):
-        M._require_codec("definitely_not_installed_codec_lib")

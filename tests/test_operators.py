@@ -322,19 +322,6 @@ def test_connected_components_long_chain_pointer_jumping(spark):
         connected_components(chain, max_iters=2)
 
 
-def test_hash_sample_deterministic_and_proportional(spark):
-    from ocr_spark.operators.textops import hash_sample
-
-    docs = spark.range(0, 2000).select(F.col("id").alias("doc_id"))
-    a = sorted(r.doc_id for r in hash_sample(docs, 0.3).collect())
-    b = sorted(r.doc_id for r in hash_sample(docs, 0.3).collect())
-    assert a == b, "hash sampling must be reproducible"
-    assert 0.25 < len(a) / 2000 < 0.35
-    # nested rates: a 10% sample is a subset of the 30% sample
-    c = set(r.doc_id for r in hash_sample(docs, 0.1).collect())
-    assert c <= set(a)
-
-
 def test_stratified_sample_rates(spark):
     from ocr_spark.operators.textops import stratified_sample
 
@@ -706,11 +693,7 @@ def test_url_canonicalize_merges_variants(spark):
     """Scheme case, www, default port, param order, tracking params,
     fragments, and trailing slashes all collapse to one canonical key;
     subdomains keep distinct hosts."""
-    from ocr_spark.operators.urlops import (
-        domain_filter,
-        url_dedup,
-        with_canonical_url,
-    )
+    from ocr_spark.operators.urlops import domain_filter, with_canonical_url
 
     rows = [
         (0, "https://www.Example.com:443/a/b/?b=2&a=1&utm_source=x#frag"),
@@ -729,12 +712,6 @@ def test_url_canonicalize_merges_variants(spark):
     assert c[0] == c[1] == c[2] == c[6] == "example.com/a/b?a=1&b=2"
     assert c[3] == "sub.example.com/a"
     assert c[4] == c[5] == "other.org"
-    d = {
-        r.canonical_url: (r.keep_id, r.n_dups)
-        for r in url_dedup(df).collect()
-    }
-    assert d["example.com/a/b?a=1&b=2"] == (0, 4)
-    assert d["other.org"] == (4, 2)
     # suffix-semantics blocklist: example.com blocks its subdomains but
     # NOT examplexcom lookalikes or other hosts; NULL urls come back
     # blocked=False (not NULL), preserving rows-never-dropped under

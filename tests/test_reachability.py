@@ -1,13 +1,14 @@
 """Reachability guard: every top-level def and class in ``ocr_spark/``
-must be named somewhere in the code the entry points run — ``jobs/``,
-``__spark_entry__.py`` or ``ocr_spark/`` itself — outside its own
-definition. A name counts wherever it appears as a whole word, docstring
-cross-references included. Library code that only tests reach fails
-here; the allowlist holds the reference implementations and fixture
-generators that exist for the tests."""
+must be referenced somewhere in the code the entry points run —
+``jobs/``, ``__spark_entry__.py`` or ``ocr_spark/`` itself — outside its
+own definition. Only code counts: a reference is an ``ast`` ``Name``
+(a load, call or assignment), an ``Attribute`` (``mod.name``) or an
+imported name. Docstrings, comments and other strings do not count.
+Library code that only tests reach fails here; the allowlist holds the
+reference implementations and fixture generators that exist for the
+tests."""
 
 import ast
-import re
 from collections import Counter
 from pathlib import Path
 
@@ -16,6 +17,7 @@ ROOT = Path(__file__).resolve().parent.parent
 TEST_ORACLES = {
     ("kernels/bpe_ref.py", "encode_text"),
     ("kernels/graph_ref.py", "ref_hits"),
+    ("kernels/graph_ref.py", "ref_pagerank"),
     ("synth.py", "gen_transcripts"),
     # the whale-table generator of bench.py's skew soak
     ("synth.py", "gen_whale_turns"),
@@ -25,6 +27,16 @@ TEST_ORACLES = {
 }
 
 
+def _references(tree: ast.AST):
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            yield node.id
+        elif isinstance(node, ast.Attribute):
+            yield node.attr
+        elif isinstance(node, ast.alias):  # import x.y.name [as z]
+            yield node.name.rpartition(".")[2]
+
+
 def _unreferenced() -> list[tuple[str, str]]:
     pkg = ROOT / "ocr_spark"
     files = [
@@ -32,23 +44,19 @@ def _unreferenced() -> list[tuple[str, str]]:
         *sorted((ROOT / "jobs").rglob("*.py")),
         ROOT / "__spark_entry__.py",
     ]
-    words = re.compile(r"\w+")
+    trees = {f: ast.parse(f.read_text(encoding="utf-8")) for f in files}
     total = Counter()
-    for f in files:
-        total.update(words.findall(f.read_text(encoding="utf-8")))
+    for tree in trees.values():
+        total.update(_references(tree))
     out = []
     for f in sorted(pkg.rglob("*.py")):
-        lines = f.read_text(encoding="utf-8").splitlines()
-        for node in ast.parse("\n".join(lines)).body:
+        for node in trees[f].body:
             if not isinstance(
                 node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
             ):
                 continue
-            first = min(
-                [node.lineno] + [d.lineno for d in node.decorator_list]
-            )
-            own = "\n".join(lines[first - 1 : node.end_lineno])
-            if total[node.name] == words.findall(own).count(node.name):
+            own = sum(r == node.name for r in _references(node))
+            if total[node.name] == own:
                 out.append((f.relative_to(pkg).as_posix(), node.name))
     return out
 
@@ -58,7 +66,7 @@ def test_every_library_def_is_reached():
     # deleted, is a stale entry that would hide a future dead def
     dead = set(_unreferenced())
     assert dead == TEST_ORACLES, (
-        "named nowhere in jobs/, __spark_entry__.py or ocr_spark/: "
+        "referenced nowhere in jobs/, __spark_entry__.py or ocr_spark/: "
         f"{sorted(dead - TEST_ORACLES)}; stale allowlist entries: "
         f"{sorted(TEST_ORACLES - dead)}"
     )

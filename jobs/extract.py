@@ -197,15 +197,9 @@ def main(argv: list[str] | None = None) -> int:
         )
     if args.fingerprint_store:
         from ocr_spark.operators.dedup import FingerprintStore
-        from ocr_spark.operators.textops import with_fingerprint
 
-        committed_fps = (
-            FingerprintStore(args.fingerprint_store)
-            .committed_fingerprints(spark, exclude_run=args.run_id)
-            .select("fingerprint")
-        )
-        fresh_fp = with_fingerprint(transcripts).join(
-            committed_fps, "fingerprint", "left_anti"
+        fresh_fp = FingerprintStore(args.fingerprint_store).fresh(
+            transcripts, args.run_id
         )
         transcripts = fresh_fp.drop("fingerprint")
     counters = ExtractCounters(spark)

@@ -51,31 +51,62 @@ _HTML_POST = (
     "</footer></body></html>"
 )
 
+# canonical fingerprint of ``text`` (textops.with_fingerprint)
+_FP_SQL = "md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))"
+
+
+def _ntok_sql(col: str = "text") -> str:
+    """Whitespace token count of ``col``, 0 when blank
+    (textops.with_token_count)."""
+    return (
+        f"CASE WHEN trim({col}) = '' THEN 0 "
+        f"ELSE len(regexp_split_to_array(trim({col}), '\\s+')) END"
+    )
+
+
+def _hex_sum(col: str, n: int) -> str:
+    """Unparenthesized DuckDB integer sum of the first ``n`` hex digits
+    of an md5 column (the engine-portable hash-arithmetic pattern;
+    ``col`` must hold the md5 hex string). n=4 is the 16-bit selector
+    of the split/sample/upsample keys."""
+    return " + ".join(
+        f"(strpos('0123456789abcdef', substr({col}, {i + 1}, 1)) - 1)"
+        + (f" * {16 ** (n - 1 - i)}" if i < n - 1 else "")
+        for i in range(n)
+    )
+
+
 def _hex32(col: str) -> str:
     """DuckDB 32-bit integer from the first 8 hex digits of an md5
-    column (the engine-portable hash-arithmetic pattern used by
-    kmv/winnow/domain_mix; ``col`` must hold the md5 hex string)."""
-    return "(" + " + ".join(
-        f"(strpos('0123456789abcdef', substr({col}, {i + 1}, 1)) - 1)"
-        + (f" * {16 ** (7 - i)}" if i < 7 else "")
-        for i in range(8)
-    ) + ")"
+    column (used by kmv/winnow/dsir/nb_quality)."""
+    return "(" + _hex_sum(col, 8) + ")"
 
 
-# DuckDB word-n-gram shingle CTE (mirrors dedup._with_shingles).
-def _sh_cte(n: int) -> str:
-    return f"""
-toks AS (
+# 8-bit sign-LSH bucket of an ``embedding`` list: bit i is set when
+# embedding[i + 1] >= 0 (mirrors similarity.sign_bucket, dims=8).
+_SIGN_BUCKET = " + ".join(
+    f"(CASE WHEN embedding[{i + 1}] >= 0 THEN {1 << i} ELSE 0 END)"
+    for i in range(8)
+)
+
+
+# DuckDB word-n-gram shingle CTEs ``toks``/``sh`` over the (doc_id,
+# text) relation ``rel`` (mirrors dedup._with_shingles).
+def _shingle_ctes(n: int, rel: str, toks: str, sh: str) -> str:
+    return f"""{toks} AS (
     SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
-    FROM documents
+    FROM {rel}
 ),
-sh AS (
+{sh} AS (
     SELECT DISTINCT doc_id,
            unnest([array_to_string(t[i + 1:i + {n}], ' ')
                    for i in range(0, len(t) - {n - 1})]) AS shingle
-    FROM toks WHERE len(t) >= {n}
-)
-"""
+    FROM {toks} WHERE len(t) >= {n}
+)"""
+
+
+def _sh_cte(n: int) -> str:
+    return f"\n{_shingle_ctes(n, 'documents', 'toks', 'sh')}\n"
 
 
 _SH_CTE = _sh_cte(3)
@@ -140,6 +171,23 @@ def _jaccard_sql(max_df: int, cand_cte: str | None = None) -> str:
     mirrored cap the two jaccard definitions diverge the moment any
     shingle's df exceeds the cap — invisible at gate scale, a latent
     mismatch at larger sf."""
+    return f"""
+WITH {_SH_CTE},
+{_jaccard_ctes(max_df, cand_cte)}
+SELECT doc_a, doc_b, inter,
+       sa.sz AS size_a, sb.sz AS size_b,
+       round(inter / (sa.sz + sb.sz - inter), 4) AS jaccard
+FROM inter
+JOIN sizes sa ON sa.doc_id = doc_a
+JOIN sizes sb ON sb.doc_id = doc_b
+WHERE round(inter / (sa.sz + sb.sz - inter), 4) >= 0.05
+"""
+
+
+def _jaccard_ctes(max_df: int, cand_cte: str | None) -> str:
+    """_jaccard_sql's CTEs over ``sh``: the (optionally candidate-
+    restricted) shingles, their df cap, per-doc ``sizes`` and pairwise
+    ``inter`` = (doc_a, doc_b, inter)."""
     restrict = (
         f"""cdocs AS (SELECT doc_a AS doc_id FROM {cand_cte}
                   UNION SELECT doc_b FROM {cand_cte}),
@@ -148,9 +196,7 @@ def _jaccard_sql(max_df: int, cand_cte: str | None = None) -> str:
         if cand_cte
         else "shc AS (SELECT doc_id, shingle FROM sh),"
     )
-    return f"""
-WITH {_SH_CTE},
-{restrict}
+    return f"""{restrict}
 dfp AS (SELECT shingle FROM shc GROUP BY shingle
         HAVING count(*) <= {max_df}),
 shp AS (SELECT shc.doc_id, shc.shingle
@@ -160,15 +206,7 @@ inter AS (
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
     FROM shp a JOIN shp b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
     GROUP BY 1, 2
-)
-SELECT doc_a, doc_b, inter,
-       sa.sz AS size_a, sb.sz AS size_b,
-       round(inter / (sa.sz + sb.sz - inter), 4) AS jaccard
-FROM inter
-JOIN sizes sa ON sa.doc_id = doc_a
-JOIN sizes sb ON sb.doc_id = doc_b
-WHERE round(inter / (sa.sz + sb.sz - inter), 4) >= 0.05
-"""
+)"""
 
 
 _JACCARD_SQL = _jaccard_sql(1000)
@@ -186,6 +224,36 @@ incr AS (
 )"""
 
 
+def _minhash_ctes(sh: str, mh: str, bands: str, note: str = "") -> str:
+    """MinHash signature CTE ``mh`` over the 3-gram shingles ``sh`` (16
+    md5-slice hashes, dedup._minhash_agg's family) and its 8-band key
+    CTE ``bands`` = (doc_id, band, band_key). ``note`` is SQL comment
+    text opening the signature CTE."""
+    return f"""{mh} AS ({note}
+    SELECT doc_id, seed, part,
+           min(substring(md5(seed || '#' || shingle),
+                         part * 8 + 1, 8)) AS minhash
+    FROM {sh}
+    CROSS JOIN (SELECT unnest(range(0, 4)) AS seed)
+    CROSS JOIN (SELECT unnest(range(0, 4)) AS part)
+    GROUP BY 1, 2, 3
+),
+{bands} AS (
+    SELECT doc_id, CAST((seed * 4 + part) // 2 AS INT) AS band,
+           md5(array_to_string(list_sort(list(minhash)), '|')) AS band_key
+    FROM {mh} GROUP BY doc_id, band
+)"""
+
+
+# LSH candidate pairs: documents sharing any (band, band_key)
+_CANDS_CTE = """cands AS (
+    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+    FROM bands a JOIN bands b
+      ON a.band = b.band AND a.band_key = b.band_key
+     AND a.doc_id < b.doc_id
+)"""
+
+
 def _bands_sql(rel: str, tag: str) -> str:
     """MinHash band-key CTE chain over an arbitrary (doc_id, text)
     relation — the _MINHASH_SQL hash family (3-gram shingles, 16
@@ -193,30 +261,48 @@ def _bands_sql(rel: str, tag: str) -> str:
     can band the committed and increment relations independently.
     Ends with ``b{tag}`` = (doc_id, band, band_key)."""
     return f"""
-t{tag} AS (
-    SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
-    FROM {rel}
-),
-sh{tag} AS (
-    SELECT DISTINCT doc_id,
-           unnest([array_to_string(t[i + 1:i + 3], ' ')
-                   for i in range(0, len(t) - 2)]) AS shingle
-    FROM t{tag} WHERE len(t) >= 3
-),
-mh{tag} AS (
-    SELECT doc_id, seed, part,
-           min(substring(md5(seed || '#' || shingle),
-                         part * 8 + 1, 8)) AS minhash
-    FROM sh{tag}
-    CROSS JOIN (SELECT unnest(range(0, 4)) AS seed)
-    CROSS JOIN (SELECT unnest(range(0, 4)) AS part)
-    GROUP BY 1, 2, 3
-),
-b{tag} AS (
-    SELECT doc_id, CAST((seed * 4 + part) // 2 AS INT) AS band,
-           md5(array_to_string(list_sort(list(minhash)), '|')) AS band_key
-    FROM mh{tag} GROUP BY doc_id, band
-)"""
+{_shingle_ctes(3, rel, f"t{tag}", f"sh{tag}")},
+{_minhash_ctes(f"sh{tag}", f"mh{tag}", f"b{tag}")}"""
+
+
+# Bipartite verify of band candidates between the ``b2``/``sh2`` side
+# (doc_id) and the ``b1``/``sh1`` side (committed_id), as _bands_sql
+# names them: exact Jaccard parts with the df cap (<= 1000) over the
+# candidate-restricted UNION of both shingle relations, mirroring
+# dedup.incremental_minhash_verified / decontaminate_fuzzy. Ends with
+# ``inter`` = (doc_id, committed_id, inter) beside ``szi``/``szc`` sizes.
+_CROSS_JACCARD_CTES = """cand AS (
+            SELECT DISTINCT b2.doc_id, b1.doc_id AS committed_id
+            FROM b2 JOIN b1 USING (band, band_key)
+        ),
+        shi AS (
+            SELECT sh2.doc_id, sh2.shingle FROM sh2
+            WHERE sh2.doc_id IN (SELECT doc_id FROM cand)
+        ),
+        shco AS (
+            SELECT sh1.doc_id AS committed_id, sh1.shingle FROM sh1
+            WHERE sh1.doc_id IN (SELECT committed_id FROM cand)
+        ),
+        dfp AS (
+            SELECT shingle FROM (
+                SELECT shingle FROM shi
+                UNION ALL SELECT shingle FROM shco
+            ) GROUP BY shingle HAVING count(*) <= 1000
+        ),
+        ship AS (SELECT shi.* FROM shi JOIN dfp USING (shingle)),
+        shcp AS (SELECT shco.* FROM shco JOIN dfp USING (shingle)),
+        szi AS (
+            SELECT doc_id, count(*) AS sz_i FROM ship GROUP BY doc_id
+        ),
+        szc AS (
+            SELECT committed_id, count(*) AS sz_c FROM shcp
+            GROUP BY committed_id
+        ),
+        inter AS (
+            SELECT i.doc_id, c.committed_id, count(*) AS inter
+            FROM ship i JOIN shcp c ON i.shingle = c.shingle
+            GROUP BY 1, 2
+        )"""
 
 
 def _feats_sql(rel: str, tag: str) -> str:
@@ -330,46 +416,19 @@ def _substring_sql(keep_first: bool) -> str:
         FROM base b LEFT JOIN agg a USING (doc_id)
     """
 
-_MINHASH_SQL = f"""
-WITH {_SH_CTE},
-mh AS (
+_MINHASH_NOTE = """
     -- hash family = ocr_spark.operators.dedup._minhash_agg: element
     -- i = seed*4 + part is the part-th 32-bit hex slice of
-    -- md5(seed || '#' || shingle); min over a doc's shingles
-    SELECT doc_id, seed, part,
-           min(substring(md5(seed || '#' || shingle),
-                         part * 8 + 1, 8)) AS minhash
-    FROM sh
-    CROSS JOIN (SELECT unnest(range(0, 4)) AS seed)
-    CROSS JOIN (SELECT unnest(range(0, 4)) AS part)
-    GROUP BY 1, 2, 3
-),
-bands AS (
-    SELECT doc_id, CAST((seed * 4 + part) // 2 AS INT) AS band,
-           md5(array_to_string(list_sort(list(minhash)), '|')) AS band_key
-    FROM mh GROUP BY doc_id, band
-),
-cands AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.band_key = b.band_key
-     AND a.doc_id < b.doc_id
-),
+    -- md5(seed || '#' || shingle); min over a doc's shingles"""
+
+_MINHASH_SQL = f"""
+WITH {_SH_CTE},
+{_minhash_ctes("sh", "mh", "bands", _MINHASH_NOTE)},
+{_CANDS_CTE},
 -- verification jaccard mirrors _jaccard_sql: df-capped (<=1000) over
 -- the candidate-doc-restricted relation, exactly like the Spark side's
 -- sh_cand pruning in minhash_lsh_pairs
-cdocs AS (SELECT doc_a AS doc_id FROM cands
-          UNION SELECT doc_b FROM cands),
-shc AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN cdocs USING (doc_id)),
-dfp AS (SELECT shingle FROM shc GROUP BY shingle
-        HAVING count(*) <= 1000),
-shp AS (SELECT shc.doc_id, shc.shingle FROM shc JOIN dfp USING (shingle)),
-sizes AS (SELECT doc_id, count(*) AS sz FROM shp GROUP BY doc_id),
-inter AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-    FROM shp a JOIN shp b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-),
+{_jaccard_ctes(1000, "cands")},
 ver AS (
     SELECT doc_a, doc_b,
            round(inter / (sa.sz + sb.sz - inter), 4) AS jaccard
@@ -382,14 +441,28 @@ FROM cands c JOIN ver v ON c.doc_a = v.doc_a AND c.doc_b = v.doc_b
 WHERE v.jaccard >= 0.05
 """
 
+# connected components of the verified LSH pair graph: every node's
+# labels ``r`` reach the min doc_id through near-dup edges (recursive
+# transitive min) — near_dup_groups and near_dup_keep_best
+_CC_CTES = f"""pairs AS ({_MINHASH_SQL}),
+        edges AS (
+            SELECT doc_a, doc_b FROM pairs
+            UNION ALL
+            SELECT doc_b, doc_a FROM pairs
+        ),
+        nodes AS (SELECT DISTINCT doc_a AS doc_id FROM edges),
+        r AS (
+            SELECT doc_id, doc_id AS lab FROM nodes
+            UNION
+            SELECT e.doc_b AS doc_id, r.lab
+            FROM r JOIN edges e ON e.doc_a = r.doc_id
+        )"""
 
-def _simhash_pairs_sql(bits: int = 64, bands: int = 4,
-                       max_hamming: int = 3) -> str:
-    """Quadratic reference for the banded-Hamming pair query: every
-    pair with hamming <= max_hamming shares >= 1 exact band when
-    max_hamming < bands (pigeonhole), so the band join changes nothing
-    about the result set and the oracle can skip it."""
-    w = bits // bands
+
+def _simhash_agg_ctes(bits: int) -> str:
+    """CTEs ending in ``agg`` = (doc_id, s0..s{bits-1}): per-doc sums of
+    +1/-1 bit votes over the distinct tokens' ``bits``-bit md5 prefixes
+    (the dedup.simhash vote), shared by the simhash oracles."""
     sums = []
     for j in range(bits):
         d = j // 4
@@ -401,6 +474,25 @@ def _simhash_pairs_sql(bits: int = 64, bands: int = 4,
             f"sum(CASE WHEN (({digit} >> {shift}) & 1) = 1 "
             f"THEN 1 ELSE -1 END) AS s{j}"
         )
+    return f"""toks AS (
+    SELECT DISTINCT doc_id,
+           unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
+    FROM documents
+),
+hexed AS (
+    SELECT doc_id, substring(md5(tok), 1, {bits // 4}) AS hx
+    FROM toks WHERE tok <> ''
+),
+agg AS (SELECT doc_id, {', '.join(sums)} FROM hexed GROUP BY doc_id)"""
+
+
+def _simhash_pairs_sql(bits: int = 64, bands: int = 4,
+                       max_hamming: int = 3) -> str:
+    """Quadratic reference for the banded-Hamming pair query: every
+    pair with hamming <= max_hamming shares >= 1 exact band when
+    max_hamming < bands (pigeonhole), so the band join changes nothing
+    about the result set and the oracle can skip it."""
+    w = bits // bands
     band_cols = []
     for b in range(bands):
         expr = " + ".join(
@@ -412,16 +504,7 @@ def _simhash_pairs_sql(bits: int = 64, bands: int = 4,
         f"bit_count(xor(a.band{b}, b.band{b}))" for b in range(bands)
     )
     return f"""
-WITH toks AS (
-    SELECT DISTINCT doc_id,
-           unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
-    FROM documents
-),
-hexed AS (
-    SELECT doc_id, substring(md5(tok), 1, {bits // 4}) AS hx
-    FROM toks WHERE tok <> ''
-),
-agg AS (SELECT doc_id, {', '.join(sums)} FROM hexed GROUP BY doc_id),
+WITH {_simhash_agg_ctes(bits)},
 bands AS (SELECT doc_id, {', '.join(band_cols)} FROM agg)
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        CAST({ham} AS INT) AS hamming
@@ -431,31 +514,11 @@ WHERE {ham} <= {max_hamming}
 
 
 def _simhash_sql(bits: int = 16) -> str:
-    sums = []
-    for j in range(bits):
-        d = j // 4
-        shift = j % 4
-        digit = (
-            f"(strpos('0123456789abcdef', substring(hx, {d + 1}, 1)) - 1)"
-        )
-        sums.append(
-            f"sum(CASE WHEN (({digit} >> {shift}) & 1) = 1 "
-            f"THEN 1 ELSE -1 END) AS s{j}"
-        )
     fp = " + ".join(
         f"(CASE WHEN s{j} > 0 THEN {1 << j} ELSE 0 END)" for j in range(bits)
     )
     return f"""
-WITH toks AS (
-    SELECT DISTINCT doc_id,
-           unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
-    FROM documents
-),
-hexed AS (
-    SELECT doc_id, substring(md5(tok), 1, {bits // 4}) AS hx
-    FROM toks WHERE tok <> ''
-),
-agg AS (SELECT doc_id, {', '.join(sums)} FROM hexed GROUP BY doc_id)
+WITH {_simhash_agg_ctes(bits)}
 SELECT doc_id, CAST({fp} AS BIGINT) AS simhash FROM agg
 """
 
@@ -859,12 +922,10 @@ def q_line_dedup(spark, sf_dir):
     return D.line_dedup(_banner_injected_docs(spark, sf_dir), max_df=1)
 
 
-def q_substring_dedup(spark, sf_dir):
-    """Exact substring dedup (Lee et al. '21) exercised for real: the
-    query unions in remix rows embedding the full text of the first 50
-    docs between fresh prefix/suffix tokens, so every such span (plus
-    any natural verbatim >= 25-token run across docs) must be scrubbed
-    from BOTH the original and the remix, with rows preserved."""
+def _remixed_docs(spark, sf_dir):
+    """Documents plus remix rows (+10^9 ids) embedding the full text of
+    the first 50 docs between fresh prefix/suffix tokens — the fixture
+    of both substring-dedup keys (mirrored by ``_substring_sql``)."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     remix = docs.filter(F.col("doc_id") < 50).select(
         (F.col("doc_id") + 1000000000).alias("doc_id"),
@@ -875,7 +936,16 @@ def q_substring_dedup(spark, sf_dir):
             F.lit("planted suffix"),
         ).alias("text"),
     )
-    return D.substring_dedup(docs.unionByName(remix), min_len=25)
+    return docs.unionByName(remix)
+
+
+def q_substring_dedup(spark, sf_dir):
+    """Exact substring dedup (Lee et al. '21) exercised for real: the
+    query unions in remix rows embedding the full text of the first 50
+    docs between fresh prefix/suffix tokens, so every such span (plus
+    any natural verbatim >= 25-token run across docs) must be scrubbed
+    from BOTH the original and the remix, with rows preserved."""
+    return D.substring_dedup(_remixed_docs(spark, sf_dir), min_len=25)
 
 
 def q_substring_keep_first(spark, sf_dir):
@@ -883,18 +953,8 @@ def q_substring_keep_first(spark, sf_dir):
     per-gram canonical (min doc_id, pos) occurrence survives, so the
     ORIGINAL docs keep their text and only the remix copies lose the
     embedded span."""
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    remix = docs.filter(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 1000000000).alias("doc_id"),
-        F.concat_ws(
-            " ",
-            F.lit("planted prefix tokens"),
-            F.trim("text"),
-            F.lit("planted suffix"),
-        ).alias("text"),
-    )
     return D.substring_dedup(
-        docs.unionByName(remix), min_len=25, keep_first=True
+        _remixed_docs(spark, sf_dir), min_len=25, keep_first=True
     )
 
 
@@ -978,6 +1038,22 @@ def q_decontaminate_fuzzy(spark, sf_dir):
     return D.decontaminate_fuzzy(docs, bench, threshold=0.3)
 
 
+def _incremental_split(spark, sf_dir):
+    """(run1, incr) of the cross-run dedup keys: run-1 commits docs with
+    doc_id % 3 != 0; the run-2 increment is the even docs plus
+    ws-mangled copies of the first 50 (+10^9 ids). Mirrored by the
+    oracles' ``_INCR_FIXTURE``."""
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    run1 = docs.filter(F.col("doc_id") % 3 != 0)
+    incr = docs.filter(F.col("doc_id") % 2 == 0).unionByName(
+        docs.filter(F.col("doc_id") < 50).select(
+            (F.col("doc_id") + 1000000000).alias("doc_id"),
+            F.regexp_replace("text", " ", "  ").alias("text"),
+        )
+    )
+    return run1, incr
+
+
 def q_incremental_dedup(spark, sf_dir):
     """Incremental (cross-run) exact dedup: run-1 commits docs with
     doc_id % 3 != 0; the run-2 increment is the even docs plus
@@ -988,15 +1064,8 @@ def q_incremental_dedup(spark, sf_dir):
     here is derived in-plan (exact_dedup over run-1); the parquet
     FingerprintStore round-trip + idempotent re-ingest is pinned by
     pytest."""
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    run1 = docs.filter(F.col("doc_id") % 3 != 0)
+    run1, incr = _incremental_split(spark, sf_dir)
     committed = D.exact_dedup(run1).select("fingerprint", "keep_id")
-    incr = docs.filter(F.col("doc_id") % 2 == 0).unionByName(
-        docs.filter(F.col("doc_id") < 50).select(
-            (F.col("doc_id") + 1000000000).alias("doc_id"),
-            F.regexp_replace("text", " ", "  ").alias("text"),
-        )
-    )
     return D.incremental_exact_dedup(incr, committed)
 
 
@@ -1006,15 +1075,8 @@ def q_incremental_dedup_bloom(spark, sf_dir):
     incremental_dedup — the bloom only routes rows around the
     anti-join — so the SAME oracle must hash-match, proving the
     prefilter is exactness-preserving on the gate corpus."""
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    run1 = docs.filter(F.col("doc_id") % 3 != 0)
+    run1, incr = _incremental_split(spark, sf_dir)
     committed = D.exact_dedup(run1).select("fingerprint", "keep_id")
-    incr = docs.filter(F.col("doc_id") % 2 == 0).unionByName(
-        docs.filter(F.col("doc_id") < 50).select(
-            (F.col("doc_id") + 1000000000).alias("doc_id"),
-            F.regexp_replace("text", " ", "  ").alias("text"),
-        )
-    )
     return D.incremental_exact_dedup(incr, committed, bloom_bits=1 << 20)
 
 
@@ -1024,15 +1086,8 @@ def q_incremental_minhash(spark, sf_dir):
     increment doc sharing any (band, band_key) with run-1 is flagged a
     candidate near-dup of committed content (band-candidate semantics —
     the store keeps band keys, never shingles)."""
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    run1 = docs.filter(F.col("doc_id") % 3 != 0)
+    run1, incr = _incremental_split(spark, sf_dir)
     committed = D.band_keys(run1).select("band", "band_key")
-    incr = docs.filter(F.col("doc_id") % 2 == 0).unionByName(
-        docs.filter(F.col("doc_id") < 50).select(
-            (F.col("doc_id") + 1000000000).alias("doc_id"),
-            F.regexp_replace("text", " ", "  ").alias("text"),
-        )
-    )
     return D.incremental_minhash_flags(incr, committed)
 
 
@@ -1042,15 +1097,8 @@ def q_incremental_verified(spark, sf_dir):
     cross-corpus Jaccard on candidate docs only (committed text read
     back from the kept corpus). Identical docs present in both runs
     and the ws-mangled remixes of committed docs verify at 1.0."""
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    run1 = docs.filter(F.col("doc_id") % 3 != 0)
+    run1, incr = _incremental_split(spark, sf_dir)
     committed = D.band_keys(run1)
-    incr = docs.filter(F.col("doc_id") % 2 == 0).unionByName(
-        docs.filter(F.col("doc_id") < 50).select(
-            (F.col("doc_id") + 1000000000).alias("doc_id"),
-            F.regexp_replace("text", " ", "  ").alias("text"),
-        )
-    )
     return D.incremental_minhash_verified(incr, committed, run1)
 
 
@@ -1277,13 +1325,7 @@ def _upsample_ctes() -> str:
         e AS (
             SELECT doc_id, source,
                    n_full + CASE WHEN
-                       (strpos('0123456789abcdef', substr(h, 1, 1)) - 1)
-                           * 4096
-                     + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1)
-                           * 256
-                     + (strpos('0123456789abcdef', substr(h, 3, 1)) - 1)
-                           * 16
-                     + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1)
+                       {_hex_sum('h', 4)}
                        < thr THEN 1 ELSE 0 END AS n_epochs
             FROM f
         ),
@@ -1357,11 +1399,10 @@ def q_corpus_stats(spark, sf_dir):
     return X.corpus_stats(load(spark, sf_dir, "documents"))
 
 
-def q_dedup_weights(spark, sf_dir):
-    """SoftDeDup weights over a corpus with planted canonical
-    duplicates: every %3 doc gets a case/whitespace-mangled twin at
-    +10^9 (collision-free at any sf per ADVICE r4) — twins share the
-    canonical fingerprint, so both members weigh 0.5."""
+def _twinned_docs(spark, sf_dir):
+    """Documents plus a case/whitespace-mangled twin (+10^9 ids) of
+    every %3 doc — the SoftDeDup fixture of dedup_weights and
+    soft_sample."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     mangled = docs.filter(F.col("doc_id") % 3 == 0).select(
         (F.col("doc_id") + F.lit(10**9)).alias("doc_id"),
@@ -1369,7 +1410,15 @@ def q_dedup_weights(spark, sf_dir):
             F.regexp_replace(F.upper("text"), " ", "  "), F.lit("  ")
         ).alias("text"),
     )
-    return D.dedup_weights(docs.unionByName(mangled))
+    return docs.unionByName(mangled)
+
+
+def q_dedup_weights(spark, sf_dir):
+    """SoftDeDup weights over a corpus with planted canonical
+    duplicates: every %3 doc gets a case/whitespace-mangled twin at
+    +10^9 (collision-free at any sf per ADVICE r4) — twins share the
+    canonical fingerprint, so both members weigh 0.5."""
+    return D.dedup_weights(_twinned_docs(spark, sf_dir))
 
 
 def q_soft_sample(spark, sf_dir):
@@ -1379,14 +1428,7 @@ def q_soft_sample(spark, sf_dir):
     one document's worth of inclusion mass instead of multiplying it.
     Same planted-twin fixture as dedup_weights; global top-100 via the
     TakeOrdered path."""
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    mangled = docs.filter(F.col("doc_id") % 3 == 0).select(
-        (F.col("doc_id") + F.lit(10**9)).alias("doc_id"),
-        F.concat(
-            F.regexp_replace(F.upper("text"), " ", "  "), F.lit("  ")
-        ).alias("text"),
-    )
-    wts = D.dedup_weights(docs.unionByName(mangled))
+    wts = D.dedup_weights(_twinned_docs(spark, sf_dir))
     return X.weighted_sample(wts, k=100, weight_col="weight").select(
         "doc_id", "weight", "es_key", "rk"
     )
@@ -1551,16 +1593,21 @@ def q_kmv_distinct(spark, sf_dir):
     )
 
 
+def _conv10_turns(spark, sf_dir):
+    """(conv_id = doc_id div 10, turn_idx = doc_id % 10, text)."""
+    return load(spark, sf_dir, "documents").select(
+        F.expr("doc_id div 10").alias("conv_id"),
+        (F.col("doc_id") % 10).alias("turn_idx"),
+        "text",
+    )
+
+
 def q_conv_dedup(spark, sf_dir):
     """Whole-conversation exact dedup over synthesized transcript
     structure, exercised for real: ws-mangled UPPERCASED copies of the
     first 5 conversations are unioned in (same canonical turn
     sequence), so those groups must collapse onto the original ids."""
-    docs = load(spark, sf_dir, "documents").select(
-        F.expr("doc_id div 10").alias("conv_id"),
-        (F.col("doc_id") % 10).alias("turn_idx"),
-        "text",
-    )
+    docs = _conv10_turns(spark, sf_dir)
     dups = docs.filter(F.col("conv_id") < 5).select(
         (F.col("conv_id") + 1000000000).alias("conv_id"),
         "turn_idx",
@@ -1574,12 +1621,33 @@ def q_pack_conversations(spark, sf_dir):
     structure (conv_id = doc_id div 10, turn order = doc_id % 10):
     whole turns only, fresh chunk per conversation, exact greedy fill
     at 300 tokens — value-pinned against a recursive-CTE oracle."""
-    docs = load(spark, sf_dir, "documents").select(
-        F.expr("doc_id div 10").alias("conv_id"),
-        (F.col("doc_id") % 10).alias("turn_idx"),
+    return X.pack_conversations(_conv10_turns(spark, sf_dir), max_tokens=300)
+
+
+def _sft_turns(spark, sf_dir):
+    """Synthesized transcripts of the SFT keys: conv_id = doc_id div 8,
+    turn order = doc_id % 8, alternating user/assistant roles."""
+    return load(spark, sf_dir, "documents").select(
+        F.expr("doc_id div 8").alias("conv_id"),
+        (F.col("doc_id") % 8).alias("turn_idx"),
+        F.when(F.col("doc_id") % 2 == 0, "user")
+        .otherwise("assistant")
+        .alias("role"),
         "text",
     )
-    return X.pack_conversations(docs, max_tokens=300)
+
+
+def _pack_rendered(ex):
+    """Render sft_examples rows as 'context\\n\\ntarget' (nullif skips the
+    empty context) under dense ids conv_id*4 + (turn_idx-1) div 2, then
+    pack_sequences into 512-token sequences in 8 hash shards."""
+    rendered = ex.select(
+        F.expr("conv_id * 4 + (turn_idx - 1) div 2").alias("doc_id"),
+        F.concat_ws(
+            "\n\n", F.expr("nullif(context, '')"), F.col("target")
+        ).alias("text"),
+    )
+    return X.pack_sequences(rendered, seq_len=512, shards=8)
 
 
 def q_sft_examples(spark, sf_dir):
@@ -1588,15 +1656,7 @@ def q_sft_examples(spark, sf_dir):
     alternating user/assistant roles): one (context, target) pair per
     assistant turn with a 3-turn rolling context — built by ONE lag
     window, never materializing a conversation."""
-    docs = load(spark, sf_dir, "documents").select(
-        F.expr("doc_id div 8").alias("conv_id"),
-        (F.col("doc_id") % 8).alias("turn_idx"),
-        F.when(F.col("doc_id") % 2 == 0, "user")
-        .otherwise("assistant")
-        .alias("role"),
-        "text",
-    )
-    return X.sft_examples(docs, context_turns=3)
+    return X.sft_examples(_sft_turns(spark, sf_dir), context_turns=3)
 
 
 def q_sft_pipeline(spark, sf_dir):
@@ -1607,22 +1667,8 @@ def q_sft_pipeline(spark, sf_dir):
     -> pack_sequences into 512-token sequences in 8 hash shards
     (per-shard window cumsum). Example ids densify to
     conv_id*4 + (turn_idx-1) div 2 so every shard populates."""
-    docs = load(spark, sf_dir, "documents").select(
-        F.expr("doc_id div 8").alias("conv_id"),
-        (F.col("doc_id") % 8).alias("turn_idx"),
-        F.when(F.col("doc_id") % 2 == 0, "user")
-        .otherwise("assistant")
-        .alias("role"),
-        "text",
-    )
-    ex = X.sft_examples(docs, context_turns=3)
-    rendered = ex.select(
-        F.expr("conv_id * 4 + (turn_idx - 1) div 2").alias("doc_id"),
-        F.concat_ws(
-            "\n\n", F.expr("nullif(context, '')"), F.col("target")
-        ).alias("text"),
-    )
-    return X.pack_sequences(rendered, seq_len=512, shards=8)
+    ex = X.sft_examples(_sft_turns(spark, sf_dir), context_turns=3)
+    return _pack_rendered(ex)
 
 
 def q_quality_ensemble(spark, sf_dir):
@@ -1655,15 +1701,7 @@ def q_sft_spans(spark, sf_dir):
     example's TARGET tokens land in the shard's flat token stream —
     the mask a multi-turn SFT trainer applies. Same synthesized
     transcripts / dense example ids as sft_pipeline."""
-    docs = load(spark, sf_dir, "documents").select(
-        F.expr("doc_id div 8").alias("conv_id"),
-        (F.col("doc_id") % 8).alias("turn_idx"),
-        F.when(F.col("doc_id") % 2 == 0, "user")
-        .otherwise("assistant")
-        .alias("role"),
-        "text",
-    )
-    ex = X.sft_examples(docs, context_turns=3).select(
+    ex = X.sft_examples(_sft_turns(spark, sf_dir), context_turns=3).select(
         F.expr("conv_id * 4 + (turn_idx - 1) div 2").alias("doc_id"),
         "context",
         "target",
@@ -1891,29 +1929,29 @@ def q_pmi_bigrams(spark, sf_dir):
     )
 
 
-def q_ann_ivf(spark, sf_dir):
-    """IVF ANN: sampled coarse quantizer (32 lists), probe 4, exact
-    re-score top-5 — the second ANN scale path beside ann_lsh."""
+def _emb_queries(spark, sf_dir):
+    """(embeddings, queries): the ANN keys' probe set is vec_id < 10."""
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
+    return emb, queries
+
+
+def q_ann_ivf(spark, sf_dir):
+    """IVF ANN: sampled coarse quantizer (32 lists), probe 4, exact
+    re-score top-5 — the second ANN scale path beside ann_lsh."""
+    emb, queries = _emb_queries(spark, sf_dir)
     return S.ivf_topk(emb, queries, k=5, n_centroids=32, n_probe=4)
 
 
 def q_cosine_topk(spark, sf_dir):
-    emb = load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
+    emb, queries = _emb_queries(spark, sf_dir)
     return S.cosine_topk(emb, queries, k=5)
 
 
 def q_ann_lsh(spark, sf_dir):
-    emb = load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
+    emb, queries = _emb_queries(spark, sf_dir)
     return S.lsh_cosine_topk(emb, queries, k=5, dims=8)
 
 
@@ -1996,10 +2034,7 @@ def q_ann_pq(spark, sf_dir):
     per query, the shortlist (broadcast — the corpus never shuffles)
     is re-scored at full width by exact cosine, top-5 returned with
     the cosine_topk tie-break (score desc, vec_id asc)."""
-    emb = load(spark, sf_dir, "embeddings")
-    qs = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
+    emb, qs = _emb_queries(spark, sf_dir)
     return PQ.pq_ann_topk(
         emb, qs, k=5, m=4, ksub=16, iters=1, vec_dims=64, refine=100
     )
@@ -2013,10 +2048,7 @@ def q_ann_ivf_pq(spark, sf_dir):
     exact cosine for the final top-5. The oracle composes the
     ``ann_ivf`` assignment/probe CTEs with the ``ann_pq`` training +
     ADC-term CTEs over the candidate-restricted pair set."""
-    emb = load(spark, sf_dir, "embeddings")
-    qs = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
+    emb, qs = _emb_queries(spark, sf_dir)
     return PQ.ivf_pq_topk(
         emb, qs, k=5, n_centroids=32, n_probe=4, m=4, ksub=16,
         iters=1, refine=50,
@@ -2061,48 +2093,49 @@ def q_revenue_by_nation(spark, sf_dir):
 
 
 def _docs_as_transcripts(spark, sf_dir, tool):
-    docs = load(spark, sf_dir, "documents")
-    t = docs.select(
+    """One single-turn transcript per document (conv_id 'd<doc_id>'):
+    the html route wraps the text in _HTML_PRE/_HTML_POST, the pdf
+    route turns it into a one-line layout dump (a single full-width
+    line at y=700), the plain route (tool NULL) keeps it as is."""
+    text = {
+        "html": F.concat(F.lit(_HTML_PRE), F.col("text"), F.lit(_HTML_POST)),
+        "pdf": F.concat(
+            F.lit("L 1 72.0 700.0 500.0 712.0 "),
+            F.regexp_replace(F.trim("text"), r"\s+", " "),
+        ),
+    }.get(tool, F.col("text"))
+    return load(spark, sf_dir, "documents").select(
         F.concat(F.lit("d"), F.col("doc_id").cast("string")).alias("conv_id"),
         F.lit(0).cast("int").alias("turn_idx"),
         F.lit("user").alias("role"),
-        (
-            F.concat(F.lit(_HTML_PRE), F.col("text"), F.lit(_HTML_POST))
-            if tool == "html"
-            else F.col("text")
-        ).alias("text"),
+        text.alias("text"),
         (F.lit(tool) if tool else F.lit(None).cast("string")).alias("tool"),
         F.lit("2026-01-01 00:00:00").cast("timestamp").alias("ts"),
     )
-    return t
+
+
+def _extracted(t, *cols):
+    """The REAL pandas-UDF extraction of ``t``, keyed back to doc_id
+    (conv_id is 'd<doc_id>'), with its text and ``cols``."""
+    from ocr_spark.extract import extract
+
+    return extract(t).select(
+        F.expr("CAST(substring(conv_id, 2) AS BIGINT)").alias("doc_id"),
+        F.col("text"),
+        *cols,
+    )
 
 
 def q_extract_plain_route(spark, sf_dir):
     """The REAL pandas-UDF pipeline over the plain route: output text
     must equal the ws-collapsed input (SQL-expressible golden)."""
-    from ocr_spark.extract import extract
-
-    t = _docs_as_transcripts(spark, sf_dir, None)
-    ext = extract(t)
-    return ext.select(
-        F.expr("CAST(substring(conv_id, 2) AS BIGINT)").alias("doc_id"),
-        F.col("text"),
-        "error",
-    )
+    return _extracted(_docs_as_transcripts(spark, sf_dir, None), "error")
 
 
 def q_extract_html_route(spark, sf_dir):
     """The REAL pandas-UDF pipeline over the html route: boilerplate
     (nav/footer) must be stripped, leaving exactly the article text."""
-    from ocr_spark.extract import extract
-
-    t = _docs_as_transcripts(spark, sf_dir, "html")
-    ext = extract(t)
-    return ext.select(
-        F.expr("CAST(substring(conv_id, 2) AS BIGINT)").alias("doc_id"),
-        F.col("text"),
-        "error",
-    )
+    return _extracted(_docs_as_transcripts(spark, sf_dir, "html"), "error")
 
 
 def q_extract_then_curate(spark, sf_dir):
@@ -2113,13 +2146,7 @@ def q_extract_then_curate(spark, sf_dir):
     survivors. The quality denominator uses the extracted (ws-collapsed)
     length, so the oracle must apply the same collapse — the composition
     is exercised, not just concatenated."""
-    from ocr_spark.extract import extract
-
-    t = _docs_as_transcripts(spark, sf_dir, "html")
-    ext = extract(t).select(
-        F.expr("CAST(substring(conv_id, 2) AS BIGINT)").alias("doc_id"),
-        F.col("text"),
-    )
+    ext = _extracted(_docs_as_transcripts(spark, sf_dir, "html"))
     # r6: checkpoint the extracted+scored relation — its two consumers
     # (the dedup agg and the survivor semi-join) each re-ran the whole
     # pandas-UDF extraction (mapInPandas subtrees cannot be reused
@@ -2139,26 +2166,13 @@ def q_extract_pdf_route(spark, sf_dir):
     reconstruction must return exactly the ws-collapsed text, which IS
     SQL-expressible (multi-column reading order is covered by pytest
     kernel tests instead)."""
-    from ocr_spark.extract import extract
+    return _extracted(_docs_as_transcripts(spark, sf_dir, "pdf"), "error")
 
-    docs = load(spark, sf_dir, "documents")
-    # one-line layout dump per doc: a single full-width line at y=700
-    t = docs.select(
-        F.concat(F.lit("d"), F.col("doc_id").cast("string")).alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.lit("user").alias("role"),
-        F.concat(
-            F.lit("L 1 72.0 700.0 500.0 712.0 "),
-            F.regexp_replace(F.trim("text"), r"\s+", " "),
-        ).alias("text"),
-        F.lit("pdf").alias("tool"),
-        F.lit("2026-01-01 00:00:00").cast("timestamp").alias("ts"),
-    )
-    ext = extract(t)
-    return ext.select(
-        F.expr("CAST(substring(conv_id, 2) AS BIGINT)").alias("doc_id"),
-        F.col("text"),
-        "error",
+
+def _media_docs(spark, sf_dir):
+    """(media_id, text): documents keyed as the multimodal fixture."""
+    return load(spark, sf_dir, "documents").select(
+        F.col("doc_id").alias("media_id"), "text"
     )
 
 
@@ -2168,10 +2182,7 @@ def q_media_decode(spark, sf_dir):
     oracle-check the decode from the source text."""
     from ocr_spark.operators import multimodal as M
 
-    docs = load(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"), "text"
-    )
-    media = M.encode_fake_media(docs, "text")
+    media = M.encode_fake_media(_media_docs(spark, sf_dir), "text")
     return M.decode_media(media).select(
         F.col("media_id").alias("doc_id"), "n_bytes", "width", "height"
     )
@@ -2181,10 +2192,7 @@ def q_media_frames(spark, sf_dir):
     """Multimodal: bounded frame sampling (one row fans out to N)."""
     from ocr_spark.operators import multimodal as M
 
-    docs = load(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"), "text"
-    )
-    media = M.encode_fake_media(docs, "text")
+    media = M.encode_fake_media(_media_docs(spark, sf_dir), "text")
     return M.sample_frames(media, frame_bytes=64).select(
         F.col("media_id").alias("doc_id"), "frame_idx", "frame_len"
     )
@@ -2197,10 +2205,7 @@ def q_media_features(spark, sf_dir):
     byte-stripe means in SQL from hex(encode(text))."""
     from ocr_spark.operators import multimodal as M
 
-    docs = load(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"), "text"
-    )
-    media = M.encode_fake_media(docs, "text")
+    media = M.encode_fake_media(_media_docs(spark, sf_dir), "text")
     feats = M.extract_features(media, dims=8)
     return feats.select(
         F.col("media_id").alias("doc_id"),
@@ -2217,9 +2222,7 @@ def q_media_near_dup(spark, sf_dir):
     bucket — the degenerate case ``cosine_near_dup_pairs`` documents)."""
     from ocr_spark.operators import multimodal as M
 
-    docs = load(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"), "text"
-    )
+    docs = _media_docs(spark, sf_dir)
 
     def emb_of(d):
         feats = M.extract_features(M.encode_fake_media(d, "text"), dims=8)
@@ -2333,6 +2336,16 @@ def q_zipf_fit(spark, sf_dir):
     return X.zipf_fit(load(spark, sf_dir, "documents"), top_r=100)
 
 
+def _host_edges(docs, *cols):
+    """The synthetic host graph (src = doc_id % 32, dst = (doc_id*7+3)
+    % 40) of the graph keys, plus ``cols``."""
+    return docs.select(
+        (F.col("doc_id") % 32).alias("src"),
+        ((F.col("doc_id") * 7 + 3) % 40).alias("dst"),
+        *cols,
+    )
+
+
 def q_pagerank(spark, sf_dir):
     """PageRank over a deterministic synthetic host graph (src =
     doc_id % 32, dst = (doc_id*7+3) % 40 — nodes 32..39 appear only as
@@ -2341,11 +2354,7 @@ def q_pagerank(spark, sf_dir):
     3 power iterations, damping 0.85, float32 fixed points per
     iteration (cross-engine contract). The link-quality prior of
     Common-Crawl-style web curation."""
-    docs = load(spark, sf_dir, "documents")
-    edges = docs.select(
-        (F.col("doc_id") % 32).alias("src"),
-        ((F.col("doc_id") * 7 + 3) % 40).alias("dst"),
-    )
+    edges = _host_edges(load(spark, sf_dir, "documents"))
     return G.pagerank(edges, damping=0.85, iters=3)
 
 
@@ -2369,11 +2378,7 @@ def q_link_curation(spark, sf_dir):
     corpus join; dangling dst-only hosts can out-rank doc hosts (rank
     sinks) — deterministic on both engines either way."""
     docs = load(spark, sf_dir, "documents")
-    edges = docs.select(
-        (F.col("doc_id") % 32).alias("src"),
-        ((F.col("doc_id") * 7 + 3) % 40).alias("dst"),
-    )
-    ranks = G.pagerank(edges, damping=0.85, iters=3)
+    ranks = G.pagerank(_host_edges(docs), damping=0.85, iters=3)
     w = Window.orderBy(F.col("rank").desc(), F.col("node").asc())
     w_all = Window.partitionBy(F.lit(1))
     kept = (
@@ -2455,14 +2460,7 @@ def q_sft_curation(spark, sf_dir):
     kept = CV.conv_filter(turns, min_turns=2, max_turns=64).drop(
         "n_turns"
     )
-    ex = X.sft_examples(kept, context_turns=3)
-    rendered = ex.select(
-        F.expr("conv_id * 4 + (turn_idx - 1) div 2").alias("doc_id"),
-        F.concat_ws(
-            "\n\n", F.expr("nullif(context, '')"), F.col("target")
-        ).alias("text"),
-    )
-    return X.pack_sequences(rendered, seq_len=512, shards=8)
+    return _pack_rendered(X.sft_examples(kept, context_turns=3))
 
 
 def q_hits(spark, sf_dir):
@@ -2471,12 +2469,7 @@ def q_hits(spark, sf_dir):
     hub-0 branch is exercised), 3 iterations, L1 norms, float32 fixed
     points per normalization — the oracle unrolls the same iterations
     as CTEs."""
-    docs = load(spark, sf_dir, "documents")
-    edges = docs.select(
-        (F.col("doc_id") % 32).alias("src"),
-        ((F.col("doc_id") * 7 + 3) % 40).alias("dst"),
-    )
-    return G.hits(edges, iters=3)
+    return G.hits(_host_edges(load(spark, sf_dir, "documents")), iters=3)
 
 
 def q_length_buckets(spark, sf_dir):
@@ -2673,10 +2666,8 @@ def q_anchor_topk(spark, sf_dir):
     edge (skewing the counts) while the rest spread uniformly, so both
     the count ordering and the lexicographic tie-break are exercised
     in every dst partition."""
-    docs = load(spark, sf_dir, "documents")
-    edges = docs.select(
-        (F.col("doc_id") % 32).alias("src"),
-        ((F.col("doc_id") * 7 + 3) % 40).alias("dst"),
+    edges = _host_edges(
+        load(spark, sf_dir, "documents"),
         F.concat(
             F.lit("a"),
             F.when(F.col("doc_id") % 3 == 0, F.lit(0))
@@ -2793,20 +2784,26 @@ def q_shard_checksums(spark, sf_dir):
     )
 
 
-def q_win_matrix(spark, sf_dir):
-    """Pairwise model win-rate matrix over the scored-response
-    fixture: 8 responses/prompt across 4 models (2 each, so the
-    per-(prompt, model) best-score collapse is exercised); scores
-    repeat per id-pair so cross-model ties genuinely occur."""
+def _model_responses(spark, sf_dir):
+    """Scored responses of the win_matrix / elo_fit keys: 8 per prompt
+    across 4 models (2 each); scores repeat per id-pair, so cross-model
+    ties occur. Mirrored by the oracles' ``_MODEL_RESP_CTES``."""
     docs = load(spark, sf_dir, "documents")
-    resp = docs.select(
+    return docs.select(
         F.expr("doc_id div 8").alias("prompt_id"),
         F.col("doc_id").alias("resp_id"),
         F.concat(F.lit("m"), (F.col("doc_id") % 4).cast("string"))
         .alias("model"),
         ((F.expr("doc_id div 2") * 29) % 100).alias("score"),
     )
-    return PF.win_matrix(resp)
+
+
+def q_win_matrix(spark, sf_dir):
+    """Pairwise model win-rate matrix over the scored-response
+    fixture: 8 responses/prompt across 4 models (2 each, so the
+    per-(prompt, model) best-score collapse is exercised); scores
+    repeat per id-pair so cross-model ties genuinely occur."""
+    return PF.win_matrix(_model_responses(spark, sf_dir))
 
 
 def q_length_quantiles(spark, sf_dir):
@@ -2851,14 +2848,7 @@ def q_elo_fit(spark, sf_dir):
     highest-W model) over the win_matrix fixture — the leaderboard
     fit downstream of the pairwise matrix; oracle unrolls the MM
     iterations as CTEs (the pagerank/HITS discipline)."""
-    docs = load(spark, sf_dir, "documents")
-    resp = docs.select(
-        F.expr("doc_id div 8").alias("prompt_id"),
-        F.col("doc_id").alias("resp_id"),
-        F.concat(F.lit("m"), (F.col("doc_id") % 4).cast("string"))
-        .alias("model"),
-        ((F.expr("doc_id div 2") * 29) % 100).alias("score"),
-    )
+    resp = _model_responses(spark, sf_dir)
     return PF.elo_fit(PF.win_matrix(resp), iters=3)
 
 
@@ -3141,7 +3131,7 @@ QUERIES: dict[str, Callable] = {
 
 # Winnowing CTE chain (k=4, w=4), shared by the winnow and winnow_pairs
 # oracles; ends with `sel` = one row per (doc, selected pos, 32-bit hash).
-_WINNOW_CTES = """arr AS (
+_WINNOW_CTES = f"""arr AS (
             SELECT doc_id,
                    regexp_split_to_array(lower(trim(text)), '\\s+') AS t
             FROM documents WHERE trim(text) <> ''
@@ -3154,21 +3144,7 @@ _WINNOW_CTES = """arr AS (
         ),
         ku AS (
             SELECT doc_id, last_start, pos,
-                   ((strpos('0123456789abcdef', substr(h, 1, 1)) - 1)
-                        * 268435456
-                  + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1)
-                        * 16777216
-                  + (strpos('0123456789abcdef', substr(h, 3, 1)) - 1)
-                        * 1048576
-                  + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1)
-                        * 65536
-                  + (strpos('0123456789abcdef', substr(h, 5, 1)) - 1)
-                        * 4096
-                  + (strpos('0123456789abcdef', substr(h, 6, 1)) - 1)
-                        * 256
-                  + (strpos('0123456789abcdef', substr(h, 7, 1)) - 1)
-                        * 16
-                  + (strpos('0123456789abcdef', substr(h, 8, 1)) - 1))
+                   {_hex32('h')}
                    AS u
             FROM kg
         ),
@@ -3246,6 +3222,26 @@ c0 AS (SELECT vec_id AS cid, emb AS cent FROM e ORDER BY vec_id
 
 
 _KMEANS_CTES = _kmeans_ctes(8, 64)
+
+# final (vec_id, cid, cos) assignment against the ``c2`` centroids
+_KMEANS_ASG = """SELECT vec_id, cid, cos FROM (
+            SELECT e.vec_id, c.cid,
+                   round(list_cosine_similarity(e.emb, c.cent), 4) AS cos,
+                   row_number() OVER (PARTITION BY e.vec_id
+                       ORDER BY round(list_cosine_similarity(
+                                    e.emb, c.cent), 4) DESC,
+                                c.cid) AS rk
+            FROM e CROSS JOIN c2 c) WHERE rk = 1"""
+
+# SemDeDup within-cluster losers over an ``af`` (vec_id, cid) assignment
+# (cosine >= 0.3 drops the larger id) — semantic_dedup_kmeans and d4_select
+_SEMDEDUP_LOSERS_CTES = """m AS (SELECT a.vec_id, a.cid, e.emb
+              FROM af a JOIN e USING (vec_id)),
+        losers AS (
+            SELECT DISTINCT b.vec_id AS doc_id
+            FROM m a JOIN m b ON a.cid = b.cid AND a.vec_id < b.vec_id
+            WHERE round(list_cosine_similarity(a.emb, b.emb), 4) >= 0.3
+        )"""
 
 
 def _pagerank_sql(iters: int = 3, damping: float = 0.85) -> str:
@@ -3358,6 +3354,45 @@ c0 AS (SELECT r.s, code,
 
 _PQ_CTES = _pq_ctes(4, 16, 16, 1)
 
+# query slices ``qsub`` (q_id, s, qv, n1) over the ``q`` query CTE
+_PQ_QSUB_CTE = """qsub AS (SELECT q_id, r.s,
+                        list_slice(q_emb, r.s * 16 + 1, (r.s + 1) * 16)
+                            AS qv,
+                        n1
+                 FROM q CROSS JOIN unnest(range(0, 4)) AS r(s))"""
+
+
+def _pq_rerank_sql(refine: int) -> str:
+    """ADC score ``sc`` over the LUT ``terms`` (t, t2 per subspace, summed
+    in ascending-s order), the top-``refine`` shortlist re-scored by
+    exact cosine against ``q``/``e``, and the final top-5 select —
+    the refine chain shared by the ann_pq and ann_ivf_pq oracles."""
+    return f"""sc AS (SELECT q_id, vec_id,
+                      round(list_sum(list(t ORDER BY s))
+                            / (any_value(n1)
+                               * sqrt(list_sum(list(t2 ORDER BY s)))),
+                            4) AS score
+               FROM terms GROUP BY q_id, vec_id),
+        short AS (SELECT q_id, vec_id FROM (
+            SELECT q_id, vec_id,
+                   row_number() OVER (PARTITION BY q_id
+                       ORDER BY score DESC, vec_id) AS srank
+            FROM sc) WHERE srank <= {refine}),
+        re AS (SELECT s.q_id, s.vec_id,
+                      round(list_inner_product(q.q_emb, e2.emb)
+                            / (q.n1
+                               * sqrt(list_inner_product(e2.emb,
+                                                         e2.emb))),
+                            4) AS score
+               FROM short s
+               JOIN q ON q.q_id = s.q_id
+               JOIN e e2 ON e2.vec_id = s.vec_id)
+        SELECT q_id, vec_id, score, rank FROM (
+            SELECT q_id, vec_id, score,
+                   row_number() OVER (PARTITION BY q_id
+                       ORDER BY score DESC, vec_id) AS rank
+            FROM re) WHERE rank <= 5"""
+
 
 def _entropy_ctes() -> str:
     """CTE chain ending in `e(doc_id, char_entropy, letter_frac)`: the
@@ -3420,10 +3455,7 @@ def _train_shards_sql() -> str:
         ),
         u AS (
             SELECT doc_id, h2,
-                   (strpos('0123456789abcdef', substr(h1, 1, 1)) - 1) * 4096
-                 + (strpos('0123456789abcdef', substr(h1, 2, 1)) - 1) * 256
-                 + (strpos('0123456789abcdef', substr(h1, 3, 1)) - 1) * 16
-                 + (strpos('0123456789abcdef', substr(h1, 4, 1)) - 1) AS sel,
+                   {_hex_sum('h1', 4)} AS sel,
                    CAST(CAST('0x' || substr(h2, 1, 8) AS BIGINT) % 8
                         AS INT) AS shard
             FROM h
@@ -3516,8 +3548,8 @@ def _unicode_clean_sql() -> str:
 
 def _quality_expr_sql(col: str = "text") -> str:
     """The with_quality blend as a DuckDB expression over ``col`` --
-    single source for the quality_select / mix_pipeline oracles
-    (aliasing the column must not fork the formula)."""
+    the one copy every quality-scoring oracle uses (aliasing the
+    column must not fork the formula)."""
     return f"""round(
                  0.4 * least(1.0,
                      len(regexp_split_to_array(trim({col}), '\\s+'))
@@ -3532,6 +3564,19 @@ def _quality_expr_sql(col: str = "text") -> str:
                      / len(regexp_split_to_array(trim({col}),
                                                  '\\s+'))),
                4)"""
+
+
+# md5-ordered running token sum per source over ``t`` (doc_id, source,
+# n_tokens, h) — the token_budget_mix / mix_pipeline budget cut
+_CUM_TOKENS_SQL = """c AS (
+            SELECT doc_id, source, n_tokens,
+                   CAST(SUM(n_tokens) OVER (
+                       PARTITION BY source ORDER BY h, doc_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING
+                            AND CURRENT ROW) AS BIGINT) AS cum_tokens
+            FROM t
+        )
+        SELECT doc_id, source, n_tokens, cum_tokens"""
 
 
 def _mix_pipeline_sql() -> str:
@@ -3559,24 +3604,153 @@ def _mix_pipeline_sql() -> str:
         ),
         t AS (
             SELECT doc_id, source,
-                   CASE WHEN trim(text_clean) = '' THEN 0
-                        ELSE len(regexp_split_to_array(trim(text_clean),
-                                                       '\\s+'))
-                   END AS n_tokens,
+                   {_ntok_sql('text_clean')} AS n_tokens,
                    md5(CAST(doc_id AS VARCHAR)) AS h
             FROM kept
         ),
-        c AS (
-            SELECT doc_id, source, n_tokens,
-                   CAST(SUM(n_tokens) OVER (
-                       PARTITION BY source ORDER BY h, doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND CURRENT ROW) AS BIGINT) AS cum_tokens
-            FROM t
-        )
-        SELECT doc_id, source, n_tokens, cum_tokens
+        {_CUM_TOKENS_SQL}
         FROM c WHERE cum_tokens - n_tokens < 400
     """
+
+
+# lowercased whitespace terms ``toks`` = (doc_id, term) of non-blank docs
+_TERMS_CTE = """toks AS (
+            SELECT doc_id,
+                   unnest(regexp_split_to_array(lower(trim(text)), '\\s+'))
+                       AS term
+            FROM documents WHERE trim(text) <> ''
+        )"""
+
+
+def _cos_top5_sql(pairs: str) -> str:
+    """Cosine top-5 neighbours (ties to the smaller vec_id) of the
+    vec_id < 10 queries ``q`` over the candidate join ``pairs``."""
+    return f"""SELECT q_id, vec_id, cos, rank FROM (
+            SELECT q.vec_id AS q_id, e.vec_id,
+                   round(list_cosine_similarity(q.embedding::DOUBLE[], e.embedding::DOUBLE[]),
+                         4) AS cos,
+                   row_number() OVER (
+                       PARTITION BY q.vec_id
+                       ORDER BY round(list_cosine_similarity(
+                                    q.embedding, e.embedding), 4) DESC,
+                                e.vec_id) AS rank
+            FROM {pairs}
+            WHERE q.vec_id < 10 AND e.vec_id <> q.vec_id
+        ) WHERE rank <= 5"""
+
+
+# tokens packed before a row in its shard (textops.pack_sequences'
+# per-shard window cumsum), split at 512 into (seq_idx, seq_offset)
+_PACKED = """coalesce(sum(n_tokens) OVER (
+                   PARTITION BY shard ORDER BY doc_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+               ), 0)"""
+_SEQ_COLS = f"""CAST(floor({_PACKED} / 512) AS BIGINT) AS seq_idx,
+               CAST({_PACKED} % 512 AS BIGINT) AS seq_offset"""
+
+# The synthesized SFT transcripts ``t`` (mirror _sft_turns) and their
+# 3-turn lag contexts ``lagged`` (textops.sft_examples) — shared by the
+# sft_examples, sft_pipeline and sft_spans oracles.
+_SFT_CTES = """t AS (
+            SELECT doc_id // 8 AS conv_id, doc_id % 8 AS turn_idx,
+                   CASE WHEN doc_id % 2 = 0 THEN 'user'
+                        ELSE 'assistant' END AS role,
+                   text
+            FROM documents
+        ),
+        lagged AS (
+            SELECT conv_id, turn_idx, role, text,
+                   lag(concat_ws(': ', role, text), 3) OVER w AS c3,
+                   lag(concat_ws(': ', role, text), 2) OVER w AS c2,
+                   lag(concat_ws(': ', role, text), 1) OVER w AS c1
+            FROM t WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)
+        )"""
+
+# Per-doc bigram stream ``bf`` (empty tokens dropped) and its counts
+# ``cab`` — shared by the bigram_logprob and kn_logprob oracles.
+_BIGRAM_CTES = """arrs AS (
+            SELECT doc_id,
+                   regexp_split_to_array(lower(trim(text)), '\\s+') AS t
+            FROM documents WHERE trim(text) <> ''
+        ),
+        big AS (
+            SELECT doc_id, t[r.i + 1] AS term_a, t[r.i + 2] AS term_b
+            FROM arrs, unnest(range(0, len(t) - 1)) AS r(i)
+            WHERE len(t) >= 2
+        ),
+        bf AS (
+            SELECT * FROM big WHERE term_a <> '' AND term_b <> ''
+        ),
+        cab AS (
+            SELECT term_a, term_b, count(*) AS c_ab
+            FROM bf GROUP BY 1, 2
+        )"""
+
+# SoftDeDup fixture (mirror _twinned_docs) and its canonical
+# fingerprints ``f`` — shared by the dedup_weights and soft_sample oracles
+_TWIN_FP_CTES = f"""u AS (
+            SELECT doc_id, text FROM documents
+            UNION ALL
+            SELECT doc_id + 1000000000,
+                   regexp_replace(upper(text), ' ', '  ', 'g') || '  '
+            FROM documents WHERE doc_id % 3 = 0
+        ),
+        f AS (
+            SELECT doc_id,
+                   {_FP_SQL} AS fingerprint
+            FROM u
+        )"""
+
+# Banner-injected documents (mirror _banner_injected_docs verbatim) and
+# dedup.line_dedup(max_df=1) up to the per-doc ``agg`` of kept lines —
+# shared by the line_dedup and web_curation oracles.
+_LINE_DEDUP_CTES = """injected AS (
+            SELECT doc_id,
+                   CASE WHEN doc_id % 5 = 0
+                        THEN 'subscribe to our newsletter today' || chr(10)
+                        ELSE '' END
+                   || text
+                   || CASE WHEN doc_id % 3 = 0
+                        THEN chr(10) || 'all rights reserved copyright notice'
+                        ELSE '' END
+                   || CASE WHEN doc_id % 2 = 0
+                        THEN chr(10) || 'follow us on example social network'
+                        ELSE '' END AS text
+            FROM documents
+        ),
+        parts AS (
+            SELECT doc_id, string_split(text, chr(10)) AS ls FROM injected
+        ),
+        lines AS (
+            SELECT doc_id, i AS pos, trim(ls[i + 1]) AS lnorm
+            FROM parts, unnest(range(0, len(ls))) AS t(i)
+        ),
+        ne AS (SELECT * FROM lines WHERE lnorm <> ''),
+        freq AS (
+            SELECT lnorm, count(DISTINCT doc_id) AS line_df
+            FROM ne GROUP BY lnorm
+        ),
+        j AS (
+            SELECT ne.doc_id, ne.pos, ne.lnorm, freq.line_df
+            FROM ne JOIN freq USING (lnorm)
+        ),
+        agg AS (
+            SELECT doc_id,
+                   array_to_string(list(lnorm ORDER BY pos)
+                       FILTER (WHERE line_df <= 1), chr(10)) AS text_clean,
+                   count(*) FILTER (WHERE line_df <= 1) AS n_kept,
+                   count(*) FILTER (WHERE line_df > 1) AS n_dropped
+            FROM j GROUP BY doc_id
+        )"""
+
+
+# every extract route's golden output is the ws-collapsed input text
+_EXTRACT_ROUTE_SQL = """
+        SELECT doc_id,
+               regexp_replace(trim(text), '\\s+', ' ', 'g') AS text,
+               '' AS error
+        FROM documents
+"""
 
 
 ORACLES: dict[str, str] = {
@@ -3611,7 +3785,7 @@ ORACLES: dict[str, str] = {
             FROM documents WHERE doc_id % 50 = 0
         ) o ON d.doc_id = o.doc_id
     """,
-    "dedup_keep_best": """
+    "dedup_keep_best": f"""
         WITH corpus AS (
             SELECT doc_id, text, n_chars FROM documents
             UNION ALL
@@ -3621,7 +3795,7 @@ ORACLES: dict[str, str] = {
         ),
         f AS (
             SELECT doc_id,
-                   md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
+                   {_FP_SQL}
                        AS fingerprint,
                    n_chars
             FROM corpus
@@ -3636,8 +3810,8 @@ ORACLES: dict[str, str] = {
             FROM f
         ) WHERE rn = 1
     """,
-    "dedup_exact": """
-        SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
+    "dedup_exact": f"""
+        SELECT {_FP_SQL}
                    AS fingerprint,
                min(doc_id) AS keep_id,
                count(*) AS n_dups
@@ -3646,11 +3820,9 @@ ORACLES: dict[str, str] = {
     "dedup_turns": """
         SELECT doc_id FROM documents
     """,
-    "token_count": """
+    "token_count": f"""
         SELECT doc_id,
-               CASE WHEN trim(text) = '' THEN 0
-                    ELSE len(regexp_split_to_array(trim(text), '\\s+'))
-               END AS n_tokens
+               {_ntok_sql()} AS n_tokens
         FROM documents
     """,
     "extract_then_curate": f"""
@@ -3661,29 +3833,14 @@ ORACLES: dict[str, str] = {
         ),
         scored AS (
             SELECT doc_id, text,
-                   CASE WHEN trim(text) = '' THEN 0
-                        ELSE len(regexp_split_to_array(trim(text), '\\s+'))
-                   END AS n_tokens,
-                   round(
-                     0.4 * least(1.0,
-                         len(regexp_split_to_array(trim(text), '\\s+'))
-                             / 50.0)
-                   + 0.3 * (length(regexp_replace(text, '[^a-zA-Z]', '',
-                                                  'g'))
-                            / length(text))
-                   + 0.3 * least(1.0,
-                         5.0 * len(list_filter(
-                             regexp_split_to_array(trim(text), '\\s+'),
-                             t -> lower(t) IN ({_STOP_SQL})))
-                         / len(regexp_split_to_array(trim(text), '\\s+'))),
-                   4) AS quality
+                   {_ntok_sql()} AS n_tokens,
+                   {_quality_expr_sql("text")} AS quality
             FROM ext
         ),
         keep AS (
             SELECT min(doc_id) AS doc_id FROM (
                 SELECT doc_id,
-                       md5(regexp_replace(lower(trim(text)), '\\s+', ' ',
-                           'g')) AS f
+                       {_FP_SQL} AS f
                 FROM scored
             ) GROUP BY f
         )
@@ -3709,65 +3866,18 @@ ORACLES: dict[str, str] = {
     """,
     "quality_score": f"""
         SELECT doc_id,
-               round(
-                 0.4 * least(1.0,
-                     len(regexp_split_to_array(trim(text), '\\s+')) / 50.0)
-               + 0.3 * (length(regexp_replace(text, '[^a-zA-Z]', '', 'g'))
-                        / length(text))
-               + 0.3 * least(1.0,
-                     5.0 * len(list_filter(
-                         regexp_split_to_array(trim(text), '\\s+'),
-                         t -> lower(t) IN ({_STOP_SQL})))
-                     / len(regexp_split_to_array(trim(text), '\\s+'))),
-               4) AS quality
+               {_quality_expr_sql("text")} AS quality
         FROM documents
     """,
-    "fingerprint": """
+    "fingerprint": f"""
         SELECT doc_id,
-               md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
+               {_FP_SQL}
                    AS fingerprint
         FROM documents
     """,
     "ngram_jaccard": _JACCARD_SQL,
-    "line_dedup": """
-        WITH injected AS (
-            SELECT doc_id,
-                   CASE WHEN doc_id % 5 = 0
-                        THEN 'subscribe to our newsletter today' || chr(10)
-                        ELSE '' END
-                   || text
-                   || CASE WHEN doc_id % 3 = 0
-                        THEN chr(10) || 'all rights reserved copyright notice'
-                        ELSE '' END
-                   || CASE WHEN doc_id % 2 = 0
-                        THEN chr(10) || 'follow us on example social network'
-                        ELSE '' END AS text
-            FROM documents
-        ),
-        parts AS (
-            SELECT doc_id, string_split(text, chr(10)) AS ls FROM injected
-        ),
-        lines AS (
-            SELECT doc_id, i AS pos, trim(ls[i + 1]) AS lnorm
-            FROM parts, unnest(range(0, len(ls))) AS t(i)
-        ),
-        ne AS (SELECT * FROM lines WHERE lnorm <> ''),
-        freq AS (
-            SELECT lnorm, count(DISTINCT doc_id) AS line_df
-            FROM ne GROUP BY lnorm
-        ),
-        j AS (
-            SELECT ne.doc_id, ne.pos, ne.lnorm, freq.line_df
-            FROM ne JOIN freq USING (lnorm)
-        ),
-        agg AS (
-            SELECT doc_id,
-                   array_to_string(list(lnorm ORDER BY pos)
-                       FILTER (WHERE line_df <= 1), chr(10)) AS text_clean,
-                   count(*) FILTER (WHERE line_df <= 1) AS n_kept,
-                   count(*) FILTER (WHERE line_df > 1) AS n_dropped
-            FROM j GROUP BY doc_id
-        )
+    "line_dedup": f"""
+        WITH {_LINE_DEDUP_CTES}
         SELECT d.doc_id,
                coalesce(a.text_clean, '') AS text_clean,
                coalesce(a.n_kept, 0) AS n_kept,
@@ -3778,45 +3888,8 @@ ORACLES: dict[str, str] = {
     # keep-first canonical-occurrence policy)
     "substring_dedup": _substring_sql(False),
     "substring_keep_first": _substring_sql(True),
-    "web_curation": """
-        WITH injected AS (
-            SELECT doc_id,
-                   CASE WHEN doc_id % 5 = 0
-                        THEN 'subscribe to our newsletter today' || chr(10)
-                        ELSE '' END
-                   || text
-                   || CASE WHEN doc_id % 3 = 0
-                        THEN chr(10) || 'all rights reserved copyright notice'
-                        ELSE '' END
-                   || CASE WHEN doc_id % 2 = 0
-                        THEN chr(10) || 'follow us on example social network'
-                        ELSE '' END AS text
-            FROM documents
-        ),
-        parts AS (
-            SELECT doc_id, string_split(text, chr(10)) AS ls FROM injected
-        ),
-        lines AS (
-            SELECT doc_id, i AS pos, trim(ls[i + 1]) AS lnorm
-            FROM parts, unnest(range(0, len(ls))) AS t(i)
-        ),
-        ne AS (SELECT * FROM lines WHERE lnorm <> ''),
-        freq AS (
-            SELECT lnorm, count(DISTINCT doc_id) AS line_df
-            FROM ne GROUP BY lnorm
-        ),
-        j AS (
-            SELECT ne.doc_id, ne.pos, ne.lnorm, freq.line_df
-            FROM ne JOIN freq USING (lnorm)
-        ),
-        agg AS (
-            SELECT doc_id,
-                   array_to_string(list(lnorm ORDER BY pos)
-                       FILTER (WHERE line_df <= 1), chr(10)) AS text_clean,
-                   count(*) FILTER (WHERE line_df <= 1) AS n_kept,
-                   count(*) FILTER (WHERE line_df > 1) AS n_dropped
-            FROM j GROUP BY doc_id
-        ),
+    "web_curation": f"""
+        WITH {_LINE_DEDUP_CTES},
         cleaned AS (
             SELECT d.doc_id,
                    coalesce(a.text_clean, '') AS text,
@@ -3826,7 +3899,7 @@ ORACLES: dict[str, str] = {
         ),
         fp AS (
             SELECT doc_id,
-                   md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
+                   {_FP_SQL}
                        AS f
             FROM cleaned
         ),
@@ -3880,38 +3953,7 @@ ORACLES: dict[str, str] = {
         ),
         {_bands_sql('bench', '1')},
         {_bands_sql('corp', '2')},
-        cand AS (
-            SELECT DISTINCT b2.doc_id, b1.doc_id AS committed_id
-            FROM b2 JOIN b1 USING (band, band_key)
-        ),
-        shi AS (
-            SELECT sh2.doc_id, sh2.shingle FROM sh2
-            WHERE sh2.doc_id IN (SELECT doc_id FROM cand)
-        ),
-        shco AS (
-            SELECT sh1.doc_id AS committed_id, sh1.shingle FROM sh1
-            WHERE sh1.doc_id IN (SELECT committed_id FROM cand)
-        ),
-        dfp AS (
-            SELECT shingle FROM (
-                SELECT shingle FROM shi
-                UNION ALL SELECT shingle FROM shco
-            ) GROUP BY shingle HAVING count(*) <= 1000
-        ),
-        ship AS (SELECT shi.* FROM shi JOIN dfp USING (shingle)),
-        shcp AS (SELECT shco.* FROM shco JOIN dfp USING (shingle)),
-        szi AS (
-            SELECT doc_id, count(*) AS sz_i FROM ship GROUP BY doc_id
-        ),
-        szc AS (
-            SELECT committed_id, count(*) AS sz_c FROM shcp
-            GROUP BY committed_id
-        ),
-        inter AS (
-            SELECT i.doc_id, c.committed_id, count(*) AS inter
-            FROM ship i JOIN shcp c ON i.shingle = c.shingle
-            GROUP BY 1, 2
-        ),
+        {_CROSS_JACCARD_CTES},
         hits AS (
             SELECT DISTINCT inter.doc_id
             FROM inter
@@ -3972,14 +4014,12 @@ ORACLES: dict[str, str] = {
         WITH {_INCR_FIXTURE},
         committed AS (
             SELECT DISTINCT
-                   md5(regexp_replace(lower(trim(text)), '\\s+', ' ',
-                                      'g')) AS fingerprint
+                   {_FP_SQL} AS fingerprint
             FROM run1
         ),
         f AS (
             SELECT doc_id,
-                   md5(regexp_replace(lower(trim(text)), '\\s+', ' ',
-                                      'g')) AS fingerprint
+                   {_FP_SQL} AS fingerprint
             FROM incr
         ),
         fresh AS (
@@ -4014,38 +4054,7 @@ ORACLES: dict[str, str] = {
         WITH {_INCR_FIXTURE},
         {_bands_sql('run1', '1')},
         {_bands_sql('incr', '2')},
-        cand AS (
-            SELECT DISTINCT b2.doc_id, b1.doc_id AS committed_id
-            FROM b2 JOIN b1 USING (band, band_key)
-        ),
-        shi AS (
-            SELECT sh2.doc_id, sh2.shingle FROM sh2
-            WHERE sh2.doc_id IN (SELECT doc_id FROM cand)
-        ),
-        shco AS (
-            SELECT sh1.doc_id AS committed_id, sh1.shingle FROM sh1
-            WHERE sh1.doc_id IN (SELECT committed_id FROM cand)
-        ),
-        dfp AS (
-            SELECT shingle FROM (
-                SELECT shingle FROM shi
-                UNION ALL SELECT shingle FROM shco
-            ) GROUP BY shingle HAVING count(*) <= 1000
-        ),
-        ship AS (SELECT shi.* FROM shi JOIN dfp USING (shingle)),
-        shcp AS (SELECT shco.* FROM shco JOIN dfp USING (shingle)),
-        szi AS (
-            SELECT doc_id, count(*) AS sz_i FROM ship GROUP BY doc_id
-        ),
-        szc AS (
-            SELECT committed_id, count(*) AS sz_c FROM shcp
-            GROUP BY committed_id
-        ),
-        inter AS (
-            SELECT i.doc_id, c.committed_id, count(*) AS inter
-            FROM ship i JOIN shcp c ON i.shingle = c.shingle
-            GROUP BY 1, 2
-        )
+        {_CROSS_JACCARD_CTES}
         SELECT inter.doc_id, inter.committed_id,
                round(inter / (szi.sz_i + szc.sz_c - inter), 4)
                    AS jaccard
@@ -4062,27 +4071,8 @@ ORACLES: dict[str, str] = {
     # sum(CASE) HUGEINT->float trap); n/16 is dyadic so round-4 exact
     "minhash_estimate": f"""
         WITH {_SH_CTE},
-        mh AS (
-            SELECT doc_id, seed, part,
-                   min(substring(md5(seed || '#' || shingle),
-                                 part * 8 + 1, 8)) AS minhash
-            FROM sh
-            CROSS JOIN (SELECT unnest(range(0, 4)) AS seed)
-            CROSS JOIN (SELECT unnest(range(0, 4)) AS part)
-            GROUP BY 1, 2, 3
-        ),
-        bands AS (
-            SELECT doc_id, CAST((seed * 4 + part) // 2 AS INT) AS band,
-                   md5(array_to_string(list_sort(list(minhash)), '|'))
-                       AS band_key
-            FROM mh GROUP BY doc_id, band
-        ),
-        cands AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a JOIN bands b
-              ON a.band = b.band AND a.band_key = b.band_key
-             AND a.doc_id < b.doc_id
-        ),
+        {_minhash_ctes("sh", "mh", "bands")},
+        {_CANDS_CTE},
         agree AS (
             SELECT c.doc_a, c.doc_b,
                    count(*) FILTER (WHERE ma.minhash = mb.minhash)
@@ -4102,59 +4092,20 @@ ORACLES: dict[str, str] = {
     # transitive min over the same LSH pair graph: every node's group is
     # the min doc_id reachable through verified near-dup edges
     "near_dup_groups": f"""
-        WITH RECURSIVE
-        pairs AS ({_MINHASH_SQL}),
-        edges AS (
-            SELECT doc_a, doc_b FROM pairs
-            UNION ALL
-            SELECT doc_b, doc_a FROM pairs
-        ),
-        nodes AS (SELECT DISTINCT doc_a AS doc_id FROM edges),
-        r AS (
-            SELECT doc_id, doc_id AS lab FROM nodes
-            UNION
-            SELECT e.doc_b AS doc_id, r.lab
-            FROM r JOIN edges e ON e.doc_a = r.doc_id
-        )
+        WITH RECURSIVE {_CC_CTES}
         SELECT doc_id, min(lab) AS group_id FROM r GROUP BY doc_id
     """,
     # near_dup_keep_best: the same recursive component labelling, then
-    # the quality expression (identical to the quality_score oracle)
+    # the quality expression (_quality_expr_sql, as quality_score)
     # and a rank-1 keep per cluster (quality DESC, doc_id — mirroring
     # the operator's max_by (quality, -id) struct tie-break).
     "near_dup_keep_best": f"""
-        WITH RECURSIVE
-        pairs AS ({_MINHASH_SQL}),
-        edges AS (
-            SELECT doc_a, doc_b FROM pairs
-            UNION ALL
-            SELECT doc_b, doc_a FROM pairs
-        ),
-        nodes AS (SELECT DISTINCT doc_a AS doc_id FROM edges),
-        r AS (
-            SELECT doc_id, doc_id AS lab FROM nodes
-            UNION
-            SELECT e.doc_b AS doc_id, r.lab
-            FROM r JOIN edges e ON e.doc_a = r.doc_id
-        ),
+        WITH RECURSIVE {_CC_CTES},
         g AS (SELECT doc_id, min(lab) AS group_id FROM r
               GROUP BY doc_id),
         qual AS (
             SELECT doc_id,
-                   round(
-                     0.4 * least(1.0,
-                         len(regexp_split_to_array(trim(text), '\\s+'))
-                             / 50.0)
-                   + 0.3 * (length(regexp_replace(text, '[^a-zA-Z]',
-                                                  '', 'g'))
-                            / length(text))
-                   + 0.3 * least(1.0,
-                         5.0 * len(list_filter(
-                             regexp_split_to_array(trim(text), '\\s+'),
-                             t -> lower(t) IN ({_STOP_SQL})))
-                         / len(regexp_split_to_array(trim(text),
-                                                     '\\s+'))),
-                   4) AS quality
+                   {_quality_expr_sql("text")} AS quality
             FROM documents
         ),
         mem AS (SELECT g.doc_id, g.group_id, qual.quality
@@ -4175,7 +4126,7 @@ ORACLES: dict[str, str] = {
     # hash_split: same 16-bit md5 selector as stratified_sample;
     # cumulative cuts val [0,3276) test [3276,6552) train otherwise
     # (int(0.05 * 65536) = 3276, matching the operator's int() floor).
-    "hash_split": """
+    "hash_split": f"""
         WITH s AS (
             SELECT l_orderkey, l_linenumber,
                    md5(CAST(l_orderkey AS VARCHAR)) AS h
@@ -4183,10 +4134,7 @@ ORACLES: dict[str, str] = {
         ),
         u AS (
             SELECT l_orderkey, l_linenumber,
-                   (strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 4096
-                 + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 256
-                 + (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16
-                 + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1) AS sel
+                   {_hex_sum('h', 4)} AS sel
             FROM s
         )
         SELECT l_orderkey, l_linenumber,
@@ -4247,29 +4195,18 @@ ORACLES: dict[str, str] = {
     """,
     # token_budget_mix: same md5 order and integer running sum as the
     # operator; SUM over int is HUGEINT in DuckDB -> CAST BIGINT.
-    "token_budget_mix": """
+    "token_budget_mix": f"""
         WITH t AS (
             SELECT doc_id, source,
-                   CASE WHEN trim(text) = '' THEN 0
-                        ELSE len(regexp_split_to_array(trim(text),
-                                                       '\\s+'))
-                   END AS n_tokens,
+                   {_ntok_sql()} AS n_tokens,
                    md5(CAST(doc_id AS VARCHAR)) AS h
             FROM documents
         ),
-        c AS (
-            SELECT doc_id, source, n_tokens,
-                   CAST(SUM(n_tokens) OVER (
-                       PARTITION BY source ORDER BY h, doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND CURRENT ROW) AS BIGINT) AS cum_tokens
-            FROM t
-        )
-        SELECT doc_id, source, n_tokens, cum_tokens
+        {_CUM_TOKENS_SQL}
         FROM c WHERE cum_tokens - n_tokens < 600
     """,
     # quality_select: the quality expression comes from
-    # _quality_expr_sql (single source with mix_pipeline); the
+    # _quality_expr_sql (shared with every quality oracle); the
     # CAST(0.4 AS DOUBLE) is load-bearing (DuckDB's bare 0.4 is
     # DECIMAL and 0.4*25 rounds differently from IEEE).
     "quality_select": f"""
@@ -4296,20 +4233,8 @@ ORACLES: dict[str, str] = {
     # soft_sample: dedup_weights' float32 weight feeds the E-S race;
     # FLOAT -> DOUBLE widening is exact on both engines, so ln(u)/w is
     # the same double either side.
-    "soft_sample": """
-        WITH u AS (
-            SELECT doc_id, text FROM documents
-            UNION ALL
-            SELECT doc_id + 1000000000,
-                   regexp_replace(upper(text), ' ', '  ', 'g') || '  '
-            FROM documents WHERE doc_id % 3 = 0
-        ),
-        f AS (
-            SELECT doc_id,
-                   md5(regexp_replace(lower(trim(text)), '\\s+', ' ',
-                                      'g')) AS fingerprint
-            FROM u
-        ),
+    "soft_sample": f"""
+        WITH {_TWIN_FP_CTES},
         wt AS (
             SELECT doc_id,
                    CAST(CAST(1.0 AS DOUBLE)
@@ -4337,20 +4262,8 @@ ORACLES: dict[str, str] = {
     # dedup_weights: CAST(1.0 AS DOUBLE) is load-bearing — DuckDB's
     # bare 1.0 is DECIMAL and DECIMAL/BIGINT division rounds
     # differently from IEEE before the 6 dp round.
-    "dedup_weights": """
-        WITH u AS (
-            SELECT doc_id, text FROM documents
-            UNION ALL
-            SELECT doc_id + 1000000000,
-                   regexp_replace(upper(text), ' ', '  ', 'g') || '  '
-            FROM documents WHERE doc_id % 3 = 0
-        ),
-        f AS (
-            SELECT doc_id,
-                   md5(regexp_replace(lower(trim(text)), '\\s+', ' ',
-                                      'g')) AS fingerprint
-            FROM u
-        )
+    "dedup_weights": f"""
+        WITH {_TWIN_FP_CTES}
         SELECT doc_id, fingerprint,
                CAST(count(*) OVER (PARTITION BY fingerprint)
                     AS BIGINT) AS n_dups,
@@ -4414,10 +4327,7 @@ ORACLES: dict[str, str] = {
     "corpus_stats": f"""
         WITH d AS (
             SELECT source,
-                   CASE WHEN trim(text) = '' THEN 0
-                        ELSE len(regexp_split_to_array(trim(text),
-                                                       '\\s+'))
-                   END AS n_tokens,
+                   {_ntok_sql()} AS n_tokens,
                    {_quality_expr_sql("text")} AS quality
             FROM documents
         )
@@ -4450,7 +4360,7 @@ ORACLES: dict[str, str] = {
         ORDER BY n_occurrences DESC, gram ASC
         LIMIT 100
     """,
-    "stratified_sample": """
+    "stratified_sample": f"""
         WITH s AS (
             SELECT doc_id,
                    CASE WHEN n_chars < 400 THEN 'short' ELSE 'long' END
@@ -4459,10 +4369,7 @@ ORACLES: dict[str, str] = {
             FROM documents
         )
         SELECT doc_id, stratum FROM s
-        WHERE (strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 4096
-            + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 256
-            + (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16
-            + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1)
+        WHERE {_hex_sum('h', 4)}
             < CASE stratum WHEN 'short' THEN CAST(0.2 * 65536 AS INT)
                            ELSE CAST(0.6 * 65536 AS INT) END
     """,
@@ -4590,20 +4497,7 @@ ORACLES: dict[str, str] = {
         g AS (SELECT doc_id, {_GOPHER_PASS} AS gopher_pass FROM s),
         q AS (
             SELECT doc_id,
-                   round(
-                     0.4 * least(1.0,
-                         len(regexp_split_to_array(trim(text), '\\s+'))
-                             / 50.0)
-                   + 0.3 * (length(regexp_replace(text, '[^a-zA-Z]',
-                                                  '', 'g'))
-                            / length(text))
-                   + 0.3 * least(1.0,
-                         5.0 * len(list_filter(
-                             regexp_split_to_array(trim(text), '\\s+'),
-                             t -> lower(t) IN ({_STOP_SQL})))
-                         / len(regexp_split_to_array(trim(text),
-                                                     '\\s+'))),
-                   4) AS quality
+                   {_quality_expr_sql("text")} AS quality
             FROM documents
         ),
         arrs AS (
@@ -4724,24 +4618,14 @@ ORACLES: dict[str, str] = {
                          / len(lines), 4) END AS rep_line
         FROM g
     """,
-    "pack_sequences": """
+    "pack_sequences": f"""
         WITH t AS (
             SELECT doc_id, doc_id % 8 AS shard,
-                   CASE WHEN trim(text) = '' THEN 0
-                        ELSE len(regexp_split_to_array(trim(text),
-                                                       '\\s+'))
-                   END AS n_tokens
+                   {_ntok_sql()} AS n_tokens
             FROM documents
         )
         SELECT doc_id, shard, n_tokens,
-               CAST(floor(coalesce(sum(n_tokens) OVER (
-                   PARTITION BY shard ORDER BY doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-               ), 0) / 512) AS BIGINT) AS seq_idx,
-               CAST(coalesce(sum(n_tokens) OVER (
-                   PARTITION BY shard ORDER BY doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-               ), 0) % 512 AS BIGINT) AS seq_offset
+               {_SEQ_COLS}
         FROM t
     """,
     "rollup_stats": """
@@ -4846,8 +4730,7 @@ ORACLES: dict[str, str] = {
         WITH keep AS (
             SELECT min(doc_id) AS doc_id
             FROM documents
-            GROUP BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ',
-                                        'g'))
+            GROUP BY {_FP_SQL}
         ),
         s AS (
             SELECT d.doc_id, d.text
@@ -4855,19 +4738,7 @@ ORACLES: dict[str, str] = {
         ),
         scored AS (
             SELECT doc_id,
-                   round(
-                     0.4 * least(1.0,
-                         len(regexp_split_to_array(trim(text), '\\s+'))
-                             / 50.0)
-                   + 0.3 * (length(regexp_replace(text, '[^a-zA-Z]', '',
-                                                  'g')) / length(text))
-                   + 0.3 * least(1.0,
-                         5.0 * len(list_filter(
-                             regexp_split_to_array(trim(text), '\\s+'),
-                             t -> lower(t) IN ({_STOP_SQL})))
-                         / len(regexp_split_to_array(trim(text),
-                                                     '\\s+'))),
-                   4) AS quality,
+                   {_quality_expr_sql("text")} AS quality,
                    len(list_filter(
                        regexp_split_to_array(trim(text), '\\s+'),
                        t -> lower(t) IN ({_STOP_SQL}))) AS stop_hits
@@ -4894,13 +4765,8 @@ ORACLES: dict[str, str] = {
         ORDER BY n DESC, token ASC
         LIMIT 100
     """,
-    "bm25_topk": """
-        WITH toks AS (
-            SELECT doc_id,
-                   unnest(regexp_split_to_array(lower(trim(text)), '\\s+'))
-                       AS term
-            FROM documents WHERE trim(text) <> ''
-        ),
+    "bm25_topk": f"""
+        WITH {_TERMS_CTE},
         dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
         stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
         tf AS (
@@ -4922,12 +4788,7 @@ ORACLES: dict[str, str] = {
         LIMIT 10
     """,
     "tfidf_keywords": f"""
-        WITH toks AS (
-            SELECT doc_id,
-                   unnest(regexp_split_to_array(lower(trim(text)), '\\s+'))
-                       AS term
-            FROM documents WHERE trim(text) <> ''
-        ),
+        WITH {_TERMS_CTE},
         tf AS (
             SELECT doc_id, term, count(*) AS tf FROM toks
             WHERE term NOT IN ({_STOP_SQL})
@@ -4948,12 +4809,10 @@ ORACLES: dict[str, str] = {
             FROM scored
         ) WHERE rank <= 3
     """,
-    "domain_mix": """
+    "domain_mix": f"""
         WITH t AS (
             SELECT doc_id, source,
-                   CASE WHEN trim(text) = '' THEN 0
-                        ELSE len(regexp_split_to_array(trim(text), '\\s+'))
-                   END AS n_tokens,
+                   {_ntok_sql()} AS n_tokens,
                    md5(CAST(doc_id AS VARCHAR)) AS h
             FROM documents
         ),
@@ -4969,10 +4828,7 @@ ORACLES: dict[str, str] = {
         )
         SELECT t.doc_id, t.source, r.domain_tokens
         FROM t JOIN r USING (source)
-        WHERE (strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 4096
-            + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 256
-            + (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16
-            + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1)
+        WHERE {_hex_sum('h', 4)}
             < r.threshold
     """,
     "winnow": f"""
@@ -4986,7 +4842,7 @@ ORACLES: dict[str, str] = {
         SELECT wp.doc_a, wp.doc_b, jc.jaccard
         FROM wp JOIN jc ON wp.doc_a = jc.doc_a AND wp.doc_b = jc.doc_b
     """,
-    "kmv_distinct": """
+    "kmv_distinct": f"""
         WITH toks AS (
             SELECT source AS grp,
                    unnest(regexp_split_to_array(lower(trim(text)), '\\s+'))
@@ -4999,21 +4855,7 @@ ORACLES: dict[str, str] = {
         ),
         u AS (
             SELECT grp, term,
-                   ((strpos('0123456789abcdef', substr(h, 1, 1)) - 1)
-                        * 268435456
-                  + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1)
-                        * 16777216
-                  + (strpos('0123456789abcdef', substr(h, 3, 1)) - 1)
-                        * 1048576
-                  + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1)
-                        * 65536
-                  + (strpos('0123456789abcdef', substr(h, 5, 1)) - 1)
-                        * 4096
-                  + (strpos('0123456789abcdef', substr(h, 6, 1)) - 1)
-                        * 256
-                  + (strpos('0123456789abcdef', substr(h, 7, 1)) - 1)
-                        * 16
-                  + (strpos('0123456789abcdef', substr(h, 8, 1)) - 1))
+                   {_hex32('h')}
                    / 4294967296.0 AS u
             FROM d
         ),
@@ -5035,7 +4877,7 @@ ORACLES: dict[str, str] = {
     """,
     # mirrors dedup.conv_dedup over the synthesized conv structure +
     # the mangled duplicate conversations the driver query unions in
-    "conv_dedup": """
+    "conv_dedup": f"""
         WITH turns AS (
             SELECT doc_id // 10 AS conv_id, doc_id % 10 AS turn_idx,
                    text
@@ -5049,8 +4891,7 @@ ORACLES: dict[str, str] = {
             -- per-turn md5 BEFORE the concat mirrors the operator's
             -- bounded-row fingerprint (33 bytes/turn, never raw text)
             SELECT conv_id, turn_idx,
-                   md5(regexp_replace(lower(trim(text)), '\\s+', ' ',
-                                      'g')) AS h
+                   {_FP_SQL} AS h
             FROM turns
         ),
         fps AS (
@@ -5069,21 +4910,8 @@ ORACLES: dict[str, str] = {
     # (chunk/fill state propagated turn by turn within each conv)
     # concat_ws skips NULL lags in BOTH engines, so conversation-start
     # contexts shorten identically; chr(10) = the operator's '\n'
-    "sft_examples": """
-        WITH t AS (
-            SELECT doc_id // 8 AS conv_id, doc_id % 8 AS turn_idx,
-                   CASE WHEN doc_id % 2 = 0 THEN 'user'
-                        ELSE 'assistant' END AS role,
-                   text
-            FROM documents
-        ),
-        lagged AS (
-            SELECT conv_id, turn_idx, role, text,
-                   lag(concat_ws(': ', role, text), 3) OVER w AS c3,
-                   lag(concat_ws(': ', role, text), 2) OVER w AS c2,
-                   lag(concat_ws(': ', role, text), 1) OVER w AS c1
-            FROM t WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)
-        )
+    "sft_examples": f"""
+        WITH {_SFT_CTES}
         SELECT conv_id, turn_idx,
                (CASE WHEN c3 IS NULL THEN 0 ELSE 1 END
               + CASE WHEN c2 IS NULL THEN 0 ELSE 1 END
@@ -5095,21 +4923,8 @@ ORACLES: dict[str, str] = {
     # sft_examples CTEs + rendering + the pack_sequences shard-window
     # cumsum, composed verbatim; nullif('') keeps conversation-opening
     # targets from leading with the blank-line separator
-    "sft_pipeline": """
-        WITH t AS (
-            SELECT doc_id // 8 AS conv_id, doc_id % 8 AS turn_idx,
-                   CASE WHEN doc_id % 2 = 0 THEN 'user'
-                        ELSE 'assistant' END AS role,
-                   text
-            FROM documents
-        ),
-        lagged AS (
-            SELECT conv_id, turn_idx, role, text,
-                   lag(concat_ws(': ', role, text), 3) OVER w AS c3,
-                   lag(concat_ws(': ', role, text), 2) OVER w AS c2,
-                   lag(concat_ws(': ', role, text), 1) OVER w AS c1
-            FROM t WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)
-        ),
+    "sft_pipeline": f"""
+        WITH {_SFT_CTES},
         ex AS (
             SELECT conv_id * 4 + (turn_idx - 1) // 2 AS doc_id,
                    concat_ws(chr(10) || chr(10),
@@ -5119,41 +4934,18 @@ ORACLES: dict[str, str] = {
         ),
         tk AS (
             SELECT doc_id, doc_id % 8 AS shard,
-                   CASE WHEN trim(text) = '' THEN 0
-                        ELSE len(regexp_split_to_array(trim(text),
-                                                       '\\s+'))
-                   END AS n_tokens
+                   {_ntok_sql()} AS n_tokens
             FROM ex
         )
         SELECT doc_id, shard, n_tokens,
-               CAST(floor(coalesce(sum(n_tokens) OVER (
-                   PARTITION BY shard ORDER BY doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-               ), 0) / 512) AS BIGINT) AS seq_idx,
-               CAST(coalesce(sum(n_tokens) OVER (
-                   PARTITION BY shard ORDER BY doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-               ), 0) % 512 AS BIGINT) AS seq_offset
+               {_SEQ_COLS}
         FROM tk
     """,
     # sft_pipeline + the ctx-token carry: n_tokens of the rendered
     # text and ctx_tokens of the bare context are independent
     # whitespace counts whose sum property the operator pytest pins
-    "sft_spans": """
-        WITH t AS (
-            SELECT doc_id // 8 AS conv_id, doc_id % 8 AS turn_idx,
-                   CASE WHEN doc_id % 2 = 0 THEN 'user'
-                        ELSE 'assistant' END AS role,
-                   text
-            FROM documents
-        ),
-        lagged AS (
-            SELECT conv_id, turn_idx, role, text,
-                   lag(concat_ws(': ', role, text), 3) OVER w AS c3,
-                   lag(concat_ws(': ', role, text), 2) OVER w AS c2,
-                   lag(concat_ws(': ', role, text), 1) OVER w AS c1
-            FROM t WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)
-        ),
+    "sft_spans": f"""
+        WITH {_SFT_CTES},
         ex AS (
             SELECT conv_id * 4 + (turn_idx - 1) // 2 AS doc_id,
                    concat_ws(chr(10), c3, c2, c1) AS ctx,
@@ -5164,26 +4956,13 @@ ORACLES: dict[str, str] = {
         ),
         tk AS (
             SELECT doc_id, doc_id % 8 AS shard,
-                   CASE WHEN trim(rendered) = '' THEN 0
-                        ELSE len(regexp_split_to_array(trim(rendered),
-                                                       '\\s+'))
-                   END AS n_tokens,
-                   CASE WHEN trim(ctx) = '' THEN 0
-                        ELSE len(regexp_split_to_array(trim(ctx),
-                                                       '\\s+'))
-                   END AS ctx_tokens
+                   {_ntok_sql('rendered')} AS n_tokens,
+                   {_ntok_sql('ctx')} AS ctx_tokens
             FROM ex
         ),
         p AS (
             SELECT doc_id, shard, n_tokens, ctx_tokens,
-                   CAST(floor(coalesce(sum(n_tokens) OVER (
-                       PARTITION BY shard ORDER BY doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                   ), 0) / 512) AS BIGINT) AS seq_idx,
-                   CAST(coalesce(sum(n_tokens) OVER (
-                       PARTITION BY shard ORDER BY doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                   ), 0) % 512 AS BIGINT) AS seq_offset
+                   {_SEQ_COLS}
             FROM tk
         )
         SELECT doc_id, shard, n_tokens, ctx_tokens,
@@ -5195,13 +4974,10 @@ ORACLES: dict[str, str] = {
                    AS tgt_end
         FROM p
     """,
-    "pack_conversations": """
+    "pack_conversations": f"""
         WITH RECURSIVE t0 AS (
             SELECT doc_id // 10 AS conv_id, doc_id % 10 AS turn_idx,
-                   CASE WHEN trim(text) = '' THEN 0
-                        ELSE len(regexp_split_to_array(trim(text),
-                                                       '\\s+'))
-                   END AS n
+                   {_ntok_sql()} AS n
             FROM documents
         ),
         t AS (
@@ -5231,13 +5007,8 @@ ORACLES: dict[str, str] = {
     # mirrors q_ccnet_buckets: unigram LM score -> corpus terciles
     # (quantile_cont == Spark exact percentile), thresholds rounded 4dp
     # both engines before the comparison
-    "ccnet_buckets": """
-        WITH toks AS (
-            SELECT doc_id,
-                   unnest(regexp_split_to_array(lower(trim(text)), '\\s+'))
-                       AS term
-            FROM documents WHERE trim(text) <> ''
-        ),
+    "ccnet_buckets": f"""
+        WITH {_TERMS_CTE},
         tf AS (SELECT term, count(*) AS tf FROM toks GROUP BY term),
         tot AS (SELECT CAST(sum(tf) AS BIGINT) AS t FROM tf),
         lpt AS (SELECT term, ln(tf / t) AS logp FROM tf, tot),
@@ -5257,13 +5028,8 @@ ORACLES: dict[str, str] = {
                     ELSE 'tail' END AS bucket
         FROM lp, thr
     """,
-    "unigram_logprob": """
-        WITH toks AS (
-            SELECT doc_id,
-                   unnest(regexp_split_to_array(lower(trim(text)), '\\s+'))
-                       AS term
-            FROM documents WHERE trim(text) <> ''
-        ),
+    "unigram_logprob": f"""
+        WITH {_TERMS_CTE},
         tf AS (SELECT term, count(*) AS tf FROM toks GROUP BY term),
         tot AS (SELECT CAST(sum(tf) AS BIGINT) AS t FROM tf),
         lp AS (SELECT term, ln(tf / t) AS logp FROM tf, tot)
@@ -5488,24 +5254,8 @@ ORACLES: dict[str, str] = {
     # mirrors textops.bigram_logprob (lam=0.7): interpolated bigram LM
     # trained on the corpus, scored per doc; / on BIGINTs is float
     # division in DuckDB, matching Spark's Column /
-    "bigram_logprob": """
-        WITH arrs AS (
-            SELECT doc_id,
-                   regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-            FROM documents WHERE trim(text) <> ''
-        ),
-        big AS (
-            SELECT doc_id, t[r.i + 1] AS term_a, t[r.i + 2] AS term_b
-            FROM arrs, unnest(range(0, len(t) - 1)) AS r(i)
-            WHERE len(t) >= 2
-        ),
-        bf AS (
-            SELECT * FROM big WHERE term_a <> '' AND term_b <> ''
-        ),
-        cab AS (
-            SELECT term_a, term_b, count(*) AS c_ab
-            FROM bf GROUP BY 1, 2
-        ),
+    "bigram_logprob": f"""
+        WITH {_BIGRAM_CTES},
         cleft AS (
             SELECT term_a, CAST(sum(c_ab) AS BIGINT) AS c_left
             FROM cab GROUP BY 1
@@ -5594,24 +5344,8 @@ ORACLES: dict[str, str] = {
     # representable so the literal is portable as written; the
     # arithmetic mirrors the operator's expression structure term by
     # term (greatest/max, the (D * n_cont / c_left) grouping)
-    "kn_logprob": """
-        WITH arrs AS (
-            SELECT doc_id,
-                   regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-            FROM documents WHERE trim(text) <> ''
-        ),
-        big AS (
-            SELECT doc_id, t[r.i + 1] AS term_a, t[r.i + 2] AS term_b
-            FROM arrs, unnest(range(0, len(t) - 1)) AS r(i)
-            WHERE len(t) >= 2
-        ),
-        bf AS (
-            SELECT * FROM big WHERE term_a <> '' AND term_b <> ''
-        ),
-        cab AS (
-            SELECT term_a, term_b, count(*) AS c_ab
-            FROM bf GROUP BY 1, 2
-        ),
+    "kn_logprob": f"""
+        WITH {_BIGRAM_CTES},
         cleft AS (
             SELECT term_a, CAST(sum(c_ab) AS BIGINT) AS c_left,
                    count(*) AS n_cont
@@ -5674,58 +5408,22 @@ ORACLES: dict[str, str] = {
         ORDER BY pmi DESC, term_a, term_b
         LIMIT 50
     """,
-    "cosine_topk": """
-        SELECT q_id, vec_id, cos, rank FROM (
-            SELECT q.vec_id AS q_id, e.vec_id,
-                   round(list_cosine_similarity(q.embedding::DOUBLE[], e.embedding::DOUBLE[]),
-                         4) AS cos,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY round(list_cosine_similarity(
-                                    q.embedding, e.embedding), 4) DESC,
-                                e.vec_id) AS rank
-            FROM embeddings q CROSS JOIN embeddings e
-            WHERE q.vec_id < 10 AND e.vec_id <> q.vec_id
-        ) WHERE rank <= 5
+    "cosine_topk": f"""
+        {_cos_top5_sql("embeddings q CROSS JOIN embeddings e")}
     """,
-    "ann_lsh": """
+    "ann_lsh": f"""
         WITH b AS (
             SELECT vec_id, embedding,
-                   (CASE WHEN embedding[1] >= 0 THEN 1 ELSE 0 END)
-                 + (CASE WHEN embedding[2] >= 0 THEN 2 ELSE 0 END)
-                 + (CASE WHEN embedding[3] >= 0 THEN 4 ELSE 0 END)
-                 + (CASE WHEN embedding[4] >= 0 THEN 8 ELSE 0 END)
-                 + (CASE WHEN embedding[5] >= 0 THEN 16 ELSE 0 END)
-                 + (CASE WHEN embedding[6] >= 0 THEN 32 ELSE 0 END)
-                 + (CASE WHEN embedding[7] >= 0 THEN 64 ELSE 0 END)
-                 + (CASE WHEN embedding[8] >= 0 THEN 128 ELSE 0 END)
+                   {_SIGN_BUCKET}
                    AS bucket
             FROM embeddings
         )
-        SELECT q_id, vec_id, cos, rank FROM (
-            SELECT q.vec_id AS q_id, e.vec_id,
-                   round(list_cosine_similarity(q.embedding::DOUBLE[], e.embedding::DOUBLE[]),
-                         4) AS cos,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY round(list_cosine_similarity(
-                                    q.embedding, e.embedding), 4) DESC,
-                                e.vec_id) AS rank
-            FROM b q JOIN b e ON q.bucket = e.bucket
-            WHERE q.vec_id < 10 AND e.vec_id <> q.vec_id
-        ) WHERE rank <= 5
+        {_cos_top5_sql("b q JOIN b e ON q.bucket = e.bucket")}
     """,
-    "cosine_near_dup": """
+    "cosine_near_dup": f"""
         WITH b AS (
             SELECT vec_id, embedding,
-                   (CASE WHEN embedding[1] >= 0 THEN 1 ELSE 0 END)
-                 + (CASE WHEN embedding[2] >= 0 THEN 2 ELSE 0 END)
-                 + (CASE WHEN embedding[3] >= 0 THEN 4 ELSE 0 END)
-                 + (CASE WHEN embedding[4] >= 0 THEN 8 ELSE 0 END)
-                 + (CASE WHEN embedding[5] >= 0 THEN 16 ELSE 0 END)
-                 + (CASE WHEN embedding[6] >= 0 THEN 32 ELSE 0 END)
-                 + (CASE WHEN embedding[7] >= 0 THEN 64 ELSE 0 END)
-                 + (CASE WHEN embedding[8] >= 0 THEN 128 ELSE 0 END)
+                   {_SIGN_BUCKET}
                    AS bucket
             FROM embeddings
         )
@@ -5738,17 +5436,10 @@ ORACLES: dict[str, str] = {
               ON a.bucket = e.bucket AND a.vec_id < e.vec_id
         ) WHERE cos >= 0.3
     """,
-    "semantic_dedup": """
+    "semantic_dedup": f"""
         WITH b AS (
             SELECT vec_id, embedding,
-                   (CASE WHEN embedding[1] >= 0 THEN 1 ELSE 0 END)
-                 + (CASE WHEN embedding[2] >= 0 THEN 2 ELSE 0 END)
-                 + (CASE WHEN embedding[3] >= 0 THEN 4 ELSE 0 END)
-                 + (CASE WHEN embedding[4] >= 0 THEN 8 ELSE 0 END)
-                 + (CASE WHEN embedding[5] >= 0 THEN 16 ELSE 0 END)
-                 + (CASE WHEN embedding[6] >= 0 THEN 32 ELSE 0 END)
-                 + (CASE WHEN embedding[7] >= 0 THEN 64 ELSE 0 END)
-                 + (CASE WHEN embedding[8] >= 0 THEN 128 ELSE 0 END)
+                   {_SIGN_BUCKET}
                    AS bucket
             FROM embeddings
         ),
@@ -5780,11 +5471,7 @@ ORACLES: dict[str, str] = {
         q AS (SELECT vec_id AS q_id, emb AS q_emb,
                      sqrt(list_inner_product(emb, emb)) AS n1
               FROM e WHERE vec_id < 10),
-        qsub AS (SELECT q_id, r.s,
-                        list_slice(q_emb, r.s * 16 + 1, (r.s + 1) * 16)
-                            AS qv,
-                        n1
-                 FROM q CROSS JOIN unnest(range(0, 4)) AS r(s)),
+        {_PQ_QSUB_CTE},
         terms AS (SELECT qs.q_id, a.vec_id, qs.s, qs.n1,
                          list_inner_product(qs.qv, c.cent) AS t,
                          list_inner_product(c.cent, c.cent) AS t2
@@ -5792,31 +5479,7 @@ ORACLES: dict[str, str] = {
                   JOIN a1 a ON qs.s = a.s
                   JOIN c1 c ON c.s = a.s AND c.code = a.code
                   WHERE qs.q_id <> a.vec_id),
-        sc AS (SELECT q_id, vec_id,
-                      round(list_sum(list(t ORDER BY s))
-                            / (any_value(n1)
-                               * sqrt(list_sum(list(t2 ORDER BY s)))),
-                            4) AS score
-               FROM terms GROUP BY q_id, vec_id),
-        short AS (SELECT q_id, vec_id FROM (
-            SELECT q_id, vec_id,
-                   row_number() OVER (PARTITION BY q_id
-                       ORDER BY score DESC, vec_id) AS srank
-            FROM sc) WHERE srank <= 100),
-        re AS (SELECT s.q_id, s.vec_id,
-                      round(list_inner_product(q.q_emb, e2.emb)
-                            / (q.n1
-                               * sqrt(list_inner_product(e2.emb,
-                                                         e2.emb))),
-                            4) AS score
-               FROM short s
-               JOIN q ON q.q_id = s.q_id
-               JOIN e e2 ON e2.vec_id = s.vec_id)
-        SELECT q_id, vec_id, score, rank FROM (
-            SELECT q_id, vec_id, score,
-                   row_number() OVER (PARTITION BY q_id
-                       ORDER BY score DESC, vec_id) AS rank
-            FROM re) WHERE rank <= 5
+        {_pq_rerank_sql(100)}
     """,
     # IVF+PQ composition: the ann_ivf assignment/probe CTEs bound the
     # pair set (cand), the ann_pq training CTEs + ADC terms score it,
@@ -5848,11 +5511,7 @@ ORACLES: dict[str, str] = {
         cand AS (SELECT p.q_id, s.vec_id
                  FROM probes p JOIN assign s USING (cid)
                  WHERE p.q_id <> s.vec_id),
-        qsub AS (SELECT q_id, r.s,
-                        list_slice(q_emb, r.s * 16 + 1, (r.s + 1) * 16)
-                            AS qv,
-                        n1
-                 FROM q CROSS JOIN unnest(range(0, 4)) AS r(s)),
+        {_PQ_QSUB_CTE},
         terms AS (SELECT cd.q_id, cd.vec_id, qs.s, qs.n1,
                          list_inner_product(qs.qv, c.cent) AS t,
                          list_inner_product(c.cent, c.cent) AS t2
@@ -5860,42 +5519,11 @@ ORACLES: dict[str, str] = {
                   JOIN qsub qs ON qs.q_id = cd.q_id
                   JOIN a1 a ON a.vec_id = cd.vec_id AND qs.s = a.s
                   JOIN c1 c ON c.s = a.s AND c.code = a.code),
-        sc AS (SELECT q_id, vec_id,
-                      round(list_sum(list(t ORDER BY s))
-                            / (any_value(n1)
-                               * sqrt(list_sum(list(t2 ORDER BY s)))),
-                            4) AS score
-               FROM terms GROUP BY q_id, vec_id),
-        short AS (SELECT q_id, vec_id FROM (
-            SELECT q_id, vec_id,
-                   row_number() OVER (PARTITION BY q_id
-                       ORDER BY score DESC, vec_id) AS srank
-            FROM sc) WHERE srank <= 50),
-        re AS (SELECT s.q_id, s.vec_id,
-                      round(list_inner_product(q.q_emb, e2.emb)
-                            / (q.n1
-                               * sqrt(list_inner_product(e2.emb,
-                                                         e2.emb))),
-                            4) AS score
-               FROM short s
-               JOIN q ON q.q_id = s.q_id
-               JOIN e e2 ON e2.vec_id = s.vec_id)
-        SELECT q_id, vec_id, score, rank FROM (
-            SELECT q_id, vec_id, score,
-                   row_number() OVER (PARTITION BY q_id
-                       ORDER BY score DESC, vec_id) AS rank
-            FROM re) WHERE rank <= 5
+        {_pq_rerank_sql(50)}
     """,
     "kmeans_clusters": f"""
         WITH {_KMEANS_CTES}
-        SELECT vec_id, cid, cos FROM (
-            SELECT e.vec_id, c.cid,
-                   round(list_cosine_similarity(e.emb, c.cent), 4) AS cos,
-                   row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY round(list_cosine_similarity(
-                                    e.emb, c.cent), 4) DESC,
-                                c.cid) AS rk
-            FROM e CROSS JOIN c2 c) WHERE rk = 1
+        {_KMEANS_ASG}
     """,
     "semantic_dedup_kmeans": f"""
         WITH {_KMEANS_CTES},
@@ -5908,13 +5536,7 @@ ORACLES: dict[str, str] = {
                                     c.cid) AS rk
                 FROM e CROSS JOIN c2 c) WHERE rk = 1
         ),
-        m AS (SELECT a.vec_id, a.cid, e.emb
-              FROM af a JOIN e USING (vec_id)),
-        losers AS (
-            SELECT DISTINCT b.vec_id AS doc_id
-            FROM m a JOIN m b ON a.cid = b.cid AND a.vec_id < b.vec_id
-            WHERE round(list_cosine_similarity(a.emb, b.emb), 4) >= 0.3
-        )
+        {_SEMDEDUP_LOSERS_CTES}
         SELECT doc_id, source, n_chars FROM documents
         WHERE doc_id NOT IN (SELECT doc_id FROM losers)
     """,
@@ -5926,23 +5548,9 @@ ORACLES: dict[str, str] = {
     "d4_select": f"""
         WITH {_KMEANS_CTES},
         af AS (
-            SELECT vec_id, cid, cos FROM (
-                SELECT e.vec_id, c.cid,
-                       round(list_cosine_similarity(e.emb, c.cent),
-                             4) AS cos,
-                       row_number() OVER (PARTITION BY e.vec_id
-                           ORDER BY round(list_cosine_similarity(
-                                        e.emb, c.cent), 4) DESC,
-                                    c.cid) AS rk
-                FROM e CROSS JOIN c2 c) WHERE rk = 1
+            {_KMEANS_ASG}
         ),
-        m AS (SELECT a.vec_id, a.cid, e.emb
-              FROM af a JOIN e USING (vec_id)),
-        losers AS (
-            SELECT DISTINCT b.vec_id AS doc_id
-            FROM m a JOIN m b ON a.cid = b.cid AND a.vec_id < b.vec_id
-            WHERE round(list_cosine_similarity(a.emb, b.emb), 4) >= 0.3
-        ),
+        {_SEMDEDUP_LOSERS_CTES},
         surv AS (
             SELECT vec_id, cid, cos FROM af
             WHERE vec_id NOT IN (SELECT doc_id FROM losers)
@@ -5985,24 +5593,9 @@ ORACLES: dict[str, str] = {
         JOIN nation ON c_nationkey = n_nationkey
         GROUP BY n_name
     """,
-    "extract_plain_route": """
-        SELECT doc_id,
-               regexp_replace(trim(text), '\\s+', ' ', 'g') AS text,
-               '' AS error
-        FROM documents
-    """,
-    "extract_html_route": """
-        SELECT doc_id,
-               regexp_replace(trim(text), '\\s+', ' ', 'g') AS text,
-               '' AS error
-        FROM documents
-    """,
-    "extract_pdf_route": """
-        SELECT doc_id,
-               regexp_replace(trim(text), '\\s+', ' ', 'g') AS text,
-               '' AS error
-        FROM documents
-    """,
+    "extract_plain_route": _EXTRACT_ROUTE_SQL,
+    "extract_html_route": _EXTRACT_ROUTE_SQL,
+    "extract_pdf_route": _EXTRACT_ROUTE_SQL,
     "media_decode": """
         SELECT doc_id, CAST(strlen(text) AS BIGINT) AS n_bytes,
                CAST(strlen(text) % 1000 + 1 AS INT) AS width,
@@ -6032,14 +5625,7 @@ ORACLES: dict[str, str] = {
         ),
         bk AS (
             SELECT vec_id, embedding,
-                   (CASE WHEN embedding[1] >= 0 THEN 1 ELSE 0 END)
-                 + (CASE WHEN embedding[2] >= 0 THEN 2 ELSE 0 END)
-                 + (CASE WHEN embedding[3] >= 0 THEN 4 ELSE 0 END)
-                 + (CASE WHEN embedding[4] >= 0 THEN 8 ELSE 0 END)
-                 + (CASE WHEN embedding[5] >= 0 THEN 16 ELSE 0 END)
-                 + (CASE WHEN embedding[6] >= 0 THEN 32 ELSE 0 END)
-                 + (CASE WHEN embedding[7] >= 0 THEN 64 ELSE 0 END)
-                 + (CASE WHEN embedding[8] >= 0 THEN 128 ELSE 0 END)
+                   {_SIGN_BUCKET}
                    AS bucket
             FROM emb
         )
@@ -6173,12 +5759,7 @@ bm{tag} AS (
 
 
 ORACLES["rrf_fusion"] = f"""
-WITH toks AS (
-    SELECT doc_id,
-           unnest(regexp_split_to_array(lower(trim(text)), '\\s+'))
-               AS term
-    FROM documents WHERE trim(text) <> ''
-),
+WITH {_TERMS_CTE},
 dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
 stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
 {_bm25_rank_cte(('hash', 'join', 'merge'), 'a', 30)},
@@ -6335,8 +5916,7 @@ FROM turns t JOIN kept k USING (conv_id)
 """
 
 # conv_filter CTEs + the sft_pipeline chain (lag contexts -> render ->
-# shard-window cumsum) copied VERBATIM from the sft_pipeline oracle,
-# re-rooted on the kept turns.
+# shard-window cumsum, _SEQ_COLS) re-rooted on the kept turns.
 ORACLES["sft_curation"] = f"""
 WITH {_TURNS_CTE},
 {_CONV_LAGGED_CTE},
@@ -6359,19 +5939,10 @@ ex AS (
     FROM ctx WHERE role = 'assistant'),
 tk AS (
     SELECT doc_id, doc_id % 8 AS shard,
-           CASE WHEN trim(text) = '' THEN 0
-                ELSE len(regexp_split_to_array(trim(text), '\\s+'))
-           END AS n_tokens
+           {_ntok_sql()} AS n_tokens
     FROM ex)
 SELECT doc_id, shard, n_tokens,
-       CAST(floor(coalesce(sum(n_tokens) OVER (
-           PARTITION BY shard ORDER BY doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-       ), 0) / 512) AS BIGINT) AS seq_idx,
-       CAST(coalesce(sum(n_tokens) OVER (
-           PARTITION BY shard ORDER BY doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-       ), 0) % 512 AS BIGINT) AS seq_offset
+       {_SEQ_COLS}
 FROM tk
 """
 
@@ -6422,18 +5993,11 @@ FROM h{iters} h JOIN a{iters} a USING (node)"""
 
 ORACLES["hits"] = _hits_sql(3)
 
-# the kmeans_clusters final-assignment subquery verbatim, aggregated
+# the kmeans_clusters final assignment (_KMEANS_ASG), aggregated
 ORACLES["cluster_stats"] = f"""
 WITH {_KMEANS_CTES},
 asg AS (
-    SELECT vec_id, cid, cos FROM (
-        SELECT e.vec_id, c.cid,
-               round(list_cosine_similarity(e.emb, c.cent), 4) AS cos,
-               row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY round(list_cosine_similarity(
-                                e.emb, c.cent), 4) DESC,
-                            c.cid) AS rk
-        FROM e CROSS JOIN c2 c) WHERE rk = 1)
+    {_KMEANS_ASG})
 SELECT cid, count(*) AS n_members, min(vec_id) AS exemplar,
        min(cos) AS min_cos, max(cos) AS max_cos,
        CAST(SUM(CAST(cos AS DOUBLE)) / CAST(count(*) AS DOUBLE)
@@ -6441,12 +6005,10 @@ SELECT cid, count(*) AS n_members, min(vec_id) AS exemplar,
 FROM asg GROUP BY cid
 """
 
-ORACLES["length_buckets"] = """
+ORACLES["length_buckets"] = f"""
 WITH tok AS (
     SELECT doc_id,
-           CASE WHEN trim(text) = '' THEN 0
-                ELSE len(regexp_split_to_array(trim(text), '\\s+'))
-           END AS n_tokens
+           {_ntok_sql()} AS n_tokens
     FROM documents),
 bk AS (
     SELECT n_tokens,
@@ -6767,12 +6329,10 @@ SELECT dst, anchor, cnt, rk FROM r WHERE rk <= 3
 # group g of doc d masks iff the 16-bit md5 selector of 'd#scg' lands
 # under the density; maximal masked runs count via the lag window —
 # count(CASE) not sum(CASE) (HUGEINT kind, the contamination lesson).
-ORACLES["span_corruption"] = """
+ORACLES["span_corruption"] = f"""
 WITH tok AS (
     SELECT doc_id,
-           CASE WHEN trim(text) = '' THEN 0
-                ELSE len(regexp_split_to_array(trim(text), '\\s+'))
-           END AS n
+           {_ntok_sql()} AS n
     FROM documents),
 gs AS (
     SELECT doc_id, n, unnest(range(0, (n + 2) // 3)) AS g
@@ -6909,10 +6469,7 @@ WITH rows_ AS (
     FROM documents),
 fl AS (
     SELECT doc_id,
-           CASE WHEN trim(instruction) = '' THEN 0
-                ELSE len(regexp_split_to_array(trim(instruction),
-                                               '\\s+'))
-           END AS inst_tokens,
+           {_ntok_sql('instruction')} AS inst_tokens,
            CASE WHEN {_REFUSAL_SQL} THEN 0 ELSE 1 END AS not_refusal,
            CASE WHEN regexp_matches(coalesce(response, ''),
                                     '{PF.COMPLETE_RE}')
@@ -6954,15 +6511,19 @@ WITH {_checksum_cte('documents', 's')}
 SELECT shard, n_docs, n_chars, checksum FROM cs
 """
 
-ORACLES["win_matrix"] = """
-WITH resp AS (
+# scored responses (mirror _model_responses) and each model's best score
+# per prompt — shared by the win_matrix and elo_fit oracles
+_MODEL_RESP_CTES = """resp AS (
     SELECT doc_id // 8 AS prompt_id,
            'm' || CAST(doc_id % 4 AS VARCHAR) AS model,
            ((doc_id // 2) * 29) % 100 AS score
     FROM documents),
 best AS (
     SELECT prompt_id, model, MAX(score) AS score
-    FROM resp GROUP BY prompt_id, model)
+    FROM resp GROUP BY prompt_id, model)"""
+
+ORACLES["win_matrix"] = f"""
+WITH {_MODEL_RESP_CTES}
 SELECT a.model AS model_a, b.model AS model_b,
        count(CASE WHEN a.score > b.score THEN 1 END) AS wins_a,
        count(CASE WHEN a.score < b.score THEN 1 END) AS wins_b,
@@ -6976,12 +6537,10 @@ GROUP BY a.model, b.model
 # PERCENTILE_DISC via the level table; HUGEINT casts on the window
 # sums (the contamination lesson); NULL lengths excluded (the
 # score_normalize NULLS-FIRST/LAST policy).
-ORACLES["length_quantiles"] = """
+ORACLES["length_quantiles"] = f"""
 WITH tok AS (
     SELECT source,
-           CASE WHEN trim(text) = '' THEN 0
-                ELSE len(regexp_split_to_array(trim(text), '\\s+'))
-           END AS n
+           {_ntok_sql()} AS n
     FROM documents),
 lv AS (SELECT source, n, count(*) AS cnt
        FROM tok WHERE n IS NOT NULL GROUP BY source, n),
@@ -7029,9 +6588,7 @@ WITH fix AS (
     FROM documents),
 feats AS (
     SELECT source,
-           CASE WHEN trim(text) = '' THEN 0
-                ELSE len(regexp_split_to_array(trim(text), '\\s+'))
-           END AS n_tokens,
+           {_ntok_sql()} AS n_tokens,
            COALESCE(length(text), 0) AS nc,
            CASE WHEN len(list_filter(
                     regexp_split_to_array(trim(text), '\\s+'),
@@ -7080,14 +6637,7 @@ g{k} AS (SELECT m, CAST(raw / a{k}.ar AS FLOAT) AS r
         prev = f"g{k}"
     body = ",\n".join(parts)
     return f"""
-WITH resp AS (
-    SELECT doc_id // 8 AS prompt_id,
-           'm' || CAST(doc_id % 4 AS VARCHAR) AS model,
-           ((doc_id // 2) * 29) % 100 AS score
-    FROM documents),
-best AS (
-    SELECT prompt_id, model, MAX(score) AS score
-    FROM resp GROUP BY prompt_id, model),
+WITH {_MODEL_RESP_CTES},
 mx AS (
     SELECT a.model AS model_a, b.model AS model_b,
            count(CASE WHEN a.score > b.score THEN 1 END) AS wins_a,

@@ -73,10 +73,11 @@ def extract(
 ) -> DataFrame:
     """Run the extraction pipeline over a transcripts DataFrame.
 
-    Returns the EXTRACTED schema (plus ``passthrough`` columns). With
-    ``partitions`` set, performs the salted conv_id-hash repartition
-    first (the one shuffle of the pipeline); otherwise extraction is a
-    pure map over the scan partitions.
+    Returns conv_id, turn_idx, processed_at and the EXTRACT_RESULT
+    fields (plus ``passthrough`` columns). With ``partitions`` set,
+    performs the salted conv_id-hash repartition first (the one shuffle
+    of the pipeline); otherwise extraction is a pure map over the scan
+    partitions.
     """
     passthrough = passthrough or []
     cols = ["conv_id", "turn_idx", "text", "tool", *passthrough]

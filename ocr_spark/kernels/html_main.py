@@ -147,22 +147,34 @@ _G_END = _TAG_TOKEN_RE.groupindex["end"]
 _G_NAME = _TAG_TOKEN_RE.groupindex["name"]
 _G_SELFCLOSE = _TAG_TOKEN_RE.groupindex["selfclose"]
 
-# Elements whose raw content may legally contain '<' — skipped wholesale.
-_RAW_CONTENT_TAGS = ("script", "style")
+# Elements whose raw content may legally contain '<' — skipped wholesale
+# up to their close tag, matched ASCII-case-insensitively in ``raw``
+# itself (a lowered copy can be longer than ``raw``: 'İ' lowers to two
+# code points, so its indices would not map back).
+_RAW_CLOSE = {
+    t: re.compile(f"</{t}", re.IGNORECASE | re.ASCII)
+    for t in ("script", "style")
+}
+
+# Boilerplate containers: a block's penalty is the smallest prior of these
+# tags among itself and its ancestors.
+_BOILERPLATE_TAGS = ("nav", "aside", "header", "footer")
 
 
 def _parse_html(raw: str) -> tuple[list, list, list]:
     """One pass over the tokenizer's matches: block scoring state plus
     the full text with spans. Returns ``(blocks, chunks, spans)``:
 
-    - blocks: one row ``[tag, parent, text_chars, link_chars, chunk_ids]``
-      per block element in document order; row 0 is the root (parent -1),
+    - blocks: one row ``[tag, parent, text_chars, link_chars, chunk_ids,
+      penalty]`` per block element in document order; row 0 is the root
+      (parent -1, penalty 1.0); penalty is inherited from the parent at
+      open (``_open_block``),
     - chunks: ``(text, full_start)`` per text run in document order —
       full_text is ``" ".join`` of the texts, so full_start is exact by
       construction,
     - spans: ``(full_start, full_end, kind)``, unsorted.
     """
-    blocks: list[list] = [["<root>", -1, 0, 0, []]]
+    blocks: list[list] = [["<root>", -1, 0, 0, [], 1.0]]
     block_stack = [0]  # open block ids, innermost last
     tag_stack: list[str] = []
     # open-tag multiset mirroring tag_stack: O(1) "is this end tag
@@ -176,7 +188,6 @@ def _parse_html(raw: str) -> tuple[list, list, list]:
     full_len = 0
     pos = 0
     n = len(raw)
-    lower = None  # lazily lowered copy for case-insensitive close search
     search = _TAG_TOKEN_RE.search
     while pos < n:
         m = search(raw, pos)
@@ -209,17 +220,12 @@ def _parse_html(raw: str) -> tuple[list, list, list]:
                     skip -= 1
             elif selfclose:
                 pass  # opens and closes: no skipped region
-            elif tag in _RAW_CONTENT_TAGS:
+            elif tag in _RAW_CLOSE:
                 # jump past the close tag, which leaves skip as it was
-                close = f"</{tag}"
-                idx = raw.find(close, pos)
-                if idx < 0:
-                    if lower is None:
-                        lower = raw.lower()
-                    idx = lower.find(close, pos)
-                if idx < 0:
+                close = _RAW_CLOSE[tag].search(raw, pos)
+                if close is None:
                     break  # unterminated: rest of document is raw content
-                gt = raw.find(">", idx)
+                gt = raw.find(">", close.start())
                 pos = gt + 1 if gt >= 0 else n
             else:
                 skip += 1
@@ -250,7 +256,7 @@ def _parse_html(raw: str) -> tuple[list, list, list]:
             # opens and closes with no text inside: only an (empty)
             # block row is left behind
             if f & _F_BLOCK:
-                blocks.append([tag, block_stack[-1], 0, 0, []])
+                _open_block(blocks, tag, block_stack[-1])
         else:
             tag_stack.append(tag)
             open_counts[tag] = open_counts.get(tag, 0) + 1
@@ -258,7 +264,7 @@ def _parse_html(raw: str) -> tuple[list, list, list]:
                 links += 1
             if f & _F_BLOCK:
                 block_stack.append(len(blocks))
-                blocks.append([tag, block_stack[-2], 0, 0, []])
+                _open_block(blocks, tag, block_stack[-2])
             if f & _F_SPAN:
                 open_spans.append(
                     (SPAN_KIND[tag], full_len + 1 if chunks else 0)
@@ -270,24 +276,20 @@ def _parse_html(raw: str) -> tuple[list, list, list]:
     return blocks, chunks, spans
 
 
+def _open_block(blocks: list[list], tag: str, parent: int) -> None:
+    """Append a block row; a block inside nav/aside/header/footer (at any
+    depth) inherits that container's boilerplate penalty."""
+    pen = blocks[parent][5]
+    if tag in _BOILERPLATE_TAGS:
+        pen = min(pen, TAG_PRIOR[tag])
+    blocks.append([tag, parent, 0, 0, [], pen])
+
+
 def _leaf_score(b: list) -> float:
-    tag, _parent, text_chars, link_chars, _chunk_ids = b
+    tag, _parent, text_chars, link_chars, _chunk_ids, penalty = b
     link_density = link_chars / text_chars
     prior = TAG_PRIOR.get(tag, DEFAULT_PRIOR)
-    return text_chars * (1.0 - link_density) ** 2 * prior
-
-
-def _boilerplate_penalty(blocks: list[list], bid: int) -> float:
-    """Walk ancestors: a leaf under nav/aside/header/footer is boilerplate."""
-    pen = 1.0
-    cur = bid
-    seen = 0
-    while cur > 0 and seen < 64:
-        tag, cur = blocks[cur][0], blocks[cur][1]
-        if tag in ("nav", "aside", "header", "footer"):
-            pen = min(pen, TAG_PRIOR[tag])
-        seen += 1
-    return pen
+    return text_chars * (1.0 - link_density) ** 2 * prior * penalty
 
 
 def _remap_spans(
@@ -351,9 +353,9 @@ def extract_html(raw: str) -> HtmlResult:
     # container; the root is its own container.
     container_score: dict[int, float] = {}
     container_leaves: dict[int, list[list]] = {}
-    for bid, b in enumerate(blocks):
+    for b in blocks:
         if b[2]:
-            s = _leaf_score(b) * _boilerplate_penalty(blocks, bid)
+            s = _leaf_score(b)
             parent = max(b[1], 0)
             container_score[parent] = container_score.get(parent, 0.0) + s
             container_leaves.setdefault(parent, []).append(b)

@@ -1458,6 +1458,15 @@ class FingerprintStore:
             exclude_run,
         )
 
+    def fresh(self, df: DataFrame, exclude_run: str | None) -> DataFrame:
+        """``with_fingerprint(df)`` rows whose fingerprint no committed
+        run (other than ``exclude_run``) holds — a left_anti join on the
+        store, ``fingerprint`` kept for the caller's later commit."""
+        committed = self.committed_fingerprints(
+            df.sparkSession, exclude_run=exclude_run
+        ).select("fingerprint")
+        return with_fingerprint(df).join(committed, "fingerprint", "left_anti")
+
     def committed_band_keys(
         self, spark, exclude_run: str | None = None
     ) -> DataFrame:

@@ -52,42 +52,3 @@ EXTRACT_RESULT = T.StructType(
         T.StructField("error", T.StringType(), False),
     ]
 )
-
-# Full output table (EXTRACTED in SURVEY.md §1.2).
-EXTRACTED = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("processed_at", T.TimestampType(), False),
-        T.StructField("candidates", T.ArrayType(CANDIDATE), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("spans", T.ArrayType(SPAN), False),
-        T.StructField("score", T.DoubleType(), False),
-        T.StructField("error", T.StringType(), False),
-    ]
-)
-
-# lineage — one row per committed bucket; the unit of checkpoint/resume
-# (graft of the reference's server-held batch state + reset.bat,
-# /root/reference/README.md:54-56).
-LINEAGE = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("conv_min", T.StringType(), True),
-        T.StructField("conv_max", T.StringType(), True),
-        T.StructField("n_turns", T.LongType(), False),
-        T.StructField("n_errors", T.LongType(), False),
-        T.StructField("committed_at", T.TimestampType(), False),
-    ]
-)
-
-# overrides — manual-correction upsert table (SURVEY.md O13; reference GUI
-# edit of the final text, /root/reference/README.md:28).
-OVERRIDES = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("text", T.StringType(), False),
-    ]
-)

@@ -136,18 +136,9 @@ def extract_stream_incremental(
     Returns the started StreamingQuery.
     """
     from ocr_spark.operators.dedup import FingerprintStore
-    from ocr_spark.operators.textops import with_fingerprint
 
-    spark = transcripts.sparkSession
-    store = FingerprintStore(store_dir)
-    committed = store.committed_fingerprints(
-        spark, exclude_run=run_id
-    ).select("fingerprint")
-    fresh = (
-        with_fingerprint(transcripts)
-        .join(committed, "fingerprint", "left_anti")
-        .drop("fingerprint")
-    )
+    fresh = FingerprintStore(store_dir).fresh(transcripts, run_id)
+    fresh = fresh.drop("fingerprint")
     return _start_parquet_sink(
         extract(fresh), output_dir, checkpoint_dir, trigger_once
     )

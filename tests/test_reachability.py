@@ -1,7 +1,7 @@
-"""Reachability guard: every top-level def and class in ``ocr_spark/``
-must be referenced somewhere in the code the entry points run —
-``jobs/``, ``__spark_entry__.py`` or ``ocr_spark/`` itself — outside its
-own definition. Only code counts: a reference is an ``ast`` ``Name``
+"""Reachability guard: every top-level def, class and assigned name in
+``ocr_spark/`` (dunders exempt) must be referenced somewhere in the code
+the entry points run — ``jobs/``, ``__spark_entry__.py`` or
+``ocr_spark/`` itself — outside its own definition. Only code counts: a reference is an ``ast`` ``Name``
 (a load, call or assignment), an ``Attribute`` (``mod.name``) or an
 imported name. Docstrings, comments and other strings do not count.
 Library code that only tests reach fails here; the allowlist holds the
@@ -37,6 +37,26 @@ def _references(tree: ast.AST):
             yield node.name.rpartition(".")[2]
 
 
+def _defined_names(node: ast.stmt):
+    """Names a top-level statement defines: a def or class, or the plain
+    names an assignment binds (dunders such as ``__all__`` exempt)."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        yield node.name
+        return
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    else:
+        return
+    for t in targets:
+        for n in ast.walk(t):
+            if isinstance(n, ast.Name) and not (
+                n.id.startswith("__") and n.id.endswith("__")
+            ):
+                yield n.id
+
+
 def _unreferenced() -> list[tuple[str, str]]:
     pkg = ROOT / "ocr_spark"
     files = [
@@ -51,13 +71,10 @@ def _unreferenced() -> list[tuple[str, str]]:
     out = []
     for f in sorted(pkg.rglob("*.py")):
         for node in trees[f].body:
-            if not isinstance(
-                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ):
-                continue
-            own = sum(r == node.name for r in _references(node))
-            if total[node.name] == own:
-                out.append((f.relative_to(pkg).as_posix(), node.name))
+            for name in _defined_names(node):
+                own = sum(r == name for r in _references(node))
+                if total[name] == own:
+                    out.append((f.relative_to(pkg).as_posix(), name))
     return out
 
 

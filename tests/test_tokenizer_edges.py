@@ -48,6 +48,15 @@ def test_script_content_raw_skipped():
 
 def test_script_close_case_insensitive():
     assert _full("<p>a</p><script>x<1</SCRIPT><p>b</p>") == "a b"
+    # 'İ' lowers to two code points: an index found in a lowered copy
+    # would resume past the start of the next tag
+    assert _full(
+        "<p>a</p><script>" + "İ" * 12 + "</SCRIPT><p>bee sees</p>"
+    ) == "a bee sees"
+    # a mixed-case close ends its own script, not a later lowercase one
+    assert _full(
+        "<p>a</p><script>x</SCRIPT><p>b</p><script>y</script><p>c</p>"
+    ) == "a b c"
 
 
 def test_unterminated_script_swallows_rest():

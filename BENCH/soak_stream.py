@@ -78,7 +78,6 @@ def main() -> int:
             read_transcript_stream(spark, str(in_dir), max_files_per_trigger=16),
             out_dir,
             ckpt,
-            trigger_once=True,
         )
         q.awaitTermination(600)
 

@@ -152,15 +152,15 @@ def main(argv: list[str] | None = None) -> int:
         if args.stream_dedup:
             q = extract_stream_dedup(
                 stream, out_dir, ckpt,
-                watermark=args.stream_dedup, trigger_once=True,
+                watermark=args.stream_dedup,
             )
         elif args.fingerprint_store:
             q = extract_stream_incremental(
                 stream, out_dir, ckpt,
-                args.fingerprint_store, args.run_id, trigger_once=True,
+                args.fingerprint_store, args.run_id,
             )
         else:
-            q = extract_stream(stream, out_dir, ckpt, trigger_once=True)
+            q = extract_stream(stream, out_dir, ckpt)
         q.awaitTermination()
         if args.fingerprint_store and not args.stream_dedup:
             # after the drain commits its output, record the whole input

@@ -96,10 +96,17 @@ def collapse_ws(s: str) -> str:
     return " ".join(s.split())
 
 
+# Block start tags that imply ``</p>`` when a ``p`` is the innermost
+# open block (the HTML spec's p-closing start tags, within BLOCK_TAGS).
+P_CLOSING_TAGS = frozenset(
+    """p div article section main h1 h2 h3 h4 h5 h6 pre blockquote ul ol
+    table nav aside header footer figure figcaption li dd dt""".split()
+) & BLOCK_TAGS
+
 # One dict lookup per tag instead of 3-4 set/dict membership tests
 # (SKIP_TAGS / BLOCK_TAGS / SPAN_KIND / == "a") — tag handling runs once
 # per tag token and is among the kernel's hottest lines.
-_F_SKIP, _F_BLOCK, _F_SPAN, _F_LINK = 1, 2, 4, 8
+_F_SKIP, _F_BLOCK, _F_SPAN, _F_LINK, _F_PCLOSE = 1, 2, 4, 8, 16
 _TAG_FLAGS: dict[str, int] = {}
 for _t in SKIP_TAGS:
     _TAG_FLAGS[_t] = _TAG_FLAGS.get(_t, 0) | _F_SKIP
@@ -108,6 +115,8 @@ for _t in BLOCK_TAGS:
 for _t in SPAN_KIND:
     _TAG_FLAGS[_t] = _TAG_FLAGS.get(_t, 0) | _F_SPAN
 _TAG_FLAGS["a"] = _TAG_FLAGS.get("a", 0) | _F_LINK
+for _t in P_CLOSING_TAGS:
+    _TAG_FLAGS[_t] |= _F_PCLOSE
 
 
 @dataclass
@@ -229,15 +238,21 @@ def _parse_html(raw: str) -> tuple[list, list, list]:
                 pos = gt + 1 if gt >= 0 else n
             else:
                 skip += 1
-        elif skip:
             continue
-        elif end:
+        if skip:
+            continue
+        if end:
+            # stray end tags no-op
+            closing = tag if open_counts.get(tag) else None
+        elif f & _F_PCLOSE and blocks[block_stack[-1]][0] == "p":
+            closing = "p"  # implied </p>
+        else:
+            closing = None
+        if closing is not None:
             # tolerant unwinding for malformed nesting: pop through the
-            # innermost open element of this tag; stray end tags no-op.
-            # Each open block/span/<a> pushed exactly one entry, so the
-            # pops below pair with those pushes.
-            if not open_counts.get(tag):
-                continue
+            # innermost open element of this tag. Each open
+            # block/span/<a> pushed exactly one entry, so the pops below
+            # pair with those pushes.
             while True:
                 top = tag_stack.pop()
                 open_counts[top] -= 1
@@ -250,9 +265,11 @@ def _parse_html(raw: str) -> tuple[list, list, list]:
                     kind, start = open_spans.pop()
                     if full_len > start:
                         spans.append((start, full_len, kind))
-                if top == tag:
+                if top == closing:
                     break
-        elif selfclose:
+        if end:
+            continue
+        if selfclose:
             # opens and closes with no text inside: only an (empty)
             # block row is left behind
             if f & _F_BLOCK:
@@ -350,13 +367,16 @@ def extract_html(raw: str) -> HtmlResult:
     spans.sort()
 
     # Arc90 vote: leaves (blocks holding text) credit their parent
-    # container; the root is its own container.
+    # container, skipping lists (items vote for the list's container);
+    # the root is its own container.
     container_score: dict[int, float] = {}
     container_leaves: dict[int, list[list]] = {}
     for b in blocks:
         if b[2]:
             s = _leaf_score(b)
             parent = max(b[1], 0)
+            while blocks[parent][0] in ("ul", "ol"):
+                parent = blocks[parent][1]
             container_score[parent] = container_score.get(parent, 0.0) + s
             container_leaves.setdefault(parent, []).append(b)
 

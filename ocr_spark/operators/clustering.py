@@ -45,7 +45,7 @@ import math
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .similarity import _dot_expr, _norm_expr, _probe_dims
+from .similarity import _cos_expr, _norm_expr, _probe_dims, _with_norm
 
 
 def _assign(
@@ -204,12 +204,8 @@ def kmeans_assign(
     itself reports diminishing returns past a few) or sample the fit
     corpus and assign the remainder once.
     """
-    d = vec_dims if vec_dims is not None else _probe_dims(
-        embeddings, "embedding"
-    )
-    emb = embeddings.select("vec_id", "embedding").withColumn(
-        "nrm", _norm_expr("embedding", d)
-    )
+    d = _probe_dims(embeddings, "embedding", vec_dims)
+    emb = _with_norm(embeddings.select("vec_id", "embedding"), dims=d)
     seeds = sorted(
         embeddings.orderBy("vec_id").limit(k).collect(),
         key=lambda r: r.vec_id,
@@ -264,9 +260,7 @@ def semantic_dedup_kmeans(
     random member per duplicate group; min-id is the deterministic
     equivalent, matching the LSH variant so the two are comparable).
     """
-    d = vec_dims if vec_dims is not None else _probe_dims(
-        embeddings, "embedding"
-    )
+    d = _probe_dims(embeddings, "embedding", vec_dims)
     assigned = kmeans_assign(
         embeddings, k=k, iters=iters, vec_dims=d
     ).select("vec_id", "cid")
@@ -294,36 +288,15 @@ def _cluster_losers(
     self-join while the interpreted d-element lambda runs O(near-dups)
     times instead of sum-over-clusters |c|^2 times (measured 62s -> ~2s
     at 20k vectors / k=8 / d=64)."""
-    from .similarity import _near_pair_candidates
+    from .similarity import _near_pair_candidates, _near_pairs
 
     e = embeddings.select("vec_id", "embedding").join(
         assigned.select("vec_id", "cid"), "vec_id"
     )
     cand = _near_pair_candidates(e, "cid", threshold)
-    emb_n = embeddings.select("vec_id", "embedding").withColumn(
-        "nrm", _norm_expr("embedding", d)
-    )
-    a = emb_n.select(
-        F.col("vec_id").alias("doc_a"),
-        F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    b = emb_n.select(
-        F.col("vec_id").alias("doc_b"),
-        F.col("embedding").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
+    emb_n = _with_norm(embeddings.select("vec_id", "embedding"), dims=d)
     return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn(
-            "cos",
-            F.round(
-                _dot_expr("ea", "eb", d) / (F.col("na") * F.col("nb")),
-                4,
-            ),
-        )
-        .filter(F.col("cos") >= threshold)
+        _near_pairs(cand, emb_n, d, threshold)
         .select(F.col("doc_b").alias(id_col))
         .distinct()
     )
@@ -364,9 +337,7 @@ def d4_select(
     Docs without an embedding row are kept (no evidence to drop),
     mirroring :func:`semantic_dedup_kmeans`.
     """
-    d = vec_dims if vec_dims is not None else _probe_dims(
-        embeddings, "embedding"
-    )
+    d = _probe_dims(embeddings, "embedding", vec_dims)
     # TWO consumers (the loser pair stage and the survivor rank) would
     # each re-run the N x k x d assignment map — checkpoint the tiny
     # (vec_id, cid, cos) relation before fanning out (edit_dedup lesson)
@@ -419,9 +390,7 @@ def embedding_outliers(
     (label, level) partitions. The corpus never sorts; parallelism is
     never capped at the label count.
     """
-    d = vec_dims if vec_dims is not None else _probe_dims(
-        embeddings, "embedding"
-    )
+    d = _probe_dims(embeddings, "embedding", vec_dims)
     emb = embeddings.select(
         "vec_id", F.col(label_col).alias("label"), "embedding"
     ).withColumn("nrm", _norm_expr("embedding", d))
@@ -444,11 +413,7 @@ def embedding_outliers(
         .select(
             "vec_id",
             "label",
-            F.round(
-                _dot_expr("embedding", "cent", d)
-                / (F.col("nrm") * F.col("cn")),
-                4,
-            ).alias("cos4"),
+            _cos_expr("embedding", "cent", "nrm", "cn", d).alias("cos4"),
         )
     )
     # NULL cos4 (NULL/zero-norm embedding) stays OUT of the level

@@ -140,7 +140,7 @@ def conv_near_dup(
     candidates, candidate-restricted exact Jaccard, df-capped
     posting lists.
     """
-    from ocr_spark.operators.dedup import minhash_lsh_pairs
+    from ocr_spark.operators.dedup import _turn_md5s, minhash_lsh_pairs
     from ocr_spark.operators.textops import _ensure_parallelism
 
     df = _ensure_parallelism(df)
@@ -151,24 +151,7 @@ def conv_near_dup(
     )
     docs = (
         df.groupBy(conv_col)
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(
-                            F.struct(
-                                F.col(idx_col)
-                                .cast("long")
-                                .alias("i"),
-                                F.md5(canon).alias("c"),
-                            )
-                        )
-                    ),
-                    lambda x: x["c"],
-                ),
-                " ",
-            ).alias("text")
-        )
+        .agg(F.array_join(_turn_md5s(idx_col, canon), " ").alias("text"))
         .select(F.col(conv_col).alias("doc_id"), "text")
     )
     return minhash_lsh_pairs(docs, threshold=threshold)

@@ -87,6 +87,22 @@ def dedup_keep_best(
     )
 
 
+def _turn_md5s(idx_col: str, canon):
+    """Aggregate: one conversation's per-turn ``md5(canon)`` in
+    ``idx_col`` order (duplicate indexes tie-break on the md5)."""
+    return F.transform(
+        F.sort_array(
+            F.collect_list(
+                F.struct(
+                    F.col(idx_col).cast("long").alias("i"),
+                    F.md5(canon).alias("c"),
+                )
+            )
+        ),
+        lambda x: x["c"],
+    )
+
+
 def conv_dedup(
     df: DataFrame,
     conv_col: str = "conv_id",
@@ -118,22 +134,7 @@ def conv_dedup(
         F.lower(F.trim(F.col(text_col))), r"\s+", " "
     )
     fps = _ensure_parallelism(df).groupBy(conv_col).agg(
-        F.md5(
-            F.array_join(
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(
-                            F.struct(
-                                F.col(idx_col).cast("long").alias("i"),
-                                F.md5(canon).alias("c"),
-                            )
-                        )
-                    ),
-                    lambda x: x["c"],
-                ),
-                "\n",
-            )
-        ).alias("fp")
+        F.md5(F.array_join(_turn_md5s(idx_col, canon), "\n")).alias("fp")
     )
     return fps.groupBy("fp").agg(
         F.min(conv_col).alias("keep_conv"),
@@ -153,6 +154,13 @@ def _with_shingles(df: DataFrame, n: int) -> DataFrame:
         ).alias("shingle"),
     )
     return sh
+
+
+def _jaccard(size_a: str, size_b: str):
+    """round-4 Jaccard of two sets from their sizes and ``inter``."""
+    return F.round(
+        F.col("inter") / (F.col(size_a) + F.col(size_b) - F.col("inter")), 4
+    )
 
 
 def _jaccard_from_shingles(
@@ -211,18 +219,7 @@ def _jaccard_from_shingles(
                 F.size("sb").alias("size_b"),
             )
             .filter(F.col("inter") >= 1)
-            .withColumn(
-                "jaccard",
-                F.round(
-                    F.col("inter")
-                    / (
-                        F.col("size_a")
-                        + F.col("size_b")
-                        - F.col("inter")
-                    ),
-                    4,
-                ),
-            )
+            .withColumn("jaccard", _jaccard("size_a", "size_b"))
             .filter(F.col("jaccard") >= threshold)
             .select(
                 "doc_a", "doc_b", "inter", "size_a", "size_b", "jaccard"
@@ -249,14 +246,7 @@ def _jaccard_from_shingles(
     return (
         inter.join(sa, "doc_a")
         .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter")
-                / (F.col("size_a") + F.col("size_b") - F.col("inter")),
-                4,
-            ),
-        )
+        .withColumn("jaccard", _jaccard("size_a", "size_b"))
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "inter", "size_a", "size_b", "jaccard")
     )
@@ -912,6 +902,15 @@ def contamination_report(
     )
 
 
+def _flag_ids(ids: DataFrame, hits: DataFrame, flag: str) -> DataFrame:
+    """(doc_id, ``flag``) for every row of ``ids``: True when its doc_id
+    is among ``hits``' doc_ids, False otherwise."""
+    flagged = hits.select("doc_id").distinct().withColumn(flag, F.lit(True))
+    return ids.join(flagged, "doc_id", "left").select(
+        "doc_id", F.coalesce(flag, F.lit(False)).alias(flag)
+    )
+
+
 def decontaminate(
     df: DataFrame, benchmark: DataFrame, n: int = 13
 ) -> DataFrame:
@@ -942,19 +941,10 @@ def decontaminate(
         .select("shingle")
         .distinct()
     )
-    contaminated = (
-        doc_sh.join(bench_sh, "shingle", "left_semi")
-        .select("doc_id")
-        .distinct()
-        .withColumn("contaminated", F.lit(True))
-    )
-    return (
-        df.select("doc_id")
-        .join(contaminated, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("contaminated", F.lit(False)).alias("contaminated"),
-        )
+    return _flag_ids(
+        df.select("doc_id"),
+        doc_sh.join(bench_sh, "shingle", "left_semi"),
+        "contaminated",
     )
 
 
@@ -1004,19 +994,7 @@ def decontaminate_fuzzy(
         threshold=threshold,
         max_df=max_df,
     )
-    flagged = (
-        hits.select("doc_id")
-        .distinct()
-        .withColumn("contaminated", F.lit(True))
-    )
-    return (
-        df.select("doc_id")
-        .join(flagged, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("contaminated", F.lit(False)).alias("contaminated"),
-        )
-    )
+    return _flag_ids(df.select("doc_id"), hits, "contaminated")
 
 
 def _simhash_votes(df: DataFrame, bits: int) -> DataFrame:
@@ -1494,6 +1472,19 @@ class FingerprintStore:
         ).parquet(str(self.bands_dir / f"run_id={run_id}"))
 
 
+def _bloom_bit(bloom_bits: int) -> tuple[str, str]:
+    """SQL (word, mask) of a fingerprint's bit in an m-bit bitmap."""
+    m = int(bloom_bits)
+    # bit index 0..m-1; word = bit div 64; mask = 1 << (bit % 64)
+    # (SQL shiftleft: the pyspark wrapper only takes literal shifts)
+    word = f"CAST(pmod(xxhash64(fingerprint), {m}) / 64 AS BIGINT)"
+    mask = (
+        "shiftleft(CAST(1 AS BIGINT), "
+        f"CAST(pmod(xxhash64(fingerprint), {m}) % 64 AS INT))"
+    )
+    return word, mask
+
+
 def bloom_bitmap(
     committed_fps: DataFrame, bloom_bits: int
 ) -> DataFrame:
@@ -1503,12 +1494,7 @@ def bloom_bitmap(
     increment costs a full store pass that measured 3x the entire
     plain anti-join at 5M committed / 2M increment
     (BENCH/soak_bloom.py). m/64 rows, ~16 bytes each."""
-    m = int(bloom_bits)
-    word = f"CAST(pmod(xxhash64(fingerprint), {m}) / 64 AS BIGINT)"
-    mask = (
-        "shiftleft(CAST(1 AS BIGINT), "
-        f"CAST(pmod(xxhash64(fingerprint), {m}) % 64 AS INT))"
-    )
+    word, mask = _bloom_bit(bloom_bits)
     return (
         committed_fps.select(
             F.expr(word).alias("word"), F.expr(mask).alias("mask")
@@ -1569,16 +1555,9 @@ def incremental_exact_dedup(
     inc = with_fingerprint(_ensure_parallelism(increment))
     store = committed_fps.select("fingerprint")
     if bloom_bits:
-        m = int(bloom_bits)
-        # bit index 0..m-1; word = bit div 64; mask = 1 << (bit % 64)
-        # (SQL shiftleft: the pyspark wrapper only takes literal shifts)
-        word = f"CAST(pmod(xxhash64(fingerprint), {m}) / 64 AS BIGINT)"
-        mask = (
-            "shiftleft(CAST(1 AS BIGINT), "
-            f"CAST(pmod(xxhash64(fingerprint), {m}) % 64 AS INT))"
-        )
+        word, mask = _bloom_bit(bloom_bits)
         if bitmap is None:
-            bitmap = bloom_bitmap(store, m)
+            bitmap = bloom_bitmap(store, bloom_bits)
         probed = inc.withColumn("_w", F.expr(word)).withColumn(
             "_m", F.expr(mask)
         ).join(
@@ -1632,22 +1611,13 @@ def incremental_minhash_flags(
     uniform keys, partition-prunable by run, never a pairwise join.
     """
     bk = band_keys(increment, n=n, num_hashes=num_hashes, bands=bands)
-    hits = (
-        bk.join(
-            committed_bands.select("band", "band_key"),
-            ["band", "band_key"],
-            "left_semi",
-        )
-        .select("doc_id")
-        .distinct()
-        .withColumn("near_dup_committed", F.lit(True))
+    hits = bk.join(
+        committed_bands.select("band", "band_key"),
+        ["band", "band_key"],
+        "left_semi",
     )
-    ids = increment.select("doc_id").distinct()
-    return ids.join(hits, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("near_dup_committed", F.lit(False)).alias(
-            "near_dup_committed"
-        ),
+    return _flag_ids(
+        increment.select("doc_id").distinct(), hits, "near_dup_committed"
     )
 
 
@@ -1744,11 +1714,7 @@ def incremental_minhash_verified(
         .select(
             "doc_id",
             "committed_id",
-            F.round(
-                F.col("inter")
-                / (F.col("sz_i") + F.col("sz_c") - F.col("inter")),
-                4,
-            ).alias("jaccard"),
+            _jaccard("sz_i", "sz_c").alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )

@@ -22,6 +22,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 
+def _edges_and_nodes(
+    edges: DataFrame, iters: int
+) -> tuple[DataFrame, DataFrame]:
+    """The distinct (src, dst) edges and the (node) set they touch,
+    each checkpointed once for the iterations that reuse them."""
+    if iters < 1:
+        raise ValueError("iters must be >= 1")
+    e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
+    nodes = (
+        e.select(F.col("src").alias("node"))
+        .unionByName(e.select(F.col("dst").alias("node")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    return e, nodes
+
+
 def pagerank(
     edges: DataFrame,
     damping: float = 0.85,
@@ -54,15 +71,7 @@ def pagerank(
     - dangling mass is a 1-row aggregate crossJoined in (broadcast —
       Spark plans a 1-row BNLJ, never a real cartesian).
     """
-    if iters < 1:
-        raise ValueError("iters must be >= 1")
-    e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e, nodes = _edges_and_nodes(edges, iters)
     n = nodes.count()
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     # (src, dst, outdeg) — built once, reused every iteration
@@ -149,15 +158,7 @@ def hits(
 
     Returns (node, hub float32, auth float32).
     """
-    if iters < 1:
-        raise ValueError("iters must be >= 1")
-    e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e, nodes = _edges_and_nodes(edges, iters)
     hub = nodes.withColumn("hub", F.lit(1.0).cast("float"))
     auth = None
 

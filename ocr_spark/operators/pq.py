@@ -40,9 +40,9 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from .similarity import _dot_expr, _norm_expr, _probe_dims
+from .similarity import _cos_expr, _norm_expr, _probe_dims, _topk
 
 # codebook[s] = list of (code, centroid) pairs for subspace s; codes
 # are 0..ksub-1 in ascending seed-vec_id order (dead codes absent)
@@ -268,6 +268,17 @@ def _with_luts(
     return q
 
 
+def _sub_width(
+    embeddings: DataFrame, m: int, vec_dims: int | None
+) -> tuple[int, int]:
+    """(d, d // m): the vector width, which must split into ``m`` equal
+    subvectors."""
+    d = _probe_dims(embeddings, "embedding", vec_dims)
+    if d is None or d % m:
+        raise ValueError(f"vector width {d} not divisible by m={m}")
+    return d, d // m
+
+
 def _adc_score(pair: DataFrame, nsq: list[list[float]], m: int):
     """round-4 approximate cosine from m LUT lookups + one sqrt; the
     m-term sums fold left-to-right (s ascending) in both engines."""
@@ -294,19 +305,36 @@ def _rerank(
         "vec_id", F.col("embedding").alias("emb")
     ).withColumn("n2", _norm_expr("emb", d))
     rescored = e2.join(F.broadcast(shortlist), "vec_id").withColumn(
-        "score",
-        F.round(
-            _dot_expr("q_emb", "emb", d) / (F.col("n1") * F.col("n2")), 4
-        ),
+        "score", _cos_expr("q_emb", "emb", "n1", "n2", d)
     )
-    wf = Window.partitionBy("q_id").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
+    return _topk(rescored, "q_id", "score", "vec_id", k).select(
+        "q_id", "vec_id", "score", "rank"
     )
-    return (
-        rescored.withColumn("rank", F.row_number().over(wf))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "score", "rank")
-    )
+
+
+def _adc_topk(
+    pair: DataFrame,
+    nsq: list[list[float]],
+    m: int,
+    embeddings: DataFrame,
+    d: int,
+    k: int,
+    refine: int | None,
+) -> DataFrame:
+    """ADC-score the (query, candidate) pairs and rank them: the ADC
+    top-k, or with ``refine`` the ADC top-``refine`` shortlist
+    re-ranked at full width by :func:`_rerank`."""
+    scored = _adc_score(pair, nsq, m)
+    if refine is None:
+        return _topk(scored, "q_id", "score", "vec_id", k).select(
+            "q_id", "vec_id", "score", "rank"
+        )
+    if refine < k:
+        raise ValueError(f"refine={refine} must be >= k={k}")
+    shortlist = _topk(
+        scored, "q_id", "score", "vec_id", refine, rank="srank"
+    ).select("q_id", "vec_id", "q_emb", "n1")
+    return _rerank(shortlist, embeddings, d, k)
 
 
 def pq_codebooks(
@@ -321,12 +349,7 @@ def pq_codebooks(
     ``iters`` rounded Lloyd refinement passes per subspace (spherical:
     assignment by round-4 cosine, update = per-coordinate mean rounded
     to 6 dp). Returns driver-side literals — m*ksub*dsub doubles."""
-    d = vec_dims if vec_dims is not None else _probe_dims(
-        embeddings, "embedding"
-    )
-    if d is None or d % m:
-        raise ValueError(f"vector width {d} not divisible by m={m}")
-    dsub = d // m
+    _, dsub = _sub_width(embeddings, m, vec_dims)
     seeds = sorted(
         embeddings.orderBy("vec_id").limit(ksub).collect(),
         key=lambda r: r.vec_id,
@@ -401,12 +424,7 @@ def pq_encode(
     subspace. The encode itself is a PURE MAP (training collects happen
     before; the returned plan is scan -> project -> explode, zero
     Exchange — plan-pinned by test_pq_encode_is_pure_map)."""
-    d = vec_dims if vec_dims is not None else _probe_dims(
-        embeddings, "embedding"
-    )
-    if d is None or d % m:
-        raise ValueError(f"vector width {d} not divisible by m={m}")
-    dsub = d // m
+    d, dsub = _sub_width(embeddings, m, vec_dims)
     books = (
         codebooks
         if codebooks is not None
@@ -470,12 +488,7 @@ def pq_ann_topk(
     assignment bounding the ADC scan). With refine None the plain ADC
     ranking is returned — the compressed-domain scan the oracle checks
     end to end."""
-    d = vec_dims if vec_dims is not None else _probe_dims(
-        embeddings, "embedding"
-    )
-    if d is None or d % m:
-        raise ValueError(f"vector width {d} not divisible by m={m}")
-    dsub = d // m
+    d, dsub = _sub_width(embeddings, m, vec_dims)
     books = pq_codebooks(embeddings, m, ksub, iters, vec_dims=d)
     subs = _with_subs(embeddings.select("vec_id", "embedding"), m, dsub)
     enc = _wide_codes(subs, books, m, dsub)
@@ -489,24 +502,7 @@ def pq_ann_topk(
     pair = F.broadcast(q).crossJoin(enc).filter(
         F.col("q_id") != F.col("vec_id")
     )
-    scored = _adc_score(pair, nsq, m)
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    if refine is None:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("q_id", "vec_id", "score", "rank")
-        )
-    if refine < k:
-        raise ValueError(f"refine={refine} must be >= k={k}")
-    shortlist = (
-        scored.withColumn("srank", F.row_number().over(w))
-        .filter(F.col("srank") <= refine)
-        .select("q_id", "vec_id", "q_emb", "n1")
-    )
-    return _rerank(shortlist, embeddings, d, k)
+    return _adc_topk(pair, nsq, m, embeddings, d, k, refine)
 
 
 def ivf_pq_topk(
@@ -546,9 +542,7 @@ def ivf_pq_topk(
     from .similarity import _coarse_lists, _query_probes
 
     lists, d = _coarse_lists(embeddings, n_centroids)
-    if d % m:
-        raise ValueError(f"vector width {d} not divisible by m={m}")
-    dsub = d // m
+    d, dsub = _sub_width(embeddings, m, d)
     books = pq_codebooks(embeddings, m, ksub, iters, vec_dims=d)
     subs = _with_subs(lists, m, dsub, col="emb", keep=("cid",))
     enc = _wide_codes(subs, books, m, dsub, keep=("cid",))
@@ -563,21 +557,4 @@ def ivf_pq_topk(
     pair = F.broadcast(qp).join(enc, "cid").filter(
         F.col("q_id") != F.col("vec_id")
     )
-    scored = _adc_score(pair, nsq, m)
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    if refine is None:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("q_id", "vec_id", "score", "rank")
-        )
-    if refine < k:
-        raise ValueError(f"refine={refine} must be >= k={k}")
-    shortlist = (
-        scored.withColumn("srank", F.row_number().over(w))
-        .filter(F.col("srank") <= refine)
-        .select("q_id", "vec_id", "q_emb", "n1")
-    )
-    return _rerank(shortlist, embeddings, d, k)
+    return _adc_topk(pair, nsq, m, embeddings, d, k, refine)

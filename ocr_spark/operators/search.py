@@ -60,23 +60,11 @@ def _tokens(docs: DataFrame) -> DataFrame:
     ).filter(F.col("term") != "")
 
 
-def bm25_topk(
-    docs: DataFrame,
-    query_terms: Sequence[str],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
+def _bm25_weights(
+    docs: DataFrame, terms: list[str], k1: float, b: float
 ) -> DataFrame:
-    """Top-k documents by Okapi BM25 score for a bag of query terms.
-
-    Returns (doc_id, bm25, n_terms) — n_terms is how many distinct query
-    terms the document matched. Deterministic total order: rounded score
-    desc, then doc_id asc.
-
-    The arithmetic is written with the exact literal/operation structure
-    the DuckDB oracle uses (k1 + 1 computed as ``k1 + 1.0``, 1 - b as
-    ``1.0 - b``) so both engines fold the same IEEE doubles.
-    """
+    """Per-(doc, term) BM25 weight ``w`` of each query term a document
+    holds: tf joined to df, the doc length and the corpus stats."""
     toks = _tokens(docs)
     # Doc lengths WITHOUT exploding: split-on-\s+ of trimmed non-empty
     # text yields no empty tokens, so size(array) == the exploded count
@@ -90,7 +78,7 @@ def bm25_topk(
         F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
     )
     tf = (
-        toks.filter(F.col("term").isin(list(query_terms)))
+        toks.filter(F.col("term").isin(terms))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -109,12 +97,32 @@ def bm25_topk(
             * ((F.lit(1.0) - F.lit(b)) + F.lit(b) * F.col("dl") / F.col("avgdl"))
         )
     )
-    scored = (
+    return (
         tf.join(F.broadcast(dfreq), "term")
         .join(dl, "doc_id")
         .crossJoin(F.broadcast(stats))
         .withColumn("w", w)
     )
+
+
+def bm25_topk(
+    docs: DataFrame,
+    query_terms: Sequence[str],
+    k: int = 10,
+    k1: float = 1.2,
+    b: float = 0.75,
+) -> DataFrame:
+    """Top-k documents by Okapi BM25 score for a bag of query terms.
+
+    Returns (doc_id, bm25, n_terms) — n_terms is how many distinct query
+    terms the document matched. Deterministic total order: rounded score
+    desc, then doc_id asc.
+
+    The arithmetic is written with the exact literal/operation structure
+    the DuckDB oracle uses (k1 + 1 computed as ``k1 + 1.0``, 1 - b as
+    ``1.0 - b``) so both engines fold the same IEEE doubles.
+    """
+    scored = _bm25_weights(docs, list(query_terms), k1, b)
     return (
         scored.groupBy("doc_id")
         .agg(
@@ -159,42 +167,11 @@ def bm25_topk_multi(
     if not mapping_rows:
         raise ValueError("bm25_topk_multi needs at least one probe term")
     all_terms = sorted({t for _, t in mapping_rows})
-    toks = _tokens(docs)
-    dl = docs.filter(F.trim("text") != "").select(
-        "doc_id", F.size(F.expr(TOKENS_LC)).alias("dl")
-    )
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-    tf = (
-        toks.filter(F.col("term").isin(all_terms))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-        / (F.col("df") + F.lit(0.5))
-    )
-    w = (
-        idf
-        * (F.col("tf") * (F.lit(k1) + F.lit(1.0)))
-        / (
-            F.col("tf")
-            + F.lit(k1)
-            * ((F.lit(1.0) - F.lit(b)) + F.lit(b) * F.col("dl") / F.col("avgdl"))
-        )
-    )
     mapping = docs.sparkSession.createDataFrame(
         mapping_rows, "q_key string, term string"
     )
-    scored = (
-        tf.join(F.broadcast(dfreq), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("w", w)
-        .join(F.broadcast(mapping), "term")
+    scored = _bm25_weights(docs, all_terms, k1, b).join(
+        F.broadcast(mapping), "term"
     )
     win = Window.partitionBy("q_key").orderBy(
         F.col("bm25").desc(), F.col("doc_id").asc()

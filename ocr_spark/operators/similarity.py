@@ -27,8 +27,13 @@ _NORM = (
 )
 
 
-def _probe_dims(df: DataFrame, col: str) -> int | None:
-    """One-row LocalLimit probe of the (fixed) embedding width."""
+def _probe_dims(
+    df: DataFrame, col: str, known: int | None = None
+) -> int | None:
+    """The (fixed) embedding width: ``known`` when the caller has it,
+    else a one-row LocalLimit probe."""
+    if known is not None:
+        return known
     row = df.select(F.size(F.col(col)).alias("d")).first()
     return None if row is None else row["d"]
 
@@ -74,6 +79,54 @@ def _with_norm(
     df: DataFrame, col: str = "embedding", dims: int | None = None
 ) -> DataFrame:
     return df.withColumn("nrm", _norm_expr(col, dims))
+
+
+def _cos_expr(a: str, b: str, na: str, nb: str, dims: int | None):
+    """round-4 cosine of vector columns ``a``/``b`` with norms ``na``/``nb``."""
+    return F.round(_dot_expr(a, b, dims) / (F.col(na) * F.col(nb)), 4)
+
+
+def _topk(
+    df: DataFrame, key: str, score: str, tie: str, k: int, rank: str = "rank"
+) -> DataFrame:
+    """Per-``key`` top-k: ``rank`` = row_number by (``score`` desc,
+    ``tie`` asc), rows ranked past ``k`` dropped."""
+    w = Window.partitionBy(key).orderBy(F.col(score).desc(), F.col(tie).asc())
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
+def _cos_topk(cand: DataFrame, d: int | None, k: int) -> DataFrame:
+    """Exact re-score of (q_id, q_emb, n1, vec_id, emb, n2) candidates
+    and the per-query top-k: (q_id, vec_id, cos, rank), ties to the
+    lower vec_id."""
+    scored = cand.withColumn("cos", _cos_expr("q_emb", "emb", "n1", "n2", d))
+    return _topk(scored, "q_id", "cos", "vec_id", k).select(
+        "q_id", "vec_id", "cos", "rank"
+    )
+
+
+def _near_pairs(
+    cand: DataFrame, emb_n: DataFrame, d: int | None, threshold: float
+) -> DataFrame:
+    """Exact re-score of (doc_a, doc_b) candidate pairs against the
+    (vec_id, embedding, nrm) relation ``emb_n``: the pairs whose round-4
+    cosine ``cos`` reaches ``threshold``."""
+    a = emb_n.select(
+        F.col("vec_id").alias("doc_a"),
+        F.col("embedding").alias("ea"),
+        F.col("nrm").alias("na"),
+    )
+    b = emb_n.select(
+        F.col("vec_id").alias("doc_b"),
+        F.col("embedding").alias("eb"),
+        F.col("nrm").alias("nb"),
+    )
+    return (
+        cand.join(a, "doc_a")
+        .join(b, "doc_b")
+        .withColumn("cos", _cos_expr("ea", "eb", "na", "nb", d))
+        .filter(F.col("cos") >= threshold)
+    )
 
 
 def _near_pair_candidates(
@@ -285,26 +338,10 @@ def cosine_topk(
     q = _with_norm(
         queries.select("q_id", F.col("q_emb").alias("embedding")), dims=d
     ).select("q_id", F.col("embedding").alias("q_emb"), F.col("nrm").alias("n1"))
-    scored = (
-        F.broadcast(q).crossJoin(e)
-        .filter(F.col("q_id") != F.col("vec_id"))
-        .withColumn(
-            "cos",
-            F.round(
-                _dot_expr("q_emb", "emb", d)
-                / (F.col("n1") * F.col("n2")),
-                4,
-            ),
-        )
+    cand = F.broadcast(q).crossJoin(e).filter(
+        F.col("q_id") != F.col("vec_id")
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "cos", "rank")
-    )
+    return _cos_topk(cand, d, k)
 
 
 def sign_bucket(
@@ -412,9 +449,7 @@ def cosine_near_dup_pairs(
     one-row probe job — a ``.first()`` re-executes the full upstream
     plan (2x when embeddings come out of a mapInPandas extractor; same
     knob as ``lsh_cosine_topk``)."""
-    d = vec_dims if vec_dims is not None else _probe_dims(
-        embeddings, "embedding"
-    )
+    d = _probe_dims(embeddings, "embedding", vec_dims)
     e = sign_bucket(_with_norm(embeddings, dims=d), dims=dims).select(
         "vec_id", "embedding", "nrm", "bucket"
     )
@@ -433,30 +468,7 @@ def cosine_near_dup_pairs(
     cand = _near_pair_candidates(
         e.select("vec_id", "embedding", "bucket"), "bucket", threshold
     )
-    a = e.select(
-        F.col("vec_id").alias("doc_a"),
-        F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("doc_b"),
-        F.col("embedding").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
-    return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn(
-            "cos",
-            F.round(
-                _dot_expr("ea", "eb", d)
-                / (F.col("na") * F.col("nb")),
-                4,
-            ),
-        )
-        .filter(F.col("cos") >= threshold)
-        .select("doc_a", "doc_b", "cos")
-    )
+    return _near_pairs(cand, e, d, threshold).select("doc_a", "doc_b", "cos")
 
 
 def semantic_dedup(
@@ -580,19 +592,10 @@ def _query_probes(
         queries.select("q_id", F.col("q_emb").alias("embedding")), dims=d
     )
     q_scored = q.crossJoin(cent_norm).withColumn(
-        "ccos",
-        F.round(
-            _dot_expr("embedding", "cent", d)
-            / (F.col("nrm") * F.col("cn")),
-            4,
-        ),
-    )
-    wq = Window.partitionBy("q_id").orderBy(
-        F.col("ccos").desc(), F.col("cid").asc()
+        "ccos", _cos_expr("embedding", "cent", "nrm", "cn", d)
     )
     return (
-        q_scored.withColumn("crank", F.row_number().over(wq))
-        .filter(F.col("crank") <= n_probe)
+        _topk(q_scored, "q_id", "ccos", "cid", n_probe, rank="crank")
         .select(
             "q_id", F.col("embedding").alias("q_emb"),
             F.col("nrm").alias("n1"), "cid",
@@ -627,22 +630,7 @@ def ivf_topk(
         .filter(F.col("q_id") != F.col("vec_id"))
         .dropDuplicates(["q_id", "vec_id"])
     )
-    scored = cand.withColumn(
-        "cos",
-        F.round(
-            _dot_expr("q_emb", "emb", d)
-            / (F.col("n1") * F.col("n2")),
-            4,
-        ),
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "cos", "rank")
-    )
+    return _cos_topk(cand, d, k)
 
 
 def lsh_cosine_topk(
@@ -663,9 +651,7 @@ def lsh_cosine_topk(
     width is known to skip the three probe jobs (they re-execute the
     full upstream plan for one row — expensive when the embeddings come
     out of a mapInPandas feature extractor)."""
-    d = vec_dims if vec_dims is not None else _probe_dims(
-        embeddings, "embedding"
-    )
+    d = _probe_dims(embeddings, "embedding", vec_dims)
     e = sign_buckets_multi(
         _with_norm(embeddings, dims=d), dims, tables, width=d
     ).select(
@@ -696,19 +682,4 @@ def lsh_cosine_topk(
         .select("q_id", "q_emb", "n1", "vec_id", "emb", "n2")
         .dropDuplicates(["q_id", "vec_id"])
     )
-    scored = cand.withColumn(
-        "cos",
-        F.round(
-            _dot_expr("q_emb", "emb", d)
-            / (F.col("n1") * F.col("n2")),
-            4,
-        ),
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "cos", "rank")
-    )
+    return _cos_topk(cand, d, k)

@@ -28,10 +28,36 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ocr_spark.operators.textops import TOKENS_LC, _ensure_parallelism
+from ocr_spark.operators.textops import (
+    TOKENS_LC,
+    _ensure_parallelism,
+    _md5_int,
+)
 
 # 2^32 as a double: the 8-hex-digit md5 prefix maps to [0, 1).
 _TWO32 = 4294967296.0
+
+
+def _winnow_windows(df: DataFrame, k: int, w: int) -> tuple[DataFrame, str]:
+    """The in-row winnowing state: (doc_id, us) rows, ``us`` the
+    positioned 32-bit word ``k``-gram hashes ``struct(pos, u)`` of each
+    document with at least one full window, and the SQL array of every
+    ``w``-window's rightmost minimum (later elements win on ``<=``)."""
+    arr = _ensure_parallelism(df).select(
+        "doc_id", F.expr(TOKENS_LC).alias("t")
+    ).filter(F.size("t") >= k + w - 1)
+    us = (
+        f"transform(sequence(0, size(t) - {k}), "
+        f"i -> struct(i AS pos, "
+        f"CAST(conv(substring(md5(concat_ws(' ', slice(t, i + 1, {k}))), "
+        f"1, 8), 16, 10) AS BIGINT) AS u))"
+    )
+    mins = (
+        f"transform(sequence(1, size(us) - {w - 1}), "
+        f"s -> aggregate(slice(us, s + 1, {w - 1}), us[s - 1], "
+        f"(acc, x) -> IF(x.u <= acc.u, x, acc)))"
+    )
+    return arr.select("doc_id", F.expr(us).alias("us")), mins
 
 
 def winnow_fingerprints(
@@ -61,23 +87,11 @@ def winnow_fingerprints(
     but it shuffled w x kgrams rows for a computation the row already
     contains; measured 2.5s -> map-only at sf0.1.)
     """
-    arr = _ensure_parallelism(df).select(
-        "doc_id", F.expr(TOKENS_LC).alias("t")
-    ).filter(F.size("t") >= k + w - 1)
-    us = (
-        f"transform(sequence(0, size(t) - {k}), "
-        f"i -> struct(i AS pos, "
-        f"CAST(conv(substring(md5(concat_ws(' ', slice(t, i + 1, {k}))), "
-        f"1, 8), 16, 10) AS BIGINT) AS u))"
-    )
-    sel = (
-        f"array_distinct(transform(sequence(1, size(us) - {w - 1}), "
-        f"s -> aggregate(slice(us, s + 1, {w - 1}), us[s - 1], "
-        f"(acc, x) -> IF(x.u <= acc.u, x, acc))))"
-    )
+    us, mins = _winnow_windows(df, k, w)
     return (
-        arr.select("doc_id", F.expr(us).alias("us"))
-        .select("doc_id", F.explode(F.expr(sel)).alias("m"))
+        us.select(
+            "doc_id", F.explode(F.expr(f"array_distinct({mins})")).alias("m")
+        )
         .select(
             "doc_id",
             F.col("m.pos").alias("pos"),
@@ -111,24 +125,11 @@ def winnow_near_dup_pairs(
     # exploding positioned selections and paying a corpus-wide
     # .distinct() shuffle — same (doc_id, fp) set by construction
     # (winnowing is doc-local), zero wide rows ever shuffled
-    arr = _ensure_parallelism(df).select(
-        "doc_id", F.expr(TOKENS_LC).alias("t")
-    ).filter(F.size("t") >= k + w - 1)
-    us = (
-        f"transform(sequence(0, size(t) - {k}), "
-        f"i -> struct(i AS pos, "
-        f"CAST(conv(substring(md5(concat_ws(' ', slice(t, i + 1, {k}))), "
-        f"1, 8), 16, 10) AS BIGINT) AS u))"
-    )
-    sel_u = (
-        f"array_distinct(transform(transform("
-        f"sequence(1, size(us) - {w - 1}), "
-        f"s -> aggregate(slice(us, s + 1, {w - 1}), us[s - 1], "
-        f"(acc, x) -> IF(x.u <= acc.u, x, acc))), m -> m.u))"
-    )
-    fp = (
-        arr.select("doc_id", F.expr(us).alias("us"))
-        .select("doc_id", F.explode(F.expr(sel_u)).alias("fp"))
+    us, mins = _winnow_windows(df, k, w)
+    fp = us.select(
+        "doc_id",
+        F.explode(F.expr(f"array_distinct(transform({mins}, m -> m.u))"))
+        .alias("fp"),
     )
     dfreq = fp.groupBy("fp").agg(F.count(F.lit(1)).alias("fp_df"))
     pruned = (
@@ -225,14 +226,8 @@ def cms_heavy_hitters(
         "term", "cnt", F.explode(rows).alias("r")
     ).withColumn(
         "bucket",
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("r").cast("string"), F.lit("|"),
-                               F.col("term"))),
-                1, 8,
-            ),
-            16, 10,
-        ).cast("long")
+        _md5_int(F.concat(F.col("r").cast("string"), F.lit("|"),
+                          F.col("term")), 8)
         % F.lit(width),
     )
     sketch = h.groupBy("r", "bucket").agg(F.sum("cnt").alias("counter"))
@@ -275,8 +270,7 @@ def kmv_distinct_tokens(
     ).filter(F.col("term") != "")
     d = toks.distinct().withColumn(
         "u",
-        F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("long")
-        / F.lit(_TWO32),
+        _md5_int("term", 8) / F.lit(_TWO32),
     )
     counts = d.groupBy("grp").agg(F.count(F.lit(1)).alias("n_exact"))
     w = Window.partitionBy("grp").orderBy(

@@ -72,6 +72,34 @@ def _bigram_stream(arr: DataFrame, *keys: str) -> DataFrame:
     )
 
 
+def _bigram_counts(df: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(arr, big, cab): the (doc_id, t) token arrays, their per-doc
+    bigram stream and the corpus bigram counts (term_a, term_b, c_ab)."""
+    arr = _ensure_parallelism(df).select(
+        "doc_id", F.expr(TOKENS_LC).alias("t")
+    )
+    big = _bigram_stream(arr, "doc_id")
+    cab = big.groupBy("term_a", "term_b").agg(
+        F.count(F.lit(1)).alias("c_ab")
+    )
+    return arr, big, cab
+
+
+def _doc_avg_logprob(
+    stream: DataFrame, prob: DataFrame, on, n_col: str, avg_col: str
+) -> DataFrame:
+    """Per-doc count and round-4 average ``logp`` of a (doc_id, ...)
+    stream joined to its probability table ``prob`` on ``on``."""
+    return (
+        stream.join(prob, on)
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias(n_col),
+            F.round(F.sum("logp") / F.count(F.lit(1)), 4).alias(avg_col),
+        )
+    )
+
+
 def with_token_count(df: DataFrame) -> DataFrame:
     """n_tokens per document (whitespace tokenizer)."""
     return df.withColumn(
@@ -122,13 +150,28 @@ def with_lang_guess(df: DataFrame, min_hits: int = 2) -> DataFrame:
     )
 
 
+def _md5_int(c, n_hex: int, t: str = "long"):
+    """The first ``n_hex`` hex digits of ``md5(c)`` as an integer of
+    type ``t``: the engine-portable hash behind every deterministic
+    selector and sketch here (md5 is bit-identical everywhere)."""
+    return F.conv(F.substring(F.md5(c), 1, n_hex), 16, 10).cast(t)
+
+
+def _case(pairs, default):
+    """``CASE WHEN cond THEN value ... ELSE default END`` from
+    (cond, value) pairs in order; ``default`` alone when there are
+    none."""
+    expr = None
+    for cond, value in pairs:
+        expr = F.when(cond, value) if expr is None else expr.when(cond, value)
+    return F.lit(default) if expr is None else expr.otherwise(default)
+
+
 def _hash_selector(key_col: str):
     """Deterministic per-row selector in [0, 65536): first 4 hex digits
     of md5(key). Engine-portable (md5 is bit-identical everywhere),
     stable across runs/partitions — the property random() lacks."""
-    return F.conv(
-        F.substring(F.md5(F.col(key_col).cast("string")), 1, 4), 16, 10
-    ).cast("int")
+    return _md5_int(F.col(key_col).cast("string"), 4, "int")
 
 
 def stratified_sample(
@@ -141,15 +184,13 @@ def stratified_sample(
     keep 60%% of long documents but 20%% of short ones). Strata absent
     from ``rates`` are dropped. Pure projection + filter: no shuffle,
     fully pushed down."""
-    threshold = None
-    for value, rate in rates.items():
-        cond = F.when(
-            F.col(strata_col) == value, F.lit(int(rate * 65536))
-        )
-        threshold = cond if threshold is None else threshold.when(
-            F.col(strata_col) == value, F.lit(int(rate * 65536))
-        )
-    threshold = threshold.otherwise(F.lit(0))
+    threshold = _case(
+        (
+            (F.col(strata_col) == value, F.lit(int(rate * 65536)))
+            for value, rate in rates.items()
+        ),
+        F.lit(0),
+    )
     return df.filter(_hash_selector(key_col) < threshold)
 
 
@@ -176,20 +217,12 @@ def hash_split(
     against a precomputed assignment table is a pointless shuffle.
     """
     sel = _hash_selector(key_col)
-    lo, expr = 0, None
+    lo, arms = 0, []
     for name, frac in splits.items():
         hi = lo + int(frac * 65536)
-        cond = (sel >= F.lit(lo)) & (sel < F.lit(hi))
-        expr = (
-            F.when(cond, F.lit(name))
-            if expr is None
-            else expr.when(cond, F.lit(name))
-        )
+        arms.append(((sel >= F.lit(lo)) & (sel < F.lit(hi)), F.lit(name)))
         lo = hi
-    expr = F.lit(default) if expr is None else expr.otherwise(
-        F.lit(default)
-    )
-    return df.withColumn("split", expr)
+    return df.withColumn("split", _case(arms, F.lit(default)))
 
 
 def shard_assign(
@@ -217,13 +250,9 @@ def shard_assign(
     label) so positions are contiguous within each (by..., shard)
     group — the shape a per-split data loader needs.
     """
-    h = F.md5(
-        F.concat(F.col(key_col).cast("string"), F.lit("#" + salt))
-    )
-    shard = (
-        F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint")
-        % n_shards
-    ).cast("int")
+    salted = F.concat(F.col(key_col).cast("string"), F.lit("#" + salt))
+    h = F.md5(salted)
+    shard = (_md5_int(salted, 8) % n_shards).cast("int")
     out = df.withColumn("shuffle_key", h).withColumn("shard", shard)
     w = Window.partitionBy(*by, "shard").orderBy("shuffle_key", key_col)
     return out.withColumn("pos", F.row_number().over(w)).drop(
@@ -392,39 +421,19 @@ def domain_upsample(
     round-to-hash(f) * n_domain. The n_epochs >= 1 guard is SEMANTIC:
     Spark's ``sequence(0, -1)`` is a DESCENDING [0, -1], not empty.
     """
-    n_full = None
-    frac_thr = None
+    full_arms, frac_arms = [], []
     for dom, f in factors.items():
         if f < 0:
             raise ValueError(f"negative factor for {dom!r}: {f}")
         nf = int(f)
-        thr = int((f - nf) * 65536)
         cond = F.col(domain_col) == dom
-        n_full = (
-            F.when(cond, F.lit(nf))
-            if n_full is None
-            else n_full.when(cond, F.lit(nf))
-        )
-        frac_thr = (
-            F.when(cond, F.lit(thr))
-            if frac_thr is None
-            else frac_thr.when(cond, F.lit(thr))
-        )
-    n_full = F.lit(1) if n_full is None else n_full.otherwise(F.lit(1))
-    frac_thr = (
-        F.lit(0) if frac_thr is None else frac_thr.otherwise(F.lit(0))
+        full_arms.append((cond, F.lit(nf)))
+        frac_arms.append((cond, F.lit(int((f - nf) * 65536))))
+    n_full = _case(full_arms, F.lit(1))
+    frac_thr = _case(frac_arms, F.lit(0))
+    sel_up = _md5_int(
+        F.concat(F.col(key_col).cast("string"), F.lit("#up")), 4, "int"
     )
-    sel_up = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(F.col(key_col).cast("string"), F.lit("#up"))
-            ),
-            1,
-            4,
-        ),
-        16,
-        10,
-    ).cast("int")
     extra = (sel_up < frac_thr).cast("int")
     out = df.select(
         key_col,
@@ -470,14 +479,9 @@ def weighted_sample(
     result. Weights must be > 0 (rows with w <= 0 or NULL are
     dropped — they have zero inclusion probability).
     """
-    u = (
-        F.conv(
-            F.substring(F.md5(F.col(key_col).cast("string")), 1, 12),
-            16,
-            10,
-        ).cast("long")
-        + 1
-    ) / F.lit(float(1 << 48))
+    u = (_md5_int(F.col(key_col).cast("string"), 12) + 1) / F.lit(
+        float(1 << 48)
+    )
     es = F.log(u) / F.col(weight_col)
     raced = df.filter(F.col(weight_col) > 0).withColumn(
         "es_key_raw", es
@@ -704,10 +708,7 @@ def _dsir_features(df: DataFrame, n_buckets: int) -> DataFrame:
     )
     return arr.select("doc_id", F.explode(feats).alias("f")).select(
         "doc_id",
-        (
-            F.conv(F.substring(F.md5("f"), 1, 8), 16, 10).cast("long")
-            % n_buckets
-        ).alias("bucket"),
+        (_md5_int("f", 8) % n_buckets).alias("bucket"),
     )
 
 
@@ -803,15 +804,7 @@ def dsir_sample(
     """
     w = dsir_logweights(raw, target, n_buckets=n_buckets, alpha=alpha)
     u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("g#"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        _md5_int(F.concat(F.lit("g#"), F.col("doc_id").cast("string")), 8)
         + F.lit(0.5)
     ) / F.lit(4294967296.0)
     key = F.round(F.col("logw") - F.log(-F.log(u)), 4)
@@ -1236,16 +1229,7 @@ def unigram_logprob(df: DataFrame) -> DataFrame:
     lp = tf.crossJoin(F.broadcast(tot)).select(
         "term", F.log(F.col("tf") / F.col("t")).alias("logp")
     )
-    return (
-        toks.join(lp, "term")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.round(F.sum("logp") / F.count(F.lit(1)), 4).alias(
-                "avg_logprob"
-            ),
-        )
-    )
+    return _doc_avg_logprob(toks, lp, "term", "n_tokens", "avg_logprob")
 
 
 def ccnet_buckets(
@@ -1328,13 +1312,7 @@ def bigram_logprob(df: DataFrame, lam: float = 0.7) -> DataFrame:
     honestly-quantified residual risk) as documented in
     ``unigram_logprob``.
     """
-    arr = _ensure_parallelism(df).select(
-        "doc_id", F.expr(TOKENS_LC).alias("t")
-    )
-    big = _bigram_stream(arr, "doc_id")
-    cab = big.groupBy("term_a", "term_b").agg(
-        F.count(F.lit(1)).alias("c_ab")
-    )
+    arr, big, cab = _bigram_counts(df)
     cleft = cab.groupBy("term_a").agg(F.sum("c_ab").alias("c_left"))
     toks = arr.select(F.explode("t").alias("term")).filter(
         F.col("term") != ""
@@ -1359,15 +1337,8 @@ def bigram_logprob(df: DataFrame, lam: float = 0.7) -> DataFrame:
             ).alias("logp"),
         )
     )
-    return (
-        big.join(prob, ["term_a", "term_b"])
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.round(F.sum("logp") / F.count(F.lit(1)), 4).alias(
-                "avg_logprob2"
-            ),
-        )
+    return _doc_avg_logprob(
+        big, prob, ["term_a", "term_b"], "n_bigrams", "avg_logprob2"
     )
 
 
@@ -1405,13 +1376,7 @@ def kn_logprob(df: DataFrame, discount: float = 0.75) -> DataFrame:
     the literal is engine-portable as written (the ``1.0 - lam`` ulp
     trap of bigram_logprob does not arise).
     """
-    arr = _ensure_parallelism(df).select(
-        "doc_id", F.expr(TOKENS_LC).alias("t")
-    )
-    big = _bigram_stream(arr, "doc_id")
-    cab = big.groupBy("term_a", "term_b").agg(
-        F.count(F.lit(1)).alias("c_ab")
-    )
+    _, big, cab = _bigram_counts(df)
     cleft = cab.groupBy("term_a").agg(
         F.sum("c_ab").alias("c_left"),
         F.count(F.lit(1)).alias("n_cont"),
@@ -1436,15 +1401,8 @@ def kn_logprob(df: DataFrame, discount: float = 0.75) -> DataFrame:
             ).alias("logp"),
         )
     )
-    return (
-        big.join(prob, ["term_a", "term_b"])
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.round(F.sum("logp") / F.count(F.lit(1)), 4).alias(
-                "avg_kn_logprob"
-            ),
-        )
+    return _doc_avg_logprob(
+        big, prob, ["term_a", "term_b"], "n_bigrams", "avg_kn_logprob"
     )
 
 
@@ -2263,6 +2221,14 @@ def length_histogram(df: DataFrame) -> DataFrame:
     )
 
 
+def _ratio(num: str, den: str) -> F.Column:
+    """float32 ``num / den``; NULL when ``den`` is 0."""
+    return (
+        F.col(num).cast("double")
+        / F.nullif(F.col(den), F.lit(0)).cast("double")
+    ).cast("float")
+
+
 def tokenizer_fit(df: DataFrame, domain_col: str = "source") -> DataFrame:
     """Per-domain tokenizer-fit / fertility sheet: how many BPE-ish
     pre-tokens a whitespace word explodes into (fertility), and the
@@ -2289,21 +2255,15 @@ def tokenizer_fit(df: DataFrame, domain_col: str = "source") -> DataFrame:
         F.sum("n_ch").cast("long").alias("total_chars"),
     )
 
-    def ratio(num: str, den: str) -> F.Column:
-        return (
-            F.col(num).cast("double")
-            / F.nullif(F.col(den), F.lit(0)).cast("double")
-        ).cast("float")
-
     return agg.select(
         domain_col,
         "n_docs",
         "ws_tokens",
         "bpe_tokens",
         "total_chars",
-        ratio("bpe_tokens", "ws_tokens").alias("fertility"),
-        ratio("total_chars", "ws_tokens").alias("chars_per_word"),
-        ratio("total_chars", "bpe_tokens").alias("chars_per_token"),
+        _ratio("bpe_tokens", "ws_tokens").alias("fertility"),
+        _ratio("total_chars", "ws_tokens").alias("chars_per_word"),
+        _ratio("total_chars", "bpe_tokens").alias("chars_per_token"),
     )
 
 
@@ -2346,12 +2306,6 @@ def distinct_ngrams(df: DataFrame, domain_col: str = "source") -> DataFrame:
         F.count_distinct("bigram").alias("distinct_bigrams"),
     )
 
-    def ratio(num: str, den: str) -> F.Column:
-        return (
-            F.col(num).cast("double")
-            / F.nullif(F.col(den), F.lit(0)).cast("double")
-        ).cast("float")
-
     return (
         u.join(b, "_dom", "left")
         .select(
@@ -2360,8 +2314,8 @@ def distinct_ngrams(df: DataFrame, domain_col: str = "source") -> DataFrame:
             "distinct_unigrams",
             "total_bigrams",
             "distinct_bigrams",
-            ratio("distinct_unigrams", "total_unigrams").alias("ttr"),
-            ratio("distinct_bigrams", "total_bigrams").alias(
+            _ratio("distinct_unigrams", "total_unigrams").alias("ttr"),
+            _ratio("distinct_bigrams", "total_bigrams").alias(
                 "bigram_ttr"
             ),
         )
@@ -2429,17 +2383,9 @@ def temperature_sample(
         )
         .select(domain_col, "n_docs", "target", "threshold")
     )
-    sel = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(F.col(key_col).cast("string"), F.lit("#ts"))
-            ),
-            1,
-            4,
-        ),
-        16,
-        10,
-    ).cast("int")
+    sel = _md5_int(
+        F.concat(F.col(key_col).cast("string"), F.lit("#ts")), 4, "int"
+    )
     return (
         _ensure_parallelism(df)
         .join(F.broadcast(targets), domain_col)
@@ -2599,19 +2545,10 @@ def _license_cols(text_col: str = "text"):
     marker scan — shared by :func:`license_tag` and the one-plan
     :func:`corpus_card` composition (no corpus self-join)."""
     low = F.lower(F.coalesce(F.col(text_col), F.lit("")))
-    tag = None
-    perm = None
-    for marker, name, p in LICENSE_MARKERS:
-        cond = low.contains(marker)
-        tag = (
-            F.when(cond, name) if tag is None else tag.when(cond, name)
-        )
-        perm = (
-            F.when(cond, p) if perm is None else perm.when(cond, p)
-        )
     return (
-        tag.otherwise("unknown"),
-        perm.otherwise(0).cast("int"),
+        _case(((low.contains(m), n) for m, n, _ in LICENSE_MARKERS), "unknown"),
+        _case(((low.contains(m), p) for m, _, p in LICENSE_MARKERS), 0)
+        .cast("int"),
     )
 
 
@@ -2806,29 +2743,15 @@ def shard_checksums(
     stay under that (at 100 TB / 1e11 docs, 4096 shards leave 2.4e7
     rows each — five orders of margin).
     """
-    digest = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "#",
-                    F.col(key_col).cast("string"),
-                    F.coalesce(F.col("text"), F.lit("")),
-                )
-            ),
-            1,
-            8,
+    digest = _md5_int(
+        F.concat_ws(
+            "#",
+            F.col(key_col).cast("string"),
+            F.coalesce(F.col("text"), F.lit("")),
         ),
-        16,
-        10,
-    ).cast("long")
-    shard = (
-        F.conv(
-            F.substring(F.md5(F.col(key_col).cast("string")), 1, 4),
-            16,
-            10,
-        ).cast("int")
-        % shards
+        8,
     )
+    shard = _md5_int(F.col(key_col).cast("string"), 4, "int") % shards
     return (
         _ensure_parallelism(df).select(
             shard.alias("shard"),

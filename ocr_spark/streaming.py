@@ -40,37 +40,33 @@ def read_transcript_stream(
     )
 
 
-def _start_parquet_sink(
-    df: DataFrame, output_dir: str, checkpoint_dir: str, trigger_once: bool
-):
+def _start_parquet_sink(df: DataFrame, output_dir: str, checkpoint_dir: str):
     """Start ``df`` as an append-mode parquet stream checkpointed at
-    ``checkpoint_dir``; ``trigger_once`` drains the available input and
-    stops (``availableNow``)."""
-    writer = (
+    ``checkpoint_dir`` that drains the available input and stops
+    (``availableNow``)."""
+    return (
         df.writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def extract_stream(
     transcripts: DataFrame,
     output_dir: str,
     checkpoint_dir: str,
-    trigger_once: bool = False,
 ):
     """Run the extraction UDF over a streaming transcripts DataFrame.
 
-    Returns the started StreamingQuery. ``trigger_once=True`` drains all
-    available input then stops — the "incremental batch" mode (run from
-    cron, process only new files, exactly-once via checkpoint).
+    Returns the started StreamingQuery, which drains all available
+    input then stops — the "incremental batch" mode (run from cron,
+    process only new files, exactly-once via checkpoint).
     """
     ext = extract(transcripts)  # map-only: no partitions arg, no shuffle
-    return _start_parquet_sink(ext, output_dir, checkpoint_dir, trigger_once)
+    return _start_parquet_sink(ext, output_dir, checkpoint_dir)
 
 
 def extract_stream_dedup(
@@ -78,7 +74,6 @@ def extract_stream_dedup(
     output_dir: str,
     checkpoint_dir: str,
     watermark: str = "1 hour",
-    trigger_once: bool = False,
 ):
     """Stateful streaming: at-least-once source dedup before extraction.
 
@@ -101,9 +96,7 @@ def extract_stream_dedup(
     deduped = transcripts.withWatermark("ts", watermark).dropDuplicates(
         ["conv_id", "turn_idx"]
     )
-    return _start_parquet_sink(
-        extract(deduped), output_dir, checkpoint_dir, trigger_once
-    )
+    return _start_parquet_sink(extract(deduped), output_dir, checkpoint_dir)
 
 
 def extract_stream_incremental(
@@ -112,7 +105,6 @@ def extract_stream_incremental(
     checkpoint_dir: str,
     store_dir: str,
     run_id: str,
-    trigger_once: bool = False,
 ):
     """Streaming ingest composed with the CROSS-RUN fingerprint store
     (the batch ``--fingerprint-store`` semantics on the micro-batch
@@ -122,9 +114,9 @@ def extract_stream_incremental(
     disk) — and only content no previous run committed flows into
     extraction.
 
-    Intended for the availableNow DRAIN mode: each drain constructs a
-    fresh query, so the store is re-listed at construction and a
-    commit made between drains is seen by the next one. (Inside one
+    Each availableNow DRAIN constructs a fresh query, so the store is
+    re-listed at construction and a commit made between drains is seen
+    by the next one. (Inside one
     long-running query the stream-static contract re-executes the
     static side per micro-batch, but the parquet FILE INDEX is
     resolved at plan time — do not rely on mid-query store growth.)
@@ -139,6 +131,4 @@ def extract_stream_incremental(
 
     fresh = FingerprintStore(store_dir).fresh(transcripts, run_id)
     fresh = fresh.drop("fingerprint")
-    return _start_parquet_sink(
-        extract(fresh), output_dir, checkpoint_dir, trigger_once
-    )
+    return _start_parquet_sink(extract(fresh), output_dir, checkpoint_dir)

@@ -144,6 +144,29 @@ def _conv_len(rng: random.Random, whale_lo: int, whale_hi: int) -> int:
     return rng.randint(whale_lo, whale_hi)
 
 
+def _draw_turn(rng: random.Random, garbage_rate: float):
+    """One turn's (role, text, tool), drawn in a fixed rng call order."""
+    role = rng.choices(_ROLES, _ROLE_W)[0]
+    tool = rng.choices(_TOOLS, _TOOL_W)[0]
+    if rng.random() < garbage_rate:
+        text = make_garbage(rng)
+    elif tool == "html":
+        text = make_html(rng)
+    elif tool == "pdf":
+        text = make_pdf(rng)
+    else:
+        text = make_plain(rng)
+    return role, text, tool
+
+
+def _turn_frame(rows: list) -> pd.DataFrame:
+    df = pd.DataFrame(
+        rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    )
+    df["turn_idx"] = df["turn_idx"].astype("int32")
+    return df
+
+
 def gen_transcripts_ids(
     conv_ids,
     seed: int = 0,
@@ -165,22 +188,9 @@ def gen_transcripts_ids(
         n_turns = _conv_len(rng, whale_lo, whale_hi)
         base = _EPOCH + timedelta(seconds=i * 97)
         for t in range(n_turns):
-            role = rng.choices(_ROLES, _ROLE_W)[0]
-            tool = rng.choices(_TOOLS, _TOOL_W)[0]
-            if rng.random() < garbage_rate:
-                text = make_garbage(rng)
-            elif tool == "html":
-                text = make_html(rng)
-            elif tool == "pdf":
-                text = make_pdf(rng)
-            else:
-                text = make_plain(rng)
+            role, text, tool = _draw_turn(rng, garbage_rate)
             rows.append((cid, t, role, text, tool, base + timedelta(seconds=7 * t)))
-    df = pd.DataFrame(
-        rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    )
-    df["turn_idx"] = df["turn_idx"].astype("int32")
-    return df
+    return _turn_frame(rows)
 
 
 def gen_transcripts(
@@ -217,24 +227,11 @@ def gen_whale_turns(
     for t in turn_idxs:
         t = int(t)
         rng = random.Random((seed << 21) ^ 0x5EED0000 ^ t)
-        role = rng.choices(_ROLES, _ROLE_W)[0]
-        tool = rng.choices(_TOOLS, _TOOL_W)[0]
-        if rng.random() < garbage_rate:
-            text = make_garbage(rng)
-        elif tool == "html":
-            text = make_html(rng)
-        elif tool == "pdf":
-            text = make_pdf(rng)
-        else:
-            text = make_plain(rng)
+        role, text, tool = _draw_turn(rng, garbage_rate)
         rows.append(
             (conv_id, t, role, text, tool, _EPOCH + timedelta(seconds=7 * t))
         )
-    df = pd.DataFrame(
-        rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    )
-    df["turn_idx"] = df["turn_idx"].astype("int32")
-    return df
+    return _turn_frame(rows)
 
 
 def write_transcripts_parquet(df: pd.DataFrame, path: str) -> None:

@@ -3,8 +3,8 @@ from __future__ import annotations
 import pytest
 
 
-@pytest.fixture(scope="session")
-def spark():
+def build_session():
+    """The test session; also used by ``--regenerate`` scripts."""
     from pyspark.sql import SparkSession
 
     s = (
@@ -18,6 +18,12 @@ def spark():
         .getOrCreate()
     )
     s.sparkContext.setLogLevel("ERROR")
+    return s
+
+
+@pytest.fixture(scope="session")
+def spark():
+    s = build_session()
     yield s
     s.stop()
 

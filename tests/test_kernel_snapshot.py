@@ -48,10 +48,11 @@ def _one_mb_page() -> str:
     return "".join(parts)
 
 
-# The two known html_main faults, pinned at their current output:
-# F1 drops the article's <ul> items (the list's leaves vote for the
-# <ul>, not the article); F2 splits the article at the first unclosed
-# <p> and keeps only one side.
+# The pages of two mended html_main faults: F1 dropped the article's
+# <ul> items (the list's leaves voted for the <ul>, not the article;
+# lists are now transparent to the vote); F2 split the article at the
+# first unclosed <p> and kept only one side (a block start tag now
+# implies </p>). Both pages now yield the whole article.
 _F1_PAGE = (
     "<html><head><title>t</title></head><body>"
     "<nav><ul><li><a href='/a'>nav one</a></li>"

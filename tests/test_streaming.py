@@ -16,7 +16,7 @@ from ocr_spark.synth import (
 
 def _drain(spark, in_dir, out_dir, ckpt):
     stream = read_transcript_stream(spark, in_dir)
-    q = extract_stream(stream, out_dir, ckpt, trigger_once=True)
+    q = extract_stream(stream, out_dir, ckpt)
     q.awaitTermination(120)
 
 
@@ -150,9 +150,7 @@ def test_streaming_watermarked_dedup_across_restart(spark, tmp_path):
     write_transcripts_parquet(a.head(200), f"{in_dir}/a-redelivered.parquet")
 
     stream = read_transcript_stream(spark, in_dir)
-    q = extract_stream_dedup(
-        stream, out_dir, ckpt, watermark="365 days", trigger_once=True
-    )
+    q = extract_stream_dedup(stream, out_dir, ckpt, watermark="365 days")
     q.awaitTermination(120)
     assert _count(out_dir) == len(a), "in-drain redelivery deduped"
 
@@ -164,7 +162,7 @@ def test_streaming_watermarked_dedup_across_restart(spark, tmp_path):
     write_transcripts_parquet(a.head(150), f"{in_dir}/a-again.parquet")
     q = extract_stream_dedup(
         read_transcript_stream(spark, in_dir), out_dir, ckpt,
-        watermark="365 days", trigger_once=True,
+        watermark="365 days",
     )
     q.awaitTermination(120)
 
@@ -205,7 +203,7 @@ def test_streaming_incremental_against_fingerprint_store(spark, tmp_path):
     def drain(run_id):
         q = extract_stream_incremental(
             read_transcript_stream(spark, in_dir), out_dir, ckpt,
-            store_dir, run_id, trigger_once=True,
+            store_dir, run_id,
         )
         q.awaitTermination(120)
 

@@ -120,3 +120,35 @@ def test_spans_closed_at_eof():
 def test_tag_like_nonsense_not_a_tag():
     # '<3' and '< div' are data, not tags
     assert _full("<p>i <3 spark < div</p>") == "i <3 spark < div"
+
+
+def test_block_start_tag_implies_close_p():
+    # F2: an unclosed <p> must not swallow the paragraphs that follow
+    # it, or the article splits into nested leaves and loses one side
+    res = extract_html(
+        "<header><p>site menu</header><article><h1>Unclosed</h1>"
+        "<p>first paragraph left open by its author"
+        "<p>second paragraph also left open here"
+        "<div>third block after the open paragraphs</div></article>"
+    )
+    assert res.main_text == (
+        "Unclosed\nfirst paragraph left open by its author\n"
+        "second paragraph also left open here\n"
+        "third block after the open paragraphs"
+    )
+
+
+def test_list_items_vote_for_article():
+    # F1: <li> leaves credit the list's container, not the <ul>, so an
+    # in-article list stays part of the article
+    res = extract_html(
+        "<nav><ul><li><a href='/a'>nav one</a></li></ul></nav>"
+        "<article><h1>Notes</h1><ul><li>Faster reads.</li>"
+        "<li>Smaller rows.</li></ul>"
+        "<p>This release tightens the write path for resumed runs.</p>"
+        "</article>"
+    )
+    assert res.main_text == (
+        "Notes\nFaster reads.\nSmaller rows.\n"
+        "This release tightens the write path for resumed runs."
+    )

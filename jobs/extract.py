@@ -53,7 +53,14 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--run-id", required=True)
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--group-size", type=int, default=8)
-    ap.add_argument("--partitions", type=int, default=None)
+    ap.add_argument(
+        "--partitions",
+        type=int,
+        default=None,
+        help="initial partition count of the salted conv_id rebalance "
+        "(see ocr_spark.partitioning.repartition_salted); unset = no "
+        "shuffle",
+    )
     ap.add_argument("--salt-threshold", type=int, default=10_000)
     ap.add_argument("--salt-buckets", type=int, default=1024)
     ap.add_argument("--reset", action="store_true", help="forget run commits")
@@ -220,7 +227,8 @@ def main(argv: list[str] | None = None) -> int:
         _commit_fingerprints(fresh_fp, args.fingerprint_store, args.run_id)
     # live accumulator view (O15); lineage rows are the committed truth
     print(
-        "progress counters: n_turns={n_turns} n_errors={n_errors}".format(
+        "progress counters: n_turns={n_turns} n_errors={n_errors} "
+        "kernel_s={kernel_s:.2f}".format(
             **counters.snapshot()
         )
     )

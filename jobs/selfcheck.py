@@ -75,7 +75,13 @@ def _compare(name: str, spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame):
 
 def main(argv: list[str]) -> int:
     sf_dir = os.environ.get("SELFCHECK_SF_DIR", "/root/testdata/sf0.01")
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, root)
+    # the Python workers of the UDF keys import ocr_spark too: they
+    # inherit PYTHONPATH, not the driver's sys.path
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (root, os.environ.get("PYTHONPATH")) if p
+    )
     import __spark_entry__ as E
 
     queries = E.queries()

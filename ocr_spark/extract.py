@@ -8,7 +8,7 @@ scan, no shuffle between stages — SURVEY.md §4.1).
 
 Plan shape (SURVEY.md §3.4):
 
-    scan -> [optional salted conv_id-hash repartition] -> pandas UDF
+    scan -> [optional salted conv_id-hash rebalance] -> pandas UDF
          -> struct expansion (zero extra exchange)
 
 Column pruning is explicit: only (conv_id, turn_idx, text, tool) plus
@@ -16,6 +16,8 @@ caller-requested passthrough columns reach the UDF stage.
 """
 
 from __future__ import annotations
+
+import time
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -39,11 +41,14 @@ class ExtractCounters:
         sc = spark.sparkContext
         self.n_turns = sc.accumulator(0)
         self.n_errors = sc.accumulator(0)
+        # wall seconds inside ``extract_batch``, summed over batches
+        self.kernel_s = sc.accumulator(0.0)
 
-    def snapshot(self) -> dict[str, int]:
+    def snapshot(self) -> dict[str, float]:
         return {
             "n_turns": self.n_turns.value,
             "n_errors": self.n_errors.value,
+            "kernel_s": self.kernel_s.value,
         }
 
 
@@ -53,8 +58,10 @@ def make_extract_udf(counters: ExtractCounters | None = None):
 
     @pandas_udf(EXTRACT_RESULT)
     def extract_udf(text: pd.Series, tool: pd.Series) -> pd.DataFrame:
+        t0 = time.perf_counter()
         out = extract_batch(text, tool)
         if counters is not None:
+            counters.kernel_s.add(time.perf_counter() - t0)
             counters.n_turns.add(len(out))
             counters.n_errors.add(int((out["error"] != "").sum()))
         return out
@@ -75,9 +82,10 @@ def extract(
 
     Returns conv_id, turn_idx, processed_at and the EXTRACT_RESULT
     fields (plus ``passthrough`` columns). With ``partitions`` set,
-    performs the salted conv_id-hash repartition first (the one shuffle
-    of the pipeline); otherwise extraction is a pure map over the scan
-    partitions.
+    performs the salted conv_id-hash rebalance first (the one shuffle
+    of the pipeline), and ``partitions`` is its initial partition count
+    (see ``repartition_salted``); otherwise extraction is a pure map
+    over the scan partitions.
     """
     passthrough = passthrough or []
     cols = ["conv_id", "turn_idx", "text", "tool", *passthrough]

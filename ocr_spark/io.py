@@ -289,8 +289,10 @@ class ExtractWriter:
         counters: "ExtractCounters | None" = None,
     ) -> list[int]:
         """Extract + write all uncommitted buckets. Returns the bucket ids
-        committed by THIS invocation. ``fail_after_groups`` injects a
-        mid-run crash for the resume-idempotence test."""
+        committed by THIS invocation. ``partitions`` is the initial
+        partition count of each group's salted rebalance (see
+        ``repartition_salted``). ``fail_after_groups`` injects a mid-run crash for
+        the resume-idempotence test."""
         spark.conf.set(
             "spark.sql.sources.partitionOverwriteMode", "dynamic"
         )
@@ -315,7 +317,13 @@ class ExtractWriter:
                 passthrough=[BUCKET_COL],
                 counters=counters,
             )
-            ordered_ext = ext.sortWithinPartitions("conv_id", "turn_idx")
+            # bucket first: the partitioned write needs rows grouped by
+            # bucket, so this one sort also serves the planned write's
+            # own (which would otherwise sort the full rows again); each
+            # file still holds its rows in (conv_id, turn_idx) order
+            ordered_ext = ext.sortWithinPartitions(
+                BUCKET_COL, "conv_id", "turn_idx"
+            )
             # per-bucket lineage stats ride the WRITE pass itself via
             # Dataset.observe() (conditional aggregates, one set per
             # bucket in the group) -> lineage rows LAST. The previous

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 
 
@@ -52,3 +54,19 @@ def norm_spans(v):
     if v is None:
         return []
     return [dict(r.asDict()) if hasattr(r, "asDict") else dict(r) for r in list(v)]
+
+
+@contextmanager
+def sql_conf(spark, conf: dict[str, str]):
+    """Set session SQL confs for a block, restoring the old values."""
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -3,14 +3,19 @@ single-process golden oracle, under stable (conv_id, turn_idx) ordering,
 with row-count preservation (error rows survive)."""
 
 import pandas as pd
+import pytest
 
 from ocr_spark.extract import extract
-from tests.conftest import norm_spans
+from tests.conftest import norm_spans, sql_conf
+
+SALTED = dict(partitions=8, salt_threshold=50, salt_buckets=4)
 
 
 def _run_spark(spark, pdf, **kw):
-    sdf = spark.createDataFrame(pdf)
-    res = extract(sdf, **kw)
+    return _collect(extract(spark.createDataFrame(pdf), **kw))
+
+
+def _collect(res):
     out = (
         res.select("conv_id", "turn_idx", "text", "spans", "score", "error")
         .toPandas()
@@ -39,9 +44,7 @@ def test_pipeline_matches_oracle(spark, tiny_transcripts, tiny_golden):
 def test_pipeline_matches_oracle_with_salting(
     spark, tiny_transcripts, tiny_golden
 ):
-    out = _run_spark(
-        spark, tiny_transcripts, partitions=8, salt_threshold=50, salt_buckets=4
-    )
+    out = _run_spark(spark, tiny_transcripts, **SALTED)
     _assert_equal(out, tiny_golden)
 
 
@@ -51,6 +54,37 @@ def test_input_order_invariance(spark, tiny_transcripts, tiny_golden):
     )
     out = _run_spark(spark, shuffled, partitions=8, salt_threshold=50)
     _assert_equal(out, tiny_golden)
+
+
+# session conf -> check on the salted UDF stage's partition count, given
+# ``partitions=8`` and the session's core count. Under AQE ``partitions``
+# is the rebalance's initial count: small partitions merge to at most
+# one per core; at cluster scale (here: a tiny advisory size) every
+# partition above the advisory size is split, so the stage runs on more
+# tasks and a conversation may span them. With AQE off it is exactly 8.
+UDF_STAGE_PARTITIONS = {
+    "aqe_merges": ({}, lambda n, cores: n <= cores),
+    "aqe_splits": (
+        {"spark.sql.adaptive.advisoryPartitionSizeInBytes": "4k"},
+        lambda n, cores: n > 8,
+    ),
+    "aqe_off": (
+        {"spark.sql.adaptive.enabled": "false"},
+        lambda n, cores: n == 8,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", UDF_STAGE_PARTITIONS)
+def test_salted_udf_stage_partitions(
+    spark, tiny_transcripts, tiny_golden, case
+):
+    conf, check = UDF_STAGE_PARTITIONS[case]
+    with sql_conf(spark, conf):
+        ext = extract(spark.createDataFrame(tiny_transcripts), **SALTED)
+        n = ext.rdd.getNumPartitions()
+        assert check(n, spark.sparkContext.defaultParallelism), n
+        _assert_equal(_collect(ext), tiny_golden)
 
 
 def test_error_rows_preserved(spark, tiny_transcripts):

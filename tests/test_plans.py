@@ -35,8 +35,10 @@ def test_extract_plan_shape(spark, tiny_transcripts, tmp_path):
     cols = sorted(c.split(":")[0] for c in m.group(1).split(","))
     assert cols == ["conv_id", "text", "tool", "turn_idx"]
 
-    # exactly ONE exchange (the salted repartition); UDF stage is Arrow
+    # exactly ONE exchange (the salted rebalance, which AQE may merge
+    # or split); UDF stage is Arrow
     assert tree.count("Exchange") == 1
+    assert "REBALANCE_PARTITIONS_BY_COL" in plan
     assert "ArrowEvalPython" in tree
     assert "BatchEvalPython" not in plan  # no row-at-a-time python
 

@@ -84,6 +84,26 @@ def test_accumulator_counters_match_lineage(
     snap = counters.snapshot()
     assert snap["n_turns"] == int(lin.n_turns.sum()) == len(tiny_transcripts)
     assert snap["n_errors"] == int(lin.n_errors.sum())
+    assert snap["kernel_s"] > 0
+
+
+def test_warehouse_files_in_conv_turn_order(spark, tiny_transcripts, writer):
+    # one sort (bucket, conv_id, turn_idx) serves the partitioned write;
+    # every file it leaves must still be in (conv_id, turn_idx) order
+    import pyarrow.parquet as pq
+
+    sdf = spark.createDataFrame(tiny_transcripts)
+    writer.run(spark, sdf, "ro", n_buckets=4, group_size=2, partitions=8,
+               salt_threshold=20, salt_buckets=4)
+    files = sorted(writer.data_dir.rglob("*.parquet"))
+    assert files
+    n = 0
+    for f in files:
+        t = pq.read_table(f, columns=["conv_id", "turn_idx"])
+        keys = list(zip(t["conv_id"].to_pylist(), t["turn_idx"].to_pylist()))
+        assert keys == sorted(keys), f"{f.name} is out of order"
+        n += len(keys)
+    assert n == len(tiny_transcripts)
 
 
 def test_iceberg_writer_requires_jar(spark, tmp_path):

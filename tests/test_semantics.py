@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from ocr_spark.operators.relational import dedup_turns
 from ocr_spark.partitioning import repartition_salted
 from ocr_spark.synth import gen_transcripts
+from tests.conftest import sql_conf
 
 
 def test_dedup_duplicate_turns(spark, tiny_transcripts):
@@ -39,23 +40,27 @@ def test_whale_detection_and_salting_balance(spark):
     # keys, so the whale spreads over several partitions and no single
     # partition holds a block larger than the threshold allows
     salted = repartition_salted(sdf, 32, salt_buckets=8, salt_threshold=50)
-    sizes = (
-        salted.withColumn("pid", F.spark_partition_id())
-        .filter(F.col("conv_id") == "whale")
-        .groupBy("pid")
-        .count()
-        .collect()
-    )
+    pid = salted.withColumn("pid", F.spark_partition_id())
+    # AQE would merge these 490 rows into one partition: look at the
+    # hash placement itself, with coalescing off
+    with sql_conf(
+        spark, {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    ):
+        sizes = (
+            pid.filter(F.col("conv_id") == "whale")
+            .groupBy("pid")
+            .count()
+            .collect()
+        )
+        # minnows (3 turns, below one block) keep salt 0: fully colocated
+        minnow = (
+            pid.filter(F.col("conv_id") == "m000")
+            .select("pid")
+            .distinct()
+            .count()
+        )
     assert len(sizes) >= 4, "whale turns must spread over several partitions"
     assert max(r["count"] for r in sizes) < 400
-    # minnows (3 turns, below one block) keep salt 0: fully colocated
-    minnow = (
-        salted.withColumn("pid", F.spark_partition_id())
-        .filter(F.col("conv_id") == "m000")
-        .select("pid")
-        .distinct()
-        .count()
-    )
     assert minnow == 1
 
 

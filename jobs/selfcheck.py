@@ -25,6 +25,14 @@ TABLES = (
     "documents embeddings"
 ).split()
 
+# DuckDB's default memory_limit is 80% of RAM, which the Spark JVM
+# shares. With a fixed limit an oracle that outgrows it fails as one
+# ORACLE ERROR for its key instead of getting the process OOM-killed.
+# near_dup_keep_best is the largest at sf0.01: it needs more than 2 GB
+# there (DuckDB reports 1.8 GiB used at a 2 GB limit) and fits in 3 GB;
+# the extra GB is headroom for the other keys.
+ORACLE_MEMORY_LIMIT = "4GB"
+
 
 def _canon(pdf: pd.DataFrame) -> pd.DataFrame:
     pdf = pdf[sorted(pdf.columns)].copy()
@@ -104,7 +112,7 @@ def main(argv: list[str]) -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    con = duckdb.connect()
+    con = duckdb.connect(config={"memory_limit": ORACLE_MEMORY_LIMIT})
     for t in TABLES:
         path = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(path):

@@ -161,16 +161,17 @@ _GOPHER_PASS = """(word_count >= 20 AND word_count <= 100000
                 AND stop_hits >= 2)"""
 
 def _jaccard_sql(max_df: int, cand_cte: str | None = None) -> str:
-    """Df-capped exact-Jaccard SELECT, mirroring
-    ``dedup._jaccard_from_shingles`` EXACTLY: shingles whose document
-    frequency exceeds ``max_df`` are pruned before sizes/intersections,
-    and the frequency is computed over the SAME relation the operator
-    prunes — the full corpus for ``ngram_jaccard``, the
-    candidate-doc-restricted relation when ``cand_cte`` names a
-    (doc_a, doc_b) CTE (minhash / winnow verification). Without the
-    mirrored cap the two jaccard definitions diverge the moment any
-    shingle's df exceeds the cap — invisible at gate scale, a latent
-    mismatch at larger sf."""
+    """Df-capped exact-Jaccard SELECT, mirroring ``dedup._cap_df`` and
+    the pairs it feeds EXACTLY: shingles whose document frequency
+    exceeds ``max_df`` are pruned before sizes/intersections, and the
+    frequency is computed over the SAME relation the operator prunes —
+    the full corpus for ``ngram_jaccard`` (``_jaccard_from_shingles``),
+    the candidate documents, each once, when ``cand_cte`` names a
+    (doc_a, doc_b) CTE (``_verify_candidates`` for minhash / winnow).
+    Without the mirrored cap the two jaccard definitions diverge the
+    moment any shingle's df exceeds the cap. The sf fixtures never reach
+    the cap; ``tests/test_near_dup_verify.py`` pins the operator side
+    on a corpus that does."""
     return f"""
 WITH {_SH_CTE},
 {_jaccard_ctes(max_df, cand_cte)}
@@ -268,8 +269,9 @@ def _bands_sql(rel: str, tag: str) -> str:
 # Bipartite verify of band candidates between the ``b2``/``sh2`` side
 # (doc_id) and the ``b1``/``sh1`` side (committed_id), as _bands_sql
 # names them: exact Jaccard parts with the df cap (<= 1000) over the
-# candidate-restricted UNION of both shingle relations, mirroring
-# dedup.incremental_minhash_verified / decontaminate_fuzzy. Ends with
+# UNION ALL of both sides' candidate-doc shingles, mirroring the
+# cross-pair form of dedup._verify_candidates that
+# incremental_minhash_verified / decontaminate_fuzzy run. Ends with
 # ``inter`` = (doc_id, committed_id, inter) beside ``szi``/``szc`` sizes.
 _CROSS_JACCARD_CTES = """cand AS (
             SELECT DISTINCT b2.doc_id, b1.doc_id AS committed_id
@@ -3959,7 +3961,7 @@ ORACLES: dict[str, str] = {
     """,
     # band candidates from the committed store, verified by exact
     # cross-corpus Jaccard on candidate docs only (df cap over the
-    # candidate-restricted UNION of both shingle relations, mirroring
+    # candidate docs of both sides, mirroring the cross-pair verify of
     # incremental_minhash_verified)
     "incremental_verified": f"""
         WITH {_INCR_FIXTURE},

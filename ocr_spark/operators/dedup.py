@@ -14,7 +14,10 @@ Scale design notes (100 TB target):
   banding via md5 of the band's minhash concat, candidate pairs only
   within equal (band, key) buckets — the classic shingle -> minhash ->
   band -> bucket-join pipeline; verification recomputes true Jaccard on
-  candidates only.
+  candidates only, in one step (``_verify_candidates``) shared by self
+  pairs (MinHash, winnowing) and cross-corpus pairs (incremental and
+  fuzzy-decontamination runs), with the same df cap (``_cap_df``) as
+  the posting-list join.
 
 All built-in column expressions (md5-based hashing so DuckDB oracles
 match bit-for-bit); no UDFs, no driver-side loops.
@@ -163,8 +166,22 @@ def _jaccard(size_a: str, size_b: str):
     )
 
 
+def _cap_df(sh: DataFrame, max_df: int) -> DataFrame:
+    """Posting-list pruning: ``sh`` (one row per document and distinct
+    shingle) without the shingles that more than ``max_df`` of its
+    documents hold — degenerate ultra-common shingles that would
+    otherwise dominate a shingle-keyed join. The pruned shingles count
+    toward neither sizes nor intersections."""
+    dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
+    return (
+        sh.join(dfreq, "shingle")
+        .filter(F.col("_df") <= max_df)
+        .drop("_df")
+    )
+
+
 def _jaccard_from_shingles(
-    sh: DataFrame, threshold: float, max_df: int, cands=None
+    sh: DataFrame, threshold: float, max_df: int
 ) -> DataFrame:
     """Exact-Jaccard pairs from an exploded (doc_id, shingle) relation.
 
@@ -174,57 +191,8 @@ def _jaccard_from_shingles(
     document, i.e. it is corpus-sized — a forced broadcast is a driver
     OOM at 10^9 docs. AQE still turns them into broadcast joins at small
     scale when the runtime size is under the threshold.
-
-    ``cands`` (r6): an optional (doc_a, doc_b) candidate-pair relation.
-    When given, the Jaccard is computed PER CANDIDATE PAIR from per-doc
-    pruned-shingle-set arrays (two keyed joins + one in-row
-    ``array_intersect``) instead of the posting-list self-join — the
-    self-join generates sum-over-shingles df^2/2 rows even after the
-    candidate-DOC restriction (with near-dup-dense fixtures the
-    candidate docs ARE the corpus: measured 86,609 candidate pairs over
-    50k docs at sf1.0, ~7s in the pair blowup), while the pair path is
-    O(|cands| x doc_len). Results are identical for threshold > 0: the
-    explicit ``inter >= 1`` filter reproduces the self-join's
-    shares-at-least-one-shingle precondition, the df-cap is applied to
-    the SAME ``sh`` relation before the arrays are built, and the
-    arrays are sets by construction (``_with_shingles`` explodes
-    ``array_distinct``), so ``size(array_intersect)`` equals the
-    self-join's shared-shingle count.
     """
-    # posting-list pruning: drop degenerate ultra-common shingles
-    dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-    sh = (
-        sh.join(dfreq, "shingle")
-        .filter(F.col("_df") <= max_df)
-        .drop("_df")
-    )
-    if cands is not None:
-        sets = sh.groupBy("doc_id").agg(
-            F.collect_list("shingle").alias("ss")
-        )
-        sa = sets.select(
-            F.col("doc_id").alias("doc_a"), F.col("ss").alias("sa")
-        )
-        sb = sets.select(
-            F.col("doc_id").alias("doc_b"), F.col("ss").alias("sb")
-        )
-        return (
-            cands.join(sa, "doc_a")
-            .join(sb, "doc_b")
-            .select(
-                "doc_a",
-                "doc_b",
-                F.size(F.array_intersect("sa", "sb")).alias("inter"),
-                F.size("sa").alias("size_a"),
-                F.size("sb").alias("size_b"),
-            )
-            .filter(F.col("inter") >= 1)
-            .withColumn("jaccard", _jaccard("size_a", "size_b"))
-            .filter(F.col("jaccard") >= threshold)
-            .select(
-                "doc_a", "doc_b", "inter", "size_a", "size_b", "jaccard"
-            )
-        )
+    sh = _cap_df(sh, max_df)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -366,22 +334,42 @@ def _band_candidates(banded: DataFrame) -> DataFrame:
 
 
 def _verify_candidates(
-    df: DataFrame,
     cands: DataFrame,
+    docs: DataFrame,
     n: int,
     threshold: float,
     max_df: int,
+    docs_b: DataFrame | None = None,
 ) -> DataFrame:
     """Exact word-``n``-gram Jaccard of (doc_a, doc_b) candidate pairs
-    from ``df``'s raw documents; returns (doc_a, doc_b, jaccard) with
-    jaccard >= threshold, a subset of ``cands``.
+    from the raw (doc_id, text) documents: ``doc_a`` and ``doc_b`` both
+    index ``docs`` (self pairs), or ``doc_b`` indexes ``docs_b`` (cross
+    pairs, whose ids may overlap ``docs``' ids). Returns (doc_a, doc_b,
+    inter, size_a, size_b, jaccard) with jaccard >= threshold, a subset
+    of ``cands``.
 
     Verifies ONLY candidate documents: at 100 TB the whole point of a
     candidate generator is that the exact-Jaccard join never touches
     non-candidate docs, and the candidate set is small by construction.
+    The ``max_df`` cap counts a shingle's document frequency over the
+    candidate documents, each once per side: a self-pair document that
+    is ``doc_a`` of one pair and ``doc_b`` of another counts once, while
+    the two sides of cross pairs count apart.
+
+    The Jaccard is computed per candidate pair from per-doc
+    pruned-shingle-set arrays (two keyed joins + one in-row
+    ``array_intersect``), not by a posting-list self-join: that
+    generates sum-over-shingles df^2/2 rows even over candidate docs
+    only (with near-dup-dense fixtures the candidate docs ARE the
+    corpus: measured 86,609 candidate pairs over 50k docs at sf1.0, ~7s
+    in the pair blowup), while the pair path is O(|cands| x doc_len).
+    The results are the self-join's: ``inter >= 1`` is its
+    shares-at-least-one-shingle precondition, and the arrays are sets by
+    construction (``_with_shingles`` explodes ``array_distinct``), so
+    ``size(array_intersect)`` is the shared-shingle count.
     """
     # localCheckpoint(eager=True) materializes the candidates once for
-    # their three consumers AND lets the ContextCleaner drop the blocks
+    # their consumers AND lets the ContextCleaner drop the blocks
     # when the result DataFrame is garbage-collected — an explicit
     # persist() here leaked storage memory across calls in long-lived
     # sessions. Fault-tolerance caveat: locally-checkpointed blocks are
@@ -391,24 +379,55 @@ def _verify_candidates(
     # .checkpoint()) or persist(DISK_ONLY) here — the blocks are small
     # (candidate pairs only), so the reliability cost is negligible.
     cands = cands.localCheckpoint(eager=True)
-    # left_semi tolerates duplicate keys on the right: no distinct needed
-    cand_docs = cands.select(F.col("doc_a").alias("doc_id")).unionByName(
-        cands.select(F.col("doc_b").alias("doc_id"))
-    )
+    ids_a = cands.select(F.col("doc_a").alias("doc_id"))
+    ids_b = cands.select(F.col("doc_b").alias("doc_id"))
     # semi-join the RAW docs down to candidates BEFORE shingling —
     # Catalyst cannot push a join below the explode, so semi-joining an
     # exploded shingle relation re-tokenizes the ENTIRE corpus; per-doc
     # shingles don't depend on other docs, so shingling the
     # candidate-only corpus is result-identical and tokenizes
-    # O(candidates) docs instead of O(corpus)
-    sh = _with_shingles(df.join(cand_docs, "doc_id", "left_semi"), n)
-    # candidate-PAIR verify (see _jaccard_from_shingles): the
-    # posting-list self-join explodes to sum df^2 rows even over
-    # candidate docs only; the pair path already returns a subset of
-    # ``cands``, so no closing join is needed
-    return _jaccard_from_shingles(
-        sh, threshold=threshold, max_df=max_df, cands=cands
-    ).select("doc_a", "doc_b", "jaccard")
+    # O(candidates) docs instead of O(corpus). left_semi tolerates
+    # duplicate keys on the right: no distinct needed.
+    if docs_b is None:
+        sh = _with_shingles(
+            docs.join(ids_a.unionByName(ids_b), "doc_id", "left_semi"), n
+        )
+        sets_a = sets_b = _cap_df(sh, max_df).groupBy("doc_id").agg(
+            F.collect_list("shingle").alias("ss")
+        )
+    else:
+        sh = _with_shingles(
+            docs.join(ids_a, "doc_id", "left_semi"), n
+        ).withColumn("_b", F.lit(False)).unionByName(
+            _with_shingles(docs_b.join(ids_b, "doc_id", "left_semi"), n)
+            .withColumn("_b", F.lit(True))
+        )
+        sets = _cap_df(sh, max_df).groupBy("_b", "doc_id").agg(
+            F.collect_list("shingle").alias("ss")
+        )
+        sets_a = sets.filter(~F.col("_b"))
+        sets_b = sets.filter(F.col("_b"))
+    sa = sets_a.select(
+        F.col("doc_id").alias("doc_a"), F.col("ss").alias("sa")
+    )
+    sb = sets_b.select(
+        F.col("doc_id").alias("doc_b"), F.col("ss").alias("sb")
+    )
+    return (
+        cands.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.size(F.array_intersect("sa", "sb")).alias("inter"),
+            F.size("sa").alias("size_a"),
+            F.size("sb").alias("size_b"),
+        )
+        .filter(F.col("inter") >= 1)
+        .withColumn("jaccard", _jaccard("size_a", "size_b"))
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "inter", "size_a", "size_b", "jaccard")
+    )
 
 
 def minhash_lsh_pairs(
@@ -423,12 +442,14 @@ def minhash_lsh_pairs(
 
     rows-per-band = num_hashes / bands; docs sharing any band key become
     candidates; candidates are verified with true n-gram Jaccard
-    (inverted-index join restricted to the candidate set).
+    (:func:`_verify_candidates`, on candidate documents only).
     Returns (doc_a, doc_b, jaccard) with jaccard >= threshold.
     """
     sig = _minhash_agg(_with_shingles(df, n), num_hashes)
     cands = _band_candidates(_explode_bands(sig, num_hashes, bands))
-    return _verify_candidates(df, cands, n, threshold, max_df)
+    return _verify_candidates(cands, df, n, threshold, max_df).select(
+        "doc_a", "doc_b", "jaccard"
+    )
 
 
 def minhash_estimate_pairs(
@@ -1602,9 +1623,9 @@ def incremental_minhash_flags(
     16 hashes / 8 bands are ~P(jaccard)^2-per-band sensitive with
     false-candidate odds ~pairs/2^64 per band from raw md5 collisions —
     negligible; a deployment wanting verified incremental near-dup
-    keeps the committed shingle relation too and reuses
-    ``_jaccard_from_shingles`` over the union (documented trade-off,
-    same operators).
+    keeps the committed documents too and verifies the candidates with
+    :func:`incremental_minhash_verified` (documented trade-off, same
+    operators).
 
     Plan: signature + banding on the increment only, then one
     ``left_semi`` against the store keyed by (band, band_key) —
@@ -1638,85 +1659,34 @@ def incremental_minhash_verified(
     ``committed_bands`` comes from the tiny band-key store, and
     ``committed_docs`` is the kept corpus itself (doc_id, text) read
     back from the warehouse — at scale the verify stage touches ONLY
-    candidate committed docs (left_semi before the shingle explode,
-    the ``minhash_lsh_pairs`` discipline applied bipartite).
+    candidate committed docs (the cross-pair form of
+    :func:`_verify_candidates`, the verify step of
+    :func:`minhash_lsh_pairs`).
 
     Returns (doc_id, committed_id, jaccard) with jaccard >= threshold
     — increment docs to drop (or route to keep-best) before commit.
     The join is bipartite (increment vs committed), so ids may overlap
     numerically across runs without ambiguity; shingles with combined
-    document frequency > ``max_df`` over the candidate-restricted
-    union are pruned (the `_jaccard_from_shingles` skew bound,
-    mirrored in the oracle).
+    document frequency > ``max_df`` over the candidate docs of both
+    sides are pruned (mirrored in the oracle).
     """
     bk_inc = band_keys(increment, n=n, num_hashes=num_hashes, bands=bands)
-    cand = (
+    cands = (
         bk_inc.join(
             committed_bands.select(
-                F.col("doc_id").alias("committed_id"), "band", "band_key"
+                F.col("doc_id").alias("doc_b"), "band", "band_key"
             ),
             ["band", "band_key"],
         )
-        .select("doc_id", "committed_id")
+        .select(F.col("doc_id").alias("doc_a"), "doc_b")
         .distinct()
     )
-    cand = cand.localCheckpoint(eager=True)
-    # r6: semi-join the RAW docs down to candidates BEFORE shingling
-    # (a join does not push below the explode — the minhash_lsh_pairs
-    # fix applied bipartite): the verify stage now tokenizes only
-    # candidate docs on each side instead of both full corpora
-    sh_i = _with_shingles(
-        increment.join(cand.select("doc_id"), "doc_id", "left_semi"), n
-    )
-    sh_c = _with_shingles(
-        committed_docs.select("doc_id", "text").join(
-            cand.select(F.col("committed_id").alias("doc_id")),
-            "doc_id",
-            "left_semi",
-        ),
-        n,
-    ).withColumnRenamed("doc_id", "committed_id")
-    # df cap over the candidate-restricted UNION (both sides contribute
-    # to a shingle's document frequency, as in the one-relation op)
-    dfreq = (
-        sh_i.select("shingle")
-        .unionAll(sh_c.select("shingle"))
-        .groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .filter(F.col("_df") <= max_df)
-        .select("shingle")
-    )
-    sh_i = sh_i.join(dfreq, "shingle", "left_semi")
-    sh_c = sh_c.join(dfreq, "shingle", "left_semi")
-    # r6: candidate-PAIR verify, bipartite (the _jaccard_from_shingles
-    # cands path): the shingle-keyed sh_i x sh_c join exploded to
-    # sum-over-shingles df_i*df_c rows before its groupBy; joining each
-    # candidate pair to the two per-doc pruned-shingle-set arrays and
-    # intersecting in-row is O(|cand| x doc_len). inter >= 1 reproduces
-    # the inner-join's shares-a-shingle precondition exactly.
-    set_i = sh_i.groupBy("doc_id").agg(
-        F.collect_list("shingle").alias("si")
-    )
-    set_c = sh_c.groupBy("committed_id").agg(
-        F.collect_list("shingle").alias("sc")
-    )
-    return (
-        cand.join(set_i, "doc_id")
-        .join(set_c, "committed_id")
-        .select(
-            "doc_id",
-            "committed_id",
-            F.size(F.array_intersect("si", "sc")).alias("inter"),
-            F.size("si").alias("sz_i"),
-            F.size("sc").alias("sz_c"),
-        )
-        .filter(F.col("inter") >= 1)
-        .select(
-            "doc_id",
-            "committed_id",
-            _jaccard("sz_i", "sz_c").alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    return _verify_candidates(
+        cands, increment, n, threshold, max_df, docs_b=committed_docs
+    ).select(
+        F.col("doc_a").alias("doc_id"),
+        F.col("doc_b").alias("committed_id"),
+        "jaccard",
     )
 
 

@@ -161,8 +161,8 @@ def winnow_verified_pairs(
     volume of a full shingle index (measured 110k-doc soak: recall 1.0
     in 28s vs MinHash+LSH's 0.972 in 295s), then the exact word
     ``shingle_n``-gram Jaccard is computed ONLY for candidate documents
-    (``dedup._verify_candidates``, the verify step of
-    ``dedup.minhash_lsh_pairs``) and pairs below ``threshold`` drop.
+    (``dedup._verify_candidates``, the verify step every near-dup key
+    shares) and pairs below ``threshold`` drop.
 
     Returns (doc_a, doc_b, jaccard).
 
@@ -182,8 +182,8 @@ def winnow_verified_pairs(
         df, k=k, w=w, min_shared=min_shared, max_df=max_df
     ).select("doc_a", "doc_b")
     return _verify_candidates(
-        df, cands, shingle_n, threshold, jaccard_max_df
-    )
+        cands, df, shingle_n, threshold, jaccard_max_df
+    ).select("doc_a", "doc_b", "jaccard")
 
 
 def cms_heavy_hitters(

@@ -6,6 +6,7 @@ for small dimensions."""
 import re
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -71,12 +72,19 @@ def test_override_join_is_broadcast(spark, sf001_dir):
     assert "BroadcastHashJoin" in plan
 
 
-def test_minhash_lsh_never_cartesian(spark, sf001_dir):
+@pytest.mark.parametrize(
+    "key",
+    ["minhash_lsh", "winnow_verified", "incremental_verified",
+     "decontaminate_fuzzy"],
+)
+def test_minhash_lsh_never_cartesian(spark, sf001_dir, key):
     # the whole point of LSH: candidates come from an equi-join on
-    # (band, band_key), never an all-pairs product
+    # (band, band_key) or shared fingerprints, never an all-pairs
+    # product, and the shared verify step joins each candidate pair to
+    # its two shingle sets by key
     from ocr_spark.driver_contract import QUERIES
 
-    plan = _formatted(QUERIES["minhash_lsh"](spark, sf001_dir))
+    plan = _formatted(QUERIES[key](spark, sf001_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 

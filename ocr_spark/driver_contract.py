@@ -310,7 +310,7 @@ _CROSS_JACCARD_CTES = """cand AS (
 def _feats_sql(rel: str, tag: str) -> str:
     """Hashed uni+bigram bucket-stream CTE chain over an arbitrary
     (doc_id, text) relation — mirrors ``textops._dsir_features``
-    (n_buckets=10000), parameterized so the nb_quality oracle can
+    (its 10,000 hash buckets), parameterized so the nb_quality oracle can
     featurize the pos / neg / scored relations independently. Ends
     with ``ft{tag}`` = (doc_id, bucket)."""
     return f"""
@@ -4951,11 +4951,11 @@ ORACLES: dict[str, str] = {
         FROM toks JOIN lp USING (term)
         GROUP BY doc_id
     """,
-    # mirrors textops.dsir_sample (n_buckets=10000, alpha=1, k=100,
+    # mirrors textops.dsir_sample (10,000 buckets, add-one, k=100,
     # target = doc_id % 7 == 0): hashed uni+bigram buckets, add-1
     # smoothed target/raw log-ratio, per-doc sum, deterministic Gumbel
     # top-k
-    # mirrors textops.nb_quality (n_buckets=10000, alpha=1) over the
+    # mirrors textops.nb_quality (10,000 buckets, add-one) over the
     # pos / md5-gibberish-neg / scored fixture of q_nb_quality
     "nb_quality": f"""
         WITH pos AS (
@@ -6401,7 +6401,7 @@ SELECT doc_id, inst_tokens,
 FROM fl
 """
 
-def _checksum_cte(rel: str, tag: str, shards: int = 64) -> str:
+def _checksum_cte(rel: str, tag: str) -> str:
     """Shard-manifest CTE over an arbitrary (doc_id, text) relation —
     ONE copy of the hashing scheme shared by the shard_checksums and
     manifest_diff oracles (shared-CTE discipline: the two gates must
@@ -6409,7 +6409,7 @@ def _checksum_cte(rel: str, tag: str, shards: int = 64) -> str:
     (shard, n_docs, n_chars, checksum)."""
     return f"""c{tag} AS (
     SELECT CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)
-                AS BIGINT) % {shards} AS shard,
+                AS BIGINT) % 64 AS shard,
            count(*) AS n_docs,
            CAST(SUM(COALESCE(length(text), 0)) AS BIGINT) AS n_chars,
            CAST(SUM(CAST('0x' || substr(

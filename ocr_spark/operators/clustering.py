@@ -240,7 +240,6 @@ def semantic_dedup_kmeans(
     k: int = 8,
     iters: int = 2,
     threshold: float = 0.8,
-    id_col: str = "doc_id",
     vec_dims: int | None = None,
 ) -> DataFrame:
     """SemDeDup as published (Abbas et al. '23 §3): k-means the
@@ -254,7 +253,9 @@ def semantic_dedup_kmeans(
     embeddings collapse into few sign buckets (the documented
     degenerate case) but still spread over k learned centroids. The
     pair space is sum over clusters of |c|^2, bounded by balanced
-    clusters instead of a ``max_bucket`` recall trade.
+    clusters; the LSH variant has no bound for a collapsed sign bucket
+    (only a direct ``cosine_near_dup_pairs`` call can cap one, with
+    ``max_bucket``).
 
     Keep rule is greedy-by-id within cluster (the paper keeps one
     random member per duplicate group; min-id is the deterministic
@@ -264,8 +265,8 @@ def semantic_dedup_kmeans(
     assigned = kmeans_assign(
         embeddings, k=k, iters=iters, vec_dims=d
     ).select("vec_id", "cid")
-    losers = _cluster_losers(embeddings, assigned, threshold, d, id_col)
-    return docs.join(losers, id_col, "left_anti")
+    losers = _cluster_losers(embeddings, assigned, threshold, d)
+    return docs.join(losers, "doc_id", "left_anti")
 
 
 def _cluster_losers(
@@ -273,10 +274,10 @@ def _cluster_losers(
     assigned: DataFrame,
     threshold: float,
     d: int,
-    id_col: str,
 ) -> DataFrame:
     """Within-cluster near-duplicate LOSERS: for every pair in the same
-    cluster with rounded cosine >= ``threshold``, the larger vec_id.
+    cluster with rounded cosine >= ``threshold``, the larger vec_id as
+    ``doc_id``.
     The cluster join bounds the pair space to sum over clusters of
     |c|^2 (the SemDeDup scale argument).
 
@@ -297,7 +298,7 @@ def _cluster_losers(
     emb_n = _with_norm(embeddings.select("vec_id", "embedding"), dims=d)
     return (
         _near_pairs(cand, emb_n, d, threshold)
-        .select(F.col("doc_b").alias(id_col))
+        .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )
 
@@ -309,7 +310,6 @@ def d4_select(
     iters: int = 2,
     threshold: float = 0.8,
     prune_frac: float = 0.2,
-    id_col: str = "doc_id",
     vec_dims: int | None = None,
 ) -> DataFrame:
     """D4 (Tirumala et al. '23, arXiv:2308.12284): SemDeDup then SSL
@@ -344,9 +344,9 @@ def d4_select(
     assigned = kmeans_assign(
         embeddings, k=k, iters=iters, vec_dims=d
     ).localCheckpoint()
-    losers = _cluster_losers(embeddings, assigned, threshold, d, id_col)
+    losers = _cluster_losers(embeddings, assigned, threshold, d)
     surv = assigned.join(
-        losers.withColumnRenamed(id_col, "vec_id"), "vec_id", "left_anti"
+        losers.withColumnRenamed("doc_id", "vec_id"), "vec_id", "left_anti"
     )
     w = Window.partitionBy("cid")
     rk = F.row_number().over(
@@ -357,16 +357,15 @@ def d4_select(
         surv.withColumn("rk", rk)
         .withColumn("cut", F.floor(F.lit(float(prune_frac)) * n))
         .filter(F.col("rk") <= F.col("cut"))
-        .select(F.col("vec_id").alias(id_col))
+        .select(F.col("vec_id").alias("doc_id"))
     )
     dropped = losers.unionByName(protos)
-    return docs.join(dropped, id_col, "left_anti")
+    return docs.join(dropped, "doc_id", "left_anti")
 
 
 def embedding_outliers(
     embeddings: DataFrame,
     frac: float = 0.2,
-    label_col: str = "label",
     vec_dims: int | None = None,
 ) -> DataFrame:
     """Embedding-space outlier QA: flag the ``frac`` of each label's
@@ -392,7 +391,7 @@ def embedding_outliers(
     """
     d = _probe_dims(embeddings, "embedding", vec_dims)
     emb = embeddings.select(
-        "vec_id", F.col(label_col).alias("label"), "embedding"
+        "vec_id", "label", "embedding"
     ).withColumn("nrm", _norm_expr("embedding", d))
     cent = (
         emb.select("label", F.posexplode("embedding").alias("pos", "v"))

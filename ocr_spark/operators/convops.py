@@ -78,13 +78,12 @@ def conv_filter(
     max_turns: int = 64,
     require_first: str | None = "user",
     require_alternating: bool = True,
-    drop_empty: bool = True,
 ) -> DataFrame:
     """Structural conversation gate: keep only the turns of
     conversations that pass :func:`conv_stats`-derived checks —
     turn count in [min_turns, max_turns], opener role
     ``require_first`` (None disables), zero alternation violations
-    (``require_alternating``), zero empty turns (``drop_empty``).
+    (``require_alternating``), and always zero empty turns.
 
     Returns the ORIGINAL turn rows of surviving conversations plus
     their n_turns. Scale shape: the stats relation is conversation-
@@ -101,21 +100,14 @@ def conv_filter(
         cond = cond & (F.col("first_role") == require_first)
     if require_alternating:
         cond = cond & (F.col("n_violations") == 0)
-    if drop_empty:
-        cond = cond & (F.col("n_empty") == 0)
+    cond = cond & (F.col("n_empty") == 0)
     kept = stats.filter(cond).select("conv_id", "n_turns")
     return df.join(kept, "conv_id").select(
         "conv_id", "turn_idx", "role", "text", "n_turns"
     )
 
 
-def conv_near_dup(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    idx_col: str = "turn_idx",
-    text_col: str = "text",
-    threshold: float = 0.05,
-) -> DataFrame:
+def conv_near_dup(df: DataFrame) -> DataFrame:
     """Conversation-level NEAR-dup pairs — the fuzzy member of the
     transcript dedup family (:func:`ocr_spark.operators.dedup.conv_dedup`
     is the exact one): re-rolled sessions that share most turns but
@@ -145,13 +137,13 @@ def conv_near_dup(
 
     df = _ensure_parallelism(df)
     canon = F.regexp_replace(
-        F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))),
+        F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))),
         r"\s+",
         " ",
     )
     docs = (
-        df.groupBy(conv_col)
-        .agg(F.array_join(_turn_md5s(idx_col, canon), " ").alias("text"))
-        .select(F.col(conv_col).alias("doc_id"), "text")
+        df.groupBy("conv_id")
+        .agg(F.array_join(_turn_md5s(canon), " ").alias("text"))
+        .select(F.col("conv_id").alias("doc_id"), "text")
     )
-    return minhash_lsh_pairs(docs, threshold=threshold)
+    return minhash_lsh_pairs(docs)

@@ -38,6 +38,15 @@ SHINGLES = (
     "i -> concat_ws(' ', slice(toks, i + 1, {n})))"
 )
 
+# The MinHash family's one LSH setting: word 3-gram shingles, 16 hashes
+# in 8 bands of 2. Band keys from band_keys (the incremental store and
+# fuzzy decontamination) stay join-compatible with minhash_lsh_pairs'
+# only while every caller uses it.
+MINHASH_N, MINHASH_HASHES, MINHASH_BANDS = 3, 16, 8
+# posting-list cap of the Jaccard joins: shingles that more documents
+# hold are pruned
+SHINGLE_MAX_DF = 1000
+
 
 def exact_dedup(df: DataFrame) -> DataFrame:
     """Exact duplicate groups by content fingerprint.
@@ -57,11 +66,11 @@ def exact_dedup(df: DataFrame) -> DataFrame:
 
 
 def dedup_keep_best(
-    df: DataFrame, quality_col: str, id_col: str = "doc_id"
+    df: DataFrame, quality_col: str
 ) -> DataFrame:
     """Exact dedup with a keep-BEST policy: within each content-
     fingerprint group the survivor is the row with the highest
-    ``quality_col`` (ties → min ``id_col``), not the min-id row
+    ``quality_col`` (ties → min ``doc_id``), not the min-id row
     ``exact_dedup`` keeps. The production curation rule: among
     canonically-identical copies keep the one the quality signal ranks
     highest (the longer / cleaner-source / later-crawl copy).
@@ -78,10 +87,10 @@ def dedup_keep_best(
         .groupBy("fingerprint")
         .agg(
             F.max_by(
-                id_col,
+                "doc_id",
                 F.struct(
                     F.col(quality_col).alias("q"),
-                    (-F.col(id_col)).alias("nid"),
+                    (-F.col("doc_id")).alias("nid"),
                 ),
             ).alias("keep_id"),
             F.max(quality_col).alias("best_quality"),
@@ -90,14 +99,14 @@ def dedup_keep_best(
     )
 
 
-def _turn_md5s(idx_col: str, canon):
+def _turn_md5s(canon):
     """Aggregate: one conversation's per-turn ``md5(canon)`` in
-    ``idx_col`` order (duplicate indexes tie-break on the md5)."""
+    ``turn_idx`` order (duplicate indexes tie-break on the md5)."""
     return F.transform(
         F.sort_array(
             F.collect_list(
                 F.struct(
-                    F.col(idx_col).cast("long").alias("i"),
+                    F.col("turn_idx").cast("long").alias("i"),
                     F.md5(canon).alias("c"),
                 )
             )
@@ -106,12 +115,7 @@ def _turn_md5s(idx_col: str, canon):
     )
 
 
-def conv_dedup(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    idx_col: str = "turn_idx",
-    text_col: str = "text",
-) -> DataFrame:
+def conv_dedup(df: DataFrame) -> DataFrame:
     """Whole-CONVERSATION exact dedup — the transcript-granularity
     member of the dedup family (turn-level = ``dedup_turns``,
     document-level = ``exact_dedup``): two conversations are duplicates
@@ -120,13 +124,13 @@ def conv_dedup(
 
     Fingerprint = md5 over the PER-TURN md5s of the canonical forms
     (lowercased, whitespace collapsed — the ``with_fingerprint``
-    convention) joined with ``\\n`` in ``idx_col`` order. Hashing each
+    convention) joined with ``\\n`` in ``turn_idx`` order. Hashing each
     turn BEFORE the concat bounds the aggregated row at 33 bytes per
     turn regardless of turn text size — a 10k-turn text-heavy whale
     conversation collects ~330 KB, not multi-GB of raw text. Order
     comes from ``sort_array`` over collected (idx, turn_md5) structs —
     ``collect_list`` alone is partition-order-nondeterministic and
-    would break both determinism and the oracle; duplicate ``idx_col``
+    would break both determinism and the oracle; duplicate ``turn_idx``
     rows tie-break on the turn md5 (deterministic on both engines).
 
     Returns (fp, keep_conv, n_dups): min conv id survives. One
@@ -134,13 +138,13 @@ def conv_dedup(
     map-side-partial; the in-row join is conversation-bounded.
     """
     canon = F.regexp_replace(
-        F.lower(F.trim(F.col(text_col))), r"\s+", " "
+        F.lower(F.trim(F.col("text"))), r"\s+", " "
     )
-    fps = _ensure_parallelism(df).groupBy(conv_col).agg(
-        F.md5(F.array_join(_turn_md5s(idx_col, canon), "\n")).alias("fp")
+    fps = _ensure_parallelism(df).groupBy("conv_id").agg(
+        F.md5(F.array_join(_turn_md5s(canon), "\n")).alias("fp")
     )
     return fps.groupBy("fp").agg(
-        F.min(conv_col).alias("keep_conv"),
+        F.min("conv_id").alias("keep_conv"),
         F.count(F.lit(1)).alias("n_dups"),
     )
 
@@ -222,15 +226,15 @@ def _jaccard_from_shingles(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    n: int = 3,
     threshold: float = 0.05,
-    max_df: int = 1000,
 ) -> DataFrame:
-    """Near-duplicate pairs by word-n-gram Jaccard similarity.
+    """Near-duplicate pairs by word-3-gram Jaccard similarity.
 
     Returns (doc_a, doc_b, inter, size_a, size_b, jaccard>=threshold).
     """
-    return _jaccard_from_shingles(_with_shingles(df, n), threshold, max_df)
+    return _jaccard_from_shingles(
+        _with_shingles(df, MINHASH_N), threshold, SHINGLE_MAX_DF
+    )
 
 
 def _minhash_agg(sh: DataFrame, num_hashes: int) -> DataFrame:
@@ -305,15 +309,15 @@ def _explode_bands(
              F.col("bk.band_key").alias("band_key"))
 
 
-def band_keys(
-    df: DataFrame, n: int = 3, num_hashes: int = 16, bands: int = 8
-) -> DataFrame:
+def band_keys(df: DataFrame) -> DataFrame:
     """(doc_id, band, band_key) LSH band keys for a corpus — the unit
     the incremental near-dup store commits per run (same md5-slice
     hash family as :func:`minhash_lsh_pairs`, so stored keys stay
     join-compatible across runs)."""
     return _explode_bands(
-        _minhash_agg(_with_shingles(df, n), num_hashes), num_hashes, bands
+        _minhash_agg(_with_shingles(df, MINHASH_N), MINHASH_HASHES),
+        MINHASH_HASHES,
+        MINHASH_BANDS,
     )
 
 
@@ -432,11 +436,11 @@ def _verify_candidates(
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 8,
+    n: int = MINHASH_N,
+    num_hashes: int = MINHASH_HASHES,
+    bands: int = MINHASH_BANDS,
     threshold: float = 0.05,
-    max_df: int = 1000,
+    max_df: int = SHINGLE_MAX_DF,
 ) -> DataFrame:
     """MinHash+LSH candidate generation + exact-Jaccard verification.
 
@@ -454,13 +458,10 @@ def minhash_lsh_pairs(
 
 def minhash_estimate_pairs(
     df: DataFrame,
-    n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 8,
     min_match: int = 1,
 ) -> DataFrame:
     """LSH candidate pairs scored by SIGNATURE AGREEMENT — matching
-    components / ``num_hashes`` is the unbiased Jaccard estimator
+    components / 16 (``MINHASH_HASHES``) is the unbiased Jaccard estimator
     (P[component match] = J per MinHash element, Broder '97) and the
     verify path that stays CONSTANT-WIDTH at 100 TB: scoring a pair
     reads only the two k-component signatures (2*k*8 bytes, however
@@ -486,21 +487,21 @@ def minhash_estimate_pairs(
     # would be computed once and persisted" production note below made
     # real (the relation is narrow: doc_id + k 8-char slices)
     sig = _minhash_agg(
-        _with_shingles(df, n), num_hashes
+        _with_shingles(df, MINHASH_N), MINHASH_HASHES
     ).localCheckpoint(eager=True)
     cands = _band_candidates(
-        _explode_bands(sig, num_hashes, bands)
+        _explode_bands(sig, MINHASH_HASHES, MINHASH_BANDS)
     ).localCheckpoint(eager=True)  # cf. _verify_candidates
     sa = sig.select(
         F.col("doc_id").alias("doc_a"),
-        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(num_hashes)],
+        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(MINHASH_HASHES)],
     )
     sb = sig.select(
         F.col("doc_id").alias("doc_b"),
-        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(num_hashes)],
+        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(MINHASH_HASHES)],
     )
     n_match = None
-    for i in range(num_hashes):
+    for i in range(MINHASH_HASHES):
         t = F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
         n_match = t if n_match is None else n_match + t
     return (
@@ -512,7 +513,7 @@ def minhash_estimate_pairs(
             "doc_a",
             "doc_b",
             "n_match",
-            F.round(F.col("n_match") / F.lit(num_hashes), 4).alias(
+            F.round(F.col("n_match") / F.lit(MINHASH_HASHES), 4).alias(
                 "est_jaccard"
             ),
         )
@@ -630,7 +631,6 @@ def line_dedup(df: DataFrame, max_df: int = 1) -> DataFrame:
 
 def intra_doc_dedup(
     df: DataFrame,
-    text_col: str = "text",
     whale_lines: int = 10_000,
 ) -> DataFrame:
     """Intra-document repeated-line removal — the WITHIN-page half of
@@ -659,7 +659,7 @@ def intra_doc_dedup(
     still no exchange; path equality is pytest-pinned by forcing
     ``whale_lines=0``.
     """
-    lines = F.split(F.col(text_col), "\n")
+    lines = F.split(F.col("text"), "\n")
     staged = _ensure_parallelism(df).withColumn("_lines", lines)
     kept = (
         "filter(_lines, (x, i) -> array_position(_lines, x) = i + 1)"
@@ -673,7 +673,7 @@ def intra_doc_dedup(
         .alias("n_dropped"),
     )
     whales = staged.filter(F.size("_lines") > whale_lines).select(
-        "doc_id", F.col(text_col).alias("text")
+        "doc_id", "text"
     )
     big = whales.mapInPandas(
         _dedup_lines_linear,
@@ -972,11 +972,7 @@ def decontaminate(
 def decontaminate_fuzzy(
     df: DataFrame,
     benchmark: DataFrame,
-    n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 8,
     threshold: float = 0.3,
-    max_df: int = 1000,
 ) -> DataFrame:
     """FUZZY benchmark decontamination: flag corpus documents whose
     n-gram Jaccard against ANY eval-set document reaches ``threshold``
@@ -998,22 +994,18 @@ def decontaminate_fuzzy(
     for docs that banded with an eval doc.
 
     Recall envelope is MinHash's: a contaminated doc is found iff it
-    shares >= 1 of the ``bands`` band keys — P ~ 1-(1-J^r)^b with
-    r = num_hashes/bands. For high-overlap leaks (J >= 0.5 at the
-    defaults) that is > 0.9; raise ``bands`` (or num_hashes) for lower
-    thresholds. The exact filter remains the complement for verbatim
-    short spans.
+    shares >= 1 of the b = 8 band keys — P ~ 1-(1-J^r)^b with
+    r = 16/8 = 2 rows per band. For high-overlap leaks (J >= 0.5) that
+    is > 0.9; lower thresholds need more bands, which
+    ``MINHASH_BANDS`` sets for the whole family. The exact filter
+    remains the complement for verbatim short spans.
     """
     bench = benchmark.select(F.col("bench_id").alias("doc_id"), "text")
     hits = incremental_minhash_verified(
         df,
-        band_keys(bench, n=n, num_hashes=num_hashes, bands=bands),
+        band_keys(bench),
         bench,
-        n=n,
-        num_hashes=num_hashes,
-        bands=bands,
         threshold=threshold,
-        max_df=max_df,
     )
     return _flag_ids(df.select("doc_id"), hits, "contaminated")
 
@@ -1058,92 +1050,115 @@ def connected_components(
     (doc_a, doc_b). Returns (doc_id, group_id) where group_id is the
     minimum doc_id of the node's component.
 
-    Each round does min-label propagation (every node takes the min of
-    its own and its neighbours' labels) followed by POINTER JUMPING
-    (label <- label's label): pointer depth doubles per round, so
-    convergence is O(log diameter) rounds instead of O(diameter) — a
-    20-round budget covers ~2^20-diameter chains, far beyond any real
-    near-dup graph. Every label is itself a node id, so the jump is a
-    self-join of the label relation. Each round localCheckpoints to
-    truncate lineage (cheap joins over a small relation, not a growing
-    plan); convergence is detected with a changed-row count and
+    Alternating large-star / small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC 2014). Each round
+    rewrites the edge list (hi, lo), hi > lo, so that every component
+    stays connected, until each component is a star around its
+    minimum node:
+
+    - large-star: each edge (hi, lo) becomes (hi, m), m the minimum of
+      lo's closed neighbourhood;
+    - small-star: each node hi and its other lower neighbours link to
+      the least of those neighbours.
+
+    Each step is a groupBy-min plus a join over the edge list, and
+    neither step adds edges. No neighbourhood is ever collected into
+    one row, so a giant component costs its edge count, not one task's
+    memory. The paper bounds the rounds by O(log^2 n). In practice they
+    track log n: a 10^4-node path with shuffled ids converges in 11
+    rounds. Every step localCheckpoints to truncate lineage. The
+    checkpoints carry their plans' size estimates forward; here these
+    grow by a constant factor per round (each join is the edge list
+    against a per-node aggregate of itself), so a longer budget stays
+    cheap to plan. The loop stops once the edge list is a star forest
+    (no node has two parents, no parent has a parent), and
     NON-convergence raises rather than returning truncated groups.
     """
-    edges = pairs.select("doc_a", "doc_b").unionByName(
+    nodes = pairs.select(F.col("doc_a").alias("doc_id")).unionByName(
+        pairs.select(F.col("doc_b").alias("doc_id"))
+    )
+    edges = (
         pairs.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
+            F.greatest("doc_a", "doc_b").alias("hi"),
+            F.least("doc_a", "doc_b").alias("lo"),
         )
-    ).localCheckpoint(eager=True)
-    labels = (
-        edges.select(F.col("doc_a").alias("doc_id"))
+        .filter(F.col("hi") != F.col("lo"))
         .distinct()
-        .withColumn("group_id", F.col("doc_id"))
         .localCheckpoint(eager=True)
     )
-    changed = -1
+    bad = -1
     for _ in range(max_iters):
-        nbr = edges.join(
-            labels.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("group_id").alias("nbr_group"),
-            ),
-            "doc_b",
-        ).select(
-            F.col("doc_a").alias("doc_id"),
-            F.col("nbr_group").alias("group_id"),
+        nbrs = edges.select(
+            F.col("lo").alias("u"), F.col("hi").alias("v")
+        ).unionByName(
+            edges.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
         )
-        prop = (
-            labels.unionByName(nbr)
-            .groupBy("doc_id")
-            .agg(F.min("group_id").alias("group_id"))
+        closed_min = nbrs.groupBy("u").agg(
+            F.least(F.min("v"), F.col("u")).alias("m")
         )
-        # pointer jumping: follow the label one hop. r6: the lookup is
-        # the PREVIOUS iteration's checkpointed ``labels`` — looking up
-        # into ``prop`` itself required checkpointing prop first (the
-        # Catalyst Union-rewrite self-join bug), one extra eager job
-        # per round on this tiny relation. The one-round-stale lookup
-        # compresses paths almost as fast (at most one extra round to
-        # the SAME fixed point — the convergence test below is exact,
-        # and the fixed point is the component min either way).
-        lookup = labels.select(
-            F.col("doc_id").alias("group_id"),
-            F.col("group_id").alias("_gg"),
-        )
-        new = (
-            prop.join(lookup, "group_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce("_gg", "group_id").alias("group_id"),
-            )
+        edges = (
+            edges.join(closed_min.withColumnRenamed("u", "lo"), "lo")
+            .select("hi", F.col("m").alias("lo"))
+            .distinct()
             .localCheckpoint(eager=True)
         )
-        changed = (
-            new.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.group_id") != F.col("o.group_id"))
+        low_min = edges.groupBy("hi").agg(F.min("lo").alias("m"))
+        edges = (
+            edges.join(low_min, "hi")
+            .select(F.col("lo").alias("hi"), F.col("m").alias("lo"))
+            .filter(F.col("hi") != F.col("lo"))
+            .unionByName(low_min.select("hi", F.col("m").alias("lo")))
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        roles = edges.select(
+            F.col("hi").alias("x"),
+            F.lit(1).alias("up"),
+            F.lit(0).alias("down"),
+        ).unionByName(
+            edges.select(
+                F.col("lo").alias("x"),
+                F.lit(0).alias("up"),
+                F.lit(1).alias("down"),
+            )
+        )
+        bad = (
+            roles.groupBy("x")
+            .agg(F.sum("up").alias("up"), F.max("down").alias("down"))
+            .filter(
+                (F.col("up") > 1) | ((F.col("up") > 0) & (F.col("down") > 0))
+            )
             .count()
         )
-        labels = new
-        if changed == 0:
+        if bad == 0:
             break
     else:
-        # diameter > 2^max_iters (or a bug) would exit here with WRONG
-        # labels — fail loudly rather than return truncated groups
         raise RuntimeError(
             f"connected_components did not converge in {max_iters} "
-            f"rounds ({changed} labels still changing); raise max_iters"
+            f"rounds ({bad} nodes not yet in a star); raise max_iters"
         )
-    return labels
+    # star forest: every non-root is an edge's hi; roots label themselves
+    roots = nodes.join(
+        edges.select(F.col("hi").alias("doc_id")), "doc_id", "left_anti"
+    ).distinct()
+    return (
+        edges.select(
+            F.col("hi").alias("doc_id"), F.col("lo").alias("group_id")
+        )
+        .unionByName(
+            roots.select("doc_id", F.col("doc_id").alias("group_id"))
+        )
+        .localCheckpoint(eager=True)
+    )
 
 
 def near_dup_groups(
     df: DataFrame,
-    n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 8,
+    n: int = MINHASH_N,
+    num_hashes: int = MINHASH_HASHES,
+    bands: int = MINHASH_BANDS,
     threshold: float = 0.05,
-    max_df: int = 1000,
-    max_iters: int = 20,
+    max_df: int = SHINGLE_MAX_DF,
 ) -> DataFrame:
     """Connected components over the MinHash+LSH near-dup pair graph:
     every document that appears in a verified pair gets a ``group_id`` =
@@ -1153,34 +1168,32 @@ def near_dup_groups(
     The edge list is LSH-verified pairs — SMALL by the LSH premise —
     so the iterative part runs on a relation orders of magnitude
     smaller than the corpus. See ``connected_components`` for the
-    label-propagation + pointer-jumping loop.
+    large-star / small-star loop.
     """
     pairs = minhash_lsh_pairs(
         df, n=n, num_hashes=num_hashes, bands=bands,
         threshold=threshold, max_df=max_df,
     )
-    return connected_components(pairs, max_iters=max_iters)
+    return connected_components(pairs)
 
 
-def simhash(df: DataFrame, bits: int = 16) -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """SimHash fingerprint over word tokens (md5 bit sampling;
     Charikar, "Similarity estimation techniques from rounding
     algorithms", STOC 2002 — the near-dup variant per Manku/Jain/Sarma,
     WWW 2007).
 
-    The fingerprint sets bit_j where the vote is positive. ``bits`` <=
-    63 packs into a non-negative long; bit 63 of a 64-bit fingerprint
-    would need the sign bit (use ``simhash_hamming_pairs``, which works
-    band-wise and never packs, for 64-bit near-dup detection).
+    The fingerprint sets bit_j (j < 16) where the vote is positive
+    and packs into a non-negative long (use ``simhash_hamming_pairs``,
+    which works band-wise and never packs, for 64-bit near-dup
+    detection).
     """
-    if bits > 63:
-        raise ValueError("simhash packs into a signed long: bits <= 63")
-    agg = _simhash_votes(df, bits)
+    agg = _simhash_votes(df, 16)
     return agg.select(
         "doc_id",
         sum(
             (F.when(F.col(f"s{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0)))
-            for j in range(bits)
+            for j in range(16)
         ).cast("long").alias("simhash"),
     )
 
@@ -1190,7 +1203,6 @@ def simhash_hamming_pairs(
     bits: int = 64,
     bands: int = 4,
     max_hamming: int = 3,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """64-bit SimHash near-duplicate pairs via the banded-Hamming bucket
     join (Manku/Jain/Sarma, "Detecting near-duplicates for web
@@ -1210,13 +1222,12 @@ def simhash_hamming_pairs(
     Skew note: candidate volume is quadratic IN EACH BUCKET. On
     low-entropy corpora (heavily templated text) a 16-bit band value can
     collect thousands of docs, and the pigeonhole guarantee forces all
-    of those pairs through verification — exactness demands it. Two
-    levers at scale: (a) raise ``bits`` so bands are wider (e.g. 96/4 →
+    of those pairs through verification — exactness demands it. The
+    lever at scale is to raise ``bits`` so bands are wider (e.g. 96/4 →
     24-bit bands, 256x the value space; md5 supplies up to 128 bits) at
-    a stricter relative threshold, or (b) set ``max_bucket`` to drop
-    buckets larger than that many docs — EXPLICITLY trading recall
-    (a pair whose only shared band is dropped is lost); leave None for
-    the exact oracle-checked semantics.
+    a stricter relative threshold. A bucket's doc-pair expansion is
+    already cut into 1024-blocks (below), so one hot bucket cannot
+    serialize one task.
     """
     if bits % bands:
         raise ValueError("bits must divide evenly into bands")
@@ -1249,37 +1260,6 @@ def simhash_hamming_pairs(
     ham = sum(
         F.expr(f"bit_count(a.band{i} ^ b.band{i})") for i in range(bands)
     ).cast("int")
-    if max_bucket is not None:
-        # capped path (recall-trading variant): bucket populations are
-        # bounded by max_bucket, so the doc-level bucket join cannot
-        # produce a straggler key and the original shape stands.
-        banded = wide.select(
-            "doc_id",
-            *[F.col(f"band{b}") for b in range(bands)],
-            F.explode(entries).alias("e"),
-        ).select("doc_id", *[f"band{b}" for b in range(bands)],
-                 F.col("e.band").alias("band"), F.col("e.val").alias("val"))
-        sizes = banded.groupBy("band", "val").agg(
-            F.count(F.lit(1)).alias("_bn")
-        )
-        banded = (
-            banded.join(sizes, ["band", "val"])
-            .filter(F.col("_bn") <= max_bucket)
-            .drop("_bn")
-        )
-        a = banded.alias("a")
-        b = banded.alias("b")
-        return (
-            a.join(b, ["band", "val"])
-            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                ham.alias("hamming"),
-            )
-            .filter(F.col("hamming") <= max_hamming)
-            .distinct()
-        )
     # r6: FINGERPRINT-GROUP candidate join. The doc-level bucket
     # self-join is quadratic in bucket population — measured at sf1.0
     # the largest band bucket holds 16,242 of 50k docs, sum-over-
@@ -1607,9 +1587,6 @@ def incremental_exact_dedup(
 def incremental_minhash_flags(
     increment: DataFrame,
     committed_bands: DataFrame,
-    n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 8,
 ) -> DataFrame:
     """Near-dup screening of an increment against the committed corpus
     via the MinHash band-key store: an increment doc sharing ANY
@@ -1631,7 +1608,7 @@ def incremental_minhash_flags(
     ``left_semi`` against the store keyed by (band, band_key) —
     uniform keys, partition-prunable by run, never a pairwise join.
     """
-    bk = band_keys(increment, n=n, num_hashes=num_hashes, bands=bands)
+    bk = band_keys(increment)
     hits = bk.join(
         committed_bands.select("band", "band_key"),
         ["band", "band_key"],
@@ -1646,11 +1623,8 @@ def incremental_minhash_verified(
     increment: DataFrame,
     committed_bands: DataFrame,
     committed_docs: DataFrame,
-    n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 8,
     threshold: float = 0.05,
-    max_df: int = 1000,
+    max_df: int = SHINGLE_MAX_DF,
 ) -> DataFrame:
     """VERIFIED incremental near-dup: the
     :func:`incremental_minhash_flags` band candidates, then exact
@@ -1670,7 +1644,7 @@ def incremental_minhash_verified(
     document frequency > ``max_df`` over the candidate docs of both
     sides are pruned (mirrored in the oracle).
     """
-    bk_inc = band_keys(increment, n=n, num_hashes=num_hashes, bands=bands)
+    bk_inc = band_keys(increment)
     cands = (
         bk_inc.join(
             committed_bands.select(
@@ -1682,7 +1656,7 @@ def incremental_minhash_verified(
         .distinct()
     )
     return _verify_candidates(
-        cands, increment, n, threshold, max_df, docs_b=committed_docs
+        cands, increment, MINHASH_N, threshold, max_df, docs_b=committed_docs
     ).select(
         F.col("doc_a").alias("doc_id"),
         F.col("doc_b").alias("committed_id"),
@@ -1693,13 +1667,6 @@ def incremental_minhash_verified(
 def near_dup_keep_best(
     docs: DataFrame,
     quality_col: str = "quality",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 8,
-    threshold: float = 0.05,
-    max_df: int = 1000,
-    max_iters: int = 20,
 ) -> DataFrame:
     """Near-duplicate resolution with a keep-BEST policy — the
     production curation rule (cf. Dolma, Soldaini et al. '24
@@ -1707,7 +1674,7 @@ def near_dup_keep_best(
     cluster): connected components over the verified MinHash+LSH pair
     graph define the duplicate clusters, and within each cluster the
     survivor is the highest-``quality_col`` member (ties -> smaller
-    ``id_col``), not the min-id member :func:`near_dup_groups` would
+    ``doc_id``), not the min-id member :func:`near_dup_groups` would
     canonicalize. Documents in no cluster are kept untouched.
 
     This closes the quality×near-dup matrix: ``dedup_keep_best`` is
@@ -1725,10 +1692,7 @@ def near_dup_keep_best(
     re-execute its corpus-scanning quality join (the edit_dedup
     lesson: checkpoint a derived small relation before fanning out).
     """
-    groups = near_dup_groups(
-        docs, n=n, num_hashes=num_hashes, bands=bands,
-        threshold=threshold, max_df=max_df, max_iters=max_iters,
-    )
+    groups = near_dup_groups(docs)
     # r6: semi-join the quality relation down to group members FIRST —
     # Catalyst pushes a LeftSemi below the quality Project
     # (PushDownLeftSemiAntiJoin), so a derived quality expression
@@ -1737,7 +1701,7 @@ def near_dup_keep_best(
     # the inner join then only attaches group_id
     members = groups.join(
         docs.select(
-            F.col(id_col).alias("doc_id"), F.col(quality_col).alias("_q")
+            "doc_id", F.col(quality_col).alias("_q")
         ).join(groups.select("doc_id"), "doc_id", "left_semi"),
         "doc_id",
     ).localCheckpoint()
@@ -1752,9 +1716,9 @@ def near_dup_keep_best(
     losers = (
         members.join(keep, "group_id")
         .filter(F.col("doc_id") != F.col("keep_id"))
-        .select(F.col("doc_id").alias(id_col))
+        .select("doc_id")
     )
-    return docs.join(losers, id_col, "left_anti")
+    return docs.join(losers, "doc_id", "left_anti")
 
 
 def template_families(

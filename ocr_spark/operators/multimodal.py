@@ -66,7 +66,7 @@ def encode_fake_media(df: DataFrame, text_col: str = "text",
     return df.withColumn("kind", F.lit(kind)).withColumn("payload", payload)
 
 
-def decode_media(df: DataFrame, id_col: str = "media_id") -> DataFrame:
+def decode_media(df: DataFrame) -> DataFrame:
     """Parse payload headers into typed metadata (map-only, no shuffle).
 
     For real media this is where PIL/av would run; the fake-header
@@ -75,7 +75,7 @@ def decode_media(df: DataFrame, id_col: str = "media_id") -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids = pdf[id_col].to_numpy()
+            ids = pdf["media_id"].to_numpy()
             kinds = pdf["kind"].to_numpy()
             out = {
                 "media_id": [], "kind": [], "n_bytes": [], "sha256": [],
@@ -106,12 +106,13 @@ def decode_media(df: DataFrame, id_col: str = "media_id") -> DataFrame:
                 out["codec"].append(codec)
             yield pd.DataFrame(out)
 
-    return df.select(id_col, "kind", "payload").mapInPandas(run, MEDIA_META)
+    return df.select("media_id", "kind", "payload").mapInPandas(
+        run, MEDIA_META
+    )
 
 
 def sample_frames(
     df: DataFrame,
-    id_col: str = "media_id",
     frame_bytes: int = FRAME_BYTES,
     every_n: int = 1,
 ) -> DataFrame:
@@ -123,7 +124,7 @@ def sample_frames(
         for pdf in batches:
             ids, frames, idxs, lens = [], [], [], []
             for mid, buf in zip(
-                pdf[id_col].to_numpy(), pdf["payload"].to_numpy()
+                pdf["media_id"].to_numpy(), pdf["payload"].to_numpy()
             ):
                 b = bytes(buf) if buf is not None else b""
                 body = b[18:] if b.startswith(_MAGIC) else b
@@ -143,11 +144,11 @@ def sample_frames(
                 }
             )
 
-    return df.select(id_col, "payload").mapInPandas(run, FRAME_SCHEMA)
+    return df.select("media_id", "payload").mapInPandas(run, FRAME_SCHEMA)
 
 
 def extract_features(
-    df: DataFrame, id_col: str = "media_id", dims: int = 8
+    df: DataFrame, dims: int = 8
 ) -> DataFrame:
     """Deterministic fixed-width feature vector per payload (the
     embedding-extraction shape; a real model would run here)."""
@@ -156,7 +157,7 @@ def extract_features(
         for pdf in batches:
             ids, vecs = [], []
             for mid, buf in zip(
-                pdf[id_col].to_numpy(), pdf["payload"].to_numpy()
+                pdf["media_id"].to_numpy(), pdf["payload"].to_numpy()
             ):
                 b = bytes(buf) if buf is not None else b""
                 body = b[18:] if b.startswith(_MAGIC) else b
@@ -177,4 +178,4 @@ def extract_features(
                 vecs.append([float(v) for v in vec])
             yield pd.DataFrame({"media_id": ids, "feature": vecs})
 
-    return df.select(id_col, "payload").mapInPandas(run, FEATURE_SCHEMA)
+    return df.select("media_id", "payload").mapInPandas(run, FEATURE_SCHEMA)

@@ -91,21 +91,19 @@ def as_of_join(
 
 def sessionize(
     events: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
-    order_tiebreak: str = "event_id",
     gap_minutes: int = 30,
 ) -> DataFrame:
-    """Gap-based sessionization: consecutive events of one key belong
-    to the same session while the inter-event gap stays under
-    ``gap_minutes``; a longer silence starts a new session (the
-    standard web-analytics / agent-episode segmentation).
+    """Gap-based sessionization: consecutive events (by ``ts``, ties by
+    ``event_id``) of one ``user_id`` belong to the same session while
+    the inter-event gap stays under ``gap_minutes``; a longer silence
+    starts a new session (the standard web-analytics / agent-episode
+    segmentation).
 
     Lag + cumulative-sum of session-start flags inside one window —
     two passes over each key partition, no self-join, no explosion.
     Returns the input plus ``session_idx`` (0-based per key).
     """
-    w = Window.partitionBy(key).orderBy(ts, order_tiebreak)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # exact integer microseconds (unix_micros == DuckDB epoch_us):
     # second-level casts truncate/round differently across engines on
     # sub-second timestamps. Parquet timestamps load as TIMESTAMP_NTZ,
@@ -113,7 +111,7 @@ def sessionize(
     # timezone; only gap DIFFERENCES matter, so the interpretation
     # offset cancels even off-UTC
     gap_us = gap_minutes * 60 * 1_000_000
-    mu = F.unix_micros(F.col(ts).cast("timestamp"))
+    mu = F.unix_micros(F.col("ts").cast("timestamp"))
     is_new = (mu - F.lag(mu).over(w) > gap_us).cast("long")
     return events.withColumn(
         "session_idx",
@@ -127,7 +125,6 @@ def group_quantiles(
     df: DataFrame,
     group_col: str,
     value_col: str,
-    quantiles: tuple[float, ...] = (0.5, 0.9, 0.99),
 ) -> DataFrame:
     """Exact grouped quantiles (corpus inspection: length/score
     distributions per stratum). Uses Spark's exact ``percentile``
@@ -137,8 +134,10 @@ def group_quantiles(
     for bounded group counts (per-language/source stats); for
     per-document groups at 10^12 rows use approx_percentile instead
     (sketch-based, no sort) and drop the oracle equality claim.
+    Returns (group, p5, p9, p99, n) for the 0.5/0.9/0.99 quantiles.
     """
-    arr = ", ".join(str(q) for q in quantiles)
+    qs = (0.5, 0.9, 0.99)
+    arr = ", ".join(str(q) for q in qs)
     agg = df.groupBy(group_col).agg(
         F.expr(f"percentile({value_col}, array({arr}))").alias("_q"),
         F.count(F.lit(1)).alias("n"),
@@ -147,7 +146,7 @@ def group_quantiles(
         F.round(F.element_at("_q", i + 1), 4).alias(
             f"p{str(q).replace('0.', '')}"
         )
-        for i, q in enumerate(quantiles)
+        for i, q in enumerate(qs)
     ]
     return agg.select(group_col, *cols, "n")
 

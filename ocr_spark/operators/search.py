@@ -60,11 +60,11 @@ def _tokens(docs: DataFrame) -> DataFrame:
     ).filter(F.col("term") != "")
 
 
-def _bm25_weights(
-    docs: DataFrame, terms: list[str], k1: float, b: float
-) -> DataFrame:
+def _bm25_weights(docs: DataFrame, terms: list[str]) -> DataFrame:
     """Per-(doc, term) BM25 weight ``w`` of each query term a document
-    holds: tf joined to df, the doc length and the corpus stats."""
+    holds: tf joined to df, the doc length and the corpus stats, with
+    Okapi's k1 = 1.2 and b = 0.75 (the oracle's literals)."""
+    k1, b = 1.2, 0.75
     toks = _tokens(docs)
     # Doc lengths WITHOUT exploding: split-on-\s+ of trimmed non-empty
     # text yields no empty tokens, so size(array) == the exploded count
@@ -109,8 +109,6 @@ def bm25_topk(
     docs: DataFrame,
     query_terms: Sequence[str],
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """Top-k documents by Okapi BM25 score for a bag of query terms.
 
@@ -122,7 +120,7 @@ def bm25_topk(
     the DuckDB oracle uses (k1 + 1 computed as ``k1 + 1.0``, 1 - b as
     ``1.0 - b``) so both engines fold the same IEEE doubles.
     """
-    scored = _bm25_weights(docs, list(query_terms), k1, b)
+    scored = _bm25_weights(docs, list(query_terms))
     return (
         scored.groupBy("doc_id")
         .agg(
@@ -138,8 +136,6 @@ def bm25_topk_multi(
     docs: DataFrame,
     probes: dict,
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """Multi-probe BM25: per-probe top-k for a dict of
     {q_key: [terms...]} sharing ONE corpus tokenize pass, ONE
@@ -170,7 +166,7 @@ def bm25_topk_multi(
     mapping = docs.sparkSession.createDataFrame(
         mapping_rows, "q_key string, term string"
     )
-    scored = _bm25_weights(docs, all_terms, k1, b).join(
+    scored = _bm25_weights(docs, all_terms).join(
         F.broadcast(mapping), "term"
     )
     win = Window.partitionBy("q_key").orderBy(

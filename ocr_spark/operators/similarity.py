@@ -76,9 +76,9 @@ def _norm_expr(a: str, dims: int | None):
 
 
 def _with_norm(
-    df: DataFrame, col: str = "embedding", dims: int | None = None
+    df: DataFrame, dims: int | None = None
 ) -> DataFrame:
-    return df.withColumn("nrm", _norm_expr(col, dims))
+    return df.withColumn("nrm", _norm_expr("embedding", dims))
 
 
 def _cos_expr(a: str, b: str, na: str, nb: str, dims: int | None):
@@ -133,14 +133,11 @@ def _near_pair_candidates(
     e: DataFrame,
     key_col: str,
     threshold: float,
-    id_col: str = "vec_id",
-    margin: float = 2e-4,
-    block: int = 512,
 ) -> DataFrame:
     """SUPERSET of within-group near-dup candidate pairs by blocked
     numpy cosine — the r6 fix for the quadratic pair stage.
 
-    ``e`` carries (``id_col``, embedding, ``key_col``); every pair of
+    ``e`` carries (vec_id, embedding, ``key_col``); every pair of
     rows sharing ``key_col`` whose EXACT rounded cosine could pass
     ``threshold`` is returned as (doc_a, doc_b), doc_a < doc_b.
     Callers MUST re-score the candidates with the module's exact
@@ -158,7 +155,7 @@ def _near_pair_candidates(
 
     Exactness: numpy and the JVM fold differ only in float64 summation
     order — bounded by ~d*eps relative (~1e-13 at d=64), 9 orders of
-    magnitude inside ``margin``.  The keep mask is ``~(cos < cut)`` so
+    magnitude inside the 2e-4 margin.  The keep mask is ``~(cos < cut)`` so
     NaN cosines (zero-norm vectors) stay candidates — a NaN-data pair
     passes the exact filter (Spark orders NaN greatest), and a
     zero-NORM pair makes the exact re-score divide by zero, which
@@ -168,28 +165,29 @@ def _near_pair_candidates(
     pass the exact filter (their cos is NULL), so the superset
     property holds for them too.
 
-    Memory: per task one (block x |g|) float64 scores matrix (~100 MB
-    at |g| = 25k, block 512) — bounded regardless of group size. Group
+    Memory: per task one (512 x |g|) float64 scores matrix (~100 MB
+    at |g| = 25k) — bounded regardless of group size. Group
     ROWS must fit one pandas frame (the applyInPandas contract): true
     under the k ~ sqrt(N) sizing of the k-means caller, but NOT
     guaranteed for sign buckets — correlated post-ReLU embeddings can
     collapse into one bucket holding the corpus (the degenerate case
     ``cosine_near_dup_pairs`` documents; the pre-r6 self-join was
-    equally hopeless there at O(N^2) pairs). The operator's answer to
-    that regime remains the explicit ``max_bucket`` recall lever, not
-    this kernel.
+    equally hopeless there at O(N^2) pairs). Until oversized groups are
+    tiled into sub-blocks, the only bound in that regime is
+    ``cosine_near_dup_pairs``' ``max_bucket`` recall lever, which a
+    caller must pass directly (``semantic_dedup`` does not).
     """
     from collections.abc import Iterator  # noqa: F401  (doc parity)
 
     import numpy as np
     import pandas as pd
 
-    id_t = e.schema[id_col].dataType.simpleString()
+    id_t = e.schema["vec_id"].dataType.simpleString()
     out_schema = f"doc_a {id_t}, doc_b {id_t}"
-    cut = float(threshold) - margin
+    cut = float(threshold) - 2e-4
 
     def find(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[id_col].to_numpy()
+        ids = pdf["vec_id"].to_numpy()
         if len(ids) < 2:
             return pd.DataFrame({"doc_a": ids[:0], "doc_b": ids[:0]})
         order = np.argsort(ids, kind="stable")
@@ -200,9 +198,9 @@ def _near_pair_candidates(
         nrm = np.sqrt((m * m).sum(axis=1))
         outs = []
         n = len(ids)
-        for s in range(0, n, block):
-            blk = (m[s : s + block] @ m.T) / np.outer(
-                nrm[s : s + block], nrm
+        for s in range(0, n, 512):
+            blk = (m[s : s + 512] @ m.T) / np.outer(
+                nrm[s : s + 512], nrm
             )
             ii, jj = np.nonzero(~(blk < cut))
             gi = ii + s
@@ -263,12 +261,12 @@ def _fold_cos_matrix(m, cmat, cn):
         return acc / (np.sqrt(nacc)[:, None] * cn[None, :])
 
 
-def _round4_argmax(cos, margin: float = 2e-4, want_rounded: bool = True):
+def _round4_argmax(cos, want_rounded: bool = True):
     """Per-row argmax of round-4 cosine with ties to the SMALLER column
     index — bit-equal to Spark's ``array_max`` over (round(cos, 4),
     -cid) structs, without paying decimal rounding per cell.
 
-    Fast path: when only one column lies within ``margin`` of the
+    Fast path: when only one column lies within 2e-4 of the
     row's unrounded max, rounding cannot change the winner (two values
     2e-4 apart round at least one 1e-4 grid step apart). Slow path
     (ties): exact ``_spark_round4`` on the few candidates, max rounded,
@@ -291,7 +289,7 @@ def _round4_argmax(cos, margin: float = 2e-4, want_rounded: bool = True):
     if ok.any():
         c = cos[ok]
         mx = c.max(axis=1)
-        cand = c >= (mx[:, None] - margin)
+        cand = c >= (mx[:, None] - 2e-4)
         w = c.argmax(axis=1)
         slow = cand.sum(axis=1) > 1
         for i in np.nonzero(slow)[0]:
@@ -345,10 +343,9 @@ def cosine_topk(
 
 
 def sign_bucket(
-    df: DataFrame, dims: int = 8, col: str = "embedding", offset: int = 0
+    df: DataFrame, dims: int = 8
 ) -> DataFrame:
-    """LSH bucket = sign pattern of ``dims`` coordinates starting at
-    ``offset``.
+    """LSH bucket = sign pattern of the first ``dims`` coordinates.
 
     A simple deterministic binary quantization: nearby vectors (cosine)
     agree on most coordinate signs, so sharing the exact ``dims``-bit
@@ -356,7 +353,7 @@ def sign_bucket(
     """
     bucket = sum(
         F.when(
-            F.element_at(F.col(col), offset + i + 1) >= 0, F.lit(1 << i)
+            F.element_at(F.col("embedding"), i + 1) >= 0, F.lit(1 << i)
         ).otherwise(F.lit(0))
         for i in range(dims)
     )
@@ -367,7 +364,6 @@ def sign_buckets_multi(
     df: DataFrame,
     dims: int = 8,
     tables: int = 1,
-    col: str = "embedding",
     width: int | None = None,
 ) -> DataFrame:
     """OR-amplified LSH: one bucket per hash table, each table reading a
@@ -389,7 +385,7 @@ def sign_buckets_multi(
     if width is None:
         # one-row probe (LocalLimit-1 scan, not a corpus pass):
         # embeddings are fixed-width, so one row catches the error
-        probe = df.select(F.size(F.col(col)).alias("d")).first()
+        probe = df.select(F.size(F.col("embedding")).alias("d")).first()
         width = None if probe is None else probe["d"]
     if width is not None and width < tables * dims:
         raise ValueError(
@@ -403,7 +399,8 @@ def sign_buckets_multi(
                 F.lit(t).alias("table"),
                 sum(
                     F.when(
-                        F.element_at(F.col(col), t * dims + i + 1) >= 0,
+                        F.element_at(F.col("embedding"), t * dims + i + 1)
+                        >= 0,
                         F.lit(1 << i),
                     ).otherwise(F.lit(0))
                     for i in range(dims)
@@ -425,7 +422,6 @@ def cosine_near_dup_pairs(
     threshold: float = 0.8,
     dims: int = 8,
     max_bucket: int | None = None,
-    vec_dims: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (the dedup-by-embedding
     path): LSH sign-bucket join prunes the O(N^2) pair space to
@@ -443,13 +439,11 @@ def cosine_near_dup_pairs(
     ``max_bucket`` to drop buckets holding more than that many vectors —
     EXPLICITLY trading recall (pairs inside a dropped bucket are lost)
     for a hard O(max_bucket) per-bucket bound. Leave None for the exact
-    oracle-checked semantics.
-
-    Pass ``vec_dims`` when the embedding width is known to skip the
-    one-row probe job — a ``.first()`` re-executes the full upstream
-    plan (2x when embeddings come out of a mapInPandas extractor; same
-    knob as ``lsh_cosine_topk``)."""
-    d = _probe_dims(embeddings, "embedding", vec_dims)
+    oracle-checked semantics. The lever stays until oversized buckets
+    are tiled into sub-blocks: it is the only memory bound on a
+    collapsed sign bucket, whose rows ``_near_pair_candidates`` loads
+    as one pandas frame."""
+    d = _probe_dims(embeddings, "embedding")
     e = sign_bucket(_with_norm(embeddings, dims=d), dims=dims).select(
         "vec_id", "embedding", "nrm", "bucket"
     )
@@ -476,9 +470,6 @@ def semantic_dedup(
     embeddings: DataFrame,
     threshold: float = 0.8,
     dims: int = 8,
-    max_bucket: int | None = None,
-    id_col: str = "doc_id",
-    vec_dims: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. '23,
     arXiv:2303.09540): drop every document whose embedding has a
@@ -492,21 +483,19 @@ def semantic_dedup(
     iteration); for exact one-per-connected-component semantics feed the
     pair list through ``operators.dedup.near_dup_groups`` instead.
 
-    Plan shape: the pair list is small by the near-dup premise (and
-    bounded by ``max_bucket`` when set — see ``cosine_near_dup_pairs``'
-    skew levers); ``distinct(doc_b)`` is a hash-agg on it; the final
-    ``left_anti`` join is keyed on ``id_col`` and AQE broadcasts the
+    Plan shape: the pair list is small by the near-dup premise (see
+    ``cosine_near_dup_pairs``' skew note for the collapsed-bucket
+    exception); ``distinct(doc_b)`` is a hash-agg on it; the final
+    ``left_anti`` join is keyed on ``doc_id`` and AQE broadcasts the
     loser side when it is small, so the corpus itself never reshuffles.
     """
     pairs = cosine_near_dup_pairs(
         embeddings,
         threshold=threshold,
         dims=dims,
-        max_bucket=max_bucket,
-        vec_dims=vec_dims,
     )
-    losers = pairs.select(F.col("doc_b").alias(id_col)).distinct()
-    return docs.join(losers, id_col, "left_anti")
+    losers = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
+    return docs.join(losers, "doc_id", "left_anti")
 
 
 def _coarse_lists(

@@ -136,15 +136,15 @@ def with_fingerprint(df: DataFrame) -> DataFrame:
     )
 
 
-def with_lang_guess(df: DataFrame, min_hits: int = 2) -> DataFrame:
-    """n-gram-free language ID heuristic: >=min_hits English stopword
+def with_lang_guess(df: DataFrame) -> DataFrame:
+    """n-gram-free language ID heuristic: >=2 English stopword
     tokens -> 'en', else 'unknown'."""
     hits = F.expr(
         f"size(filter({TOKENS}, t -> lower(t) IN ({_STOP_SQL})))"
     )
     return df.withColumn("stop_hits", hits).withColumn(
         "lang_guess",
-        F.when(F.col("stop_hits") >= min_hits, F.lit("en")).otherwise(
+        F.when(F.col("stop_hits") >= 2, F.lit("en")).otherwise(
             F.lit("unknown")
         ),
     )
@@ -178,7 +178,6 @@ def stratified_sample(
     df: DataFrame,
     strata_col: str,
     rates: dict[str, float],
-    key_col: str = "doc_id",
 ) -> DataFrame:
     """Per-stratum deterministic sampling (training-data curation: e.g.
     keep 60%% of long documents but 20%% of short ones). Strata absent
@@ -191,20 +190,19 @@ def stratified_sample(
         ),
         F.lit(0),
     )
-    return df.filter(_hash_selector(key_col) < threshold)
+    return df.filter(_hash_selector("doc_id") < threshold)
 
 
 def hash_split(
     df: DataFrame,
     splits: dict[str, float],
-    default: str = "train",
     key_col: str = "doc_id",
 ) -> DataFrame:
     """Leakage-safe deterministic train/val/test split.
 
     Adds a ``split`` column: the md5 selector of ``key_col`` (16 bits,
     [0, 65536)) is cut into cumulative intervals in ``splits`` dict
-    order; everything above the last boundary gets ``default``. Because
+    order; everything above the last boundary gets ``train``. Because
     the selector is KEYED (not row-random), the split is
     group-coherent: key it on a group id (conv_id, orderkey, url host)
     and every row of the group lands in the same split — the property
@@ -222,7 +220,7 @@ def hash_split(
         hi = lo + int(frac * 65536)
         arms.append(((sel >= F.lit(lo)) & (sel < F.lit(hi)), F.lit(name)))
         lo = hi
-    return df.withColumn("split", _case(arms, F.lit(default)))
+    return df.withColumn("split", _case(arms, F.lit("train")))
 
 
 def shard_assign(
@@ -263,8 +261,6 @@ def shard_assign(
 def domain_mix(
     df: DataFrame,
     budget_tokens: float,
-    domain_col: str = "source",
-    key_col: str = "doc_id",
 ) -> DataFrame:
     """Derived-rate domain rebalancing (training-mix shaping): sample
     each domain down to ~``budget_tokens`` whitespace tokens.
@@ -286,7 +282,7 @@ def domain_mix(
     Returns the sampled rows as (key, domain, domain_tokens).
     """
     toked = with_token_count(df)
-    totals = toked.groupBy(domain_col).agg(
+    totals = toked.groupBy("source").agg(
         F.sum("n_tokens").alias("domain_tokens")
     )
     rates = totals.withColumn(
@@ -300,17 +296,15 @@ def domain_mix(
         ).cast("int"),
     )
     return (
-        toked.join(F.broadcast(rates), domain_col)
-        .filter(_hash_selector(key_col) < F.col("threshold"))
-        .select(key_col, domain_col, "domain_tokens")
+        toked.join(F.broadcast(rates), "source")
+        .filter(_hash_selector("doc_id") < F.col("threshold"))
+        .select("doc_id", "source", "domain_tokens")
     )
 
 
 def token_budget_mix(
     df: DataFrame,
     budget_tokens: int,
-    domain_col: str = "source",
-    key_col: str = "doc_id",
 ) -> DataFrame:
     """EXACT token-budget mix building: take documents per domain, in
     deterministic hash order, until the domain's running token total
@@ -351,15 +345,15 @@ def token_budget_mix(
     """
     bucket_chars = 2
     toked = with_token_count(df).select(
-        key_col,
-        domain_col,
+        "doc_id",
+        "source",
         "n_tokens",
-        F.md5(F.col(key_col).cast("string")).alias("h"),
+        F.md5(F.col("doc_id").cast("string")).alias("h"),
     ).withColumn("bucket", F.substring("h", 1, bucket_chars))
-    totals = toked.groupBy(domain_col, "bucket").agg(
+    totals = toked.groupBy("source", "bucket").agg(
         F.sum("n_tokens").alias("bucket_tokens")
     )
-    wb = Window.partitionBy(domain_col).orderBy("bucket")
+    wb = Window.partitionBy("source").orderBy("bucket")
     offsets = totals.withColumn(
         "offset",
         F.coalesce(
@@ -370,14 +364,14 @@ def token_budget_mix(
         ),
     ).filter(F.col("offset") < F.lit(int(budget_tokens)))
     w = (
-        Window.partitionBy(domain_col, "bucket")
-        .orderBy("h", key_col)
+        Window.partitionBy("source", "bucket")
+        .orderBy("h", "doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
         toked.join(
-            F.broadcast(offsets.select(domain_col, "bucket", "offset")),
-            [domain_col, "bucket"],
+            F.broadcast(offsets.select("source", "bucket", "offset")),
+            ["source", "bucket"],
         )
         .withColumn(
             "cum_tokens", F.col("offset") + F.sum("n_tokens").over(w)
@@ -386,15 +380,13 @@ def token_budget_mix(
             F.col("cum_tokens") - F.col("n_tokens")
             < F.lit(int(budget_tokens))
         )
-        .select(key_col, domain_col, "n_tokens", "cum_tokens")
+        .select("doc_id", "source", "n_tokens", "cum_tokens")
     )
 
 
 def domain_upsample(
     df: DataFrame,
     factors: dict[str, float],
-    domain_col: str = "source",
-    key_col: str = "doc_id",
 ) -> DataFrame:
     """Per-domain repetition-factor mixing, the UP-sampling half of mix
     building (LLaMA trains Wikipedia for ~2.4 epochs while CommonCrawl
@@ -409,7 +401,7 @@ def domain_upsample(
     factor < 1 degenerates to deterministic rate sampling (0 or 1
     occurrences). The fractional-epoch selector is a 16-bit md5
     selector SALTED with ``#up`` — reproducible and group-coherent in
-    ``key_col``, but statistically independent of the UNsalted
+    ``doc_id``, but statistically independent of the UNsalted
     selector :func:`hash_split`/:func:`stratified_sample` use on the same
     key (unsalted, the extra-epoch subset would coincide exactly with
     a val/test split or a sample cut of matching fraction — the same
@@ -426,23 +418,23 @@ def domain_upsample(
         if f < 0:
             raise ValueError(f"negative factor for {dom!r}: {f}")
         nf = int(f)
-        cond = F.col(domain_col) == dom
+        cond = F.col("source") == dom
         full_arms.append((cond, F.lit(nf)))
         frac_arms.append((cond, F.lit(int((f - nf) * 65536))))
     n_full = _case(full_arms, F.lit(1))
     frac_thr = _case(frac_arms, F.lit(0))
     sel_up = _md5_int(
-        F.concat(F.col(key_col).cast("string"), F.lit("#up")), 4, "int"
+        F.concat(F.col("doc_id").cast("string"), F.lit("#up")), 4, "int"
     )
     extra = (sel_up < frac_thr).cast("int")
     out = df.select(
-        key_col,
-        domain_col,
+        "doc_id",
+        "source",
         (n_full + extra).alias("n_epochs"),
     ).filter(F.col("n_epochs") >= 1)
     return out.select(
-        key_col,
-        domain_col,
+        "doc_id",
+        "source",
         F.explode(F.expr("sequence(0, n_epochs - 1)")).alias("epoch"),
     )
 
@@ -452,7 +444,6 @@ def weighted_sample(
     k: int,
     weight_col: str,
     domain_col: str | None = None,
-    key_col: str = "doc_id",
 ) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement (Efraimidis
     & Spirakis '06): each row races with key ln(u)/w — u a 48-bit
@@ -479,26 +470,26 @@ def weighted_sample(
     result. Weights must be > 0 (rows with w <= 0 or NULL are
     dropped — they have zero inclusion probability).
     """
-    u = (_md5_int(F.col(key_col).cast("string"), 12) + 1) / F.lit(
+    u = (_md5_int(F.col("doc_id").cast("string"), 12) + 1) / F.lit(
         float(1 << 48)
     )
     es = F.log(u) / F.col(weight_col)
     raced = df.filter(F.col(weight_col) > 0).withColumn(
         "es_key_raw", es
     )
-    order = [F.col("es_key_raw").desc(), F.col(key_col).asc()]
+    order = [F.col("es_key_raw").desc(), F.col("doc_id").asc()]
     if domain_col:
         w = Window.partitionBy(domain_col).orderBy(*order)
         out = raced.withColumn("rk", F.row_number().over(w)).filter(
             F.col("rk") <= k
         )
-        cols = [key_col, domain_col, weight_col]
+        cols = ["doc_id", domain_col, weight_col]
     else:
         top = raced.orderBy(*order).limit(k)
         out = top.withColumn(
             "rk", F.row_number().over(Window.orderBy(*order))
         )
-        cols = [key_col, weight_col]
+        cols = ["doc_id", weight_col]
     # float32 cast, not round(6): bit-exact cross-engine contract
     return out.select(
         *cols, F.col("es_key_raw").cast("float").alias("es_key"), "rk"
@@ -509,7 +500,6 @@ def doc_chunks(
     df: DataFrame,
     chunk_tokens: int = 128,
     overlap: int = 32,
-    text_col: str = "text",
 ) -> DataFrame:
     """Context-window chunking with overlap — the long-document
     splitter every embedding/training prep runs (a doc longer than the
@@ -540,7 +530,7 @@ def doc_chunks(
     stride = int(chunk_tokens) - int(overlap)
     c, s = int(chunk_tokens), stride
     arr = _ensure_parallelism(df).withColumn(
-        "_t", F.expr(TOKENS.replace("text", text_col))
+        "_t", F.expr(TOKENS)
     )
     n = F.size("_t")
     n_chunks = F.when(n <= c, F.lit(1)).otherwise(
@@ -570,7 +560,7 @@ def doc_chunks(
     )
 
 
-def corpus_stats(df: DataFrame, domain_col: str = "source") -> DataFrame:
+def corpus_stats(df: DataFrame) -> DataFrame:
     """One-pass corpus profiling (the mix-sheet a pipeline operator
     reads before choosing budgets/factors): per-domain doc count, token
     totals and spread, and quality aggregates — one hash-agg with
@@ -581,7 +571,7 @@ def corpus_stats(df: DataFrame, domain_col: str = "source") -> DataFrame:
     negligible at any group size that fits a BIGINT count.
     """
     d = with_quality(with_token_count(df))
-    return d.groupBy(domain_col).agg(
+    return d.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").cast("long").alias("total_tokens"),
         F.min("n_tokens").alias("min_tokens"),
@@ -597,8 +587,6 @@ def corpus_stats(df: DataFrame, domain_col: str = "source") -> DataFrame:
 def quality_select(
     df: DataFrame,
     frac: float = 0.5,
-    domain_col: str = "source",
-    key_col: str = "doc_id",
     keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """Within-domain top-fraction quality selection — the
@@ -637,12 +625,12 @@ def quality_select(
     sorts; persist upstream if scoring is expensive.
     """
     scored = with_quality(df).select(
-        key_col, domain_col, "quality", *keep
+        "doc_id", "source", "quality", *keep
     ).withColumn("qv", F.coalesce(F.col("quality"), F.lit(-1.0)))
-    counts = scored.groupBy(domain_col, "qv").agg(
+    counts = scored.groupBy("source", "qv").agg(
         F.count(F.lit(1)).alias("n_level")
     )
-    wq = Window.partitionBy(domain_col).orderBy(F.col("qv").desc())
+    wq = Window.partitionBy("source").orderBy(F.col("qv").desc())
     levels = (
         counts.withColumn(
             "cum_above",
@@ -656,7 +644,7 @@ def quality_select(
         .withColumn(
             "n_domain",
             F.sum("n_level").over(
-                Window.partitionBy(domain_col).rowsBetween(
+                Window.partitionBy("source").rowsBetween(
                     Window.unboundedPreceding, Window.unboundedFollowing
                 )
             ),
@@ -665,23 +653,27 @@ def quality_select(
             "cut", F.ceil(F.lit(float(frac)) * F.col("n_domain"))
         )
         .filter(F.col("cum_above") < F.col("cut"))
-        .select(domain_col, "qv", "cum_above", "cut")
+        .select("source", "qv", "cum_above", "cut")
     )
-    wl = Window.partitionBy(domain_col, "qv").orderBy(
-        F.col(key_col).asc()
+    wl = Window.partitionBy("source", "qv").orderBy(
+        F.col("doc_id").asc()
     )
     return (
-        scored.join(F.broadcast(levels), [domain_col, "qv"])
+        scored.join(F.broadcast(levels), ["source", "qv"])
         .withColumn(
             "rk",
             (F.col("cum_above") + F.row_number().over(wl)).cast("int"),
         )
         .filter(F.col("rk") <= F.col("cut"))
-        .select(key_col, domain_col, "quality", "rk", *keep)
+        .select("doc_id", "source", "quality", "rk", *keep)
     )
 
 
-def _dsir_features(df: DataFrame, n_buckets: int) -> DataFrame:
+# hashed-feature space of the dsir_* and nb_quality count tables
+_DSIR_BUCKETS = 10_000
+
+
+def _dsir_features(df: DataFrame) -> DataFrame:
     """Hashed uni+bigram feature stream (doc_id, bucket) — DSIR's
     bag-of-hashed-ngrams representation (Xie et al. '23 §2.2).
 
@@ -708,15 +700,13 @@ def _dsir_features(df: DataFrame, n_buckets: int) -> DataFrame:
     )
     return arr.select("doc_id", F.explode(feats).alias("f")).select(
         "doc_id",
-        (_md5_int("f", 8) % n_buckets).alias("bucket"),
+        (_md5_int("f", 8) % _DSIR_BUCKETS).alias("bucket"),
     )
 
 
 def dsir_logweights(
     raw: DataFrame,
     target: DataFrame,
-    n_buckets: int = 10_000,
-    alpha: float = 1.0,
 ) -> DataFrame:
     """DSIR importance log-weights (Xie et al. NeurIPS '23, "Data
     Selection for Language Models via Importance Resampling"): score
@@ -727,34 +717,34 @@ def dsir_logweights(
     like ``gopher_rules``.
 
     logw(doc) = sum over features f of ln(p_t(b(f)) / p_r(b(f))),
-    with p_x(b) = (c_x(b) + alpha) / (T_x + alpha * n_buckets)
-    (add-alpha smoothing, so target-unseen buckets penalize rather
+    with p_x(b) = (c_x(b) + 1) / (T_x + B) over B = ``_DSIR_BUCKETS``
+    hash buckets (add-one smoothing, so target-unseen buckets penalize rather
     than zero out).
 
     Returns (doc_id, n_features, logw); feature-less docs drop.
 
     Plan shape: both bucket-count tables compress map-side to at most
-    ``n_buckets`` rows per partition (hash-agg partials over a
+    B rows per partition (hash-agg partials over a
     fixed-size key space — the whole point of feature hashing at
     100 TB), totals are single rows, and the log-ratio table is
-    n_buckets-sized so it BROADCASTS onto the raw feature stream; the
+    B-sized so it BROADCASTS onto the raw feature stream; the
     only corpus-sized shuffle is the final per-doc agg.
     """
-    feats_r = _dsir_features(raw, n_buckets)
-    feats_t = _dsir_features(target, n_buckets)
+    feats_r = _dsir_features(raw)
+    feats_t = _dsir_features(target)
     counts_r = feats_r.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("c_r")
     )
     counts_t = feats_t.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("c_t")
     )
-    # totals derive from the (n_buckets-sized) count tables, NOT from
+    # totals derive from the (B-sized) count tables, NOT from
     # another pass over the corpus feature stream — the raw stream
     # already has two consumers (its own counts + the scoring join),
     # and each extra consumer re-executes the tokenize/explode map
     tot_r = counts_r.agg(F.sum("c_r").alias("tr"))
     tot_t = counts_t.agg(F.sum("c_t").alias("tt"))
-    denom = float(alpha) * n_buckets
+    denom = float(_DSIR_BUCKETS)
     ratio = (
         counts_r.join(counts_t, "bucket", "left")
         .crossJoin(F.broadcast(tot_r))
@@ -763,11 +753,11 @@ def dsir_logweights(
             "bucket",
             F.log(
                 (
-                    (F.coalesce(F.col("c_t"), F.lit(0)) + F.lit(alpha))
+                    (F.coalesce(F.col("c_t"), F.lit(0)) + F.lit(1.0))
                     / (F.col("tt") + F.lit(denom))
                 )
                 / (
-                    (F.col("c_r") + F.lit(alpha))
+                    (F.col("c_r") + F.lit(1.0))
                     / (F.col("tr") + F.lit(denom))
                 )
             ).alias("logr"),
@@ -787,8 +777,6 @@ def dsir_sample(
     raw: DataFrame,
     target: DataFrame,
     k: int = 100,
-    n_buckets: int = 10_000,
-    alpha: float = 1.0,
 ) -> DataFrame:
     """DSIR selection: Gumbel top-k over the importance log-weights =
     sampling WITHOUT replacement proportional to the importance ratio
@@ -802,7 +790,7 @@ def dsir_sample(
     key = round(logw + g, 4); top-k is `orderBy().limit(k)` =
     TakeOrderedAndProject, never a global sort.
     """
-    w = dsir_logweights(raw, target, n_buckets=n_buckets, alpha=alpha)
+    w = dsir_logweights(raw, target)
     u = (
         _md5_int(F.concat(F.lit("g#"), F.col("doc_id").cast("string")), 8)
         + F.lit(0.5)
@@ -819,8 +807,6 @@ def nb_quality(
     docs: DataFrame,
     pos: DataFrame,
     neg: DataFrame,
-    n_buckets: int = 10_000,
-    alpha: float = 1.0,
 ) -> DataFrame:
     """Learned quality classifier: multinomial Naive Bayes over hashed
     uni+bigram features — the fastText-style classifier-filter class of
@@ -829,11 +815,11 @@ def nb_quality(
     classifier), the third standard filter family next to rule gates
     (``with_gopher_rules``) and importance ratios (``dsir_*``). NB
     scoring is pure count arithmetic — log p(c) + sum_f log p(f|c)
-    with add-``alpha`` smoothing — so unlike fastText it is fully
+    with add-one smoothing — so unlike fastText it is fully
     SQL-expressible and sits under the exact DuckDB gate.
 
     score(doc) = ln(Np/Nn) + sum_f [ln p(f|pos) - ln p(f|neg)],
-    p(f|c) = (count_c(bucket(f)) + alpha) / (T_c + alpha * n_buckets).
+    p(f|c) = (count_c(bucket(f)) + 1) / (T_c + B), B = ``_DSIR_BUCKETS``.
 
     Returns (doc_id, n_features, log_odds, pred_clean) with
     ``log_odds`` rounded 4 dp (the ``unigram_logprob`` float-portability
@@ -844,14 +830,14 @@ def nb_quality(
     Plan shape (the ``dsir_logweights`` scale argument): both class
     count tables compress map-side to the fixed 10k bucket space, the
     log-likelihood-ratio table is built over the FULL bucket domain
-    (``spark.range(n_buckets)``, so buckets unseen in training still
+    (``spark.range(B)``, so buckets unseen in training still
     contribute the smoothed prior ratio instead of silently dropping
     scored features) and BROADCASTS onto the doc feature stream;
     totals/priors are single rows; the only corpus-sized shuffle is
     the per-doc agg.
     """
-    feats_p = _dsir_features(pos, n_buckets)
-    feats_n = _dsir_features(neg, n_buckets)
+    feats_p = _dsir_features(pos)
+    feats_n = _dsir_features(neg)
     cp = feats_p.groupBy("bucket").agg(F.count(F.lit(1)).alias("c_p"))
     cn = feats_n.groupBy("bucket").agg(F.count(F.lit(1)).alias("c_n"))
     tp = cp.agg(F.sum("c_p").alias("tp"))
@@ -861,8 +847,8 @@ def nb_quality(
         .crossJoin(neg.agg(F.count(F.lit(1)).alias("nn")))
         .select(F.log(F.col("np") / F.col("nn")).alias("prior"))
     )
-    denom = float(alpha) * n_buckets
-    base = docs.sparkSession.range(n_buckets).select(
+    denom = float(_DSIR_BUCKETS)
+    base = docs.sparkSession.range(_DSIR_BUCKETS).select(
         F.col("id").alias("bucket")
     )
     llr = (
@@ -874,18 +860,18 @@ def nb_quality(
             "bucket",
             (
                 F.log(
-                    (F.coalesce(F.col("c_p"), F.lit(0)) + F.lit(alpha))
+                    (F.coalesce(F.col("c_p"), F.lit(0)) + F.lit(1.0))
                     / (F.col("tp") + F.lit(denom))
                 )
                 - F.log(
-                    (F.coalesce(F.col("c_n"), F.lit(0)) + F.lit(alpha))
+                    (F.coalesce(F.col("c_n"), F.lit(0)) + F.lit(1.0))
                     / (F.col("tn") + F.lit(denom))
                 )
             ).alias("llr"),
         )
     )
     scored = (
-        _dsir_features(docs, n_buckets)
+        _dsir_features(docs)
         .join(F.broadcast(llr), "bucket")
         .groupBy("doc_id")
         .agg(
@@ -925,7 +911,6 @@ def js_divergence(
     df: DataFrame,
     group_a: str,
     group_b: str,
-    group_col: str = "source",
 ) -> DataFrame:
     """Jensen-Shannon divergence between two document groups' unigram
     distributions — the corpus-comparison statistic (domain shift,
@@ -947,9 +932,9 @@ def js_divergence(
     """
     toks = (
         _ensure_parallelism(df)
-        .filter(F.col(group_col).isin([group_a, group_b]))
+        .filter(F.col("source").isin([group_a, group_b]))
         .select(
-            F.col(group_col).alias("g"),
+            F.col("source").alias("g"),
             F.explode(F.expr(TOKENS_LC)).alias("term"),
         )
         .filter(F.col("term") != "")
@@ -1169,7 +1154,7 @@ _UC_STRIP = (
 )
 
 
-def unicode_clean(df: DataFrame, text_col: str = "text") -> DataFrame:
+def unicode_clean(df: DataFrame) -> DataFrame:
     """Deterministic unicode text canonicalization — the ftfy-lite
     pre-dedup normalizer every web pipeline runs first (Dolma/RefinedWeb
     normalize before fingerprinting so that a zero-width-space variant
@@ -1187,7 +1172,7 @@ def unicode_clean(df: DataFrame, text_col: str = "text") -> DataFrame:
     Adds text_clean + n_chars_clean; never drops rows.
     """
     df = _ensure_parallelism(df)
-    c = F.translate(F.col(text_col), _UC_FROM, _UC_TO)
+    c = F.translate(F.col("text"), _UC_FROM, _UC_TO)
     c = F.regexp_replace(c, _UC_STRIP, "")
     c = F.regexp_replace(c, "\u2026", "...")
     c = F.trim(F.regexp_replace(c, " {2,}", " "))
@@ -1235,7 +1220,6 @@ def unigram_logprob(df: DataFrame) -> DataFrame:
 def ccnet_buckets(
     df: DataFrame,
     exact: bool = False,
-    accuracy: int = 10000,
 ) -> DataFrame:
     """CCNet-style perplexity bucketing (Wenzek et al. '19 §4.3): the
     corpus splits into head/middle/tail quality terciles by LM score
@@ -1246,9 +1230,9 @@ def ccnet_buckets(
 
     - ``exact=False`` (DEFAULT, the 100-TB path): ``approx_percentile``
       — a t-digest sketch, mergeable across partitions with bounded
-      memory (~``accuracy`` centroids), so the single-row agg never
+      memory (~10000 centroids), so the single-row agg never
       buffers the corpus. Thresholds are then actual dataset values
-      within ``1/accuracy`` relative rank of the target quantile, not
+      within 1/10000 relative rank of the target quantile, not
       interpolated midpoints — bucket assignments can differ from
       exact mode only for docs whose score lies between the two modes'
       thresholds (pinned by the agreement pytest).
@@ -1267,7 +1251,7 @@ def ccnet_buckets(
     else:
         q = F.expr(
             f"approx_percentile(avg_logprob, array(0.3333, 0.6667), "
-            f"{int(accuracy)})"
+            "10000)"
         )
     thr = lp.agg(q.alias("q"))
     return lp.crossJoin(F.broadcast(thr)).select(
@@ -1482,7 +1466,7 @@ def with_quality(df: DataFrame) -> DataFrame:
     return df.withColumn("quality", F.round(quality, 4))
 
 
-def char_entropy(df: DataFrame, text_col: str = "text") -> DataFrame:
+def char_entropy(df: DataFrame) -> DataFrame:
     """Character-level Shannon entropy of the case-folded letter
     distribution + letter fraction — the standard gibberish /
     encoded-blob / key-dump quality signal (natural English prose sits
@@ -1519,9 +1503,9 @@ def char_entropy(df: DataFrame, text_col: str = "text") -> DataFrame:
     # (acc starts at 0.0; every term is >= 0, so 0.0 + x == x).
     df = _ensure_parallelism(df)
     ent = F.expr(
-        f"""
+        """
         transform(
-            array(regexp_replace(lower({text_col}), '[^a-z]', '')),
+            array(regexp_replace(lower(text), '[^a-z]', '')),
             l -> CASE WHEN length(l) > 0 THEN aggregate(
                 transform(sequence(97, 122),
                           cp -> length(l) - length(replace(l, char(cp)))),
@@ -1537,9 +1521,9 @@ def char_entropy(df: DataFrame, text_col: str = "text") -> DataFrame:
         """
     )
     letters_len = F.length(
-        F.regexp_replace(F.lower(F.col(text_col)), "[^a-z]", "")
+        F.regexp_replace(F.lower(F.col("text")), "[^a-z]", "")
     )
-    n_chars = F.length(F.col(text_col))
+    n_chars = F.length(F.col("text"))
     return df.withColumn(
         "char_entropy", ent.cast("float")
     ).withColumn(
@@ -1556,14 +1540,13 @@ def char_entropy(df: DataFrame, text_col: str = "text") -> DataFrame:
 def with_gopher_rules(
     df: DataFrame,
     min_words: int = 50,
-    max_words: int = 100_000,
 ) -> DataFrame:
     """Gopher document-quality rule set (Rae et al. 2021, App. A1 —
     the standard web-corpus gate; also the RefinedWeb/Dolma baseline):
     per-document signals plus the composite ``gopher_pass`` flag.
 
     Signals (all built-in array expressions, no explode, linear scan):
-    - word_count in [min_words, max_words]
+    - word_count in [min_words, 100000]
     - mean_word_len in [3, 10]
     - symbol_ratio (tokens containing '#' or '...') <= 0.1
     - bullet_ratio (lines starting with a bullet) <= 0.9
@@ -1638,7 +1621,7 @@ def with_gopher_rules(
     return out.withColumn(
         "gopher_pass",
         (F.col("word_count") >= min_words)
-        & (F.col("word_count") <= max_words)
+        & (F.col("word_count") <= 100_000)
         & (F.col("mean_word_len") >= 3.0)
         & (F.col("mean_word_len") <= 10.0)
         & (F.col("symbol_ratio") <= 0.1)
@@ -1651,17 +1634,14 @@ def with_gopher_rules(
 
 def c4_rules(
     df: DataFrame,
-    min_words: int = 3,
-    min_sentences: int = 5,
     blocklist: list[str] | None = None,
-    text_col: str = "text",
 ) -> DataFrame:
     """C4 cleaning rules (Raffel et al. '20 §2.2 — the T5 web-corpus
     recipe, still the baseline every later pipeline cites): LINE rules
     keep only lines that end in terminal punctuation, have at least
-    ``min_words`` whitespace words, and do not mention javascript;
+    3 whitespace words, and do not mention javascript;
     PAGE rules then flag any page whose cleaned text has fewer than
-    ``min_sentences`` sentences (terminal-punctuation count), or whose
+    5 sentences (terminal-punctuation count), or whose
     RAW text contains the phrase "lorem ipsum", a curly brace, or any
     ``blocklist`` word (C4 checks the original page for these).
 
@@ -1677,17 +1657,17 @@ def c4_rules(
     # C4 strips each line before testing it (tensorflow c4.py
     # recipe); kept lines are re-joined in stripped form.
     lines = F.transform(
-        F.split(F.col(text_col), "\n"), lambda x: F.trim(x)
+        F.split(F.col("text"), "\n"), lambda x: F.trim(x)
     )
 
     def _line_ok(x):
         return (
             x.rlike('[.!?"]$')
-            & (F.size(F.split(x, " +")) >= min_words)
+            & (F.size(F.split(x, " +")) >= 3)
             & ~F.contains(F.lower(x), F.lit("javascript"))
         )
 
-    lower_text = F.lower(F.col(text_col))
+    lower_text = F.lower(F.col("text"))
     no_block = (
         ~F.arrays_overlap(
             F.split(lower_text, "\\s+"),
@@ -1704,9 +1684,9 @@ def c4_rules(
     )
     return out.withColumn(
         "c4_kept",
-        (sentences >= min_sentences)
+        (sentences >= 5)
         & ~F.contains(lower_text, F.lit("lorem ipsum"))
-        & ~F.contains(F.col(text_col), F.lit("{"))
+        & ~F.contains(F.col("text"), F.lit("{"))
         & no_block,
     )
 
@@ -1714,12 +1694,9 @@ def c4_rules(
 def sft_examples(
     turns: DataFrame,
     context_turns: int = 3,
-    target_role: str = "assistant",
-    conv_col: str = "conv_id",
-    idx_col: str = "turn_idx",
 ) -> DataFrame:
     """Conversation -> supervised fine-tuning examples: one (context,
-    target) pair per ``target_role`` turn, the context being the
+    target) pair per ``assistant`` turn, the context being the
     previous ``context_turns`` turns rendered as ``role: text`` lines —
     the standard multi-turn-SFT example construction (each assistant
     turn trains once, conditioned on a bounded rolling history; cf.
@@ -1734,20 +1711,22 @@ def sft_examples(
     engines, so early-turn examples simply carry shorter contexts
     (n_ctx counts the real ones; a conversation-opening target yields
     context = ''). The role filter applies AFTER the window — context
-    sees every turn, targets are only ``target_role`` turns.
+    sees every turn, targets are only ``assistant`` turns.
 
-    Returns (conv_id, turn_idx, n_ctx, context, target), renamed from
-    ``conv_col``/``idx_col``. Compose downstream with
+    Returns (conv_id, turn_idx, n_ctx, context, target). Compose
+    downstream with
     :func:`pack_sequences` to pack examples into training sequences.
     """
     if context_turns < 1:
         raise ValueError(f"context_turns={context_turns} must be >= 1")
-    w = Window.partitionBy(conv_col).orderBy(idx_col)
+    w = Window.partitionBy("conv_id").orderBy("turn_idx")
     fmt = F.concat_ws(": ", "role", "text")
     # one projection holding all lag columns -> a single Window node
+    # the self-aliases stay: dropping them changes the window's input
+    # projection, which the frozen plan snapshot pins
     lagged = turns.select(
-        F.col(conv_col).alias("conv_id"),
-        F.col(idx_col).alias("turn_idx"),
+        F.col("conv_id").alias("conv_id"),
+        F.col("turn_idx").alias("turn_idx"),
         "role",
         "text",
         *[
@@ -1760,7 +1739,7 @@ def sft_examples(
         term = F.when(F.col(f"ctx_{j}").isNull(), 0).otherwise(1)
         n_ctx = term if n_ctx is None else n_ctx + term
     return (
-        lagged.filter(F.col("role") == target_role)
+        lagged.filter(F.col("role") == "assistant")
         .select(
             "conv_id",
             "turn_idx",
@@ -1780,12 +1759,10 @@ def sft_examples(
 def pack_conversations(
     df: DataFrame,
     max_tokens: int = 2048,
-    conv_col: str = "conv_id",
-    idx_col: str = "turn_idx",
     whale_turns: int = 4096,
 ) -> DataFrame:
     """Conversation-aware sequence packing — the transcript twin of
-    :func:`pack_sequences`: turns stay in ``idx_col`` order, chunks
+    :func:`pack_sequences`: turns stay in ``turn_idx`` order, chunks
     break ONLY at turn boundaries (no mid-turn truncation), every
     conversation starts a fresh chunk (no cross-conversation
     contamination inside a training sequence — the multi-turn-SFT
@@ -1824,11 +1801,11 @@ def pack_conversations(
     import pandas as pd
     from pyspark.sql import types as T
 
-    turns = with_token_count(_ensure_parallelism(df)).groupBy(conv_col).agg(
+    turns = with_token_count(_ensure_parallelism(df)).groupBy("conv_id").agg(
         F.sort_array(
             F.collect_list(
                 F.struct(
-                    F.col(idx_col).cast("int").alias("i"),
+                    F.col("turn_idx").cast("int").alias("i"),
                     F.col("n_tokens").cast("int").alias("n"),
                 )
             )
@@ -1851,10 +1828,10 @@ def pack_conversations(
     )
     small = (
         turns.filter(F.size("ts") <= whale_turns)
-        .select(conv_col, F.explode(F.expr(assign)).alias("a"))
+        .select("conv_id", F.explode(F.expr(assign)).alias("a"))
         .select(
-            conv_col,
-            F.col("a.i").cast("long").alias(idx_col),
+            "conv_id",
+            F.col("a.i").cast("long").alias("turn_idx"),
             F.col("a.n").cast("long").alias("n_tokens"),
             F.col("a.c").cast("long").alias("chunk_idx"),
         )
@@ -1862,8 +1839,8 @@ def pack_conversations(
 
     out_schema = T.StructType(
         [
-            T.StructField(conv_col, turns.schema[conv_col].dataType),
-            T.StructField(idx_col, T.LongType()),
+            T.StructField("conv_id", turns.schema["conv_id"].dataType),
+            T.StructField("turn_idx", T.LongType()),
             T.StructField("n_tokens", T.LongType()),
             T.StructField("chunk_idx", T.LongType()),
         ]
@@ -1872,7 +1849,7 @@ def pack_conversations(
     def _linear_fold(batches):
         for pdf in batches:
             convs, idxs, ns, chunks = [], [], [], []
-            for conv, ts in zip(pdf[conv_col], pdf["ts"]):
+            for conv, ts in zip(pdf["conv_id"], pdf["ts"]):
                 chunk, fill = 0, 0
                 for t in ts:
                     n = int(t["n"])
@@ -1887,8 +1864,8 @@ def pack_conversations(
                     chunks.append(chunk)
             yield pd.DataFrame(
                 {
-                    conv_col: convs,
-                    idx_col: idxs,
+                    "conv_id": convs,
+                    "turn_idx": idxs,
                     "n_tokens": ns,
                     "chunk_idx": chunks,
                 }
@@ -2048,7 +2025,7 @@ PII_PATTERNS = {
 }
 
 
-def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
+def redact_pii(df: DataFrame) -> DataFrame:
     """PII redaction (training-data scrubbing): replace emails, URLs,
     IPv4 addresses, US-SSN shapes, IBAN shapes and phone-number shapes
     with typed placeholder tokens and count the matches per document.
@@ -2065,7 +2042,7 @@ def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     are per-pattern detectors.
     """
     out = df
-    clean = F.col(text_col)
+    clean = F.col("text")
     for kind, pat in PII_PATTERNS.items():
         # function API, not F.expr: embedding the pattern in a SQL
         # string literal would re-parse (and eat) the backslashes
@@ -2073,7 +2050,7 @@ def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
             f"n_{kind}s",
             F.size(
                 F.regexp_extract_all(
-                    F.col(text_col), F.lit(pat), F.lit(0)
+                    F.col("text"), F.lit(pat), F.lit(0)
                 )
             ),
         )
@@ -2111,7 +2088,6 @@ def score_normalize(
     df: DataFrame,
     score_col: str = "score",
     domain_col: str = "source",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-domain percent-rank normalization of a quality score — the
     calibration step that makes one threshold comparable ACROSS domains
@@ -2155,9 +2131,9 @@ def score_normalize(
         .cast("float")
         .alias("score_pct"),
     )
-    return df.select(id_col, domain_col, score_col).join(
+    return df.select("doc_id", domain_col, score_col).join(
         F.broadcast(lvn), [domain_col, score_col]
-    ).select(id_col, domain_col, score_col, "score_pct")
+    ).select("doc_id", domain_col, score_col, "score_pct")
 
 
 def with_length_bucket(df: DataFrame) -> DataFrame:
@@ -2229,7 +2205,7 @@ def _ratio(num: str, den: str) -> F.Column:
     ).cast("float")
 
 
-def tokenizer_fit(df: DataFrame, domain_col: str = "source") -> DataFrame:
+def tokenizer_fit(df: DataFrame) -> DataFrame:
     """Per-domain tokenizer-fit / fertility sheet: how many BPE-ish
     pre-tokens a whitespace word explodes into (fertility), and the
     chars-per-token compression the corpus achieves — the standard
@@ -2243,12 +2219,12 @@ def tokenizer_fit(df: DataFrame, domain_col: str = "source") -> DataFrame:
     zero tokens yield NULL ratios (0/0 guarded via nullif).
     """
     d = with_token_count_bpe(with_token_count(df)).select(
-        domain_col,
+        "source",
         "n_tokens",
         F.coalesce("n_bpe_tokens", F.lit(0)).alias("n_bpe"),
         F.coalesce(F.length("text"), F.lit(0)).alias("n_ch"),
     )
-    agg = d.groupBy(domain_col).agg(
+    agg = d.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").cast("long").alias("ws_tokens"),
         F.sum("n_bpe").cast("long").alias("bpe_tokens"),
@@ -2256,7 +2232,7 @@ def tokenizer_fit(df: DataFrame, domain_col: str = "source") -> DataFrame:
     )
 
     return agg.select(
-        domain_col,
+        "source",
         "n_docs",
         "ws_tokens",
         "bpe_tokens",
@@ -2267,7 +2243,7 @@ def tokenizer_fit(df: DataFrame, domain_col: str = "source") -> DataFrame:
     )
 
 
-def distinct_ngrams(df: DataFrame, domain_col: str = "source") -> DataFrame:
+def distinct_ngrams(df: DataFrame) -> DataFrame:
     """Per-domain lexical-diversity sheet: type-token ratio at the
     unigram and bigram level (the distinct-n diversity metric, the
     corpus-level stand-in for Self-BLEU: templated/duplicated text
@@ -2283,7 +2259,7 @@ def distinct_ngrams(df: DataFrame, domain_col: str = "source") -> DataFrame:
     the outer join + nullif guard.
     """
     arr = df.select(
-        F.col(domain_col).alias("_dom"),
+        F.col("source").alias("_dom"),
         F.expr(TOKENS_LC).alias("t"),
     ).filter(F.size("t") >= 1)
     # (r6 note: a combined uni+bigram single-explode variant keyed on
@@ -2309,7 +2285,7 @@ def distinct_ngrams(df: DataFrame, domain_col: str = "source") -> DataFrame:
     return (
         u.join(b, "_dom", "left")
         .select(
-            F.col("_dom").alias(domain_col),
+            F.col("_dom").alias("source"),
             "total_unigrams",
             "distinct_unigrams",
             "total_bigrams",
@@ -2395,15 +2371,16 @@ def temperature_sample(
 
 
 def doremi_weights(
-    df: DataFrame, domain_col: str = "source", tau: float = 1.0
+    df: DataFrame, domain_col: str = "source"
 ) -> DataFrame:
     """DoReMi-style domain reweighting sheet (Xie '23): per-domain
     excess score relative to the corpus mean, exponentiated into a
-    sampling weight ``exp(rel / tau)`` — domains that over-perform the
-    reference get up-weighted. The published method uses proxy-model
-    excess LOSS; the deterministic stand-in score here is the per-doc
-    char count (an integer, the score_normalize zero-float-risk
-    construction) — swap in any integer quality score column upstream.
+    sampling weight ``exp(rel / 1.0)`` (temperature 1) — domains that
+    over-perform the reference get up-weighted. The published method
+    uses proxy-model excess LOSS; the deterministic stand-in score
+    here is the per-doc char count (an integer, the score_normalize
+    zero-float-risk construction) — swap in any integer quality score
+    column upstream.
 
     Returns (domain, n_docs, avg_chars, rel, weight) with the three
     derived columns float32.
@@ -2441,24 +2418,19 @@ def doremi_weights(
         "n_docs",
         avg_d.cast("float").alias("avg_chars"),
         rel.cast("float").alias("rel"),
-        F.exp(rel / F.lit(float(tau))).cast("float").alias("weight"),
+        F.exp(rel / F.lit(1.0)).cast("float").alias("weight"),
     )
 
 
-def code_quality(
-    df: DataFrame,
-    max_line_len: int = 1000,
-    max_avg_line: int = 100,
-    min_alpha_x4: int = 1,
-) -> DataFrame:
+def code_quality(df: DataFrame) -> DataFrame:
     """StarCoder/BigCode-style code-document quality rules: alphabetic
-    fraction >= 0.25, longest line <= ``max_line_len``, mean line
-    length <= ``max_avg_line`` — the structural filters that drop
-    minified blobs, base64 dumps and data files from a code corpus
-    (Kocetkov '22 The Stack; Li '23 StarCoder).
+    fraction >= 0.25, longest line <= 1000, mean line length <= 100 —
+    the structural filters that drop minified blobs, base64 dumps and
+    data files from a code corpus (Kocetkov '22 The Stack; Li '23
+    StarCoder).
 
     Every PASS decision is an exact integer predicate (alpha_cnt * 4
-    >= n_chars; sum_line <= max_avg * n_lines) — the reported float32
+    >= n_chars; sum_line <= 100 * n_lines) — the reported float32
     fractions are display-only, so no threshold can tie-break
     differently across engines. Line lengths never materialize a
     second text copy: ``sum_line = n_chars - (n_lines - 1)`` (every
@@ -2504,13 +2476,13 @@ def code_quality(
         )
         .cast("float")
         .alias("avg_line"),
-        (F.col("_ac") * 4 >= F.col("_nc") * min_alpha_x4)
+        (F.col("_ac") * 4 >= F.col("_nc"))
         .cast("int")
         .alias("alpha_ok"),
-        (F.col("max_line") <= max_line_len).cast("int").alias(
+        (F.col("max_line") <= 1000).cast("int").alias(
             "maxline_ok"
         ),
-        (F.col("_sl") <= max_avg_line * F.col("n_lines"))
+        (F.col("_sl") <= 100 * F.col("n_lines"))
         .cast("int")
         .alias("avgline_ok"),
     )
@@ -2540,11 +2512,11 @@ LICENSE_MARKERS: list[tuple[str, str, int]] = [
 ]
 
 
-def _license_cols(text_col: str = "text"):
+def _license_cols():
     """(license, permissive) Column pair from the first-match-wins
     marker scan — shared by :func:`license_tag` and the one-plan
     :func:`corpus_card` composition (no corpus self-join)."""
-    low = F.lower(F.coalesce(F.col(text_col), F.lit("")))
+    low = F.lower(F.coalesce(F.col("text"), F.lit("")))
     return (
         _case(((low.contains(m), n) for m, n, _ in LICENSE_MARKERS), "unknown"),
         _case(((low.contains(m), p) for m, _, p in LICENSE_MARKERS), 0)
@@ -2552,7 +2524,7 @@ def _license_cols(text_col: str = "text"):
     )
 
 
-def license_tag(df: DataFrame, text_col: str = "text") -> DataFrame:
+def license_tag(df: DataFrame) -> DataFrame:
     """License classification for code/document corpora: first-match-
     wins substring scan of the lowercased text against
     :data:`LICENSE_MARKERS` (the permissive-license gate every code-LM
@@ -2564,7 +2536,7 @@ def license_tag(df: DataFrame, text_col: str = "text") -> DataFrame:
     substring `contains` (no regex) keeps the scan in whole-stage
     codegen at memchr speed.
     """
-    tag, perm = _license_cols(text_col)
+    tag, perm = _license_cols()
     return _ensure_parallelism(df).select(
         "doc_id",
         tag.alias("license"),
@@ -2723,7 +2695,7 @@ def extractive_coverage(df: DataFrame) -> DataFrame:
 
 
 def shard_checksums(
-    df: DataFrame, shards: int = 64, key_col: str = "doc_id"
+    df: DataFrame, shards: int = 64
 ) -> DataFrame:
     """Data-versioning manifest: per shard (md5-bucketed on the key,
     the shard_assign hashing), row count, char total and an ORDER-
@@ -2746,12 +2718,12 @@ def shard_checksums(
     digest = _md5_int(
         F.concat_ws(
             "#",
-            F.col(key_col).cast("string"),
+            F.col("doc_id").cast("string"),
             F.coalesce(F.col("text"), F.lit("")),
         ),
         8,
     )
-    shard = _md5_int(F.col(key_col).cast("string"), 4, "int") % shards
+    shard = _md5_int(F.col("doc_id").cast("string"), 4, "int") % shards
     return (
         _ensure_parallelism(df).select(
             shard.alias("shard"),
@@ -2767,11 +2739,7 @@ def shard_checksums(
     )
 
 
-def length_quantiles(
-    df: DataFrame,
-    qs: tuple[int, ...] = (25, 50, 75, 95),
-    domain_col: str = "source",
-) -> DataFrame:
+def length_quantiles(df: DataFrame) -> DataFrame:
     """Per-domain EXACT discrete token-length quantiles — the
     "how long are documents in each slice" sheet batch planners and
     mix designers read. PERCENTILE_DISC semantics: p_q = the smallest
@@ -2793,7 +2761,7 @@ def length_quantiles(
     Returns (domain, n_docs, p<q>... ) one row per domain.
     """
     toked = with_token_count(df).select(
-        F.col(domain_col).alias("_dom"), "n_tokens"
+        F.col("source").alias("_dom"), "n_tokens"
     )
     # NULL lengths (NULL text) are excluded from the level table:
     # Spark windows sort NULLS FIRST, DuckDB NULLS LAST (the
@@ -2815,7 +2783,7 @@ def length_quantiles(
         F.sum("cnt").over(Window.partitionBy("_dom")).alias("n_dom"),
     )
     aggs = [F.max("n_dom").alias("n_docs")]
-    for q in qs:
+    for q in (25, 50, 75, 95):
         rank = F.expr(f"(n_dom * {q} + 99) div 100")
         aggs.append(
             F.min(
@@ -2823,11 +2791,11 @@ def length_quantiles(
             ).alias(f"p{q}")
         )
     return cum.groupBy("_dom").agg(*aggs).withColumnRenamed(
-        "_dom", domain_col
+        "_dom", "source"
     )
 
 
-def corpus_card(df: DataFrame, domain_col: str = "source") -> DataFrame:
+def corpus_card(df: DataFrame) -> DataFrame:
     """Dataset-card governance sheet, ONE plan over the corpus: per
     domain, document/token/char counts plus the license and language
     composition — the summary a 100 TB corpus publishes alongside
@@ -2840,11 +2808,11 @@ def corpus_card(df: DataFrame, domain_col: str = "source") -> DataFrame:
     Returns (domain, n_docs, n_tokens, n_chars, n_permissive, n_en,
     pct_permissive, pct_en).
     """
-    _tag, perm = _license_cols("text")
+    _tag, perm = _license_cols()
     base = with_lang_guess(
         with_token_count(_ensure_parallelism(df))
     ).select(
-        F.col(domain_col).alias("_dom"),
+        F.col("source").alias("_dom"),
         "n_tokens",
         F.coalesce(F.length("text"), F.lit(0)).alias("_nc"),
         (F.col("lang_guess") == "en").cast("int").alias("_en"),
@@ -2865,7 +2833,7 @@ def corpus_card(df: DataFrame, domain_col: str = "source") -> DataFrame:
         ).cast("float")
 
     return agg.select(
-        F.col("_dom").alias(domain_col),
+        F.col("_dom").alias("source"),
         "n_docs",
         "n_tokens",
         "n_chars",

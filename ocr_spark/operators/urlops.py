@@ -30,9 +30,9 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from ocr_spark.operators.textops import _ensure_parallelism
 
-def _canonical_parts(url_col: str) -> tuple[Column, Column, Column]:
-    """(host, path, sorted_query) columns from a raw URL column."""
-    s = F.regexp_replace(F.trim(F.col(url_col)), r"#.*$", "")
+def _canonical_parts() -> tuple[Column, Column, Column]:
+    """(host, path, sorted_query) columns from the raw ``url`` column."""
+    s = F.regexp_replace(F.trim(F.col("url")), r"#.*$", "")
     s = F.regexp_replace(s, r"^[a-zA-Z][a-zA-Z0-9+.\-]*://", "")
     base = F.regexp_extract(s, r"^[^?]*", 0)
     query = F.when(
@@ -66,13 +66,13 @@ def _canonical_parts(url_col: str) -> tuple[Column, Column, Column]:
     return host, path, q
 
 
-def with_canonical_url(df: DataFrame, url_col: str = "url") -> DataFrame:
+def with_canonical_url(df: DataFrame) -> DataFrame:
     """Append ``host`` and ``canonical_url`` columns (see module
     docstring for the normalization policy). Pure projection — pushes
     down, prunes, no shuffle (``_ensure_parallelism`` guards the
     single-file-scan case so the regex work spreads across cores)."""
     df = _ensure_parallelism(df)
-    host, path, q = _canonical_parts(url_col)
+    host, path, q = _canonical_parts()
     return df.withColumn("host", host).withColumn(
         "canonical_url",
         F.concat(
@@ -84,7 +84,7 @@ def with_canonical_url(df: DataFrame, url_col: str = "url") -> DataFrame:
 
 
 def domain_filter(
-    df: DataFrame, blocklist: list[str], url_col: str = "url"
+    df: DataFrame, blocklist: list[str]
 ) -> DataFrame:
     """Append ``blocked`` (boolean): true when the canonical host is a
     blocklisted domain or any subdomain of one. The blocklist is a
@@ -98,7 +98,7 @@ def domain_filter(
     dedup policy, but a blocklist must not be escapable via
     ``http://example.com:8080/x`` or ``http://user@example.com/x``
     (both are requests to example.com)."""
-    out = with_canonical_url(df, url_col)
+    out = with_canonical_url(df)
     cmp_host = F.regexp_replace(
         F.regexp_replace(F.col("host"), r"^[^/@]*@", ""), r":\d+$", ""
     )
@@ -120,7 +120,6 @@ def domain_filter(
 def url_category(
     df: DataFrame,
     categories: dict[str, str],
-    url_col: str = "url",
 ) -> DataFrame:
     """UT1-blocklist-style URL category tagging (C4 and RefinedWeb both
     gate on URL word/category lists before reading any content): the
@@ -134,7 +133,7 @@ def url_category(
     DuckDB oracle. Pure map: the category table compiles to a literal
     CASE chain (category lists are config-sized), zero shuffle.
     """
-    out = with_canonical_url(df, url_col)
+    out = with_canonical_url(df)
     target = F.lower(F.col("canonical_url"))
     cat = None
     for name, pat in categories.items():
@@ -151,7 +150,7 @@ def url_category(
 
 
 def url_decontaminate(
-    train: DataFrame, eval_df: DataFrame, url_col: str = "url"
+    train: DataFrame, eval_df: DataFrame
 ) -> DataFrame:
     """URL-level decontamination — drop training documents whose
     canonical URL appears in an eval set (C4 held out exact eval URLs;
@@ -164,9 +163,9 @@ def url_decontaminate(
     the same join discipline as ``decontaminate``/``anti_join_resume``.
     Returns surviving train rows with their canonical columns.
     """
-    t = with_canonical_url(train, url_col)
+    t = with_canonical_url(train)
     e = (
-        with_canonical_url(eval_df, url_col)
+        with_canonical_url(eval_df)
         .select("canonical_url")
         .distinct()
     )

@@ -144,11 +144,12 @@ def _conv_len(rng: random.Random, whale_lo: int, whale_hi: int) -> int:
     return rng.randint(whale_lo, whale_hi)
 
 
-def _draw_turn(rng: random.Random, garbage_rate: float):
-    """One turn's (role, text, tool), drawn in a fixed rng call order."""
+def _draw_turn(rng: random.Random):
+    """One turn's (role, text, tool), drawn in a fixed rng call order;
+    1% of turns are garbage."""
     role = rng.choices(_ROLES, _ROLE_W)[0]
     tool = rng.choices(_TOOLS, _TOOL_W)[0]
-    if rng.random() < garbage_rate:
+    if rng.random() < 0.01:
         text = make_garbage(rng)
     elif tool == "html":
         text = make_html(rng)
@@ -172,7 +173,6 @@ def gen_transcripts_ids(
     seed: int = 0,
     whale_lo: int = 1000,
     whale_hi: int = 10000,
-    garbage_rate: float = 0.01,
 ) -> pd.DataFrame:
     """Generate transcript rows for an explicit set of conversation ids.
 
@@ -188,7 +188,7 @@ def gen_transcripts_ids(
         n_turns = _conv_len(rng, whale_lo, whale_hi)
         base = _EPOCH + timedelta(seconds=i * 97)
         for t in range(n_turns):
-            role, text, tool = _draw_turn(rng, garbage_rate)
+            role, text, tool = _draw_turn(rng)
             rows.append((cid, t, role, text, tool, base + timedelta(seconds=7 * t)))
     return _turn_frame(rows)
 
@@ -198,7 +198,6 @@ def gen_transcripts(
     seed: int = 0,
     whale_lo: int = 1000,
     whale_hi: int = 10000,
-    garbage_rate: float = 0.01,
 ) -> pd.DataFrame:
     """Generate the transcripts table deterministically."""
     return gen_transcripts_ids(
@@ -206,17 +205,15 @@ def gen_transcripts(
         seed=seed,
         whale_lo=whale_lo,
         whale_hi=whale_hi,
-        garbage_rate=garbage_rate,
     )
 
 
 def gen_whale_turns(
     turn_idxs,
-    conv_id: str = "whale-0",
     seed: int = 0,
-    garbage_rate: float = 0.01,
 ) -> pd.DataFrame:
-    """Rows for an explicit set of turn indices of ONE huge conversation.
+    """Rows for an explicit set of turn indices of ONE huge conversation,
+    ``whale-0``.
 
     Per-TURN rng streams (seeded from (seed, turn_idx)) make generation
     order-free across workers, so an extreme-skew table — one
@@ -227,10 +224,9 @@ def gen_whale_turns(
     for t in turn_idxs:
         t = int(t)
         rng = random.Random((seed << 21) ^ 0x5EED0000 ^ t)
-        role, text, tool = _draw_turn(rng, garbage_rate)
-        rows.append(
-            (conv_id, t, role, text, tool, _EPOCH + timedelta(seconds=7 * t))
-        )
+        role, text, tool = _draw_turn(rng)
+        ts = _EPOCH + timedelta(seconds=7 * t)
+        rows.append(("whale-0", t, role, text, tool, ts))
     return _turn_frame(rows)
 
 

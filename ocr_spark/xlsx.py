@@ -40,7 +40,7 @@ _RELS = """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
 
 _WORKBOOK = """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
 <workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
-<sheets><sheet name="{name}" sheetId="1" r:id="rId1"/></sheets>
+<sheets><sheet name="extracted" sheetId="1" r:id="rId1"/></sheets>
 </workbook>"""
 
 _WORKBOOK_RELS = """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
@@ -84,7 +84,6 @@ def write_xlsx(
     path: str,
     columns: Sequence[str],
     rows: Iterable[Sequence],
-    sheet_name: str = "extracted",
 ) -> int:
     """Write rows to ``path`` as a single-sheet .xlsx. Returns the number
     of data rows written. Raises if the sheet would exceed the format's
@@ -117,7 +116,7 @@ def write_xlsx(
     with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as z:
         z.writestr("[Content_Types].xml", _CONTENT_TYPES)
         z.writestr("_rels/.rels", _RELS)
-        z.writestr("xl/workbook.xml", _WORKBOOK.format(name=_esc(sheet_name)))
+        z.writestr("xl/workbook.xml", _WORKBOOK)
         z.writestr("xl/_rels/workbook.xml.rels", _WORKBOOK_RELS)
         z.writestr("xl/worksheets/sheet1.xml", "".join(parts))
     return n

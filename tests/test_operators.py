@@ -3,6 +3,7 @@ textops). The cross-engine value checks live in the driver contract;
 these tests pin the *semantics* on hand-built cases."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.dedup import (
@@ -303,23 +304,33 @@ def test_sessionize_gap_segmentation(spark):
     assert out[(2, 4)] == 0
 
 
-def test_connected_components_long_chain_pointer_jumping(spark):
-    """A 60-node chain (diameter 59) must converge inside the default
-    20-round budget — only possible with pointer jumping (plain
-    min-propagation needs diameter rounds) — and a starved budget must
-    raise instead of returning truncated groups."""
-    import pytest
+@pytest.mark.parametrize(
+    "n, shuffled",
+    [(60, False), (10_000, True)],
+    ids=["sorted_chain_60", "shuffled_path_10k"],
+)
+def test_connected_components_long_path_converges(spark, n, shuffled):
+    """A path graph (diameter n - 1) must converge inside the default
+    20-round budget to one component labelled 0 — plain
+    min-propagation needs diameter rounds. Shuffled ids are the hard
+    case: label propagation with pointer jumping still had 371 labels
+    changing after 20 rounds on the 10^4-node path. A starved budget
+    must raise instead of returning truncated groups."""
+    import random
 
     from ocr_spark.operators.dedup import connected_components
 
-    chain = spark.createDataFrame(
-        pd.DataFrame({"doc_a": range(59), "doc_b": range(1, 60)})
+    ids = list(range(n))
+    if shuffled:
+        random.Random(0).shuffle(ids)
+    path = spark.createDataFrame(
+        pd.DataFrame({"doc_a": ids[:-1], "doc_b": ids[1:]})
     )
-    out = {r.doc_id: r.group_id for r in connected_components(chain).collect()}
-    assert len(out) == 60 and set(out.values()) == {0}
+    out = {r.doc_id: r.group_id for r in connected_components(path).collect()}
+    assert len(out) == n and set(out.values()) == {0}
 
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iters=2)
+        connected_components(path, max_iters=2)
 
 
 def test_stratified_sample_rates(spark):
